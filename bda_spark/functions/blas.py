@@ -63,14 +63,15 @@ _capped_pid: int | None = None
 
 def blas_thread_cap() -> int:
     """The configured cap: BDA_BLAS_THREADS if set (<=0 disables),
-    else an already-exported OPENBLAS/OMP thread count (a deployment
-    that tuned its pool via the standard env vars keeps it — the env
-    half of this module always honored pre-set values via setdefault,
-    and r17 makes the ctypes runtime setter follow the same
-    precedence instead of silently clobbering them), else 1."""
+    else the first already-exported ``_BLAS_ENV`` thread count, in
+    ``_BLAS_ENV`` order (a deployment that tuned its pool via any of
+    the standard env vars — OPENBLAS, OMP, MKL, NUMEXPR, VECLIB —
+    keeps it: the env half of this module always honored pre-set
+    values via setdefault, and the ctypes runtime setter follows the
+    same precedence instead of silently clobbering them), else 1."""
     raw = os.environ.get("BDA_BLAS_THREADS", "").strip()
     if not raw:
-        for k in _BLAS_ENV[:2]:  # OPENBLAS_NUM_THREADS, OMP_NUM_THREADS
+        for k in _BLAS_ENV:
             pre = os.environ.get(k, "").strip()
             if pre:
                 try:

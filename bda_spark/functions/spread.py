@@ -58,30 +58,37 @@ from pyspark.sql import DataFrame
 # work). Chosen from r17 profiles: a shingling/gram stage spends
 # ~1 s/MB of raw text on one core, so 64 KiB targets ~60 ms tasks;
 # the exact-decimal aggregation buffer burns ~0.15 s/MB, so 1 MiB
-# keeps its exchange amortized. Overridable per deployment via
-# BDA_SPREAD_GRAM_BYTES / BDA_SPREAD_AGG_BYTES.
-GRAM_BYTES_PER_TASK = int(os.environ.get("BDA_SPREAD_GRAM_BYTES", 64 * 1024))
-AGG_BYTES_PER_TASK = int(os.environ.get("BDA_SPREAD_AGG_BYTES", 1024 * 1024))
+# keeps its exchange amortized.
+GRAM_BYTES_PER_TASK = 64 * 1024
+AGG_BYTES_PER_TASK = 1024 * 1024
+
+# Catalyst's "no statistics" fallback: an RDD-backed or otherwise
+# unsized plan reports spark.sql.defaultSizeInBytes (Long.MaxValue,
+# ~2**63), scaled by the row-width ratio of any projection above it.
+# An estimate this large is "unknown", not a reason to spread.
+_UNKNOWN_SIZE = 2**62
 
 
 def _plan_size_bytes(df: DataFrame) -> int | None:
     """Catalyst's size estimate for ``df`` (for a parquet scan: the sum
-    of the input file sizes, filters propagated). Estimate-only — used
-    to DECIDE a repartition, never to compute a result."""
+    of the input file sizes, filters propagated), or None when Catalyst
+    has none. Estimate-only — used to DECIDE a repartition, never to
+    compute a result."""
     try:
-        return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+        size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
     except Exception:
         return None
+    return None if size >= _UNKNOWN_SIZE else size
 
 
 def spread_scan(df: DataFrame, bytes_per_task: int) -> DataFrame:
     """Round-robin repartition ``df`` for a downstream high-per-row-cost
     stage — ONLY when the planner leaves it NEAR-SERIAL (module doc).
     Returns ``df`` unchanged whenever the exchange buys nothing: tiny
-    input (< one task's worth), input already multi-task, or the kill
-    switch. Callers should project to the columns the heavy stage
-    needs BEFORE spreading (guide §2.3: never exchange bytes the
-    stage won't read).
+    or unsized input (< one task's worth, or no Catalyst estimate),
+    input already multi-task, or the kill switch. Callers should
+    project to the columns the heavy stage needs BEFORE spreading
+    (guide §2.3: never exchange bytes the stage won't read).
 
     Gate detail (r17, measured): ``have`` is the planner's REAL scan
     width (``df.rdd.getNumPartitions()`` — one cheap physical-planning

@@ -721,7 +721,6 @@ def minhash_match_new(
     seed: int = 42,
     max_bucket_size: int | None = None,
     new_sigs: DataFrame | None = None,
-    cap_mode: str = "chained",
 ) -> DataFrame:
     """Incremental near-dup detection: match a NEW batch against a
     prebuilt ``minhash_index`` (same ngram/num_hashes/seed — the hash
@@ -746,41 +745,27 @@ def minhash_match_new(
     posting list per band key to its ``max_bucket_size`` lowest
     corpus_ids (deterministic row_number over the same band_key
     partitioning the join shuffles on anyway), bounding join fan-out to
-    O(new x cap). Two cap modes — the recall-safe ``"chained"`` is the
-    DEFAULT; ``"truncate"`` is the explicit cheaper opt-down:
-
-    - ``cap_mode="truncate"``: a truncated posting entry is simply
-      never compared — a genuine near-dup whose corpus_id ranks above
-      the cap in EVERY shared bucket is silently missed. The "one hit
-      suffices" argument only holds for near-identical hot clusters;
-      hot-but-heterogeneous buckets (skewed band keys from short/
-      low-entropy docs) lose recall. Measure the exposure FIRST with
-      ``minhash_bucket_truncation(index, ...)``.
-    - ``cap_mode="chained"`` (default — the recall-safe cap): the direct compare
-      set is the same bounded posting list, but each hot bucket the
-      batch actually touches additionally contributes VERIFIED
-      rank-gap chain edges among its corpus members (the same
-      ``_rank_gap_chain_pairs`` expansion the self-join cap uses —
-      O(k x cap) edges, never O(k^2)); connected components over
-      (direct hits ∪ verified chains) then expand every match to the
-      full cluster. A near-dup ranked past the cap is reached THROUGH
-      the chain whenever its cluster is chain-connected at the
-      threshold — exactly the near-identical-mega-cluster case that
-      makes buckets hot — so enabling the cap no longer silently
-      narrows recall there. (A doc similar ONLY to one above-cap
-      member of a hot-but-heterogeneous bucket is still missed — the
-      identical guarantee class as the self-join chain cap.) The
-      output schema is IDENTICAL to the other modes — chain-expanded
-      rows are marked by a NULL ``est_jaccard`` (the estimate exists
-      only for directly compared pairs), so existing flags tables and
-      merges keep working across the mode switch. Requires new ids
-      and corpus ids to be DISJOINT (the incremental-dedup contract —
-      the stream filters already-indexed ids before matching).
+    O(new x cap). The cap is chained (recall-safe): the direct compare
+    set is the bounded posting list, but each hot bucket the batch
+    actually touches additionally contributes VERIFIED rank-gap chain
+    edges among its corpus members (the same ``_rank_gap_chain_pairs``
+    expansion the self-join cap uses — O(k x cap) edges, never
+    O(k^2)); connected components over (direct hits ∪ verified chains)
+    then expand every match to the full cluster. A near-dup ranked past
+    the cap is reached THROUGH the chain whenever its cluster is
+    chain-connected at the threshold — exactly the
+    near-identical-mega-cluster case that makes buckets hot. (A doc
+    similar ONLY to one above-cap member of a hot-but-heterogeneous
+    bucket is still missed — the identical guarantee class as the
+    self-join chain cap; ``minhash_bucket_truncation(index, ...)``
+    measures the exposure.) The output schema is the uncapped one —
+    chain-expanded rows are marked by a NULL ``est_jaccard`` (the
+    estimate exists only for directly compared pairs). Requires new
+    ids and corpus ids to be DISJOINT (the incremental-dedup contract
+    — the stream filters already-indexed ids before matching).
     """
     from pyspark.sql import Window
 
-    if cap_mode not in ("truncate", "chained"):
-        raise ValueError(f"unknown cap_mode {cap_mode!r}")
     if new_sigs is None:
         new_sigs = minhash_index(
             new_docs, id_col, text_col, ngram, num_hashes, seed
@@ -791,7 +776,6 @@ def minhash_match_new(
     cb = band_keys(index, num_hashes, band_rows).withColumnRenamed(
         "doc_id", "corpus_id"
     )
-    chained = cap_mode == "chained" and max_bucket_size is not None
     ranked = None
     if max_bucket_size is not None:
         # rank AND bucket size in one pass over one band_key exchange:
@@ -831,7 +815,7 @@ def minhash_match_new(
         )
         .filter(F.col("est_jaccard") >= threshold)
     )
-    if not chained:
+    if max_bucket_size is None:
         return direct
     # the direct matches feed BOTH the component edges (materialized by
     # neardup_clusters) and the final estimate join — pin the tiny

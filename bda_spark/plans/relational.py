@@ -43,7 +43,10 @@ def pricing_summary(spark, sf_dir):
     first (functions.spread, cost-gated): only the six aggregated
     columns cross the exchange, and the partial aggregation above it
     collapses each task to a handful of rows. Decimal addition is
-    exact, so the result is identical under any row placement."""
+    exact, so the xsum columns are identical under any row placement;
+    the avg columns sum doubles, whose last bits depend on placement,
+    and rely on the round(·, 6) output policy as they did before the
+    spread."""
     li = t(spark, sf_dir, "lineitem")
     return (
         spread_scan(

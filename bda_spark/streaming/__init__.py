@@ -2,8 +2,8 @@
 
 - sources: Kafka tick stream + file-replay stand-in sharing one
   from_json decode path
-- pipeline: the three-query continuous app (trainer / predictor /
-  label-backfill) of SURVEY §3.1
+- pipeline: the two-query continuous app of SURVEY §3.1 (a fused
+  trainer+label-backfiller over one windowed state, and a predictor)
 - correlation: the stream-stream 1-minute-bucket correlation join of
   SURVEY §3.3
 

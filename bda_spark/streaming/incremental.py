@@ -8,9 +8,9 @@ Per micro-batch:
   1. signatures of the batch are computed once (one shingle pass over
      the batch only — the corpus is NEVER re-shingled),
   2. the batch is banded against the CURRENT index (pass
-     ``max_bucket_size`` to cap hot corpus posting lists; with
-     ``cap_mode="chained"`` the cap is RECALL-SAFE for near-identical
-     hot clusters — see ``minhash_match_new`` and the
+     ``max_bucket_size`` to cap hot corpus posting lists; the chained
+     cap is RECALL-SAFE for near-identical hot clusters — see
+     ``minhash_match_new`` and the
      ``minhash_bucket_truncation`` exposure audit) and flagged matches
      land in ``flags_path``,
   3. the batch's signatures merge into ``index_path`` so LATER batches
@@ -47,7 +47,6 @@ def stream_dedup_against_index(
     seed: int = 42,
     available_now: bool = False,
     max_bucket_size: int | None = None,
-    cap_mode: str = "chained",
     vacuum_min_age_seconds: float = 60.0,
     tombstones_path: str | None = None,
 ):
@@ -105,7 +104,6 @@ def stream_dedup_against_index(
                 seed=seed,
                 max_bucket_size=max_bucket_size,
                 new_sigs=fresh,
-                cap_mode=cap_mode,
             )
             idempotent_merge_parquet(
                 spark, flags, flags_path, keys=["new_id", "corpus_id"],
@@ -231,7 +229,6 @@ def stream_corpus_ingest(
     band_rows: int = 2,
     seed: int = 42,
     max_bucket_size: int | None = None,
-    cap_mode: str = "chained",
     available_now: bool = False,
     vacuum_min_age_seconds: float = 60.0,
     tombstones_path: str | None = None,
@@ -317,7 +314,6 @@ def stream_corpus_ingest(
                 seed=seed,
                 max_bucket_size=max_bucket_size,
                 new_sigs=fresh_sigs,
-                cap_mode=cap_mode,
             )
             dup_ids = (
                 flags.select(F.col("new_id").alias("doc_id"))

@@ -1,47 +1,44 @@
 """The continuous train / predict / label-backfill app (SURVEY.md §3.1,
 §2.9 T1-T8, §2.10 D1/D3/D4).
 
-Reproduces the reference's three concurrent streaming queries per symbol
-(reference: Deliverable_3/NEW_train_offset_3_10min.py:94-334) with its
-anti-patterns fixed per SURVEY §4:
+Reproduces the reference's per-symbol streaming app (reference:
+Deliverable_3/NEW_train_offset_3_10min.py:94-334) as TWO queries, with
+its anti-patterns fixed per SURVEY §4:
 
-- trainer: watermarked 10-min tumbling window -> avg features ->
-  VectorAssembler -> foreachBatch LinearRegression refit, model saved
-  through the pointer-file ModelStore (ref :124-211)
+- fused trainer+backfiller: watermarked 10-min tumbling window -> avg
+  features + avg label -> one foreachBatch that (1) refits a
+  LinearRegression and publishes it through the pointer-file
+  ModelStore (ref :124-211) and (2) upserts the window's cumulative
+  average price into a small ``labels`` table keyed by (symbol,
+  window) with the crash-safe idempotent merge sink (ref :290-332).
+  The reference ran these as two queries over identical window state;
+  one stateful pass here keeps one state store, one source scan and
+  one checkpoint. No driver-side collect() loop of per-window
+  read-modify-writes (ref :301-325), and the label half is
+  checkpointed (the reference's label query wasn't, ref :328-332).
 - predictor: per-tick features -> foreachBatch model.transform; the
   model is CACHED and reloaded only when the pointer changes (the
   reference re-read it from disk every 1-second batch, ref :237);
   feature serialization is ``to_json(struct(...))`` — JVM-side — instead
-  of the reference's row-at-a-time Python UDF (ref :244-248)
-- label backfiller: 10-min window avg of the actual price, upserted
-  into a SEPARATE small ``labels`` table keyed by (symbol, window) with
-  the crash-safe idempotent merge sink; the predictions table itself is
-  append-only and labels are joined on the window bucket AT READ TIME
-  (``predictions()``). No driver-side collect() loop of per-window
-  read-modify-writes (ref :301-325), checkpointed (the reference's
-  label query wasn't, ref :328-332) — and, because every table has
-  exactly ONE writer (predictor -> predictions/, backfiller ->
-  labels/), the three queries of ``start_all`` can run genuinely
-  concurrently with no append-vs-merge race on the predictions dir.
+  of the reference's row-at-a-time Python UDF (ref :244-248).
+
+The predictions table is append-only and labels are joined on the
+window bucket AT READ TIME (``predictions()``). Every table has exactly
+ONE writer (predictor -> predictions/, fused query -> models/ and
+labels/), so the two queries of ``start_all`` run genuinely
+concurrently with no append-vs-merge race on the predictions dir.
 
 Every query is checkpointed and driven either by
 ``Trigger.AvailableNow`` (tests: deterministic replay-to-completion) or
-a processing-time trigger (production cadence: 10 min / 1 s / 10 min,
-ref :211,:280,:331).
+a processing-time trigger (production cadence: 10 min / 1 s, ref
+:211,:280).
 
-Two engine-level improvements over the reference's topology:
-
-- FUSED trainer+backfiller (``start_trainer_and_backfiller``): the two
-  queries aggregate identical watermarked window state; one stateful
-  query feeds both sinks, halving the state stores, source scans, and
-  per-batch stateful passes. ``run_available_now`` uses it;
-  ``start_all(fuse_backfiller=True)`` opts production in.
-- Batch-dir predictions sink with versioned compaction
-  (streaming.batchdir): replay-idempotent per-batch dirs on the hot
-  path, absorbed by ``compact_predictions`` into pred_date-partitioned
-  reader-atomic generations carrying a batch-id high-watermark — file
-  count stays bounded under a 1-second trigger, and a crash-replay of
-  an absorbed batch is a no-op.
+Predictions land in a batch-dir sink with versioned compaction
+(streaming.batchdir): replay-idempotent per-batch dirs on the hot path,
+absorbed by ``compact_predictions`` into pred_date-partitioned
+reader-atomic generations carrying a batch-id high-watermark — file
+count stays bounded under a 1-second trigger, and a crash-replay of an
+absorbed batch is a no-op.
 """
 
 from __future__ import annotations
@@ -144,18 +141,18 @@ def windowed_features(
 
 
 class TickPipeline:
-    """One symbol's three-query continuous app over a decoded tick stream.
+    """One symbol's two-query continuous app over a decoded tick stream.
 
-    Layout under ``work_dir``: models/,
-    checkpoints/{agg,pred,labels,fused}/, predictions/ (batch-dir
+    Layout under ``work_dir``: models/, checkpoints/{fused,pred}/,
+    predictions/ (batch-dir
     sink, see streaming.batchdir: one ``batch=<id>`` dir per
     micro-batch on the hot path, absorbed by ``compact_predictions``
     into pred_date-hive-partitioned versioned generations so dashboard
     scans of recent days partition-prune over compacted files; the
     parquet stand-in for the reference's Cassandra
     ``model_predictions_10m`` table, schema RAW_PREDICTIONS_SCHEMA),
-    labels/ (tiny: one row per (symbol, window), upserted by the
-    backfiller alone).
+    labels/ (tiny: one row per (symbol, window), upserted by the fused
+    trainer+backfiller alone).
     """
 
     def __init__(
@@ -171,15 +168,7 @@ class TickPipeline:
         reg_param: float = 0.01,
         elastic_net_param: float = 0.5,
         historical_store: ModelStore | None = None,
-        labels_vacuum_min_age_seconds: float | None = None,
     ):
-        # reader grace for the per-micro-batch labels merge when the
-        # labels table is VERSIONED: None = the sinks module's 10-min
-        # default. The labels table is one row per window — hundreds
-        # of retained generations are kilobytes — so the default is
-        # safe here; the knob exists for operators who want immediate
-        # reclamation (tests pass 0.0 via sinks directly).
-        self.labels_vacuum_min_age_seconds = labels_vacuum_min_age_seconds
         self.spark = spark
         self.symbol = symbol
         self.feature_cols = feature_cols or SYMBOL_FEATURES[symbol]
@@ -191,7 +180,7 @@ class TickPipeline:
         self.labels_path = os.path.join(work_dir, "labels")
         self.checkpoints = {
             q: os.path.join(work_dir, "checkpoints", q)
-            for q in ("agg", "pred", "labels", "fused")
+            for q in ("fused", "pred")
         }
         self.store = ModelStore(self.models_dir)
         self.historical_store = historical_store
@@ -216,39 +205,6 @@ class TickPipeline:
             inputCols=self.feature_cols, outputCol="features",
             handleInvalid="skip",
         )
-
-    # ---------------------------------------------------------- trainer
-    def _train_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """D4: refit a fresh LinearRegression on each windowed micro-batch
-        and publish it through the pointer file (reference: :177-203)."""
-        # The windowed frame is TINY (one row per (window, symbol) —
-        # thousands of rows, not the tick volume) but EXPENSIVE to
-        # produce (a full stateful pass over the micro-batch), and it
-        # gets consumed repeatedly: an isEmpty() probe would run the
-        # whole aggregation once, and LBFGS then runs one treeAggregate
-        # job PER ITERATION. Materialize it exactly once — repartition
-        # (a SHUFFLE barrier: coalesce would fold the stateful stage
-        # itself into one task) down to one partition so the ~50
-        # per-iteration jobs stop paying multi-task scheduling overhead
-        # for near-empty partitions, cached for the duration of the
-        # fit; the count doubles as the emptiness gate. Measured ~2x on
-        # the replay bench, and the right shape at scale too (the
-        # per-window aggregate stays small however big the ticks).
-        assembled = (
-            self._assembler_agg.transform(batch_df)
-            .select("features", "label")
-            .repartition(1)
-            .cache()
-        )
-        try:
-            if assembled.count() == 0:
-                return
-            model = LinearRegression(
-                featuresCol="features", labelCol="label", **self._lr_params
-            ).fit(assembled)
-        finally:
-            assembled.unpersist()
-        self.store.save(model, "LinearRegression")
 
     # -------------------------------------------------------- predictor
     def _predict_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -301,55 +257,30 @@ class TickPipeline:
         # that double-counts against the compacted copy.
         write_batch_dir(out, self.predictions_path, batch_id)
 
-    # --------------------------------------------------- label backfill
-    def _backfill_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """T7/T10: upsert the stream's CUMULATIVE per-window label rows
-        into the tiny ``labels`` table (one row per window; rewriting it
-        costs nothing and the backfiller is its only writer, so there is
-        no concurrent-append race). The incoming rows come from the
-        WATERMARKED windowed aggregation in update mode — Spark's state
-        store carries each window's running average across micro-batch
-        boundaries, so every emitted row is the full cumulative value
-        and the keyed replace-merge converges to the true window
-        average under ANY trigger alignment (a per-batch groupBy here
-        would overwrite a split window's label with the last partial).
-        The labels meet the predictions via the bucket equi-join in
-        ``predictions()`` — one distributed join at read time replaces
-        the reference's collect() loop of per-window Cassandra
-        read-modify-writes (ref :301-325) AND the in-place rewrite of
-        the big predictions table."""
-        # same one-materialization discipline as the trainer: the
-        # cumulative rows are few but cost a full stateful pass, and
-        # the merge consumes them more than once (distinct keys for the
-        # anti-join + the union write) — cache, gate on count, merge
-        batch_df = batch_df.cache()
-        try:
-            if batch_df.count() == 0:
-                return
-            idempotent_merge_parquet(
-                self.spark, batch_df, self.labels_path,
-                keys=["symbol", "window_start"],
-                vacuum_min_age_seconds=self.labels_vacuum_min_age_seconds,
-                versioned=True,
-            )
-        finally:
-            batch_df.unpersist()
-
     # ------------------------------------------- fused trainer+backfiller
     def _train_and_backfill_batch(self, batch_df: DataFrame, batch_id: int) -> None:
-        """The trainer and the backfiller consume the SAME watermarked
-        windowed aggregate (avg features + avg label per window); run
-        as two queries they each pay a full stateful pass, a state
-        store, and a source scan for identical state. This fused
-        foreachBatch materializes the aggregate once and feeds both
-        sinks — model refit, then the cumulative label upsert — halving
-        the stateful work. Both halves are replay-idempotent (pointer-
-        file model publish; keyed label merge), so a crash between them
-        just redoes both on the replayed batch.
+        """D4 + T7/T10: one windowed micro-batch feeds both sinks — a
+        fresh LinearRegression refit published through the pointer file
+        (reference: :177-203), then the label upsert into the tiny
+        ``labels`` table (reference: :290-332). Both halves are
+        replay-idempotent (pointer-file model publish; keyed label
+        merge), so a crash between them just redoes both on the
+        replayed batch.
 
-        repartition, not coalesce: the shuffle barrier keeps the
-        stateful stage parallel while landing the tiny aggregate in one
-        cached partition for the fit's per-iteration jobs."""
+        The rows come from the WATERMARKED windowed aggregation in
+        update mode: the state store carries each window's running
+        average across micro-batch boundaries, so every emitted row is
+        the full cumulative value and the keyed replace-merge converges
+        to the true window average under ANY trigger alignment. The
+        labels meet the predictions via the bucket equi-join in
+        ``predictions()``.
+
+        The aggregate is tiny (one row per window) but costs a full
+        stateful pass, and the fit's LBFGS runs one job per iteration:
+        materialize it once, repartitioned (a shuffle barrier —
+        coalesce would fold the stateful stage itself into one task)
+        into one cached partition; the count doubles as the emptiness
+        gate."""
         windowed = batch_df.repartition(1).cache()
         try:
             if windowed.count() == 0:
@@ -369,7 +300,6 @@ class TickPipeline:
             idempotent_merge_parquet(
                 self.spark, labels, self.labels_path,
                 keys=["symbol", "window_start"],
-                vacuum_min_age_seconds=self.labels_vacuum_min_age_seconds,
                 versioned=True,
             )
         finally:
@@ -377,10 +307,8 @@ class TickPipeline:
 
     def start_trainer_and_backfiller(self, available_now: bool = True,
                                      processing_time: str | None = "10 minutes"):
-        """One stateful query feeding both the model refit and the
-        label merge (see _train_and_backfill_batch). Uses its own
-        checkpoint ('fused') — don't mix with the split queries'
-        checkpoints on one work_dir lifetime."""
+        """The one stateful query feeding both the model refit and the
+        label merge (see _train_and_backfill_batch)."""
         windowed = windowed_features(
             self.normalized, self.feature_cols, self.window, self.watermark
         )
@@ -404,16 +332,6 @@ class TickPipeline:
             writer = writer.trigger(processingTime=processing_time)
         return writer
 
-    def start_trainer(self, available_now: bool = True,
-                      processing_time: str | None = "10 minutes"):
-        windowed = windowed_features(
-            self.normalized, self.feature_cols, self.window, self.watermark
-        )
-        return self._writer(
-            windowed, self._train_batch, self.checkpoints["agg"], "update",
-            available_now, processing_time,
-        ).start()
-
     def start_predictor(self, available_now: bool = True,
                         processing_time: str | None = "1 second"):
         return self._writer(
@@ -421,32 +339,8 @@ class TickPipeline:
             available_now, processing_time,
         ).start()
 
-    def window_labels_stream(self) -> DataFrame:
-        """The backfiller's source: watermarked windowed average of the
-        actual price in update mode — state carries each window's
-        running aggregate across micro-batches, so every emitted row is
-        cumulative (see _backfill_batch)."""
-        return (
-            self.normalized.withWatermark("event_time", self.watermark)
-            .groupBy(F.window("event_time", self.window).alias("w"))
-            .agg(F.avg("label").alias("actual_price"))
-            .select(
-                F.lit(self.symbol).alias("symbol"),
-                F.col("w.start").alias("window_start"),
-                "actual_price",
-            )
-        )
-
-    def start_label_backfiller(self, available_now: bool = True,
-                               processing_time: str | None = "10 minutes"):
-        return self._writer(
-            self.window_labels_stream(), self._backfill_batch,
-            self.checkpoints["labels"], "update", available_now,
-            processing_time,
-        ).start()
-
     def run_available_now(self) -> None:
-        """Deterministic replay: drain the source through the FUSED
+        """Deterministic replay: drain the source through the fused
         trainer+backfiller (one stateful pass publishes the model and
         merges the labels), then the predictor (which therefore always
         sees a trained model). Production starts the queries
@@ -456,40 +350,22 @@ class TickPipeline:
             q = starter(available_now=True)
             q.awaitTermination()
 
-    def start_all(
-        self,
-        processing_time_triggers: bool = True,
-        triggers: dict[str, str] | None = None,
-        fuse_backfiller: bool = False,
-    ) -> list:
-        """T8: the production multi-query app; caller awaits via
-        spark.streams.awaitAnyTermination() (reference: :334).
+    def start_all(self, triggers: dict[str, str] | None = None) -> list:
+        """T8: the production app — the fused trainer+backfiller and the
+        predictor, concurrently on processing-time triggers; caller
+        awaits via spark.streams.awaitAnyTermination() (reference: :334).
 
-        Concurrency-safe: the queries write disjoint locations
-        (models/ vs predictions/ appends vs labels/ merges), so none of
-        them can clobber another's in-flight output. ``triggers``
-        overrides the per-query processingTime cadence (production
-        defaults mirror the reference: 10 min / 1 s / 10 min).
-
-        ``fuse_backfiller=True`` runs the trainer and backfiller as ONE
-        stateful query (they aggregate identical state; the reference's
-        three-query split pays for the same windowed aggregation twice
-        — see _train_and_backfill_batch). Default keeps the reference's
-        three-query topology."""
-        t = {"trainer": "10 minutes", "predictor": "1 second",
-             "backfiller": "10 minutes"}
+        Concurrency-safe: the queries write disjoint locations (models/
+        and labels/ merges vs predictions/ appends), so neither can
+        clobber the other's in-flight output. ``triggers`` overrides the
+        per-query cadence (production defaults mirror the reference:
+        trainer 10 min, predictor 1 s)."""
+        t = {"trainer": "10 minutes", "predictor": "1 second"}
         if triggers:
             t.update(triggers)
-        available_now = not processing_time_triggers
-        if fuse_backfiller:
-            return [
-                self.start_trainer_and_backfiller(available_now, t["trainer"]),
-                self.start_predictor(available_now, t["predictor"]),
-            ]
         return [
-            self.start_trainer(available_now, t["trainer"]),
-            self.start_predictor(available_now, t["predictor"]),
-            self.start_label_backfiller(available_now, t["backfiller"]),
+            self.start_trainer_and_backfiller(False, t["trainer"]),
+            self.start_predictor(False, t["predictor"]),
         ]
 
     def compact_predictions(

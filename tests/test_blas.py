@@ -54,6 +54,21 @@ def test_preexported_pool_env_wins_over_default(monkeypatch):
     assert blas.blas_thread_cap() == 2
 
 
+def test_preexported_non_openblas_env_is_honoured(monkeypatch):
+    """An MKL/NUMEXPR/VECLIB-tuned deployment keeps its pool size too,
+    not just one tuned through OPENBLAS/OMP; a malformed value falls
+    through to the next variable."""
+    monkeypatch.delenv("BDA_BLAS_THREADS", raising=False)
+    for k in blas._BLAS_ENV:
+        monkeypatch.delenv(k, raising=False)
+    monkeypatch.setenv("VECLIB_MAXIMUM_THREADS", "5")
+    assert blas.blas_thread_cap() == 5
+    monkeypatch.setenv("MKL_NUM_THREADS", "4")
+    assert blas.blas_thread_cap() == 4
+    monkeypatch.setenv("MKL_NUM_THREADS", "junk")
+    assert blas.blas_thread_cap() == 5
+
+
 def test_env_override_and_disable(monkeypatch):
     monkeypatch.setenv("BDA_BLAS_THREADS", "4")
     assert blas.blas_thread_cap() == 4

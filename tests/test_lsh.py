@@ -374,10 +374,11 @@ def test_match_new_uncapped_by_default_and_truncation_audit(spark):
 def test_chained_cap_reaches_above_cap_near_dups(spark):
     """VERDICT r8 #5: the recall-safe cap. Fixture: a near-identical
     corpus mega-cluster whose interesting twin has the HIGHEST id, so
-    a small truncate-cap hides it from every shared bucket. The
-    truncate mode silently misses it; cap_mode="chained" reaches it
-    through verified corpus chain edges; and on this chain-connected
-    fixture the chained result equals the uncapped ground truth."""
+    a cap of 4 leaves it out of every shared bucket's posting list. A
+    plain truncating cap, which compared only the posting list, missed
+    the (101, 99) pair; the chained cap reaches it through verified
+    corpus chain edges, and on this chain-connected fixture the capped
+    result equals the uncapped ground truth."""
     from pyspark.sql import Row
 
     from bda_spark.operators.dedup import minhash_index, minhash_match_new
@@ -385,7 +386,7 @@ def test_chained_cap_reaches_above_cap_near_dups(spark):
     base = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
     # 99 is byte-identical to the flood, so its signature (hence EVERY
     # band bucket) coincides with the cluster's and it ranks dead last
-    # in each posting list — the worst case for a truncate cap
+    # in each posting list — the worst case for a capped posting list
     corpus = spark.createDataFrame(
         [Row(doc_id=i, text=base) for i in range(1, 9)]
         + [Row(doc_id=99, text=base)]
@@ -399,24 +400,14 @@ def test_chained_cap_reaches_above_cap_near_dups(spark):
     }
     assert (101, 99) in uncapped
 
-    truncated = {
-        (r.new_id, r.corpus_id)
-        for r in minhash_match_new(
-            new_batch, index, threshold=0.5, max_bucket_size=4,
-            cap_mode="truncate",
-        ).collect()
-    }
-    assert (101, 99) not in truncated  # the silent miss being fixed
-
     chained_rows = minhash_match_new(
         new_batch, index, threshold=0.5, max_bucket_size=4,
-        cap_mode="chained",
     ).collect()
     chained = {(r.new_id, r.corpus_id) for r in chained_rows}
     assert (101, 99) in chained
     # chain-connected fixture: chained == uncapped ground truth
     assert chained == uncapped
-    # schema-stable: same 3 columns as the other modes; direct hits
+    # schema-stable: same 3 columns as the uncapped match; direct hits
     # carry their estimate, chain-expanded rows read as NULL
     assert set(chained_rows[0].asDict()) == {"new_id", "corpus_id", "est_jaccard"}
     assert any(r.est_jaccard is not None for r in chained_rows)

@@ -50,6 +50,20 @@ def test_already_parallel_input_is_untouched(spark):
     assert spread_scan(df, 64 * 1024) is df
 
 
+def test_unsized_rdd_input_is_untouched(spark):
+    """An RDD-backed frame has no Catalyst size estimate: its
+    sizeInBytes is the Long.MaxValue fallback. That must read as
+    "unknown", not as a huge input — a one-partition in-memory frame
+    gets no RoundRobin exchange."""
+    rdd = spark.sparkContext.parallelize([(i, f"doc {i}") for i in range(100)], 1)
+    df = spark.createDataFrame(rdd, "doc_id long, text string")
+    assert _partitions(df) == 1
+    out = spread_scan(df, 64 * 1024)
+    plan = out._jdf.queryExecution().executedPlan().toString()
+    assert "RoundRobinPartitioning" not in plan, plan
+    assert out is df
+
+
 def test_shingles_identical_with_and_without_spread(spark, monkeypatch):
     import bda_spark.operators.dedup as dedup
 

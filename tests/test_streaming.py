@@ -1,8 +1,9 @@
 """Golden replay tests for the streaming surface (SURVEY §3.1, §3.3):
 a kafka_messages.csv-shaped JSON-lines fixture is replayed through the
 file source with Trigger.AvailableNow, and the decode path, the
-three-query train/predict/backfill app, and the stream-stream
-correlation join are asserted against hand-computed expectations."""
+two-query app (fused trainer+backfiller, predictor), and the
+stream-stream correlation join are asserted against hand-computed
+expectations and batch recomputations."""
 
 from __future__ import annotations
 
@@ -14,9 +15,13 @@ import pytest
 
 from bda_spark.functions.cleaning import validate_ticks
 from bda_spark.streaming import (
+    SYMBOL_FEATURES,
     CorrelationPipeline,
     TickPipeline,
+    decode_ticks,
     file_replay_tick_stream,
+    normalize_ticks,
+    windowed_features,
 )
 from bda_spark.streaming.sources import console_sink
 
@@ -87,6 +92,32 @@ def bp_pipeline(spark, tick_dir, work_dir) -> TickPipeline:
     return TickPipeline(spark, ticks, "BP", work_dir)
 
 
+def _batch_windows(spark, tick_dir: str):
+    """The batch twin of the fused query's input: the same decode,
+    ingest gate, normalization and 10-minute window averages over the
+    fixture read as a plain (non-streaming) frame."""
+    feats = SYMBOL_FEATURES["BP"]
+    ticks = validate_ticks(decode_ticks(spark.read.text(tick_dir)))
+    return windowed_features(normalize_ticks(ticks, "BP", feats), feats)
+
+
+def _batch_model(spark, tick_dir: str, pipe: TickPipeline):
+    """A LinearRegression fitted in batch over the fixture's windows
+    with the pipeline's own assembler and params — the model the fused
+    query publishes when it drains the fixture in one trigger."""
+    from pyspark.ml.regression import LinearRegression
+
+    # one partition, as the fused query fits: the same summation order
+    assembled = (
+        pipe._assembler_agg.transform(_batch_windows(spark, tick_dir))
+        .select("features", "label")
+        .repartition(1)
+    )
+    return LinearRegression(
+        featuresCol="features", labelCol="label", **pipe._lr_params
+    ).fit(assembled)
+
+
 def _drain(query, timeout: float = 300.0) -> None:
     """Bounded drain: a wedged AvailableNow stream (state-store or
     source regression) must FAIL the test, not hang the whole suite."""
@@ -124,18 +155,58 @@ def test_decode_and_validate(spark, tick_dir, tmp_path):
     }
 
 
-# --------------------------------------------------- three-query pipeline
+# ----------------------------------------------------- two-query pipeline
 def test_trainer_fits_and_publishes_model(bp_pipeline):
-    _drain(bp_pipeline.start_trainer(available_now=True))
+    _drain(bp_pipeline.start_trainer_and_backfiller(available_now=True))
     model = bp_pipeline.store.current()
     assert model is not None
     assert len(model.coefficients) == 5
 
 
-def test_predictor_appends_null_label_predictions(spark, bp_pipeline):
-    _drain(bp_pipeline.start_predictor(available_now=True))
-    preds = bp_pipeline.predictions()
-    rows = preds.collect()
+def test_fused_query_matches_batch_recomputation(spark, tick_dir, tmp_path):
+    """The fused trainer+backfiller against a batch recomputation: drained
+    over the fixture in ONE data trigger, its labels table equals the
+    batch window averages per window and its published model equals a
+    batch LinearRegression fit (same params) over those windows."""
+    from bda_spark.sources.batch import read_parquet
+
+    pipe = TickPipeline(
+        spark, file_replay_tick_stream(spark, tick_dir), "BP", str(tmp_path)
+    )
+    q = pipe.start_trainer_and_backfiller(available_now=True)
+    _drain(q)
+    # one data trigger read every fixture line, the two junk lines too
+    assert [p["numInputRows"] for p in q.recentProgress
+            if p["numInputRows"]] == [2 * N_TICKS + 2]
+
+    want = {
+        r.window_start: r.label for r in _batch_windows(spark, tick_dir).collect()
+    }
+    got = {
+        r.window_start: r.actual_price
+        for r in read_parquet(spark, pipe.labels_path).collect()
+    }
+    assert len(want) == 3 and set(got) == set(want)
+    for w, label in want.items():
+        assert got[w] == pytest.approx(label, rel=1e-9)
+
+    streamed = pipe.store.current()
+    batch = _batch_model(spark, tick_dir, pipe)
+    assert list(streamed.coefficients) == pytest.approx(
+        list(batch.coefficients), rel=1e-9, abs=1e-12
+    )
+    assert streamed.intercept == pytest.approx(batch.intercept, rel=1e-9, abs=1e-12)
+
+
+def test_predictor_appends_null_label_predictions(spark, tick_dir, tmp_path):
+    """The predictor alone (model published through ModelStore.save, no
+    fused query) appends one NULL-label prediction per tick."""
+    pipe = TickPipeline(
+        spark, file_replay_tick_stream(spark, tick_dir), "BP", str(tmp_path)
+    )
+    pipe.store.save(_batch_model(spark, tick_dir, pipe), "LinearRegression")
+    _drain(pipe.start_predictor(available_now=True))
+    rows = pipe.predictions().collect()
     assert len(rows) == N_TICKS  # one prediction per BP tick
     assert all(r.label is None for r in rows)  # labels start NULL
     assert all(r.prediction is not None for r in rows)
@@ -152,9 +223,11 @@ def test_predictor_appends_null_label_predictions(spark, bp_pipeline):
 
 
 def test_label_backfill_sets_window_averages(bp_pipeline):
-    _drain(bp_pipeline.start_label_backfiller(available_now=True))
+    # no-ops when the module's earlier tests already drained the source
+    _drain(bp_pipeline.start_trainer_and_backfiller(available_now=True))
+    _drain(bp_pipeline.start_predictor(available_now=True))
     rows = bp_pipeline.predictions().collect()
-    assert len(rows) == N_TICKS  # merge preserved row count
+    assert len(rows) == N_TICKS  # the read-time join preserved row count
     # expected label = avg price of the tick's 10-minute window
     expected = {0: 104.5, 1: 114.5, 2: 124.5}
     for r in rows:
@@ -166,11 +239,16 @@ def test_backfill_is_idempotent(bp_pipeline):
     before = sorted(
         (r.timestamp, r.label) for r in bp_pipeline.predictions().collect()
     )
-    # replaying the backfill query from a fresh checkpoint re-merges the
+    assert before and all(label is not None for _, label in before)
+    # replaying the fused query from a fresh checkpoint re-merges the
     # same labels; the merge is an upsert so nothing changes
+    windowed = windowed_features(
+        bp_pipeline.normalized, bp_pipeline.feature_cols,
+        bp_pipeline.window, bp_pipeline.watermark,
+    )
     q = bp_pipeline._writer(
-        bp_pipeline.window_labels_stream(), bp_pipeline._backfill_batch,
-        bp_pipeline.checkpoints["labels"] + "_replay", "update", True, None,
+        windowed, bp_pipeline._train_and_backfill_batch,
+        bp_pipeline.checkpoints["fused"] + "_replay", "update", True, None,
     ).start()
     _drain(q)
     after = sorted(
@@ -190,10 +268,11 @@ def test_hybrid_predictor_scores_with_both_models(spark, tick_dir, tmp_path_fact
     ticks = file_replay_tick_stream(spark, tick_dir)
     hist_store = ModelStore(work + "/historical_models")
     pipe = TickPipeline(spark, ticks, "BP", work, historical_store=hist_store)
-    _drain(pipe.start_trainer(available_now=True))
-    # reuse the streaming model as the "historical" champion: the two
-    # prediction columns must then agree exactly
-    hist_store.save(pipe.store.current(), "LinearRegression")
+    # one model as both the streaming and the "historical" champion: the
+    # two prediction columns must then agree exactly
+    model = _batch_model(spark, tick_dir, pipe)
+    pipe.store.save(model, "LinearRegression")
+    hist_store.save(model, "LinearRegression")
     _drain(pipe.start_predictor(available_now=True))
     rows = pipe.predictions().collect()
     assert len(rows) == N_TICKS
@@ -285,7 +364,7 @@ def test_unreadable_labels_table_raises_not_skips(spark, tick_dir, tmp_path_fact
     work = str(tmp_path_factory.mktemp("corrupt_labels"))
     ticks = file_replay_tick_stream(spark, tick_dir)
     pipe = TickPipeline(spark, ticks, "BP", work)
-    _drain(pipe.start_trainer(available_now=True))
+    pipe.store.save(_batch_model(spark, tick_dir, pipe), "LinearRegression")
     _drain(pipe.start_predictor(available_now=True))
     assert all(r.label is None for r in pipe.predictions().collect())
     os.makedirs(pipe.labels_path)
@@ -299,12 +378,12 @@ def test_unreadable_labels_table_raises_not_skips(spark, tick_dir, tmp_path_fact
 
 # ------------------------------------------------- concurrent start_all (T8)
 def test_start_all_concurrent_growing_source(spark, tmp_path_factory):
-    """T8 production mode: all three queries live AT ONCE against a
-    growing file source (reference NEW_train_offset_3_10min.py:334).
-    The sinks are disjoint (models/ vs predictions/ appends vs labels/
-    merges), so no append is lost to a concurrent rewrite — every tick
-    must surface exactly once in the labeled view, with its window's
-    label."""
+    """T8 production mode: both queries (fused trainer+backfiller,
+    predictor) live AT ONCE against a growing file source (reference
+    NEW_train_offset_3_10min.py:334). The sinks are disjoint (models/
+    and labels/ merges vs predictions/ appends), so no append is lost
+    to a concurrent rewrite — every tick must surface exactly once in
+    the labeled view, with its window's label."""
     d = tmp_path_factory.mktemp("concurrent")
     src = d / "src"
     src.mkdir()
@@ -315,13 +394,13 @@ def test_start_all_concurrent_growing_source(spark, tmp_path_factory):
     pipe = TickPipeline(spark, ticks, "BP", str(d / "work"))
     # warm-start: publish a model before going live, so the concurrent
     # predictor never consumes ticks it cannot yet score
-    _drain(pipe.start_trainer(available_now=True))
+    _drain(pipe.start_trainer_and_backfiller(available_now=True))
     queries = pipe.start_all(
-        triggers={"trainer": "1 second", "predictor": "1 second",
-                  "backfiller": "1 second"}
+        triggers={"trainer": "1 second", "predictor": "1 second"}
     )
+    assert len(queries) == 2
     try:
-        for batch in (1, 2):  # grow the source while all three run
+        for batch in (1, 2):  # grow the source while both run
             with open(src / f"t{batch}.jsonl", "w") as f:
                 for i in range(batch * 10, batch * 10 + 10):
                     f.write(json.dumps(_bp_tick(i)) + "\n")
@@ -825,10 +904,10 @@ def test_console_sink_smoke(spark, tick_dir):
 
 def test_backfill_converges_when_window_splits_across_batches(spark, tmp_path):
     """The production-trigger hazard: one 10-min window's ticks arrive
-    over TWO micro-batches. The watermarked update-mode aggregation
-    carries the window's running average in state, so the final label
-    is the TRUE window average — a per-batch groupBy would have
-    overwritten it with the last batch's partial."""
+    over TWO micro-batches of the fused query. The watermarked
+    update-mode aggregation carries the window's running average in
+    state, so the final label is the TRUE window average — a per-batch
+    groupBy would have overwritten it with the last batch's partial."""
     d = tmp_path / "split_ticks"
     d.mkdir()
     with open(d / "first.jsonl", "w") as f:
@@ -840,7 +919,10 @@ def test_backfill_converges_when_window_splits_across_batches(spark, tmp_path):
 
     ticks = file_replay_tick_stream(spark, str(d), max_files_per_trigger=1)
     pipe = TickPipeline(spark, ticks, "BP", str(tmp_path / "work"))
-    _drain(pipe.start_label_backfiller(available_now=True))
+    q = pipe.start_trainer_and_backfiller(available_now=True)
+    _drain(q)
+    assert len([p for p in q.recentProgress if p["numInputRows"]]) == 2
+    assert pipe.store.current() is not None
     from bda_spark.sources.batch import read_parquet
 
     labels = read_parquet(spark, pipe.labels_path).collect()
@@ -859,7 +941,7 @@ def test_predictor_replay_is_idempotent(spark, bp_pipeline, tmp_path):
     # has actually trained and predicted (no-op when the module's
     # earlier tests already ran — same checkpoints)
     if not _os.path.exists(bp_pipeline.predictions_path):
-        _drain(bp_pipeline.start_trainer(available_now=True))
+        _drain(bp_pipeline.start_trainer_and_backfiller(available_now=True))
         _drain(bp_pipeline.start_predictor(available_now=True))
     before = bp_pipeline.predictions().count()
     assert before > 0  # a zero-row baseline would make the check vacuous
@@ -946,8 +1028,7 @@ def test_soak_all_surfaces_concurrent_with_maintenance(
     # warm-start the model so the live predictor scores from batch one
     _drain(pipe.start_trainer_and_backfiller(available_now=True))
     queries = pipe.start_all(
-        triggers={"trainer": "1 second", "predictor": "1 second"},
-        fuse_backfiller=True,
+        triggers={"trainer": "1 second", "predictor": "1 second"}
     ) + [corr.start(available_now=False, processing_time="1 second")]
     n_batches = 5
     try:
