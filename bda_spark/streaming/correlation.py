@@ -13,6 +13,11 @@ with a cross join of two single-row aggregates instead of three
 ``collect()`` round-trips (ref :108-123), and rate limiting is the
 Structured Streaming ``maxOffsetsPerTrigger`` / ``maxFilesPerTrigger``
 knob, not the legacy DStream confs (ref :16-18).
+
+The handler persists the joined micro-batch once and runs its
+emptiness check and both branches of the summary off that copy, so
+the join and its state-store commits run once per trigger, not once
+per action.
 """
 
 from __future__ import annotations
@@ -99,8 +104,21 @@ class CorrelationPipeline:
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Per-bucket averages -> Pearson corr across buckets -> one
-        summary row, fully plan-side (no collect); skipped when corr is
-        undefined (fewer than 2 buckets)."""
+        summary row, fully plan-side (no collect). An empty batch writes
+        nothing; a batch whose corr is undefined (fewer than 2 buckets)
+        writes an empty ``batch=<id>`` dir, which reads as no row.
+
+        The joined batch is persisted for the duration of the handler:
+        ``isEmpty()`` and the two branches of the summary's cross join
+        would otherwise each re-run the stream-stream join, and with it
+        the state-store commits of all its shuffle partitions."""
+        batch_df.persist()
+        try:
+            self._write_summary(batch_df, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    def _write_summary(self, batch_df: DataFrame, batch_id: int) -> None:
         if batch_df.isEmpty():
             return
         minute_avgs = batch_df.groupBy("bucket_a").agg(
@@ -153,13 +171,15 @@ class CorrelationPipeline:
     def compact(
         self,
         vacuum_keep: int = 2,
-        vacuum_min_age_seconds: float = 0.0,
+        vacuum_min_age_seconds: float | None = None,
     ) -> int:
         """Absorb the per-batch summary dirs into one compacted
         versioned generation (batch-id high-watermark recorded with the
         commit; see streaming.batchdir). One row lands per micro-batch,
         so this is pure small-file hygiene — run it on the maintenance
-        cadence."""
+        cadence. ``vacuum_min_age_seconds`` None keeps superseded
+        generations for ``versioned.DEFAULT_MAINTENANCE_MIN_AGE_SECONDS``
+        so an in-flight ``correlations()`` reader keeps its files."""
         from .batchdir import compact_batch_dirs
 
         return compact_batch_dirs(

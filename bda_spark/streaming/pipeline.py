@@ -217,10 +217,8 @@ class TickPipeline:
         transform — no join at all, which fixes the reference's
         symbol-only join (ref stream_and_historical_model.py:599-603,
         a cross-match at >1 row per symbol per batch; SURVEY §2.3 J2)."""
-        if batch_df.isEmpty():
-            return
         model = self.store.current()
-        if model is None:
+        if model is None or batch_df.isEmpty():
             return
         preds = model.transform(self._assembler_pred.transform(batch_df)).withColumnRenamed(
             "prediction", "prediction_streaming"

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 
 import pytest
@@ -300,6 +301,49 @@ def test_correlation_pipeline(spark, tick_dir, tmp_path_factory):
     assert row.eth_ask == pytest.approx(0.5 * 114.5 + 7.0)
     assert row.window_start_ts == BASE_MS
     assert row.window_end_ts == BASE_MS + (N_TICKS - 1) * 60_000
+
+
+def test_correlation_default_compaction_keeps_superseded_generation(
+    spark, tick_dir, tmp_path_factory
+):
+    """A default ``compact()`` vacuums with the 10-minute maintenance
+    min age: a generation superseded past ``vacuum_keep`` stays on disk
+    while an in-flight ``correlations()`` reader may still hold it, and
+    only an explicit ``vacuum_min_age_seconds=0.0`` sweeps it. The
+    handler is driven with the batch twin of the joined stream; it
+    leaves nothing cached behind."""
+    from pyspark import StorageLevel
+
+    from bda_spark.sources.versioned import VERSIONS_DIR
+    from bda_spark.streaming.correlation import bucket_join, bucketed_feed
+
+    work = str(tmp_path_factory.mktemp("corr_compact"))
+    a = file_replay_tick_stream(spark, tick_dir).filter("symbol = 'BP'")
+    b = file_replay_tick_stream(spark, tick_dir).filter("symbol = 'ETHEREUM'")
+    pipe = CorrelationPipeline(spark, a, b, work)
+    ticks = decode_ticks(spark.read.text(tick_dir))
+    joined = bucket_join(
+        bucketed_feed(ticks.filter("symbol = 'BP'"), "price", "a"),
+        bucketed_feed(ticks.filter("symbol = 'ETHEREUM'"), "ask", "b"),
+    )
+    gens_dir = os.path.join(pipe.correlations_path, VERSIONS_DIR)
+
+    def generations() -> list[str]:
+        return sorted(d for d in os.listdir(gens_dir) if re.fullmatch(r"gen-\d+", d))
+
+    for batch_id in range(3):
+        pipe._process_batch(joined, batch_id)
+        assert joined.storageLevel == StorageLevel.NONE
+        pipe.compact()
+    # the first generation is past vacuum_keep=2, but its successor
+    # committed moments ago, so the min age keeps it
+    assert generations() == ["gen-00000001", "gen-00000002", "gen-00000003"]
+    assert pipe.correlations().count() == 3
+
+    pipe._process_batch(joined, 3)
+    pipe.compact(vacuum_min_age_seconds=0.0)
+    assert generations() == ["gen-00000003", "gen-00000004"]
+    assert pipe.correlations().count() == 4
 
 
 # ------------------------------------------------------- late data (T6)
@@ -621,6 +665,135 @@ def test_stream_stream_left_outer_join_pads_after_watermark(
     if 30 in by_minute:  # emission batch may precede/equal termination
         assert by_minute[30]["val_b"] is not None
     assert 31 not in by_minute
+
+
+def test_correlation_handler_matches_python_recomputation_per_batch(
+    spark, tmp_path_factory
+):
+    """Differential test of the correlation handler: over four replayed
+    micro-batches, each batch's summary row equals a pure-Python
+    recomputation from exactly the rows the join emitted in that batch.
+    Those rows are captured by a twin memory-sink query over the same
+    joined stream and trigger, split per batch by its progress row
+    counts. Buckets straddle batch boundaries, so later batches join
+    new rows against join state; the last batch holds one bucket only,
+    so its correlation is undefined and its batch dir is empty."""
+    import datetime
+    import math
+
+    from bda_spark.streaming.batchdir import BATCH_PREFIX
+
+    # a tick at second ``o`` of minute ``m``; values vary within and
+    # across buckets, and the two feeds are not linearly related, so
+    # every correlation is strictly inside (-1, 1)
+    def bp(m: int, o: int) -> dict:
+        price = 100.0 + 1.7 * m + 0.13 * o + (m * 7 + o) % 5 * 0.61
+        return dict(_bp_tick(0), timestamp=BASE_MS + (m * 60 + o) * 1000, price=price)
+
+    def eth(m: int, o: int) -> dict:
+        ask = 50.0 + 0.9 * m + 0.21 * o + (m * 3 + o) % 7 * 0.47
+        return dict(_eth_tick(0), timestamp=BASE_MS + (m * 60 + o) * 1000, ask=ask)
+
+    def minute(m: int, offsets: tuple[int, ...], feed) -> list[dict]:
+        return [feed(m, o) for o in offsets]
+
+    files = {
+        # minutes 0-4; minute 4 continues in the next file on both feeds
+        "f1.jsonl": [
+            t for m in range(5)
+            for t in minute(m, (0, 20), bp) + minute(m, (10,), eth)
+        ],
+        # minute 4 again (joins new rows against batch-1 state), 5-8
+        "f2.jsonl": minute(4, (40,), bp) + minute(4, (50,), eth) + [
+            t for m in range(5, 9)
+            for t in minute(m, (5, 35), bp) + minute(m, (15, 45), eth)
+        ],
+        # ETH-only minute 8 (joins batch-2 BP state), then minutes 9-12
+        "f3.jsonl": minute(8, (55,), eth) + [
+            t for m in range(9, 13)
+            for t in minute(m, (1,), bp) + minute(m, (2, 3), eth)
+        ],
+        # one bucket on both feeds: corr over one bucket is undefined
+        "f4.jsonl": minute(13, (0, 30), bp) + minute(13, (15,), eth),
+    }
+    src = tmp_path_factory.mktemp("corr_diff_src")
+    for sec, (name, rows) in enumerate(files.items()):
+        with open(src / name, "w") as f:
+            for r in rows:
+                f.write(json.dumps(r) + "\n")
+        os.utime(src / name, (1700000000 + sec * 10, 1700000000 + sec * 10))
+
+    work = str(tmp_path_factory.mktemp("corr_diff"))
+    ticks = file_replay_tick_stream(spark, str(src), max_files_per_trigger=1)
+    pipe = CorrelationPipeline(
+        spark, ticks.filter("symbol = 'BP'"), ticks.filter("symbol = 'ETHEREUM'"), work
+    )
+    _drain(pipe.start(available_now=True))
+    twin = (
+        pipe.joined.writeStream.format("memory")
+        .queryName("corr_diff_joined")
+        .outputMode("append")
+        .option("checkpointLocation", os.path.join(work, "twin_ckpt"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    _drain(twin)
+
+    joined = spark.sql("SELECT * FROM corr_diff_joined").collect()
+    counts = {
+        p["batchId"]: p["sink"]["numOutputRows"] for p in twin.recentProgress
+    }
+    assert sum(counts.values()) == len(joined)
+    per_batch, start = {}, 0
+    for batch_id in sorted(counts):
+        if counts[batch_id]:
+            per_batch[batch_id] = joined[start : start + counts[batch_id]]
+        start += counts[batch_id]
+    assert len(per_batch) == 4
+
+    def mean(xs):
+        return sum(xs) / len(xs)
+
+    for batch_id, rows in per_batch.items():
+        buckets = {}
+        for r in rows:
+            buckets.setdefault(r["bucket_a"]["start"], []).append(r)
+        xs = [mean([r["val_a"] for r in rs]) for rs in buckets.values()]
+        ys = [mean([r["val_b"] for r in rs]) for rs in buckets.values()]
+        out = spark.read.parquet(
+            os.path.join(pipe.correlations_path, f"{BATCH_PREFIX}{batch_id}")
+        ).collect()
+        if len(buckets) < 2:
+            assert out == []
+            continue
+        mx, my = mean(xs), mean(ys)
+        cov = sum((x - mx) * (y - my) for x, y in zip(xs, ys))
+        corr = cov / math.sqrt(
+            sum((x - mx) ** 2 for x in xs) * sum((y - my) ** 2 for y in ys)
+        )
+        start_ts = min(r["ts_a"] for r in rows)
+        [row] = out
+        assert row.symbol == "BP-ETH"
+        assert row.timestamp == row.window_start_ts == start_ts
+        assert row.window_end_ts == max(r["ts_a"] for r in rows)
+        assert row.event_time == datetime.datetime.fromtimestamp(
+            start_ts // 1000
+        ).replace(microsecond=start_ts % 1000 * 1000)
+        assert -1.0 < corr < 1.0
+        assert row.correlation == pytest.approx(corr, rel=1e-12, abs=0)
+        assert row.bp_price == pytest.approx(
+            mean([r["val_a"] for r in rows]), rel=1e-12, abs=0
+        )
+        assert row.eth_ask == pytest.approx(
+            mean([r["val_b"] for r in rows]), rel=1e-12, abs=0
+        )
+    # the straddling minutes 4 and 8 joined in more than one batch
+    minutes = {
+        batch_id: {(r["ts_a"] - BASE_MS) // 60_000 for r in rows}
+        for batch_id, rows in per_batch.items()
+    }
+    assert sum(4 in ms for ms in minutes.values()) == 2
+    assert sum(8 in ms for ms in minutes.values()) == 2
 
 
 def test_streaming_frequent_items_bounds_across_batches(
