@@ -357,10 +357,15 @@ class TickPipeline:
         and labels/ merges vs predictions/ appends), so neither can
         clobber the other's in-flight output. ``triggers`` overrides the
         per-query cadence (production defaults mirror the reference:
-        trainer 10 min, predictor 1 s)."""
+        trainer 10 min, predictor 1 s); an unknown key raises
+        ValueError before any query starts."""
         t = {"trainer": "10 minutes", "predictor": "1 second"}
-        if triggers:
-            t.update(triggers)
+        unknown = sorted(set(triggers or ()) - set(t))
+        if unknown:
+            raise ValueError(
+                f"unknown triggers keys {unknown}; valid keys: {sorted(t)}"
+            )
+        t.update(triggers or {})
         return [
             self.start_trainer_and_backfiller(False, t["trainer"]),
             self.start_predictor(False, t["predictor"]),

@@ -1,70 +1,32 @@
-"""Benchmark harness: runs the headline queries at $SPARK_GRAFT_SF_DIR
+"""Benchmark harness: times the reference pipeline at $SPARK_GRAFT_SF_DIR
 (default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, "sf": ...}.
+JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, ...}.
 
-Per-query timing includes full execution to collect() (the driver-side
-materialization the reference also pays). A warmup query absorbs JVM/
-codegen startup, and each headline query is executed TWICE — as two
-INTERLEAVED full passes over the query list, min per query — because
-all entries share one long-lived JVM, so a single run folds whatever
-GC pause / codegen-cache eviction the session happens to hit into a
-0.3-3 s number (the r1->r2 "regression" was exactly this — every
-shared query drifted 1.3-1.9x with identical plans). Interleaving
-rather than back-to-back min-of-2 matters: a transient JVM episode
-spans several consecutive queries and poisons BOTH back-to-back
-samples (observed r10: two same-code runs, each with a different
-CONTIGUOUS block of queries 2-3x slow). Spark caches no results across
-actions, so the second pass re-executes the full plan — only JVM
-warm-up, not work, is elided.
+Timed entries: the HEADLINE registry queries and the bench-only scale
+twins (each built and collect()ed), the medallion bronze -> silver ->
+gold job and the streaming train/predict/backfill replay. After a
+``grand_totals`` warm-up, every entry runs in two INTERLEAVED full
+passes and keeps the minimum: a transient JVM or host episode spans
+several consecutive entries, and interleaving puts a full suite length
+between an entry's two samples, so one episode poisons at most one.
+``value`` is the sum of the entries. The full record lands in
+BENCH_LOCAL_r{N}.json beside this script.
 
-SELF-CALIBRATING (r10): min-of-2 de-noises within a session but cannot
-detect the machine itself being slower than last round's machine (the
-r9 bench drifted a uniform ~1.4x on queries whose code had ZERO diffs,
-and nothing in the output could prove it was environment, not code). So
-the bench times a FIXED-COST, data-independent calibration job (pinned
-range->hash->groupBy aggregate) and:
-  - emits "normalized" per-query seconds (raw / calibration) — the
-    unit is "calibrations", a machine-speed-free number comparable
-    across rounds;
-  - if a previous BENCH_r*.json with a calibration row exists in the
-    repo, emits "vs_prev" drift-normalized ratios per query:
-    (t/cal) / (t_prev/cal_prev) — ~1.0 means the PLAN is unchanged
-    regardless of what the machine did between rounds.
-
-DRIFT-PROOF BY CONSTRUCTION (r15, VERDICT r14 #1): the r14 gate
-bracketed each attempt with pre/mid/post calibrations and REJECTED
-attempts whose bracket spread exceeded 10% — but a session that drifts
-for its whole duration (the driver's r14 record: 68.6/31.9/13.7%
-across the 3-attempt cap) exhausts retries and publishes with
-gate_passed false, leaving adjudication to whichever session happened
-to be quiet. The bench now runs a SINGLE-SHOT calibration probe beside
-every PROBE_EVERY-th timed sample (steady-state: the opening full
-calibration's warm-up already brought the probe job to C2) and
-corrects each sample by its NEAREST probes — sample_corrected = raw *
-(best_probe / min(bracketing probes)), with a dead-band leaving
-quiet-region samples untouched — so a query's number is normalized by
-the machine speed measured seconds around it, not by a whole-run
-average. The gate criterion follows the construction: each
-query has two probe-corrected samples (one per interleaved pass), and
-if correction worked they agree regardless of how the machine drifted
-between passes — "residual_median_pct" (median over queries of the
-pair disagreement) <= RESIDUAL_GATE_PCT is the r15 gate, with the old
-whole-run drift_pct kept as context (and as an alternative pass
-condition for the quiet-session case where probes were barely
-needed). A drifting session now yields trustworthy per-query numbers
-whose error is bounded by probe spacing, and the gate can PASS there.
+The numbers are wall-clock readings of one session. Keep/discard
+decisions come from paired parent-versus-change runs of ``perfbench/``.
 """
 
 from __future__ import annotations
 
+import glob
 import json
 import os
+import re
+import shutil
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
-
-import shutil
 
 from pyspark.sql import functions as F
 
@@ -247,212 +209,34 @@ def events_approx_distinct(spark, sf_dir):
     )
 
 
-def _cal_job(spark) -> None:
-    """The pinned fixed-cost, data-independent calibration job body —
-    a range -> hash -> groupBy aggregate that exercises codegen,
-    shuffle, and the driver collect path, with ZERO dependence on
-    sf_dir. Shared by the full calibration (warm-up + min-of-5) and
-    the single-shot interleaved probes so both measure the same
-    thing. 250M rows: compute-dominated (a 50M probe is ~half fixed
-    job-scheduling overhead, whose run-to-run noise is ±20%)."""
-    (
-        spark.range(0, 250_000_000, 1, 32)
-        .select(F.pmod(F.hash("id"), F.lit(997)).alias("k"), "id")
-        .groupBy("k")
-        .agg(F.sum("id").alias("s"), F.avg("id").alias("a"))
-        .orderBy("k")
-        .collect()
-    )
+def pack_sequences_salted_bench(spark, sf_dir):
+    """Bench-only scale twin of ``docs_pack_sequences``: sub-bucketed
+    sequence packing, so no single mega-source serializes one
+    partition's window sort."""
+    from bda_spark.plans.datamix import pack_sequences_salted
+
+    return pack_sequences_salted(load_table(spark, sf_dir, "documents"))
 
 
-def calibration_sec(spark) -> float:
-    """One fixed-cost probe of this machine+session's current speed.
-    min-of-5 after warm-6: the probe's JIT steady state needs several
-    executions on a fresh JVM (C2 tiered compilation lands late), and
-    a pre-C2 "pre" against a post-C2 "post" would read as 30-50%
-    machine drift that never happened. Symmetric policy at both ends
-    of an attempt so pre and post measure the same thing — and the
-    warm-up doubles as JIT preparation for the single-shot interleaved
-    probes (_ProbeTrack). The absolute number is meaningless; the
-    RATIO between two measurements of it (probe i vs probe j, round N
-    vs round N-1) isolates machine drift from plan changes."""
-    for _ in range(6):
-        _cal_job(spark)
-    best = float("inf")
-    for _ in range(5):
-        t0 = time.time()
-        _cal_job(spark)
-        best = min(best, time.time() - t0)
-    return best
-
-
-PROBE_EVERY = 6  # timed samples between interleaved calibration probes
-
-
-# A sample is corrected only when its bracket reads PAST this factor
-# of the probe population's quiet baseline. Calibrated empirically
-# (three sf0.01 validation runs on a QUIET machine): interleaved
-# probes are NOT pure machine-speed readings — each inherits the
-# GC/cleanup debt of the queries beside it, so the series spreads
-# +25..55% above its own quiet baseline purely from neighbor
-# contamination (probes beside the heavy dedup/pack tail read 0.94-
-# 1.06 s against a 0.68 s baseline with nothing else on the box). A
-# tight dead-band therefore "corrects" exactly the query families
-# that cause their own neighborhood's slowness — discounting them
-# 25-30% and making cross-round ratios read a spurious speedup
-# against pre-r15 records that embedded the same debt. 1.5 sits above
-# everything neighbor contamination produced in validation while
-# still catching the class the gate exists for: the r14 driver
-# session's sustained 68% whole-run drift. Below the band, moderate
-# contention is handled where it always was — min over two
-# interleaved passes — and FLAGGED by the residual/drift gates rather
-# than silently rewritten.
-PROBE_DEADBAND = 1.5
-
-
-class _ProbeTrack:
-    """Interleaved machine-speed probes (r15, module doc): a min-of-2
-    calibration probe lands beside every PROBE_EVERY-th timed sample,
-    and each sample outside the dead-band is corrected by the MIN of
-    its two bracketing probes — the local machine speed measured
-    seconds around the sample, not a whole-run average.
-
-    min-of-2 per probe and min-of-bracket per sample, NOT single shots
-    and means: the first validation run showed single probes on a
-    QUIET machine spiking 1.8-2.2x (GC debt inherited from the
-    adjacent query — the exact 20-50% single-run variance the bench's
-    min-of-N policy exists for), and a mean-of-brackets correction
-    injected that spike into every adjacent sample. A one-sided spike
-    hits one probe run, not both, and not both brackets — the min
-    rejects it; SUSTAINED contention slows every run of both brackets
-    — the min still sees it. Correction error is bounded by how much
-    sustained machine speed can shift within one probe spacing, and
-    the per-query residual between the two interleaved passes measures
-    exactly that bound post hoc."""
-
-    def __init__(self, spark, every: int = PROBE_EVERY) -> None:
-        self.spark = spark
-        self.every = every
-        self.probes: list[float] = []
-        # (name, raw seconds, index of the probe preceding the sample)
-        self.samples: list[tuple[str, float, int]] = []
-        self._since = every  # force a probe before the first sample
-
-    def probe(self) -> None:
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            _cal_job(self.spark)
-            best = min(best, time.time() - t0)
-        self.probes.append(best)
-        self._since = 0
-
-    def sample(self, name: str, run) -> None:
-        if self._since >= self.every:
-            self.probe()
-        t0 = time.time()
-        run()
-        dt = time.time() - t0
-        self.samples.append((name, dt, len(self.probes) - 1))
-        self._since += 1
-
-    def baseline(self) -> float:
-        """The probe population's quiet speed: median of the lowest
-        quartile (>=3 probes). NOT the raw min — a single anomalously
-        FAST probe (observed: 0.613 s in a 0.77-1.04 s series, likely
-        a turbo/idle-boost window) would otherwise drag the dead-band
-        below the series' normal range and make corrections misfire on
-        quiet samples; the trimmed statistic rejects single outliers
-        in BOTH directions while still tracking a genuinely faster
-        machine (a real speed-up moves the whole lower quartile)."""
-        import statistics
-
-        lo = sorted(self.probes)[: max(3, len(self.probes) // 4)]
-        return statistics.median(lo)
-
-    def corrected(self, base: float) -> dict[str, list[float]]:
-        """name -> probe-corrected samples (seconds at the probe
-        population's quiet speed, ``base`` = self.baseline()). In a
-        quiet session every bracket sits inside the dead-band and
-        corrected == raw."""
-        out: dict[str, list[float]] = {}
-        for name, raw, li in self.samples:
-            ri = min(li + 1, len(self.probes) - 1)
-            local = min(self.probes[li], self.probes[ri])
-            corr = raw
-            if base > 0 and local > PROBE_DEADBAND * base:
-                corr = raw * (base / local)
-            out.setdefault(name, []).append(corr)
-        return out
-
-    def raw(self) -> dict[str, list[float]]:
-        out: dict[str, list[float]] = {}
-        for name, r, _ in self.samples:
-            out.setdefault(name, []).append(r)
-        return out
-
-
-def bench_records(root: str | None = None) -> dict[int, tuple[dict, str]]:
-    """round -> (parsed record, source FILENAME) for every usable bench
-    record beside this script. Scans BOTH the driver-written
-    BENCH_r{N}.json (which may be a truncated 2 kB stdout tail — the
-    r10 record lost its calibration block exactly that way) and the
-    bench's own full-fidelity BENCH_LOCAL_r{N}.json; for the same
-    round a record WITH a calibration row wins, so comparisons stay
-    drift-normalized even when the driver capture truncates. The
-    filename travels with the record so every emitted comparison can
-    name its baseline VERBATIM — the r12 VERDICT blemish was a notes
-    file attributing a vs_prev to the wrong baseline because the
-    provenance lived nowhere in the record. Read-only, best-effort —
-    the bench must keep its output contract even on a checkout
-    without history."""
-    import glob as _glob
-    import re as _re
-
-    here = root or os.path.dirname(os.path.abspath(__file__))
-
-    def _rank(parsed: dict):
-        # prefer: any calibration row, then a passed gate, then the
-        # least-noisy record (residual when present, else drift) —
-        # so a clean committed record is never shadowed by a noisy
-        # same-round re-run that dodged to a _runK filename
-        cal = parsed.get("calibration") or {}
-        rm = cal.get("residual_median_pct")
-        noise = rm if rm is not None else cal.get("drift_pct")
-        noise = noise if noise is not None else float("inf")
-        return (bool(cal), bool(cal.get("gate_passed")), -noise)
-
-    by_round: dict[int, tuple[dict, str]] = {}
-    for pat in ("BENCH_r*.json", "BENCH_LOCAL_r*.json"):
-        for p in _glob.glob(os.path.join(here, pat)):
-            m = _re.search(r"BENCH(?:_LOCAL)?_r(\d+)(?:_run\d+)?\.json$", p)
-            if not m:
-                continue
-            n = int(m.group(1))
-            try:
-                with open(p) as f:
-                    d = json.load(f)
-            except (OSError, ValueError):
-                continue
-            parsed = d.get("parsed", d)
-            if not (isinstance(parsed, dict) and "queries" in parsed):
-                continue
-            if "partial" in parsed:
-                continue  # provisional attempt flush, not evidence
-            cur = by_round.get(n)
-            if cur is None or _rank(parsed) > _rank(cur[0]):
-                by_round[n] = (parsed, os.path.basename(p))
-    return by_round
+# Timed entry name -> bench-only twin, each ``fn(spark, sf_dir) -> DataFrame``.
+TWINS = {
+    "lineitem_quantiles_approx": lineitem_quantiles_approx,
+    "events_approx_distinct": events_approx_distinct,
+    "cosine_topk_sq8": cosine_topk_sq8,
+    "ivf_sq8_topk": ivf_sq8_topk_bench,
+    "pq_adc_topk_pruned": pq_adc_topk_ladder,
+    "semantic_dedup": semantic_dedup_bench,
+    "corpus_build_pipeline": corpus_build_bench,
+    "docs_pack_sequences_salted": pack_sequences_salted_bench,
+}
 
 
 def final_local_path(here: str, cur: int) -> str:
-    """Where this run's FINAL record lands (VERDICT r14 #6): the
-    canonical BENCH_LOCAL_r{cur}.json when it is free (absent, corrupt,
-    or a stale pre-r15 provisional), else the first free
-    BENCH_LOCAL_r{cur}_run{K}.json — a complete record from another
-    session (e.g. the builder's clean committed one) is never
-    overwritten by a later same-round re-run (e.g. the driver's noisy
-    one); bench_records ranks the coexisting records by gate/noise."""
+    """Where this run's record lands: the canonical
+    BENCH_LOCAL_r{cur}.json when it is free (absent, corrupt, or a stale
+    provisional from older bench code), else the first free
+    BENCH_LOCAL_r{cur}_run{K}.json, so a complete record from another
+    session is never overwritten by a later same-round re-run."""
     canonical = os.path.join(here, f"BENCH_LOCAL_r{cur}.json")
     try:
         with open(canonical) as f:
@@ -590,195 +374,37 @@ def run_medallion(spark, bronze_dir: str, gold_dir: str) -> None:
         df.write.mode("overwrite").parquet(os.path.join(gold_dir, name))
 
 
-# Attempt gate. r13 introduced the whole-run drift criterion (three
-# bracket calibrations within DRIFT_GATE_PCT); r15 adds the
-# construction that makes a DRIFTING session publishable: per-query
-# probe correction, gated on the median disagreement between each
-# query's two corrected samples (module doc). An attempt passes on
-# EITHER criterion — a quiet session trivially satisfies the first,
-# a drifting-but-well-probed session satisfies the second; only a
-# session too erratic for probe spacing to capture (residual high AND
-# spread high) is rejected and re-measured, up to the attempt cap,
-# with the least-noisy attempt emitted and the full per-attempt lists
-# in the record.
-DRIFT_GATE_PCT = 10.0
-# Bound on the median disagreement between a query's two
-# probe-corrected samples. Calibrated against the inherent min-of-2
-# pair jitter of a QUIET session (the dead-band keeps quiet samples
-# raw, so the residual floor IS that jitter): sub-second queries pair-
-# disagree 5-15% from scheduling/GC alone, so 12% at the median says
-# "corrected samples agree as well as a quiet session's raw ones".
-RESIDUAL_GATE_PCT = 12.0
-DRIFT_GATE_MAX_ATTEMPTS = 3
+def measure(spark, sf_dir: str, qs) -> dict[str, float]:
+    """Entry name -> seconds, the minimum of two interleaved runs: two
+    full passes over the queries and twins, then the medallion job and
+    the streaming replay twice each (fixture prep untimed)."""
+    entries = [
+        (n, (lambda n=n: qs[n](spark, sf_dir).collect())) for n in HEADLINE
+    ] + [(n, (lambda f=f: f(spark, sf_dir).collect())) for n, f in TWINS.items()]
+    samples: dict[str, list[float]] = {}
 
-# Cross-session noise floor for a SINGLE per-query ratio: queries with
-# zero code changes historically span 0.70-1.49 between sessions
-# (BENCH_NOTES_r14 "Cross-round noise floor"; re-observed r15). A lone
-# ratio inside this band is phase noise, not a regression — trends
-# need the median, and the median needs both sessions quiet.
-CROSS_SESSION_NOISE_BAND = (0.70, 1.49)
+    def sample(name: str, run) -> None:
+        t0 = time.perf_counter()
+        run()
+        samples.setdefault(name, []).append(time.perf_counter() - t0)
 
+    for _ in range(2):
+        for name, run in entries:
+            sample(name, run)
 
-def comparison_trust(session_cal: dict, prev_cal: dict | None) -> dict:
-    """Self-describing trust stamp for a vs_prev / vs_same_round block
-    (VERDICT r15 #2 wrong-finding / #3 task: the driver's r15 record
-    published median_ratio 1.151 from a session whose own
-    residual_median_pct was 27.5 — the gate legitimately passed on
-    whole-run drift, but per-query ratios from that session were
-    noise, and nothing in the record said so; adjudication took two
-    quiet same-HEAD records). The stamp carries both sides' noise
-    metrics and a verdict a reader can't misread: ratios are flagged
-    noise-dominated when EITHER session's probe-corrected sample
-    pairs disagree beyond RESIDUAL_GATE_PCT at the median (falling
-    back to the drift gate for pre-r15 baselines without a residual
-    row)."""
-
-    def _noise(cal: dict | None) -> tuple[float | None, bool | None]:
-        if not cal:
-            return None, None  # pre-calibration record: unknown
-        rm = cal.get("residual_median_pct")
-        if rm is not None:
-            return rm, rm > RESIDUAL_GATE_PCT
-        drift = cal.get("drift_pct")
-        if drift is not None:
-            return drift, drift > DRIFT_GATE_PCT
-        return None, None
-
-    s_noise, s_bad = _noise(session_cal)
-    p_noise, p_bad = _noise(prev_cal)
-    noisy_sides = [
-        side
-        for side, bad in (("session", s_bad), ("baseline", p_bad))
-        if bad
-    ]
-    trust = {
-        "session_residual_pct": s_noise,
-        "baseline_residual_pct": p_noise,
-        "noise_band_single_ratio": list(CROSS_SESSION_NOISE_BAND),
-        "ratios_trustworthy": not noisy_sides,
-    }
-    if noisy_sides:
-        trust["note"] = (
-            f"{'+'.join(noisy_sides)} noise exceeds the "
-            f"{RESIDUAL_GATE_PCT}% residual gate — per-query ratios "
-            "and the median are phase-noise readings; adjudicate "
-            "against the best-ranked coexisting record "
-            "(bench_records) before calling a regression"
-        )
-    else:
-        trust["note"] = (
-            "both sessions quiet; still treat any single ratio inside "
-            f"{CROSS_SESSION_NOISE_BAND} as noise"
-        )
-    return trust
-
-
-def attempt_gate_ok(cal_block: dict) -> bool:
-    """True when this attempt's numbers are trustworthy: whole-run
-    machine spread under the drift gate (quiet session), OR per-query
-    probe-corrected sample pairs agreeing at the median (drifting
-    session, correction verified post hoc)."""
-    if cal_block["drift_pct"] <= DRIFT_GATE_PCT:
-        return True
-    rm = cal_block.get("residual_median_pct")
-    return rm is not None and rm <= RESIDUAL_GATE_PCT
-
-
-def pick_attempt(attempts: list[tuple[dict, dict]]) -> tuple[dict, dict]:
-    """Gate decision, separated for unit testing: gate-passing
-    attempts beat failing ones; within a class the attempt with the
-    lowest residual wins (falling back to drift_pct for records
-    without a residual row), drift breaking residual ties; remaining
-    ties resolve to the earliest attempt (min() is stable). The loop
-    in main() stops at the first passing attempt, so when one passed
-    it is also the last."""
-
-    def key(a: tuple[dict, dict]):
-        c = a[1]
-        rm = c.get("residual_median_pct")
-        noise = rm if rm is not None else c["drift_pct"]
-        return (not attempt_gate_ok(c), noise, c["drift_pct"])
-
-    return min(attempts, key=key)
-
-
-def measure_attempt(spark, sf_dir: str, qs) -> tuple[dict, dict]:
-    """One complete measured pass — opening/closing full calibrations,
-    two interleaved query passes with single-shot probes beside every
-    PROBE_EVERY-th sample, medallion, streaming — returning (timings,
-    calibration block). timings are PROBE-CORRECTED min-of-2 seconds
-    (raw mins travel in the block for context). Pulled out of main()
-    so the gate can re-run the whole thing."""
-    cal_pre = calibration_sec(spark)
-    tr = _ProbeTrack(spark)
-
-    # Bench-only scale twin: sub-bucketed sequence packing (no single
-    # mega-source serializes one partition's window sort).
-    from bda_spark.plans.datamix import pack_sequences_salted
-
-    entries: list[tuple[str, object]] = [
-        (n, (lambda nn=n: qs[nn](spark, sf_dir).collect())) for n in HEADLINE
-    ] + [
-        (
-            "lineitem_quantiles_approx",
-            lambda: lineitem_quantiles_approx(spark, sf_dir).collect(),
-        ),
-        (
-            "events_approx_distinct",
-            lambda: events_approx_distinct(spark, sf_dir).collect(),
-        ),
-        ("cosine_topk_sq8", lambda: cosine_topk_sq8(spark, sf_dir).collect()),
-        ("ivf_sq8_topk", lambda: ivf_sq8_topk_bench(spark, sf_dir).collect()),
-        (
-            "pq_adc_topk_pruned",
-            lambda: pq_adc_topk_ladder(spark, sf_dir).collect(),
-        ),
-        ("semantic_dedup", lambda: semantic_dedup_bench(spark, sf_dir).collect()),
-        (
-            "corpus_build_pipeline",
-            lambda: corpus_build_bench(spark, sf_dir).collect(),
-        ),
-        (
-            "docs_pack_sequences_salted",
-            lambda: pack_sequences_salted(
-                load_table(spark, sf_dir, "documents")
-            ).collect(),
-        ),
-    ]
-
-    # Two INTERLEAVED passes over the whole list, min per query — NOT
-    # back-to-back min-of-2: a transient JVM episode (GC storm, codegen
-    # cache churn, an external process stealing cores for a couple of
-    # minutes) spans several consecutive queries, and two back-to-back
-    # runs both sit inside it (observed: two same-code runs where a
-    # CONTIGUOUS block of headline queries read 2-3x slower, different
-    # block each run). Interleaving separates a query's two samples by
-    # the full suite length, so one bad window can only poison one —
-    # and since r15 each sample is also corrected by the probes
-    # landing every PROBE_EVERY entries around it, so even the
-    # poisoned sample is normalized by the slowness measured beside
-    # it (the pair residual then verifies the correction worked).
-    for name, run in entries:
-        tr.sample(name, run)
-    for name, run in entries:
-        tr.sample(name, run)
-
-    # Medallion end-to-end (bronze fixture prep is untimed setup).
-    # Same min-of-2 policy as the queries: each run re-executes the full
-    # job against a fresh output dir, only session noise is elided.
+    # Medallion end-to-end: each run writes a fresh gold dir, so both
+    # do the full job.
     work = os.path.join(os.path.dirname(os.path.abspath(__file__)), ".bench_tmp")
     shutil.rmtree(work, ignore_errors=True)
     prepare_bronze(spark, sf_dir, work)
-    tr.probe()  # tight bracket: the sections below are heavier per sample
     for i in range(2):
-        tr.sample(
+        sample(
             "medallion_pipeline",
             lambda i=i: run_medallion(spark, work, os.path.join(work, f"gold{i}")),
         )
 
-    # Streaming train/predict/backfill replay (tick prep untimed; each
-    # run replays from a FRESH checkpoint+sink dir, so both runs do the
-    # complete train/predict/backfill work).
+    # Streaming replay: each run starts from a FRESH checkpoint+sink dir,
+    # so both do the complete train/predict/backfill work.
     prepare_ticks(spark, sf_dir, work)
     n_preds: list[int] = []
 
@@ -786,56 +412,37 @@ def measure_attempt(spark, sf_dir: str, qs) -> tuple[dict, dict]:
         shutil.rmtree(os.path.join(work, "pipe"), ignore_errors=True)
         n_preds.append(run_streaming(spark, work))
 
-    tr.probe()
     for _ in range(2):
-        tr.sample("streaming_pipeline", _stream_once)
+        sample("streaming_pipeline", _stream_once)
     assert n_preds and n_preds[-1] > 0, "streaming bench produced no predictions"
     shutil.rmtree(work, ignore_errors=True)
+    return {n: round(min(v), 3) for n, v in samples.items()}
 
-    tr.probe()  # trailing bracket so the last samples have a right probe
-    cal_post = calibration_sec(spark)
 
-    # TWO calibration populations, deliberately kept apart: the
-    # isolated pre/post blocks (warm-6 + min-of-5, nothing else
-    # running) measure the machine's clean speed — their spread is the
-    # quiet-session drift criterion and their min is "sec", the
-    # cross-round normalization base (same definition as pre-r15
-    # records). The interleaved probes inherit the workload's GC/
-    # cleanup debt and sit systematically ~10-25% above the isolated
-    # blocks even on a quiet box (measured), so they are compared only
-    # against THEIR OWN population's best — for the dead-banded sample
-    # correction and the probe_spread context number. Mixing the
-    # populations made quiet sessions read as 20-120% "drift" in the
-    # first validation runs.
-    cal = min(cal_pre, cal_post)
-    drift_pct = round(
-        100.0 * abs(cal_post - cal_pre) / min(cal_pre, cal_post), 1
-    )
-    probe_base = tr.baseline()
-    spread_pct = round(100.0 * (max(tr.probes) - probe_base) / probe_base, 1)
-    corr = tr.corrected(probe_base)
-    raw = tr.raw()
-    timings = {n: round(min(v), 3) for n, v in corr.items()}
-    residuals = sorted(
-        100.0 * (max(v) - min(v)) / min(v)
-        for v in corr.values()
-        if len(v) >= 2 and min(v) > 0
-    )
-    residual_median = (
-        round(residuals[len(residuals) // 2], 1) if residuals else None
-    )
-    return timings, {
-        "pre": round(cal_pre, 3),
-        "post": round(cal_post, 3),
-        "sec": round(cal, 3),
-        "drift_pct": drift_pct,
-        "probe_base": round(probe_base, 3),
-        "probe_spread_pct": spread_pct,
-        "probes": [round(p, 3) for p in tr.probes],
-        "probe_spacing": tr.every,
-        "residual_median_pct": residual_median,
-        "queries_raw": {n: round(min(v), 3) for n, v in raw.items()},
+# A caller that keeps only the last 2000 characters of stdout must still
+# parse the whole line; leave headroom for the newline and wider values.
+LINE_BUDGET = 1950
+
+
+def stdout_line(record: dict, full: str) -> str:
+    """The one compact JSON line the bench prints: the record's headline
+    fields, ``full`` (the record's file name) and every entry rounded to
+    2 decimals. Only if that overflows LINE_BUDGET does the line keep
+    just the 20 slowest entries, flagged by ``queries_note``."""
+    line = {
+        k: record[k]
+        for k in ("metric", "value", "unit", "sf", "cpus_effective", "master")
     }
+    line["full"] = full
+    queries = record["queries"]
+    line["queries"] = {k: round(v, 2) for k, v in queries.items()}
+    out = json.dumps(line, separators=(",", ":"))
+    if len(out) > LINE_BUDGET:
+        slowest = sorted(queries.items(), key=lambda kv: -kv[1])[:20]
+        line["queries"] = {k: round(v, 2) for k, v in slowest}
+        line["queries_note"] = "top20_full_in_local"
+        out = json.dumps(line, separators=(",", ":"))
+    return out
 
 
 def main() -> None:
@@ -847,212 +454,32 @@ def main() -> None:
 
     # Warmup: JVM + codegen + parquet footer caches.
     qs["grand_totals"](spark, sf_dir).collect()
+    timings = measure(spark, sf_dir, qs)
 
-    # Drift-gated measurement: retry whole attempts whose calibration
-    # bracket exceeds DRIFT_GATE_PCT; accept the first clean one, else
-    # the least-drifted of the cap. Each finished attempt flushes a
-    # provisional BENCH_LOCAL record immediately — a retrying run can
-    # take 3x the usual wall clock, and a caller that times it out
-    # mid-retry must still find the best-so-far evidence on disk (the
-    # final write below overwrites it with the full record).
-    import glob as _glob
-    import re as _re
-
+    # BENCH_r{N}.json is written at the END of round N, so a run during
+    # round N sees N-1 as the newest such record.
     here = os.path.dirname(os.path.abspath(__file__))
-    driver_rounds = [
+    rounds = [
         int(m.group(1))
-        for p in _glob.glob(os.path.join(here, "BENCH_r*.json"))
-        if (m := _re.search(r"BENCH_r(\d+)\.json$", p))
+        for p in glob.glob(os.path.join(here, "BENCH_r*.json"))
+        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
     ]
-    cur = (max(driver_rounds) + 1) if driver_rounds else 1
-    # Artifact separation (VERDICT r14 #6 + ADVICE): provisional
-    # attempt flushes go to a SIDECAR (.partial.json — a crash or
-    # timeout mid-gate must still leave best-so-far evidence on disk,
-    # without replacing a complete earlier record), and the final
-    # record never overwrites a COMPLETE same-round file from another
-    # session — it dodges to BENCH_LOCAL_r{N}_run{K}.json so a noisy
-    # driver re-run and a clean committed record can coexist
-    # (bench_records prefers the gate-passing, least-noisy one).
-    partial_path = os.path.join(here, f"BENCH_LOCAL_r{cur}.partial.json")
-
-    pre_records = bench_records()
-
-    def _base_record(t: dict, c: dict) -> dict:
-        return {
-            "metric": "headline_queries_total",
-            "value": round(sum(t.values()), 3),
-            "unit": "sec",
-            "queries": t,
-            "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
-            "calibration": c,
-        }
-
-    attempts: list[tuple[dict, dict]] = []
-    for _ in range(DRIFT_GATE_MAX_ATTEMPTS):
-        attempts.append(measure_attempt(spark, sf_dir, qs))
-        best_t, best_c = pick_attempt(attempts)
-        with open(partial_path, "w") as f:
-            json.dump(
-                {
-                    **_base_record(best_t, best_c),
-                    "partial": "attempt flush; final record supersedes",
-                },
-                f,
-                indent=1,
-            )
-            f.write("\n")
-        if attempt_gate_ok(attempts[-1][1]):
-            break
-    timings, cal_block = pick_attempt(attempts)
-    cal = cal_block["sec"]
-    queries_raw = cal_block.pop("queries_raw", None)
-    cal_block = {
-        **cal_block,
-        "drift_gate_pct": DRIFT_GATE_PCT,
-        "residual_gate_pct": RESIDUAL_GATE_PCT,
-        "attempts": len(attempts),
-        "attempt_drifts": [a[1]["drift_pct"] for a in attempts],
-        "attempt_residuals": [
-            a[1].get("residual_median_pct") for a in attempts
-        ],
-        "gate_passed": attempt_gate_ok(cal_block),
+    cur = (max(rounds) + 1) if rounds else 1
+    sc = spark.sparkContext
+    record = {
+        "metric": "headline_queries_total",
+        "value": round(sum(timings.values()), 3),
+        "unit": "sec",
+        "queries": timings,
+        "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus_effective": sc.defaultParallelism,
+        "master": sc.master,
     }
-
-    out = {
-        **_base_record(timings, cal_block),
-        # machine-speed-free per-query numbers (unit: calibrations)
-        "normalized": {k: round(v / cal, 3) for k, v in timings.items()},
-    }
-    if queries_raw:
-        # uncorrected min-of-2 seconds, for readers who want to see
-        # how much the probe correction moved each number
-        out["queries_raw"] = queries_raw
     local_path = final_local_path(here, cur)
-    # The current round = newest driver BENCH_r{N} + 1 (the driver
-    # writes BENCH_r{N}.json at the END of round N, so any run during
-    # round N sees N-1 as the newest driver file).
-
-    def _compare(prev: dict) -> tuple[float | None, dict]:
-        prev_cal = (prev.get("calibration") or {}).get("sec")
-        pq = prev.get("queries", {})
-        ratios = {}
-        for k, v in timings.items():
-            if not pq.get(k):
-                continue
-            r = v / pq[k]
-            if prev_cal:  # drift-normalized when the prev round has a row
-                r *= prev_cal / cal
-            ratios[k] = round(r, 3)
-        return prev_cal, ratios
-
-    # vs_prev: the HEADLINE comparison, always against the newest
-    # PREVIOUS round (r12 VERDICT task 4: mid-round, the newest record
-    # on disk is this round's own earlier commit — comparing against
-    # it silently changes what "vs_prev" means; that drift produced
-    # the r12 notes misattribution). A same-round record still gets a
-    # secondary vs_same_round block, and BOTH name their baseline
-    # file so the provenance is in the record, not in prose.
-    records = {
-        n: rec
-        for n, rec in pre_records.items()
-        if rec[0].get("sf") == out["sf"]
-    }
-    prev_rounds = [n for n in records if n < cur]
-    if prev_rounds:
-        prev_n = max(prev_rounds)
-        prev, prev_file = records[prev_n]
-        prev_cal, ratios = _compare(prev)
-        out["vs_prev"] = {
-            "round": prev_n,
-            "baseline_file": prev_file,
-            "prev_calibration": prev_cal,
-            "normalized": bool(prev_cal),
-            "trust": comparison_trust(cal_block, prev.get("calibration")),
-            "ratios": ratios,
-        }
-    if cur in records:
-        same, same_file = records[cur]
-        same_cal, same_ratios = _compare(same)
-        out["vs_same_round"] = {
-            "round": cur,
-            "baseline_file": same_file,
-            "prev_calibration": same_cal,
-            "normalized": bool(same_cal),
-            "trust": comparison_trust(cal_block, same.get("calibration")),
-            "ratios": same_ratios,
-        }
     with open(local_path, "w") as f:
-        json.dump(out, f, indent=1)
+        json.dump(record, f, indent=1)
         f.write("\n")
-    try:
-        os.remove(partial_path)  # superseded by the final record
-    except OSError:
-        pass
-
-    # Stdout: ONE compact JSON line sized to survive the 2 kB tail
-    # capture intact — keep the essentials (value, calibration, the
-    # full raw queries dict, vs_prev), shed the reconstructable
-    # "normalized" dict (= queries/cal), and degrade vs_prev.ratios
-    # to the worst offenders if the line still doesn't fit. The full
-    # record is always in BENCH_LOCAL_r{N}.json regardless.
-    compact = {
-        "metric": out["metric"],
-        "value": out["value"],
-        "unit": out["unit"],
-        "sf": out["sf"],
-        "full": os.path.basename(local_path),
-        "calibration": out["calibration"],
-        "queries": {k: round(v, 2) for k, v in timings.items()},
-    }
-    if "vs_prev" in out:
-        vp = out["vs_prev"]
-        rs = sorted(vp["ratios"].values())
-        # the trust verdict MUST survive into the driver-captured line:
-        # BENCH_r15's median_ratio 1.151 read as a regression because
-        # the 27.5% session residual that disqualified it lived three
-        # fields away with no interpretation attached
-        compact["vs_prev"] = {
-            "round": vp["round"],
-            "baseline_file": vp["baseline_file"],
-            "normalized": vp["normalized"],
-            "ratios_trustworthy": vp["trust"]["ratios_trustworthy"],
-            "noise_band_single_ratio": vp["trust"][
-                "noise_band_single_ratio"
-            ],
-            "median_ratio": round(rs[len(rs) // 2], 3) if rs else None,
-            # worst offenders only on stdout; the full ratio dict is in
-            # the local file (the stdout line must fit the 2 kB tail)
-            "worst8": dict(
-                sorted(vp["ratios"].items(), key=lambda kv: -kv[1])[:8]
-            ),
-        }
-    # the driver keeps the last 2000 stdout chars and json-parses the
-    # final line; leave headroom for the newline and value-width growth
-    _sep, _budget = (",", ":"), 1950
-    line = json.dumps(compact, separators=_sep)
-    if len(line) > _budget and "vs_prev" in compact:
-        compact["vs_prev"]["worst8"] = dict(
-            sorted(
-                compact["vs_prev"]["worst8"].items(),
-                key=lambda kv: -kv[1],
-            )[:4]
-        )
-        cal_c = compact["calibration"]
-        compact["calibration"] = {
-            "sec": cal_c["sec"],
-            "drift_pct": cal_c["drift_pct"],
-            "residual_median_pct": cal_c.get("residual_median_pct"),
-            "attempts": cal_c["attempts"],
-            "gate_passed": cal_c["gate_passed"],
-        }
-        line = json.dumps(compact, separators=_sep)
-    if len(line) > _budget:
-        compact["queries"] = dict(
-            sorted(timings.items(), key=lambda kv: -kv[1])[:20]
-        )
-        compact["queries_note"] = "top20_full_in_local"
-        line = json.dumps(compact, separators=_sep)
-    print(line)
+    print(stdout_line(record, os.path.basename(local_path)))
     spark.stop()
 
 

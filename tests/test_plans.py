@@ -454,112 +454,6 @@ def test_corpus_build_plan_has_no_cartesian_or_python_rows(spark):
         assert "BatchEvalPython" not in plan, plan
 
 
-def test_bench_drift_gate_pick_attempt():
-    """r14 drift gate (VERDICT r13 #1): the accepted bench attempt is
-    the least-drifted one — the first clean attempt when one passes
-    (the measurement loop stops there), the most trustworthy noisy one
-    when none do, earliest on ties (min() stability)."""
-    import bench
-
-    def a(drift, tag):
-        return ({"q": tag}, {"drift_pct": drift, "sec": 1.0})
-
-    # one attempt, clean: trivially accepted
-    t, c = bench.pick_attempt([a(2.2, 1)])
-    assert t["q"] == 1
-    # gate never passed: least-drifted of the three wins
-    t, c = bench.pick_attempt([a(15.4, 1), a(13.5, 2), a(20.3, 3)])
-    assert t["q"] == 2 and c["drift_pct"] == 13.5
-    # retries until a clean one: the clean LAST attempt is also min
-    t, c = bench.pick_attempt([a(22.0, 1), a(4.0, 2)])
-    assert t["q"] == 2
-    # tie resolves to the earliest attempt
-    t, c = bench.pick_attempt([a(12.0, 1), a(12.0, 2)])
-    assert t["q"] == 1
-
-
-def test_bench_residual_gate_r15():
-    """r15 (VERDICT r14 #1): a drifting session whose per-query
-    probe-corrected sample pairs AGREE is trustworthy — the gate
-    passes on the residual criterion even when whole-run drift
-    exceeds the old bracket gate, and pick_attempt prefers the
-    gate-passing attempt over a lower-drift failing one."""
-    import bench
-
-    def a(tag, drift, rm):
-        c = {"drift_pct": drift, "sec": 1.0}
-        if rm is not None:
-            c["residual_median_pct"] = rm
-        return ({"q": tag}, c)
-
-    # the r14 driver-session shape: huge whole-run drift, but probes
-    # corrected it — residual small => gate passes
-    assert bench.attempt_gate_ok(
-        {"drift_pct": 68.6, "residual_median_pct": 4.0}
-    )
-    # erratic beyond probe spacing: both criteria fail
-    assert not bench.attempt_gate_ok(
-        {"drift_pct": 68.6, "residual_median_pct": 25.0}
-    )
-    # quiet session passes on drift alone (residual may be absent in
-    # pre-r15 records read back for comparison)
-    assert bench.attempt_gate_ok({"drift_pct": 3.1})
-    # gate-passing high-drift attempt beats gate-failing low-drift one
-    t, c = bench.pick_attempt([a(1, 20.0, 15.0), a(2, 50.0, 5.0)])
-    assert t["q"] == 2
-    # among passing attempts the lower residual wins
-    t, c = bench.pick_attempt([a(1, 40.0, 8.0), a(2, 45.0, 3.0)])
-    assert t["q"] == 2
-
-
-def test_bench_probe_correction_math():
-    """_ProbeTrack.corrected: a sample measured while the machine ran
-    SUSTAINED 2x slow (both bracketing probes 2x the session's best)
-    is corrected to ~its quiet-session value; a one-sided probe spike
-    (GC debt hitting one probe, not both) does NOT distort the
-    neighbors (min-of-bracket); quiet samples inside the dead-band
-    stay exactly raw."""
-    import bench
-
-    tr = bench._ProbeTrack.__new__(bench._ProbeTrack)
-    tr.probes = [1.0, 1.0, 2.0, 2.0, 1.4]
-    tr.samples = [
-        ("fast", 5.0, 0),    # bracket 1.0/1.0 -> quiet, raw
-        ("spiked", 6.0, 1),  # bracket 1.0/2.0 -> min 1.0: spike rejected
-        ("slow", 10.0, 2),   # bracket 2.0/2.0 -> sustained: corrected
-        ("dead", 7.0, 3),    # bracket 2.0/1.4 -> min inside dead-band
-    ]
-    corr = tr.corrected(1.0)
-    assert corr["fast"] == [5.0]
-    assert corr["spiked"] == [6.0]
-    assert corr["slow"] == [5.0]   # 10.0 * (1.0 / 2.0)
-    assert corr["dead"] == [7.0]   # 1.4 inside the 1.5 dead-band: raw
-    raw = tr.raw()
-    assert raw["slow"] == [10.0]
-    # trailing sample: right bracket clamps to the last probe
-    tr.samples = [("edge", 8.0, 4)]
-    assert tr.corrected(1.0)["edge"] == [8.0]  # 1.4 in dead-band
-    tr.probes = [1.0, 1.0, 2.0, 2.0, 2.0]
-    assert tr.corrected(1.0)["edge"] == [4.0]  # sustained at the tail
-
-
-def test_bench_probe_baseline_rejects_outliers_both_ways():
-    """baseline() is the median of the lowest probe quartile: one
-    anomalously FAST probe (a turbo window — observed 0.613 s in a
-    0.77-1.04 s series) must not drag the correction dead-band below
-    the series' normal range, and slow spikes must not lift it."""
-    import bench
-
-    tr = bench._ProbeTrack.__new__(bench._ProbeTrack)
-    tr.probes = [0.613, 2.083] + [0.78, 0.80, 0.82, 0.84, 0.86, 0.88,
-                                  0.90, 0.92, 0.94, 0.96]
-    b = tr.baseline()
-    assert 0.78 <= b <= 0.82, b  # the quiet cluster, not 0.613
-    # a genuinely faster machine moves the whole lower quartile
-    tr.probes = [0.4, 0.41, 0.42, 0.43, 0.80, 0.82, 0.84, 0.86]
-    assert tr.baseline() <= 0.42
-
-
 def test_bench_final_path_never_overwrites_complete_record(tmp_path):
     """VERDICT r14 #6: a complete same-round record is never
     overwritten — later runs dodge to _run{K}; provisional/corrupt
@@ -583,97 +477,56 @@ def test_bench_final_path_never_overwrites_complete_record(tmp_path):
     assert bench.final_local_path(here, 9).endswith("_run3.json")
 
 
-def test_bench_records_prefers_clean_same_round_record(tmp_path):
-    """bench_records must surface the gate-passing, least-noisy record
-    when a round has several (builder's clean committed one vs a noisy
-    driver re-run under _runK), and skip .partial sidecars entirely."""
+def _bench_record(queries: dict) -> dict:
+    return {
+        "metric": "headline_queries_total",
+        "value": round(sum(queries.values()), 3),
+        "unit": "sec",
+        "queries": queries,
+        "sf": 0.1,
+        "cpus_effective": 4,
+        "master": "local[4]",
+    }
+
+
+def test_bench_stdout_line_carries_every_entry():
+    """All 59 timed entries at three-digit seconds fit the stdout line,
+    beside the headline fields and the parallelism the run had."""
     import json
 
     import bench
 
-    def rec(gate, drift, rm, q=1.0):
-        return {
-            "queries": {"q": q},
-            "sf": 0.1,
-            "calibration": {
-                "sec": 1.0,
-                "drift_pct": drift,
-                "residual_median_pct": rm,
-                "gate_passed": gate,
-            },
-        }
-
-    (tmp_path / "BENCH_LOCAL_r7.json").write_text(
-        json.dumps(rec(True, 2.2, 1.5, q=1.0))
+    names = (
+        bench.HEADLINE
+        + list(bench.TWINS)
+        + ["medallion_pipeline", "streaming_pipeline"]
     )
-    (tmp_path / "BENCH_LOCAL_r7_run2.json").write_text(
-        json.dumps(rec(False, 68.6, 30.0, q=9.9))
-    )
-    (tmp_path / "BENCH_LOCAL_r8.partial.json").write_text(
-        json.dumps({"queries": {"q": 1}, "partial": "x"})
-    )
-    got = bench.bench_records(str(tmp_path))
-    assert got[7][0]["queries"]["q"] == 1.0
-    assert got[7][1] == "BENCH_LOCAL_r7.json"
-    assert 8 not in got
-    # reversed roles: the clean record sits under _runK and still wins
-    (tmp_path / "BENCH_LOCAL_r7.json").write_text(
-        json.dumps(rec(False, 50.0, 28.0, q=9.9))
-    )
-    (tmp_path / "BENCH_LOCAL_r7_run2.json").write_text(
-        json.dumps(rec(True, 40.0, 3.0, q=1.0))
-    )
-    got = bench.bench_records(str(tmp_path))
-    assert got[7][1] == "BENCH_LOCAL_r7_run2.json"
+    assert len(set(names)) == 59
+    rec = _bench_record({n: 123.45 for n in names})
+    line = bench.stdout_line(rec, "BENCH_LOCAL_r18.json")
+    assert "\n" not in line and len(line) <= bench.LINE_BUDGET == 1950
+    out = json.loads(line)
+    assert out["queries"] == rec["queries"]
+    for k in ("metric", "value", "unit", "sf", "cpus_effective", "master"):
+        assert out[k] == rec[k]
+    assert out["full"] == "BENCH_LOCAL_r18.json"
+    assert "queries_note" not in out
 
 
-def test_bench_comparison_trust_stamp():
-    """r16 (VERDICT r15 #3): the vs_prev block must self-describe its
-    trust level — the r15 driver record's median_ratio 1.151 came from
-    a session whose own residual_median_pct was 27.5 (gate passed on
-    whole-run drift), and nothing in the record said the per-query
-    ratios were noise. The stamp flags EITHER side's noise past the
-    residual gate, falls back to drift for pre-r15 baselines, and
-    carries the documented single-ratio noise band."""
+def test_bench_stdout_line_overflow_keeps_20_slowest():
+    """A record too wide for the line falls back to its 20 slowest
+    entries, flagged by queries_note, still within the budget."""
+    import json
+
     import bench
 
-    # the exact r15 shape: session gate passed via drift, residual 27.5
-    t = bench.comparison_trust(
-        {"drift_pct": 3.7, "residual_median_pct": 27.5, "sec": 1.0},
-        {"drift_pct": 2.0, "residual_median_pct": 3.0, "sec": 1.0},
-    )
-    assert t["ratios_trustworthy"] is False
-    assert "session" in t["note"]
-    assert t["session_residual_pct"] == 27.5
-    # noisy BASELINE poisons ratios just the same
-    t = bench.comparison_trust(
-        {"drift_pct": 2.0, "residual_median_pct": 3.0},
-        {"drift_pct": 50.0, "residual_median_pct": 30.0},
-    )
-    assert t["ratios_trustworthy"] is False and "baseline" in t["note"]
-    # both quiet: trustworthy, but the single-ratio band still rides
-    t = bench.comparison_trust(
-        {"drift_pct": 2.0, "residual_median_pct": 3.0},
-        {"drift_pct": 4.0, "residual_median_pct": 5.0},
-    )
-    assert t["ratios_trustworthy"] is True
-    assert t["noise_band_single_ratio"] == list(
-        bench.CROSS_SESSION_NOISE_BAND
-    )
-    # pre-r15 baseline without a residual row: drift gate decides
-    t = bench.comparison_trust(
-        {"drift_pct": 2.0, "residual_median_pct": 3.0},
-        {"drift_pct": 40.0},
-    )
-    assert t["ratios_trustworthy"] is False
-    t = bench.comparison_trust(
-        {"drift_pct": 2.0, "residual_median_pct": 3.0}, {"drift_pct": 5.0}
-    )
-    assert t["ratios_trustworthy"] is True
-    # a baseline with no calibration at all: unknown, not flagged
-    # (normalized=false already marks the comparison un-normalized)
-    t = bench.comparison_trust(
-        {"drift_pct": 2.0, "residual_median_pct": 3.0}, None
-    )
-    assert t["ratios_trustworthy"] is True
-    assert t["baseline_residual_pct"] is None
+    queries = {
+        f"synthetic_entry_with_a_long_name_{i:03d}": float(i) for i in range(200)
+    }
+    line = bench.stdout_line(_bench_record(queries), "BENCH_LOCAL_r1.json")
+    assert len(line) <= bench.LINE_BUDGET
+    out = json.loads(line)
+    assert out["queries_note"] == "top20_full_in_local"
+    slowest = sorted(queries, key=queries.get)[-20:]
+    assert out["queries"] == {k: queries[k] for k in slowest}
+    assert out["cpus_effective"] == 4 and out["master"] == "local[4]"

@@ -476,6 +476,23 @@ def test_start_all_concurrent_growing_source(spark, tmp_path_factory):
         assert r.label == pytest.approx(expected[widx])
 
 
+def test_start_all_rejects_unknown_trigger_keys(spark, tick_dir, tmp_path):
+    """A removed key ("backfiller") or a typo ("predict") must fail
+    loudly, naming the valid keys, before any query starts — not drop
+    the cadence silently."""
+    pipe = TickPipeline(
+        spark, file_replay_tick_stream(spark, tick_dir), "BP", str(tmp_path)
+    )
+    before = len(spark.streams.active)
+    for bad in ({"backfiller": "5 minutes"}, {"predict": "1 second"}):
+        with pytest.raises(ValueError) as e:
+            pipe.start_all(triggers=bad)
+        msg = str(e.value)
+        assert next(iter(bad)) in msg
+        assert "trainer" in msg and "predictor" in msg
+    assert len(spark.streams.active) == before
+
+
 # --------------------------------------------------- rate-limited replay (T9)
 def test_streaming_session_windows_match_batch(spark, tmp_path_factory):
     """Data-driven session windows on the LIVE stream: two bursts per
