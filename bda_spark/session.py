@@ -91,6 +91,18 @@ def local_checkpoint_manager(default_fs: str | None, current: str | None) -> str
     return FS_CHECKPOINT_MANAGER if scheme == "file" else None
 
 
+def local_cores(value: str | None) -> int:
+    """Task slots for a local master: ``value`` (``$SPARK_GRAFT_CPUS``)
+    when it is a positive integer, else the cores this process may run
+    on, so an unset or malformed value never oversubscribes the host."""
+    usable = len(os.sched_getaffinity(0))
+    try:
+        n = int(value)
+    except (TypeError, ValueError):
+        return usable
+    return n if n > 0 else usable
+
+
 def get_spark(
     app_name: str = "bda_spark",
     master: str | None = None,
@@ -98,8 +110,9 @@ def get_spark(
 ) -> SparkSession:
     """Create (or fetch) a SparkSession with the engine's tuned defaults.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (env, default 32)
-    when no cluster master is configured, which matches the test harness.
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` when no cluster
+    master is configured; an unset or non-positive-integer value means
+    the usable core count (see ``local_cores``).
     """
     from .functions.blas import blas_env, limit_blas_threads
 
@@ -111,8 +124,7 @@ def get_spark(
     for k, v in blas_env().items():
         os.environ.setdefault(k, v)
     if master is None:
-        cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-        master = f"local[{cpus}]"
+        master = f"local[{local_cores(os.environ.get('SPARK_GRAFT_CPUS'))}]"
     confs = dict(_DEFAULT_CONFS)
     for k, v in blas_env().items():
         confs.setdefault(f"spark.executorEnv.{k}", v)

@@ -1,6 +1,7 @@
 """Benchmark harness: times the reference pipeline at $SPARK_GRAFT_SF_DIR
-(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] and prints ONE
-JSON line: {"metric": ..., "value": N, "unit": "sec", "queries": {...}, ...}.
+(default /root/testdata/sf0.1) on local[$SPARK_GRAFT_CPUS] (default: the
+usable core count) and prints ONE JSON line: {"metric": ..., "value": N,
+"unit": "sec", "queries": {...}, ...}.
 
 Timed entries: the HEADLINE registry queries and the bench-only scale
 twins (each built and collect()ed), the medallion bronze -> silver ->
@@ -10,7 +11,13 @@ passes and keeps the minimum: a transient JVM or host episode spans
 several consecutive entries, and interleaving puts a full suite length
 between an entry's two samples, so one episode poisons at most one.
 ``value`` is the sum of the entries. The full record lands in
-BENCH_LOCAL_r{N}.json beside this script.
+BENCH_LOCAL_r{N}.json beside this script. Its ``layers`` block splits
+each query entry's kept sample into ``build_s`` (DataFrame
+construction) and ``exec_s`` (``collect()``), the Spark jobs each fired
+(``build_jobs``, ``exec_jobs``) and ``cpu_s`` (CPU of this process, the
+JVM and its Python workers). The medallion and streaming entries carry
+``cpu_s`` only: streaming jobs run on the queries' own threads, so
+per-batch attribution comes from ``perfbench/run.py --trace 1``.
 
 The numbers are wall-clock readings of one session. Keep/discard
 decisions come from paired parent-versus-change runs of ``perfbench/``.
@@ -39,6 +46,7 @@ from bda_spark.operators.silver import silver_news, silver_yfinance
 from bda_spark.plans import get_queries
 from bda_spark.session import get_spark
 from bda_spark.sources.batch import load_table
+from perfbench.tracing import cpu_seconds
 
 # Headline set: the medallion/gold analogs, the streaming-analog windowed
 # queries, joins, and one of each LLM-pipeline operator family.
@@ -374,23 +382,73 @@ def run_medallion(spark, bronze_dir: str, gold_dir: str) -> None:
         df.write.mode("overwrite").parquet(os.path.join(gold_dir, name))
 
 
-def measure(spark, sf_dir: str, qs) -> dict[str, float]:
-    """Entry name -> seconds, the minimum of two interleaved runs: two
-    full passes over the queries and twins, then the medallion job and
-    the streaming replay twice each (fixture prep untimed)."""
-    entries = [
-        (n, (lambda n=n: qs[n](spark, sf_dir).collect())) for n in HEADLINE
-    ] + [(n, (lambda f=f: f(spark, sf_dir).collect())) for n, f in TWINS.items()]
-    samples: dict[str, list[float]] = {}
+JOB_GROUP = "spark.jobGroup.id"
+
+
+def time_entry(spark, group: str, build) -> tuple[float, dict]:
+    """One sample of a query entry: ``build()`` makes the DataFrame under
+    job group ``<group>/build`` and ``collect()`` runs it under
+    ``<group>/exec``. Returns the wall time, ``build_s + exec_s``, and
+    its split (module docstring); the CPU readings sit outside the
+    timed window, and the job group is cleared so later jobs are not
+    charged to the entry."""
+    sc = spark.sparkContext
+    cpu0 = cpu_seconds()
+    try:
+        sc.setLocalProperty(JOB_GROUP, f"{group}/build")
+        t0 = time.perf_counter()
+        df = build()
+        t1 = time.perf_counter()
+        sc.setLocalProperty(JOB_GROUP, f"{group}/exec")
+        df.collect()
+        t2 = time.perf_counter()
+    finally:
+        sc.setLocalProperty(JOB_GROUP, None)
+    cpu_s = cpu_seconds() - cpu0
+    # The status store is fed by the listener bus on its own thread:
+    # drain it so the entry's last job is counted.
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    split = {
+        "build_s": t1 - t0,
+        "exec_s": t2 - t1,
+        "build_jobs": len(tracker.getJobIdsForGroup(f"{group}/build")),
+        "exec_jobs": len(tracker.getJobIdsForGroup(f"{group}/exec")),
+        "cpu_s": cpu_s,
+    }
+    return split["build_s"] + split["exec_s"], split
+
+
+def fastest(samples: dict[str, list[tuple[float, dict]]]) -> tuple[dict, dict]:
+    """Per entry, the wall time of its fastest sample and that sample's
+    split, both rounded to 3 decimals."""
+    timings, layers = {}, {}
+    for name, runs in samples.items():
+        wall, split = min(runs, key=lambda r: r[0])
+        timings[name] = round(wall, 3)
+        layers[name] = {k: round(v, 3) for k, v in split.items()}
+    return timings, layers
+
+
+def measure(spark, sf_dir: str, qs) -> tuple[dict, dict]:
+    """Entry name -> seconds, the minimum of two interleaved runs, and
+    entry name -> that run's split: two full passes over the queries
+    and twins, then the medallion job and the streaming replay twice
+    each (fixture prep untimed)."""
+    builders = {n: qs[n] for n in HEADLINE} | TWINS
+    samples: dict[str, list[tuple[float, dict]]] = {}
+    for p in range(2):
+        for name, fn in builders.items():
+            samples.setdefault(name, []).append(
+                time_entry(spark, f"{name}#{p}", lambda fn=fn: fn(spark, sf_dir))
+            )
 
     def sample(name: str, run) -> None:
+        cpu0 = cpu_seconds()
         t0 = time.perf_counter()
         run()
-        samples.setdefault(name, []).append(time.perf_counter() - t0)
-
-    for _ in range(2):
-        for name, run in entries:
-            sample(name, run)
+        wall = time.perf_counter() - t0
+        samples.setdefault(name, []).append((wall, {"cpu_s": cpu_seconds() - cpu0}))
 
     # Medallion end-to-end: each run writes a fresh gold dir, so both
     # do the full job.
@@ -416,7 +474,7 @@ def measure(spark, sf_dir: str, qs) -> dict[str, float]:
         sample("streaming_pipeline", _stream_once)
     assert n_preds and n_preds[-1] > 0, "streaming bench produced no predictions"
     shutil.rmtree(work, ignore_errors=True)
-    return {n: round(min(v), 3) for n, v in samples.items()}
+    return fastest(samples)
 
 
 # A caller that keeps only the last 2000 characters of stdout must still
@@ -454,7 +512,7 @@ def main() -> None:
 
     # Warmup: JVM + codegen + parquet footer caches.
     qs["grand_totals"](spark, sf_dir).collect()
-    timings = measure(spark, sf_dir, qs)
+    timings, layers = measure(spark, sf_dir, qs)
 
     # BENCH_r{N}.json is written at the END of round N, so a run during
     # round N sees N-1 as the newest such record.
@@ -474,6 +532,7 @@ def main() -> None:
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
         "cpus_effective": sc.defaultParallelism,
         "master": sc.master,
+        "layers": layers,
     }
     local_path = final_local_path(here, cur)
     with open(local_path, "w") as f:

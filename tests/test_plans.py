@@ -505,6 +505,12 @@ def test_bench_stdout_line_carries_every_entry():
     rec = _bench_record({n: 123.45 for n in names})
     line = bench.stdout_line(rec, "BENCH_LOCAL_r18.json")
     assert "\n" not in line and len(line) <= bench.LINE_BUDGET == 1950
+    # the per-entry layers block stays in the full record only
+    split = {"build_s": 100.0, "exec_s": 23.45, "build_jobs": 23,
+             "exec_jobs": 4, "cpu_s": 321.5}
+    with_layers = dict(rec, layers={n: dict(split) for n in names})
+    assert bench.stdout_line(with_layers, "BENCH_LOCAL_r18.json") == line
+    assert "layers" not in line
     out = json.loads(line)
     assert out["queries"] == rec["queries"]
     for k in ("metric", "value", "unit", "sf", "cpus_effective", "master"):
@@ -530,3 +536,41 @@ def test_bench_stdout_line_overflow_keeps_20_slowest():
     slowest = sorted(queries, key=queries.get)[-20:]
     assert out["queries"] == {k: queries[k] for k in slowest}
     assert out["cpus_effective"] == 4 and out["master"] == "local[4]"
+
+
+def test_bench_entry_split_counts_jobs_per_layer(spark):
+    """time_entry charges jobs fired while building to build_jobs and
+    the collect to exec_jobs, splits the wall time into build_s +
+    exec_s, clears the job group, and fastest() keeps the split of the
+    faster sample."""
+    import time
+
+    import bench
+
+    sc = spark.sparkContext
+
+    def eager():
+        time.sleep(0.2)
+        return spark.range(100).localCheckpoint(eager=True)
+
+    def lazy():
+        return spark.range(100).selectExpr("id * 2 AS x")
+
+    runs, splits = [], {}
+    for group, build in (("eager#0", eager), ("lazy#0", lazy)):
+        wall, split = bench.time_entry(spark, group, build)
+        assert sc.getLocalProperty("spark.jobGroup.id") is None
+        assert set(split) == {"build_s", "exec_s", "build_jobs", "exec_jobs", "cpu_s"}
+        assert split["build_s"] + split["exec_s"] == pytest.approx(wall)
+        assert split["exec_jobs"] >= 1 and split["cpu_s"] >= 0
+        runs.append((wall, split))
+        splits[group] = split
+    assert splits["eager#0"]["build_jobs"] == 1
+    assert splits["lazy#0"]["build_jobs"] == 0
+    assert splits["eager#0"]["build_s"] >= 0.2
+
+    timings, layers = bench.fastest({"entry": runs})
+    kept = layers["entry"]
+    assert kept["build_jobs"] == 0  # the lazy sample is the faster one
+    assert timings["entry"] == round(min(w for w, _ in runs), 3)
+    assert kept["build_s"] + kept["exec_s"] == pytest.approx(timings["entry"], abs=0.002)

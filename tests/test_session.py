@@ -1,9 +1,12 @@
-"""The session factory's checkpoint-manager default: a local session
-commits streaming checkpoints through Spark's FileSystem-based manager
-unless the caller chose one, and a non-local defaultFS keeps Spark's
-default."""
+"""The session factory's defaults: a local session commits streaming
+checkpoints through Spark's FileSystem-based manager unless the caller
+chose one, and a non-local defaultFS keeps Spark's default; a local
+master gets ``$SPARK_GRAFT_CPUS`` task slots, or the usable core count
+when that is unset or not a positive integer."""
 
 from __future__ import annotations
+
+import os
 
 import pytest
 
@@ -12,6 +15,7 @@ from bda_spark.session import (
     FS_CHECKPOINT_MANAGER,
     get_spark,
     local_checkpoint_manager,
+    local_cores,
 )
 
 FC_CHECKPOINT_MANAGER = (
@@ -74,3 +78,12 @@ def test_explicit_manager_wins(spark, tmp_path):
 )
 def test_manager_choice(default_fs, current, expected):
     assert local_checkpoint_manager(default_fs, current) == expected
+
+
+@pytest.mark.parametrize("value", [None, "abc", "0", "-2", "1.5", ""])
+def test_local_cores_falls_back_to_usable_cores(value):
+    assert local_cores(value) == len(os.sched_getaffinity(0))
+
+
+def test_local_cores_takes_a_positive_integer():
+    assert local_cores("8") == 8
