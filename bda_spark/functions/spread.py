@@ -37,8 +37,6 @@ Scale behavior of the knobs:
   on their own — are never re-exchanged (measured: widening a 10-task
   scan to 32 was 15% slower; widening a 1-task scan 1.06-1.30x
   faster).
-- ``BDA_SPREAD_SCANS=0`` disables every spread (deployment kill
-  switch, and the A/B lever the r17 measurements used).
 
 Determinism: round-robin repartition sorts rows within each input
 partition before assigning them (``spark.sql.execution.sortBeforeRepartition``,
@@ -50,7 +48,6 @@ consumer downstream of a spread here is order-insensitive anyway
 from __future__ import annotations
 
 import math
-import os
 
 from pyspark.sql import DataFrame
 
@@ -86,7 +83,7 @@ def spread_scan(df: DataFrame, bytes_per_task: int) -> DataFrame:
     stage — ONLY when the planner leaves it NEAR-SERIAL (module doc).
     Returns ``df`` unchanged whenever the exchange buys nothing: tiny
     or unsized input (< one task's worth, or no Catalyst estimate),
-    input already multi-task, or the kill switch. Callers should
+    or input already multi-task. Callers should
     project to the columns the heavy stage needs BEFORE spreading
     (guide §2.3: never exchange bytes the stage won't read).
 
@@ -98,8 +95,6 @@ def spread_scan(df: DataFrame, bytes_per_task: int) -> DataFrame:
     spread therefore arms only below ``max(2, cores/8)`` planned tasks
     — the one-row-group / one-gzip pathology it exists for — and
     widening an already-parallel scan is left to the planner."""
-    if os.environ.get("BDA_SPREAD_SCANS", "1").lower() in ("0", "false", "off"):
-        return df
     size = _plan_size_bytes(df)
     if not size or size <= bytes_per_task:
         return df

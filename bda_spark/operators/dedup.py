@@ -454,15 +454,14 @@ def _jaccard_verify(
     linear at every scale:
 
     1. SEMI-FILTER the posting lists to candidate docs before any
-       expensive join: the distinct candidate id lists are one row
-       per candidate DOC (not per pair, not per shingle), so the
-       semi-joins stream the corpus shingle frames against small
-       broadcast id sets — the corpus is never shuffled — and
-       everything downstream is sized by the CANDIDATES, not the
-       corpus. (When the id lists outgrow broadcast at extreme
-       scale, AQE sees their true size — distinct() gives them a
-       shuffle boundary — and degrades the semi to a shuffle join,
-       which is then the honest cost anyway.)
+       expensive join (id lists are one row per candidate pair, not
+       per shingle), so everything downstream is sized by the
+       CANDIDATES, not the corpus. The eager ``localCheckpoint``
+       frame carries the plan's ESTIMATED stats, not its size, so on
+       Spark 4.1.2 both semi-joins plan as sort-merge: the corpus
+       ``(doc_id, toks)`` projection is hash-shuffled once (side b
+       reuses it) and each id list is shuffled before AQE, seeing
+       their real size, demotes both to broadcast joins.
     2. MERGE (sort-merge) hints on the candidate side of both fanout
        joins: the fanned frame also lacks a shuffle boundary, so
        without the hint the same static mis-estimate re-broadcasts
@@ -481,9 +480,9 @@ def _jaccard_verify(
     16-byte rows — the same bounded-artifact discipline as the
     signature checkpoint in minhash_neardup_pairs."""
     cands = cands.localCheckpoint(eager=True)
-    # no distinct(): LEFT SEMI dedups the probe side by construction,
-    # and the checkpointed candidate frame's accurate (tiny) size
-    # stats make these broadcast semi-joins without extra shuffles
+    # no distinct(): LEFT SEMI dedups the probe side by construction;
+    # both semi-joins plan as sort-merge (docstring point 1) and AQE
+    # turns them into broadcast joins once the id lists are shuffled
     docs_a = cands.select(a_col)
     docs_b = cands.select(b_col)
     sh_a = sh_a.join(docs_a, a_col, "left_semi")

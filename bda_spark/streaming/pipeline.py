@@ -216,9 +216,12 @@ class TickPipeline:
         historical model scores the SAME frame via a second chained
         transform — no join at all, which fixes the reference's
         symbol-only join (ref stream_and_historical_model.py:599-603,
-        a cross-match at >1 row per symbol per batch; SURVEY §2.3 J2)."""
+        a cross-match at >1 row per symbol per batch; SURVEY §2.3 J2).
+        No emptiness probe (a job per batch that skipped none in the
+        benchmark): a batch without this symbol's ticks commits an
+        empty part file, which reads back as zero rows."""
         model = self.store.current()
-        if model is None or batch_df.isEmpty():
+        if model is None:
             return
         preds = model.transform(self._assembler_pred.transform(batch_df)).withColumnRenamed(
             "prediction", "prediction_streaming"

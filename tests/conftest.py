@@ -24,7 +24,7 @@ SF_MED = "/root/testdata/sf0.01"
 # DEFAULT (driver-run) tier keeps every behavioral test and the FULL
 # all-100-queries DuckDB oracle sweep at sf0.001, so correctness
 # coverage is untouched; the deep tier re-proves the same results at
-# 10x scale and is run locally each round (see OPTIMIZATION_r17.md).
+# 10x scale (its tier sizes and timings are in EVIDENCE.md).
 
 
 def pytest_collection_modifyitems(config, items):

@@ -1,13 +1,14 @@
-"""AQE skew-join handling, demonstrated live (SURVEY §4 / session.py's
-``spark.sql.adaptive.skewJoin.enabled`` claim, asserted not claimed):
-a join whose shuffle puts ~95% of the fact rows in one partition must
-be re-planned at runtime into a skew join — the hot partition split
-across tasks — instead of serializing one reducer.
+"""AQE skew-join handling, demonstrated live (SURVEY §4): the engine
+relies on Spark's default ``spark.sql.adaptive.skewJoin.enabled``
+(true, with AQE itself on by default), so a join whose shuffle puts
+~95% of the fact rows in one partition must be re-planned at runtime
+into a skew join — the hot partition split across tasks — instead of
+serializing one reducer.
 
 Thresholds are lowered to make a test-sized table "skewed"; at real
 scale the defaults (256 MB partition, 5x median) fire the same path.
 The salting twin for non-join skew lives in datamix.pack_sequences_
-salted; this pins the ENGINE-side mechanism the session enables."""
+salted; this pins the ENGINE-side mechanism Spark's defaults enable."""
 
 from __future__ import annotations
 

@@ -2,8 +2,8 @@
 
 The r16 blanket repartition-after-read measured +42% and was rejected;
 the r17 helper must therefore (a) refuse to add an exchange anywhere
-the gate says it buys nothing — tiny inputs, already-wide inputs, kill
-switch — and (b) leave every consumer's RESULT bit-identical when it
+the gate says it buys nothing — tiny, unsized and already-wide
+inputs — and (b) leave every consumer's RESULT bit-identical when it
 does fire (round-robin placement feeds only order-insensitive
 consumers)."""
 
@@ -33,12 +33,6 @@ def test_underparallelized_input_spreads_to_cost_target(spark):
     out = spread_scan(df, 64 * 1024)
     par = spark.sparkContext.defaultParallelism
     assert 1 < _partitions(out) <= par
-
-
-def test_kill_switch_disables(spark, monkeypatch):
-    monkeypatch.setenv("BDA_SPREAD_SCANS", "0")
-    df = spark.range(80_000).coalesce(1)
-    assert spread_scan(df, 64 * 1024) is df
 
 
 def test_already_parallel_input_is_untouched(spark):

@@ -223,6 +223,43 @@ def test_predictor_appends_null_label_predictions(spark, tick_dir, tmp_path):
         assert abs(r.prediction - actual) < 5.0
 
 
+def test_predictor_batch_without_bp_ticks_commits_empty_dir(
+    spark, tmp_path_factory
+):
+    """A predictor micro-batch holding no tick of the pipeline's symbol
+    still commits its batch dir (an empty part file, ``_SUCCESS``
+    written) and reads back as zero rows: replaying an ETHEREUM-only
+    file, then a BP file, the predictions table holds exactly the BP
+    file's valid ticks."""
+    src = tmp_path_factory.mktemp("predict_eth_then_bp")
+    with open(src / "a_eth.jsonl", "w") as f:
+        for i in range(N_TICKS):
+            f.write(json.dumps(_eth_tick(i)) + "\n")
+    with open(src / "b_bp.jsonl", "w") as f:
+        for i in range(N_TICKS):
+            f.write(json.dumps(_bp_tick(i)) + "\n")
+    # deterministic replay order (mtime ties are broken arbitrarily)
+    for sec, name in enumerate(["a_eth.jsonl", "b_bp.jsonl"]):
+        os.utime(src / name, (1700000000 + sec * 10, 1700000000 + sec * 10))
+    work = tmp_path_factory.mktemp("predict_eth_then_bp_work")
+    pipe = TickPipeline(
+        spark,
+        file_replay_tick_stream(spark, str(src), max_files_per_trigger=1),
+        "BP",
+        str(work),
+    )
+    pipe.store.save(_batch_model(spark, str(src), pipe), "LinearRegression")
+    q = pipe.start_predictor(available_now=True)
+    _drain(q)
+    batch_ids = sorted(
+        p["batchId"] for p in q.recentProgress if p["numInputRows"]
+    )
+    assert len(batch_ids) == 2
+    first = os.path.join(pipe.predictions_path, f"batch={batch_ids[0]}")
+    assert os.path.exists(os.path.join(first, "_SUCCESS"))
+    assert pipe.predictions().count() == N_TICKS
+
+
 def test_label_backfill_sets_window_averages(bp_pipeline):
     # no-ops when the module's earlier tests already drained the source
     _drain(bp_pipeline.start_trainer_and_backfiller(available_now=True))
