@@ -36,6 +36,16 @@ def validate_ticks(df: DataFrame) -> DataFrame:
     """Ingest-side constraint gate replicating the producer's 9 checks:
     required fields non-null, enum source/data_type, sentiment in [-1,1],
     activity in [0,100] (sentinel allowed), no future timestamps.
+
+    The future-timestamp test compares inside a lambda
+    (``exists(array(timestamp), t -> t <= now)``), a CodegenFallback
+    expression: generated code calls it rather than inlining it. In a
+    streaming micro-batch Spark replaces ``current_timestamp()`` with
+    that batch's time after optimization; inlined, the time would make
+    every batch's generated predicate a new source and a new Janino
+    compile (one per trigger, forever, on a 1 s trigger). The price is
+    an interpreted lambda per row, a one-element array and one
+    comparison.
     """
     return df.filter(
         F.col("symbol").isNotNull()
@@ -44,5 +54,7 @@ def validate_ticks(df: DataFrame) -> DataFrame:
         & (F.col("data_type") == "MARKET_DATA")
         & ((F.col("market_sentiment").between(-1.0, 1.0)) | (F.col("market_sentiment") == SENTINEL))
         & ((F.col("trading_activity").between(0.0, 100.0)) | (F.col("trading_activity") == SENTINEL))
-        & (F.col("timestamp") <= F.unix_millis(F.current_timestamp()))
+        & F.exists(
+            F.array("timestamp"), lambda t: t <= F.unix_millis(F.current_timestamp())
+        )
     )

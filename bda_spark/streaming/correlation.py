@@ -8,16 +8,14 @@ bound), then each micro-batch computes per-bucket averages, the Pearson
 correlation across buckets, and appends one summary row to the
 ``correlations`` table (reference: Deliverable_3/joined_streams.py:46-180).
 
-Differences from the reference, per SURVEY §4: the summary row is built
-with a cross join of two single-row aggregates instead of three
+Differences from the reference, per SURVEY §4: the summary row is one
+two-level aggregation written in one Spark job instead of three
 ``collect()`` round-trips (ref :108-123), and rate limiting is the
 Structured Streaming ``maxOffsetsPerTrigger`` / ``maxFilesPerTrigger``
 knob, not the legacy DStream confs (ref :16-18).
 
-The handler persists the joined micro-batch once and runs its
-emptiness check and both branches of the summary off that copy, so
-the join and its state-store commits run once per trigger, not once
-per action.
+The handler runs exactly one action per trigger, the summary's write,
+so the join and its state-store commits run once per trigger.
 """
 
 from __future__ import annotations
@@ -104,41 +102,41 @@ class CorrelationPipeline:
 
     def _process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """Per-bucket averages -> Pearson corr across buckets -> one
-        summary row, fully plan-side (no collect). An empty batch writes
-        nothing; a batch whose corr is undefined (fewer than 2 buckets)
-        writes an empty ``batch=<id>`` dir, which reads as no row.
+        summary row, fully plan-side (no collect), in ONE aggregation:
+        per bucket the value averages, the min and max of ``ts_a`` and
+        the value sums and counts; across buckets the correlation of
+        the averages, the min and max timestamps and the overall means
+        (sums over counts, so each equals the ``avg`` over the joined
+        rows). A batch whose corr is undefined (fewer than 2 buckets,
+        an empty batch included) writes an empty ``batch=<id>`` dir,
+        which reads as no row.
 
-        The joined batch is persisted for the duration of the handler:
-        ``isEmpty()`` and the two branches of the summary's cross join
-        would otherwise each re-run the stream-stream join, and with it
-        the state-store commits of all its shuffle partitions."""
-        batch_df.persist()
-        try:
-            self._write_summary(batch_df, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    def _write_summary(self, batch_df: DataFrame, batch_id: int) -> None:
-        if batch_df.isEmpty():
-            return
-        minute_avgs = batch_df.groupBy("bucket_a").agg(
-            F.avg("val_a").alias("avg_a"), F.avg("val_b").alias("avg_b")
-        )
-        corr_row = minute_avgs.agg(F.corr("avg_a", "avg_b").alias("correlation"))
-        stats_row = batch_df.agg(
-            F.min("ts_a").alias("window_start_ts"),
-            F.max("ts_a").alias("window_end_ts"),
-            F.timestamp_millis(F.min("ts_a")).alias("event_time"),
-            F.avg("val_a").alias("bp_price"),
-            F.avg("val_b").alias("eth_ask"),
+        The write is the handler's only action, so the stream-stream
+        join and the state-store commits of its shuffle partitions run
+        once per trigger."""
+        buckets = batch_df.groupBy("bucket_a").agg(
+            F.avg("val_a").alias("avg_a"),
+            F.avg("val_b").alias("avg_b"),
+            F.min("ts_a").alias("min_ts"),
+            F.max("ts_a").alias("max_ts"),
+            F.sum("val_a").alias("sum_a"),
+            F.sum("val_b").alias("sum_b"),
+            F.count("val_a").alias("n_a"),
+            F.count("val_b").alias("n_b"),
         )
         out = (
-            corr_row.crossJoin(stats_row)
+            buckets.agg(
+                F.corr("avg_a", "avg_b").alias("correlation"),
+                F.min("min_ts").alias("window_start_ts"),
+                F.max("max_ts").alias("window_end_ts"),
+                F.try_divide(F.sum("sum_a"), F.sum("n_a")).alias("bp_price"),
+                F.try_divide(F.sum("sum_b"), F.sum("n_b")).alias("eth_ask"),
+            )
             .filter(F.col("correlation").isNotNull())
             .select(
                 F.lit(self.pair_name).alias("symbol"),
                 F.col("window_start_ts").alias("timestamp"),
-                "event_time",
+                F.timestamp_millis("window_start_ts").alias("event_time"),
                 "window_start_ts",
                 "window_end_ts",
                 "correlation",

@@ -7,20 +7,24 @@ its anti-patterns fixed per SURVEY §4:
 
 - fused trainer+backfiller: watermarked 10-min tumbling window -> avg
   features + avg label -> one foreachBatch that (1) refits a
-  LinearRegression and publishes it through the pointer-file
-  ModelStore (ref :124-211) and (2) upserts the window's cumulative
-  average price into a small ``labels`` table keyed by (symbol,
-  window) with the crash-safe idempotent merge sink (ref :290-332).
+  LinearRegression and publishes its coefficients as a JSON document
+  through the pointer-file ModelStore (ref :124-211; no Spark ML
+  writer, so no Spark job to publish) and (2) upserts the window's
+  cumulative average price into a small ``labels`` table keyed by
+  (symbol, window) with the crash-safe idempotent merge sink (ref
+  :290-332).
   The reference ran these as two queries over identical window state;
   one stateful pass here keeps one state store, one source scan and
   one checkpoint. No driver-side collect() loop of per-window
   read-modify-writes (ref :301-325), and the label half is
   checkpointed (the reference's label query wasn't, ref :328-332).
-- predictor: per-tick features -> foreachBatch model.transform; the
-  model is CACHED and reloaded only when the pointer changes (the
-  reference re-read it from disk every 1-second batch, ref :237);
-  feature serialization is ``to_json(struct(...))`` — JVM-side — instead
-  of the reference's row-at-a-time Python UDF (ref :244-248).
+- predictor: per-tick features -> foreachBatch scoring with the
+  linear model as one Catalyst expression, ``intercept + Σ wᵢ·fᵢ``
+  (no VectorAssembler, no ``transform``); the model is CACHED and
+  reloaded only when the pointer changes (the reference re-read it
+  from disk every 1-second batch, ref :237); feature serialization is
+  ``to_json(struct(...))`` — JVM-side — instead of the reference's
+  row-at-a-time Python UDF (ref :244-248).
 
 The predictions table is append-only and labels are joined on the
 window bucket AT READ TIME (``predictions()``). Every table has exactly
@@ -62,7 +66,7 @@ from pyspark.sql.types import (
 
 from ..functions.cleaning import validate_ticks
 from ..functions.timeutils import event_time_from_millis
-from ..ml.persistence import ModelStore
+from ..ml.persistence import LinearCoefficients, ModelStore
 from ..sources.sinks import idempotent_merge_parquet
 from .batchdir import compact_batch_dirs, read_batch_table, write_batch_dir
 
@@ -205,6 +209,9 @@ class TickPipeline:
             inputCols=self.feature_cols, outputCol="features",
             handleInvalid="skip",
         )
+        self._lr = LinearRegression(
+            featuresCol="features", labelCol="label", **self._lr_params
+        )
 
     # -------------------------------------------------------- predictor
     def _predict_batch(self, batch_df: DataFrame, batch_id: int) -> None:
@@ -212,9 +219,16 @@ class TickPipeline:
         the predictions table with a NULL label (backfilled later).
         input_data = to_json(struct(features)) — D1's UDF-free form.
 
+        The streaming model is linear (the trainer's coefficient
+        document, or a Spark ML ``LinearRegressionModel`` published
+        before the document existed, aligned by position), so it scores
+        as one expression, ``intercept + Σ wᵢ·fᵢ``, after ``na.drop`` on
+        the feature columns: the rows VectorAssembler's ``skip`` rule
+        would drop (a null or NaN feature).
+
         With a ``historical_store`` set, the tournament-selected
-        historical model scores the SAME frame via a second chained
-        transform — no join at all, which fixes the reference's
+        historical model scores the SAME frame via a chained assembler
+        and transform — no join at all, which fixes the reference's
         symbol-only join (ref stream_and_historical_model.py:599-603,
         a cross-match at >1 row per symbol per batch; SURVEY §2.3 J2).
         No emptiness probe (a job per batch that skipped none in the
@@ -223,14 +237,16 @@ class TickPipeline:
         model = self.store.current()
         if model is None:
             return
-        preds = model.transform(self._assembler_pred.transform(batch_df)).withColumnRenamed(
-            "prediction", "prediction_streaming"
+        if not isinstance(model, LinearCoefficients):
+            model = LinearCoefficients.of(model, self.feature_cols)
+        preds = batch_df.na.drop(subset=self.feature_cols).withColumn(
+            "prediction_streaming", model.prediction(self.feature_cols)
         )
         historical = self.historical_store.current() if self.historical_store else None
         if historical is not None:
-            preds = historical.transform(preds).withColumnRenamed(
-                "prediction", "prediction_historical"
-            )
+            preds = historical.transform(
+                self._assembler_pred.transform(preds)
+            ).withColumnRenamed("prediction", "prediction_historical")
         else:
             preds = preds.withColumn(
                 "prediction_historical", F.lit(None).cast("double")
@@ -261,8 +277,9 @@ class TickPipeline:
     # ------------------------------------------- fused trainer+backfiller
     def _train_and_backfill_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         """D4 + T7/T10: one windowed micro-batch feeds both sinks — a
-        fresh LinearRegression refit published through the pointer file
-        (reference: :177-203), then the label upsert into the tiny
+        fresh LinearRegression refit whose coefficients are published
+        as a JSON document through the pointer file (reference:
+        :177-203), then the label upsert into the tiny
         ``labels`` table (reference: :290-332). Both halves are
         replay-idempotent (pointer-file model publish; keyed label
         merge), so a crash between them just redoes both on the
@@ -277,11 +294,14 @@ class TickPipeline:
         ``predictions()``.
 
         The aggregate is tiny (one row per window) but costs a full
-        stateful pass, and the fit's LBFGS runs one job per iteration:
-        materialize it once, repartitioned (a shuffle barrier —
-        coalesce would fold the stateful stage itself into one task)
-        into one cached partition; the count doubles as the emptiness
-        gate."""
+        stateful pass. With 5 features Spark's ``auto`` solver is the
+        normal-equation WLS (the L1 term solved by OWLQN on the driver),
+        2 jobs per fit, not one job per L-BFGS iteration. Materializing
+        the aggregate once, repartitioned (a shuffle barrier — coalesce
+        would fold the stateful stage itself into one task) into one
+        cached partition, lets the count (the emptiness gate), the fit
+        and the labels merge all read that one partition instead of
+        re-running the stateful pass."""
         windowed = batch_df.repartition(1).cache()
         try:
             if windowed.count() == 0:
@@ -289,10 +309,11 @@ class TickPipeline:
             assembled = self._assembler_agg.transform(windowed).select(
                 "features", "label"
             )
-            model = LinearRegression(
-                featuresCol="features", labelCol="label", **self._lr_params
-            ).fit(assembled)
-            self.store.save(model, "LinearRegression")
+            model = self._lr.fit(assembled)
+            self.store.save(
+                LinearCoefficients.of(model, self.feature_cols),
+                "LinearCoefficients",
+            )
             labels = windowed.select(
                 "symbol",
                 "window_start",

@@ -5,13 +5,14 @@ the input_data JSON feature round-trip."""
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 from pyspark.ml.regression import LinearRegression
 from pyspark.sql import Row
 from pyspark.sql import functions as F
 
-from bda_spark.ml.persistence import ModelStore
+from bda_spark.ml.persistence import LinearCoefficients, ModelStore
 from bda_spark.ml.tournament import (
     assemble_features,
     deploy_gate,
@@ -59,6 +60,78 @@ def test_model_store_roundtrip_and_caching(spark, features_df, tmp_path):
     p2 = store.save(m2, "LinearRegression")
     assert p2 != p1
     assert store.current() is not loaded  # pointer changed -> reloaded
+
+
+def test_coefficient_document_roundtrips_through_store(spark, features_df, tmp_path):
+    """The coefficient document the streaming trainer publishes: written
+    inside ``model_<v>``, read back equal to the bit, cached by pointer
+    content, and refusing to score columns it was not fitted on."""
+    store = ModelStore(str(tmp_path / "models"))
+    doc = LinearCoefficients.of(_fit_lr(features_df), FEATURES)
+    path = store.save(doc, "LinearCoefficients")
+    assert os.path.basename(path).startswith("model_")
+    assert os.listdir(path) == [LinearCoefficients.FILE]  # tmp renamed away
+    loaded = store.current()
+    assert loaded == doc and loaded is not doc
+    assert store.current() is loaded  # cached until the pointer changes
+    doc2 = LinearCoefficients(doc.features, doc.coefficients, doc.intercept + 1.0)
+    store.save(doc2, "LinearCoefficients")
+    assert store.current() == doc2
+    with pytest.raises(ValueError, match="fitted on"):
+        loaded.prediction(["x2", "x1"])
+    with pytest.raises(ValueError, match="does not tag"):
+        store.save(doc, "LinearRegression")
+    with pytest.raises(ValueError, match="coefficients for"):
+        LinearCoefficients.of(_fit_lr(features_df), ["x1"])
+
+
+@pytest.mark.parametrize("sparse", [False, True], ids=["dense", "l1_sparse"])
+def test_expression_scoring_matches_spark_ml_transform(spark, sparse):
+    """Per row, ``LinearCoefficients.prediction`` after ``na.drop`` (the
+    predictor's scoring) equals ``LinearRegressionModel.transform`` after
+    VectorAssembler's ``skip`` rule within rel 1e-12, for a dense and an
+    L1-sparse coefficient vector; rows with a null or NaN feature are
+    dropped by both paths alike."""
+    from pyspark.ml.feature import VectorAssembler
+
+    feats = ["x1", "x2", "x3", "x4", "x5"]
+    rows = [
+        (i, float(i % 17) * 1.3, float((i * 7) % 13) - 6.0, float((i * 5) % 11) * 0.1,
+         float((i * 3) % 7), float(i % 5) - 2.0)
+        for i in range(120)
+    ]
+    rows += [
+        (1000, None, 1.0, 2.0, 3.0, 4.0),
+        (1001, 1.0, float("nan"), 2.0, 3.0, 4.0),
+        (1002, 1.0, 2.0, 3.0, 4.0, None),
+    ]
+    df = spark.createDataFrame(
+        rows, "id long, x1 double, x2 double, x3 double, x4 double, x5 double"
+    ).withColumn("label", 2.0 * F.col("x1") - 3.0 * F.col("x2") + 0.01 * F.col("x3") + 1.0)
+    assembled = VectorAssembler(
+        inputCols=feats, outputCol="features", handleInvalid="skip"
+    ).transform(df)
+    model = LinearRegression(
+        featuresCol="features", labelCol="label", maxIter=100,
+        regParam=0.5 if sparse else 0.001, elasticNetParam=1.0 if sparse else 0.0,
+    ).fit(assembled)
+    weights = model.coefficients.toArray()
+    if sparse:
+        assert 0.0 in weights and any(w != 0.0 for w in weights)
+    else:
+        assert all(w != 0.0 for w in weights)
+
+    want = {r.id: r.prediction for r in model.transform(assembled).collect()}
+    doc = LinearCoefficients.of(model, feats)
+    got = {
+        r.id: r.prediction
+        for r in df.na.drop(subset=feats)
+        .withColumn("prediction", doc.prediction(feats))
+        .collect()
+    }
+    assert set(got) == set(want) == set(range(120))
+    for i, p in want.items():
+        assert got[i] == pytest.approx(p, rel=1e-12, abs=0)
 
 
 # ------------------------------------------------------------- tournament

@@ -3,11 +3,16 @@ Spark's own default; a local session commits streaming checkpoints
 through Spark's FileSystem-based manager unless the caller chose one,
 and a non-local defaultFS keeps Spark's default; a local master gets
 ``$SPARK_GRAFT_CPUS`` task slots, or the usable core count when that is
-unset or not a positive integer."""
+unset or not a positive integer. On a host whose JVM and Python run
+off UTC, ``load_table``'s UTC pin keeps query results as they are on a
+UTC host."""
 
 from __future__ import annotations
 
+import json
 import os
+import subprocess
+import sys
 
 import pytest
 from pyspark.errors import NumberFormatException
@@ -135,3 +140,74 @@ def test_local_cores_falls_back_to_usable_cores(value):
 
 def test_local_cores_takes_a_positive_integer():
     assert local_cores("8") == 8
+
+
+# Runs the registered queries in a vanilla session (no engine defaults,
+# as an external driver builds it) on a JVM and a Python process both
+# set to America/New_York, and prints their normalized rows as JSON.
+OFF_UTC_PROBE = """
+import datetime, json, sys
+from pyspark.sql import SparkSession
+
+import __spark_entry__
+from tools.verify_oracle import normalize
+
+sf_dir, names = sys.argv[1], sys.argv[2:]
+spark = (
+    SparkSession.builder.master("local[2]")
+    .config("spark.ui.enabled", "false")
+    .config("spark.driver.extraJavaOptions", "-Duser.timezone=America/New_York")
+    .getOrCreate()
+)
+zone = spark.conf.get("spark.sql.session.timeZone")
+queries = __spark_entry__.queries()
+
+
+def utc(v):
+    # PySpark's collect() renders a TIMESTAMP in the Python process's
+    # local zone; read it back as the UTC wall clock it stands for
+    if isinstance(v, datetime.datetime):
+        return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return v
+
+
+out = {}
+for name in names:
+    df = queries[name](spark, sf_dir)
+    out[name] = normalize([tuple(map(utc, r)) for r in df.collect()], df.columns)
+spark.stop()
+print(json.dumps({"zone": zone, "results": out}))
+"""
+
+
+def test_queries_match_utc_session_on_an_off_utc_host(spark, sf_dir):
+    """The UTC pin off UTC: ``events_windowed_10min`` (10-minute
+    buckets) and ``events_daily_kpis`` (day buckets) return the same
+    normalized rows from a New York JVM and Python process as from the
+    shared UTC session."""
+    import __spark_entry__
+    from tools.verify_oracle import normalize
+
+    names = ["events_windowed_10min", "events_daily_kpis"]
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    proc = subprocess.run(
+        [sys.executable, "-c", OFF_UTC_PROBE, sf_dir, *names],
+        cwd=root,
+        env={
+            **os.environ,
+            "TZ": "America/New_York",
+            "PYTHONPATH": os.pathsep.join(filter(None, [root, os.environ.get("PYTHONPATH")])),
+        },
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert proc.returncode == 0, proc.stderr[-2000:]
+    got = json.loads(proc.stdout.strip().splitlines()[-1])
+    assert got["zone"] == "America/New_York"  # the session did start off UTC
+    queries = __spark_entry__.queries()
+    for name in names:
+        df = queries[name](spark, sf_dir)
+        rows, cols = normalize([tuple(r) for r in df.collect()], df.columns)
+        assert rows, name
+        assert got["results"][name] == json.loads(json.dumps([rows, cols])), name

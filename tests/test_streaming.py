@@ -318,6 +318,99 @@ def test_hybrid_predictor_scores_with_both_models(spark, tick_dir, tmp_path_fact
     assert all(abs(r.prediction_historical - r.prediction) < 1e-9 for r in rows)
 
 
+def test_predictor_scores_spark_ml_pointer_like_the_document(spark, tick_dir, tmp_path):
+    """Upgrade path and scoring differential through the predictor's own
+    handler: a work dir whose pointer names a Spark ML LinearRegression
+    predicts, the coefficient document published after it predicts the
+    same per tick (rel 1e-12), and both equal the model's ``transform``
+    after VectorAssembler's ``skip`` rule, which drops the same null and
+    NaN rows as the predictor's ``na.drop``."""
+    from pyspark.sql import functions as F
+
+    from bda_spark.ml.persistence import LinearCoefficients
+    from bda_spark.streaming.batchdir import BATCH_PREFIX
+
+    pipe = TickPipeline(
+        spark, file_replay_tick_stream(spark, tick_dir), "BP", str(tmp_path)
+    )
+    feats = pipe.feature_cols
+    model = _batch_model(spark, tick_dir, pipe)
+    ticks = normalize_ticks(
+        validate_ticks(decode_ticks(spark.read.text(tick_dir))), "BP", feats
+    )
+    batch = ticks.union(
+        ticks.limit(2).select(
+            "symbol",
+            F.lit(None).cast("double").alias(feats[0]),
+            *feats[1:-1],
+            F.lit(float("nan")).alias(feats[-1]),
+            "label", (F.col("timestamp") + 1).alias("timestamp"), "event_time",
+        )
+    ).cache()
+    assert batch.count() == N_TICKS + 2
+
+    def scored(batch_id):
+        pipe._predict_batch(batch, batch_id)
+        out = spark.read.parquet(
+            os.path.join(pipe.predictions_path, f"{BATCH_PREFIX}{batch_id}")
+        )
+        return {r.timestamp: r.prediction for r in out.collect()}
+
+    pipe.store.save(model, "LinearRegression")
+    legacy = scored(0)
+    pipe.store.save(LinearCoefficients.of(model, feats), "LinearCoefficients")
+    document = scored(1)
+    want = {
+        r.timestamp: r.prediction
+        for r in model.transform(pipe._assembler_pred.transform(batch)).collect()
+    }
+    batch.unpersist()
+    assert len(want) == N_TICKS
+    assert set(legacy) == set(document) == set(want)
+    for ts, p in want.items():
+        assert legacy[ts] == pytest.approx(p, rel=1e-12, abs=0)
+        assert document[ts] == pytest.approx(p, rel=1e-12, abs=0)
+
+
+def test_predictor_batches_compile_no_new_class(spark, tmp_path_factory):
+    """The ingest gate's future-timestamp test keeps each micro-batch's
+    time out of generated code: over three one-file predictor batches,
+    every batch after the first compiles no new class (Spark's
+    CodegenMetrics compile counter does not move)."""
+    from bda_spark.ml.persistence import LinearCoefficients
+
+    src = tmp_path_factory.mktemp("predict_compile_src")
+    for n in range(3):
+        with open(src / f"f{n}.jsonl", "w") as f:
+            for i in range(n * 5, n * 5 + 5):
+                f.write(json.dumps(_bp_tick(i)) + "\n")
+        os.utime(src / f"f{n}.jsonl", (1700000000 + n * 10, 1700000000 + n * 10))
+    pipe = TickPipeline(
+        spark,
+        file_replay_tick_stream(spark, str(src), max_files_per_trigger=1),
+        "BP",
+        str(tmp_path_factory.mktemp("predict_compile_work")),
+    )
+    feats = pipe.feature_cols
+    pipe.store.save(
+        LinearCoefficients(tuple(feats), (0.0,) * (len(feats) - 1) + (1.0,), 0.0),
+        "LinearCoefficients",
+    )
+    compiles = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    after = []
+
+    def handler(batch_df, batch_id):
+        pipe._predict_batch(batch_df, batch_id)
+        after.append(compiles.getCount())
+
+    _drain(pipe._writer(
+        pipe.normalized, handler, pipe.checkpoints["pred"], "append", True, None
+    ).start())
+    assert len(after) == 3
+    assert [b - a for a, b in zip(after, after[1:])] == [0, 0]
+    assert pipe.predictions().count() == 15
+
+
 # ------------------------------------------------- stream-stream corr join
 def test_correlation_pipeline(spark, tick_dir, tmp_path_factory):
     work = str(tmp_path_factory.mktemp("corr"))
@@ -338,6 +431,39 @@ def test_correlation_pipeline(spark, tick_dir, tmp_path_factory):
     assert row.eth_ask == pytest.approx(0.5 * 114.5 + 7.0)
     assert row.window_start_ts == BASE_MS
     assert row.window_end_ts == BASE_MS + (N_TICKS - 1) * 60_000
+
+
+def test_correlation_batch_without_joined_rows_commits_empty_dir(
+    spark, tmp_path_factory
+):
+    """A correlation micro-batch whose join emits no row (a BP-only
+    file: its ticks wait in join state) commits its ``batch=<id>`` dir,
+    ``_SUCCESS`` written, which reads as zero rows; the next batch
+    joins them against ETH and writes the one summary row."""
+    from bda_spark.streaming.batchdir import BATCH_PREFIX
+
+    src = tmp_path_factory.mktemp("corr_empty_src")
+    with open(src / "a_bp.jsonl", "w") as f:
+        for i in range(N_TICKS):
+            f.write(json.dumps(_bp_tick(i)) + "\n")
+    with open(src / "b_eth.jsonl", "w") as f:
+        for i in range(N_TICKS):
+            f.write(json.dumps(_eth_tick(i)) + "\n")
+    for sec, name in enumerate(["a_bp.jsonl", "b_eth.jsonl"]):
+        os.utime(src / name, (1700000000 + sec * 10, 1700000000 + sec * 10))
+    work = str(tmp_path_factory.mktemp("corr_empty"))
+    ticks = file_replay_tick_stream(spark, str(src), max_files_per_trigger=1)
+    pipe = CorrelationPipeline(
+        spark, ticks.filter("symbol = 'BP'"), ticks.filter("symbol = 'ETHEREUM'"), work
+    )
+    q = pipe.start(available_now=True)
+    _drain(q)
+    first = min(p["batchId"] for p in q.recentProgress)
+    empty = os.path.join(pipe.correlations_path, f"{BATCH_PREFIX}{first}")
+    assert os.path.exists(os.path.join(empty, "_SUCCESS"))
+    assert spark.read.parquet(empty).count() == 0
+    [row] = pipe.correlations().collect()
+    assert row.correlation == pytest.approx(1.0, abs=1e-9)
 
 
 def test_correlation_default_compaction_keeps_superseded_generation(
