@@ -235,26 +235,23 @@ def ivf_sq8_topk(
     result is exactly brute force (the pinned-correctness regime);
     partial probing trades recall for probe fan-out, bounded in pytest.
     """
-    from .similarity import ivf_index, probe_cells
+    from .similarity import _CoarseQuantizer
 
-    # normalize to the (vec_id, embedding) contract ivf_index/probe_cells use
+    # normalize to the (vec_id, embedding) contract the quantizer uses
     embeddings = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(col).alias("embedding")
     )
     queries = queries.select(
         F.col(id_col).alias("vec_id"), F.col(col).alias("embedding")
     )
-    assigned, centroids = ivf_index(embeddings, n_centroids, seed, max_iter)
+    quantizer = _CoarseQuantizer.flat(embeddings, n_centroids, seed, max_iter)
     lo, hi = sq8_bounds(embeddings, "embedding")
     # the persistable index: (vec_id, centroid_id, codes) — 1 byte/dim
-    coded = sq8_quantize(embeddings, lo, hi, "embedding").select(
-        F.col("vec_id").alias("neighbor_id"), "codes"
-    )
-    index = assigned.select(
-        F.col("vec_id").alias("neighbor_id"), "centroid_id"
-    ).join(coded, "neighbor_id")
+    index = sq8_quantize(
+        quantizer.assign(embeddings), lo, hi, "embedding"
+    ).select(F.col("vec_id").alias("neighbor_id"), "centroid_id", "codes")
 
-    probes = probe_cells(queries, centroids, n_probe)
+    probes = quantizer.probe(queries, n_probe)
     qside = F.broadcast(
         queries.select(
             F.col("vec_id").alias("query_id"),
@@ -295,17 +292,16 @@ def ivf_sq8_index_build(
     ``ivf_sq8_search`` is the read side, ``ivf_sq8_index_append`` the
     live-corpus maintenance; the pair is equivalent to ``ivf_sq8_topk``
     run live (pinned in tests/test_quantize.py)."""
-    from .similarity import ivf_index
+    from .similarity import _CoarseQuantizer
 
     embeddings = embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(col).alias("embedding")
     )
-    assigned, centroids = ivf_index(embeddings, n_centroids, seed, max_iter)
+    quantizer = _CoarseQuantizer.flat(embeddings, n_centroids, seed, max_iter)
     lo, hi = sq8_bounds(embeddings, "embedding")
-    coded = sq8_quantize(embeddings, lo, hi, "embedding").select(
-        "vec_id", "codes"
-    )
-    index = assigned.select("vec_id", "centroid_id").join(coded, "vec_id")
+    index = sq8_quantize(
+        quantizer.assign(embeddings), lo, hi, "embedding"
+    ).select("vec_id", "centroid_id", "codes")
     index.repartition("centroid_id").write.mode("overwrite").partitionBy(
         "centroid_id"
     ).parquet(f"{path.rstrip('/')}/codes")
@@ -314,10 +310,19 @@ def ivf_sq8_index_build(
 
     meta = rows_frame(
         spark,
-        [(centroids, lo, hi)],
+        [(quantizer.centroids, lo, hi)],
         "centroids array<array<double>>, lo array<double>, hi array<double>",
     )
     meta.write.mode("overwrite").parquet(f"{path.rstrip('/')}/meta")
+
+
+def _read_meta(spark, base: str):
+    """(quantizer, lo, hi) from a persisted index's ``meta/`` row."""
+    from .similarity import _CoarseQuantizer
+
+    meta = spark.read.parquet(f"{base}/meta").collect()[0]
+    quantizer = _CoarseQuantizer([list(c) for c in meta["centroids"]])
+    return quantizer, list(meta["lo"]), list(meta["hi"])
 
 
 def ivf_sq8_index_append(
@@ -353,27 +358,18 @@ def ivf_sq8_index_append(
     "needs_retrain": bool}. Replay-safe: re-appending the same batch
     upserts by vec_id (same deterministic cell), a no-op in content."""
     from ..sources.sinks import idempotent_merge_parquet
-    from .similarity import probe_cells
 
     base = path.rstrip("/")
-    meta = spark.read.parquet(f"{base}/meta").collect()[0]
-    centroids = [list(c) for c in meta["centroids"]]
-    lo, hi = list(meta["lo"]), list(meta["hi"])
-
+    quantizer, lo, hi = _read_meta(spark, base)
     new_embeddings = new_embeddings.select(
         F.col(id_col).alias("vec_id"), F.col(col).alias("embedding")
     )
-    # nearest existing centroid = a 1-probe cell lookup; deterministic,
-    # so a replayed batch lands every vector in the same cell
-    assigned = probe_cells(new_embeddings, centroids, n_probe=1).select(
-        F.col("query_id").alias("vec_id"), "centroid_id"
-    )
-    coded = sq8_quantize(new_embeddings, lo, hi, "embedding").select(
-        "vec_id", "codes"
-    )
-    updates = coded.join(assigned, "vec_id").select(
-        "vec_id", "codes", "centroid_id"
-    )
+    # nearest existing centroid by the same kernel the build assigned
+    # with: deterministic, so a replayed batch (or a re-appended
+    # vec_id) lands every vector in the cell it already occupies
+    updates = sq8_quantize(
+        quantizer.assign(new_embeddings), lo, hi, "embedding"
+    ).select("vec_id", "codes", "centroid_id")
     appended = updates.count()
     idempotent_merge_parquet(
         spark, updates, f"{base}/codes", keys=["vec_id"],
@@ -391,7 +387,7 @@ def ivf_sq8_index_append(
         .collect()[0]
     )
     skew = float(sizes["mx"]) / float(sizes["mean"]) if sizes["mean"] else 0.0
-    touched = assigned.select("centroid_id").distinct().count()
+    touched = updates.select("centroid_id").distinct().count()
     return {
         "appended": int(appended),
         "cells_touched": int(touched),
@@ -416,19 +412,13 @@ def ivf_sq8_search(
     ``embeddings`` (the float corpus, touched only for the k x
     oversample survivors per query). Same contract and output schema
     as ``ivf_sq8_topk`` — (query_id, neighbor_id, cosine, rk)."""
-    from .similarity import probe_cells
-
     base = path.rstrip("/")
     index = spark.read.parquet(f"{base}/codes")
-    meta = spark.read.parquet(f"{base}/meta").collect()[0]
-    centroids = [list(c) for c in meta["centroids"]]
-    lo, hi = list(meta["lo"]), list(meta["hi"])
-
-    probes = probe_cells(
+    quantizer, lo, hi = _read_meta(spark, base)
+    probes = quantizer.probe(
         queries.select(
             F.col(id_col).alias("vec_id"), F.col(col).alias("embedding")
         ),
-        centroids,
         n_probe,
     )
     qside = F.broadcast(

@@ -24,6 +24,18 @@ approaches the random-pair similarity). At realistic semantic-dedup
 thresholds (0.9+: p ~= 0.86) the same plan prunes aggressively with
 r = 16; the defaults here are chosen for provable recall at 0.45:
 r = 6, b = 96 gives miss < 6e-4 per true pair.
+
+The learned-cell families (IVF top-k here, IVF+SQ8 in quantize.py, and
+the SemDeDup operators: pairs, dedup, persisted index, cross-corpus
+join) share ONE coarse quantizer, ``_CoarseQuantizer``: train, assign,
+probe, save and load, with the physical layout — a flat centroid list,
+or a top-level list plus a centroid table past 1024 centroids —
+chosen once from k and never branched on by a caller. Assignment and
+probing rank cells with one numpy kernel (``_nearest_cells``), so an
+indexed vector's exact twin always probes the vector's own cell. The
+within-cell pair work is one GEMM scan (``_gemm_pairs``) whether a cell
+is scanned against itself (``_cell_candidates_gemm``) or against the
+other side of a match (``_cross_cell_matches``).
 """
 
 from __future__ import annotations
@@ -32,9 +44,15 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.types import ArrayType, LongType
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    LongType,
+    StructField,
+    StructType,
+)
 
-from ..functions.vectors import cosine_similarity_col, dot_col, l2_norm_col
+from ..functions.vectors import dot_col, l2_norm_col
 
 
 def simhash_band_udf(dim: int, band_rows: int = 6, num_bands: int = 96,
@@ -750,7 +768,7 @@ def bounded_training_sample(
 ) -> "np.ndarray":
     """Collect a DRIVER-side training sample of ~``target`` vectors,
     bounded at 4x target no matter what (the shared quantizer-training
-    discipline of ``ivf_index`` and ``pq.pq_train``). The
+    discipline of ``_CoarseQuantizer.flat`` and ``pq.pq_train``). The
     small-vs-large decision does NOT pay a full corpus count: an
     early-terminating ``take`` probe (CollectLimit's incremental job —
     one task at toy scale, a handful at 100 TB, never a task per file
@@ -797,338 +815,422 @@ def bounded_training_sample(
     return np.asarray([r["e"] for r in fit_rows], dtype=np.float64)
 
 
-def nearest_centroid_col(centroids: list[list[float]]) -> "F.Column":
-    """0-based index of the nearest centroid (L2) for the row's
-    ``embedding`` — one Arrow-batched vectorized pandas UDF: the whole
-    batch assigns with a single (n x k) matmul against the closed-over
-    centroid matrix (|c|^2 - 2x.c; the |x|^2 term is constant per row
-    and cannot move the argmin). This is the justified-pandas_udf case
-    (same discipline as the SimHash signature matmul): the equivalent
-    builtin expression is a higher-order transform/aggregate chain,
-    which Catalyst evaluates INTERPRETED with per-row array
-    allocation, not codegen — measured slower than the Arrow round
-    trip. No shuffle either way: assignment stays a map pass. Ties
-    resolve to the lowest centroid id (numpy argmin takes the first
-    minimum)."""
-    import pandas as pd
-    from pyspark.sql.functions import pandas_udf
-
-    C = np.asarray(centroids, dtype=np.float64)
-    c2 = (C ** 2).sum(axis=1)
-
-    @pandas_udf("int")
-    def _nearest(col: pd.Series) -> pd.Series:
-        if not len(col):
-            return pd.Series([], dtype="int32")
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in col])
-        d = c2[None, :] - 2.0 * (X @ C.T)
-        return pd.Series(d.argmin(axis=1).astype(np.int32))
-
-    return _nearest(F.col("embedding").cast("array<double>"))
-
-
 # Past this many centroids, shipping the whole centroid set driver-side
 # (pandas-UDF closure / plan literal) stops scaling: the k ~ n/125 cell
 # policy makes k grow LINEARLY with the corpus, so at ~1e8+ vectors the
 # centroid array alone is hundreds of MB of driver memory and literal —
 # the plan stops compiling long before the executors hurt. Above the
-# cap the semantic family switches to the DISTRIBUTED two-level
-# quantizer below: the driver only ever holds the ~sqrt(k) top-level
-# centroids; the full centroid set lives in a DataFrame and assignment
-# is a cogroup join, not a broadcast matmul. Production queries
-# (k <= 256 everywhere) never cross the cap and stay bit-identical.
+# cap the semantic family's quantizer switches to the TWO-LEVEL layout
+# (``_CoarseQuantizer.train``): the driver only ever holds the ~sqrt(k)
+# top-level centroids; the full centroid set lives in a DataFrame and
+# assignment is a cogroup, not a closed-over matmul. Production queries
+# (k <= 256 everywhere) never cross the cap.
 _LITERAL_K_CAP = 1024
 
-# Top-level cell-count ceiling for the distributed trainer: ceil(sqrt(k))
+# Top-level cell-count ceiling for the two-level trainer: ceil(sqrt(k))
 # up to this bound, so the one remaining driver-side array is at most
 # 4096 x dim — fixed, corpus-independent. 4096 top cells support
 # k ~ 16M sub-centroids (k ~ n/125 => a ~2e9-vector corpus) before the
 # EXPECTED top cell exceeds the sub-fit task budget.
 _TOP_CELL_CAP = 4096
 
+# Rows per GEMM call in the nearest-cell kernel. OpenBLAS picks its
+# micro-kernel path from the matrix shape, so one row can score ulps
+# apart in products of different heights (measured with numpy 1.26's
+# OpenBLAS: single-threaded, every height that is not a multiple of 4
+# changes bits; with a 4-thread pool most heights below 64 do). Every
+# call is zero-padded to this one height, which makes a row's distances
+# a function of the row and the centroids alone: assignment and probing
+# see the same vector in differently-sized Arrow batches and still pick
+# the same cell, even on a bisector.
+_KERNEL_ROWS = 256
 
-def distributed_coarse_quantizer(
-    embeddings: DataFrame,
-    k: int,
-    seed: int = 42,
-    max_iter: int = 10,
-    train_per_centroid: int = 128,
-    n_hint: int | None = None,
-) -> tuple[list[list[float]], DataFrame]:
-    """Two-level coarse quantizer whose driver cost is CORPUS-
-    INDEPENDENT (VERDICT r11 task 2 — the scale path past
-    ``_LITERAL_K_CAP``): returns (top_centroids, sub_centroids_df).
 
-    - ``top_centroids``: k1 = min(ceil(sqrt(k)), 4096) cell centers,
-      sample-trained on the driver (``bounded_training_sample`` —
-      k1 x train_per_centroid rows, bounded regardless of corpus
-      size). This is the ONLY centroid array the driver ever holds.
-    - ``sub_centroids_df``: (top_id, centroid_id, centroid) — the full
-      k centroids as a DATAFRAME, trained DISTRIBUTED: a Bernoulli
-      sample of the corpus (k x train_per_centroid rows total, never
-      collected) is top-assigned with one Arrow map pass, then each
-      top cell's sub-centroids are fit in parallel by one
-      ``applyInPandas`` task running the shared numpy kmeans on its
-      cell's sample (rows sorted by vec_id inside the task so the fit
-      is deterministic under Spark's arbitrary group-row order).
-      Sub-slots are allocated proportional to cell mass
-      (``_proportional_alloc`` — the same largest-remainder policy as
-      the driver two-level trainer), and ``centroid_id`` is globally
-      unique and deterministic: cell j's ids occupy
-      [cumsum(k2)[j-1], cumsum(k2)[j]).
+def _vectors(col, dim: int = 0) -> "np.ndarray":
+    """An Arrow array column (one vector per row) as a float64 matrix;
+    an empty column is a (0 x dim) matrix."""
+    if not len(col):
+        return np.empty((0, dim))
+    return np.stack([np.asarray(v, dtype=np.float64) for v in col])
 
-    The frame is localCheckpoint-ed: every consumer (assignment,
-    keeper scoring) references it without re-running the sample + fit.
 
-    Scale shape: driver memory O(sqrt(k) x dim + k1) — NOT O(k x dim);
-    executor work O(sample x sqrt(k)) for top assignment plus
-    independent per-cell fits; the corpus itself is touched only by
-    the one sampling pass here (assignment is the caller's pass).
-    ``train_per_centroid`` prices the distributed sample at k x tpc
-    rows and each sub-fit task at ~tpc x k/k1 rows: under the
-    k ~ n/125 cell policy, tpc=128 samples ~n (fine through the
-    measured rungs); corpora big enough to make that sampling pass
-    hurt should tune tpc down toward the FAISS-common 32 — per-task
-    load then bounds at 32 x k/k1 (~131k rows at the k1=4096 cap)
-    and quality degrades gracefully (each centroid still sees ~32
-    training points)."""
-    spark = embeddings.sparkSession
-    import pandas as pd
-
-    k = int(k)
-    k1 = int(min(max(int(np.ceil(np.sqrt(k))), 2), _TOP_CELL_CAP))
-    Xtop = bounded_training_sample(
-        embeddings, int(train_per_centroid) * k1, seed, n_hint=n_hint
-    )
-    k1 = min(k1, max(1, len(Xtop)))
-    top = _kmeans_fit(Xtop, k1, seed, max_iter)
-    # Same order-preserving duplicate-centroid guard as ivf_index: a
-    # duplicate-heavy sample with fewer distinct vectors than k1 can
-    # yield bitwise-identical TOP centroids, and GEMM's batch-shape-
-    # dependent tie accumulation would then co-assign identical vectors
-    # to DIFFERENT top cells — band keys diverge and exact duplicates
-    # (this operator's target workload) are missed. Dedupe shrinks k1;
-    # a no-op for continuous embeddings, so existing labelings hold.
-    _, _uidx = np.unique(top, axis=0, return_index=True)
-    if len(_uidx) < len(top):
-        top = top[np.sort(_uidx)]
-        k1 = len(top)
-    top_list = top.tolist()
-
-    n = int(n_hint) if n_hint is not None else embeddings.count()
-    target = k * int(train_per_centroid)
-    frac = min(1.0, 1.05 * target / max(1, n))
-    samp = (
-        embeddings.sample(fraction=frac, seed=seed)
-        .select("vec_id", F.col("embedding").cast("array<double>").alias("embedding"))
-        .withColumn("_top", nearest_centroid_col(top_list))
-    )
-    # k1 rows to the driver — prices the per-cell slot allocation
-    cell_counts = {
-        int(r["_top"]): int(r["cnt"])
-        for r in samp.groupBy("_top").agg(F.count("*").alias("cnt")).collect()
-    }
-    counts = np.zeros(len(top_list), dtype=np.int64)
-    for j, c in cell_counts.items():
-        counts[j] = c
-    k2 = _proportional_alloc(counts, k)
-    offsets = np.concatenate([[0], np.cumsum(k2)[:-1]])
-    plan = {
-        int(j): (int(k2[j]), int(offsets[j]))
-        for j in range(len(k2))
-        if k2[j] > 0
-    }
-    fit_seed, fit_iter = int(seed), int(max_iter)
-
-    def _fit_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        j = int(pdf["_top"].iloc[0])
-        kj, off = plan.get(j, (0, 0))
-        if kj <= 0:
-            return pd.DataFrame(
-                {"top_id": [], "centroid_id": [], "centroid": []}
-            ).astype({"top_id": "int32", "centroid_id": "int64"})
-        # Fit on UNIQUE rows: duplicate training points (a duplicate-
-        # heavy corpus is exactly what this operator exists for) would
-        # otherwise yield bitwise-identical centroids, and GEMM's
-        # column-position-dependent accumulation means two identical
-        # centroid columns can score ulps APART in one matmul — the
-        # argmin tie between them then resolves differently for
-        # different assignment batch shapes, breaking the invariant
-        # that identical vectors co-assign (observed: the same vector
-        # assigned to each of two identical centroids from two frames).
-        # np.unique also canonicalizes row order, so the kmeans++
-        # seeding sees a deterministic X for (sample, seed) regardless
-        # of Spark's group-row order. Distinct-centroid sub-ulp ties
-        # remain measure-zero for continuous embeddings.
-        X = np.unique(
-            np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["embedding"]]
-            ),
-            axis=0,
-        )
-        kj = min(kj, len(X))
-        if kj == 1:
-            C = X.mean(axis=0)[None, :]
+def _nearest_cells(
+    X: "np.ndarray", C: "np.ndarray", n_probe: int = 0
+) -> tuple["np.ndarray", "np.ndarray"]:
+    """The one nearest-cell kernel behind every assignment and probe:
+    rank the rows of ``C`` for each row of ``X`` by L2, computed as
+    |c|^2 - 2x.c (an (n x k) matrix + one matmul; the |x|^2 term is
+    constant per row and cannot move the ranking). ``n_probe=0``
+    assigns: argmin, ties to the lowest id (numpy takes the first
+    minimum). ``n_probe > 0`` probes: the first ``n_probe`` ids of a
+    stable argsort, so ties again go to the lowest id and a vector's
+    first probed cell IS its assigned cell. Returns (ids, dist), both
+    rows x min(max(n_probe, 1), k); ``dist`` ranks across calls for
+    the same row (the two-level probe's global window)."""
+    c2 = (C ** 2).sum(axis=1)
+    m = min(max(int(n_probe), 1), len(C))
+    ids = np.empty((len(X), m), dtype=np.int64)
+    dist = np.empty((len(X), m))
+    for s in range(0, len(X), _KERNEL_ROWS):
+        blk = X[s : s + _KERNEL_ROWS]
+        rows = len(blk)
+        if rows < _KERNEL_ROWS:
+            blk = np.vstack([blk, np.zeros((_KERNEL_ROWS - rows, X.shape[1]))])
+        d = (c2[None, :] - 2.0 * (blk @ C.T))[:rows]
+        if n_probe:
+            top = np.argsort(d, axis=1, kind="stable")[:, :m]
         else:
-            C = _kmeans_fit(X, kj, fit_seed + j + 1, fit_iter)
-        return pd.DataFrame(
-            {
-                "top_id": np.full(len(C), j, dtype=np.int32),
-                "centroid_id": off + np.arange(len(C), dtype=np.int64),
-                "centroid": list(C),
-            }
-        )
-
-    sub = (
-        samp.groupBy("_top")
-        .applyInPandas(
-            _fit_cell,
-            "top_id int, centroid_id long, centroid array<double>",
-        )
-        .localCheckpoint(eager=True)
-    )
-    return top_list, sub
+            top = d.argmin(axis=1)[:, None]
+        ids[s : s + rows] = top
+        dist[s : s + rows] = np.take_along_axis(d, top, axis=1)
+    return ids, dist
 
 
-def assign_cells_scalable(
-    embeddings: DataFrame,
-    top_centroids: list[list[float]],
-    sub_centroids: DataFrame,
-    id_col: str = "vec_id",
-    with_sim: bool = False,
-) -> DataFrame:
-    """Nearest-centroid assignment against a centroid TABLE — the
-    plan-literal-free twin of ``nearest_centroid_col`` for quantizers
-    past ``_LITERAL_K_CAP``. Returns (id_col, centroid_id[, cell_sim]).
+def _cell_sim(X: "np.ndarray", own: "np.ndarray") -> "np.ndarray":
+    """Cosine of each row of ``X`` to its own centroid (the
+    far_from_centroid keeper score); a zero norm scores 0, the
+    engine-wide convention."""
+    denom = np.linalg.norm(X, axis=1) * np.linalg.norm(own, axis=1)
+    num = (X * own).sum(axis=1)
+    return np.where(denom > 0.0, num / np.maximum(denom, 1e-300), 0.0)
 
-    Two stages: (1) one Arrow map pass assigns each vector to its
-    top-level cell (the only centroid array in the plan — bounded at
-    4096 x dim); (2) a COGROUP on the top cell id pairs each cell's
-    vectors with that cell's sub-centroids and takes the argmin with
-    one local matmul per group — the corpus shuffles ONCE on the top
-    id, the centroid table shuffles alongside (k rows — tiny), and no
-    executor ever sees more than one cell's centroids. Ties resolve
-    to the lowest centroid_id (sub-frame sorted, numpy argmin takes
-    the first minimum) — the same convention as the literal path.
 
-    A vector whose top cell holds no trained sub-centroid (possible
-    when the training sample missed a sparse cell) gets the SENTINEL
-    cell ``-top_id - 1``: deterministic, distinct per top cell, and
-    still a valid band key — such vectors band with their top-cell
-    peers and every emitted pair is exact-verified downstream, so the
-    fallback can only affect recall, never correctness. Their
-    ``cell_sim`` is 1.0 (the prototype score: never preferred by the
-    far-from-centroid keeper; ties break on id as everywhere).
+def _nearest_udf(
+    centroids: list[list[float]], n_probe: int = 0, with_sim: bool = False
+) -> "F.Column":
+    """The kernel as one Arrow-batched pandas UDF over the row's
+    ``embedding`` against the closed-over centroid matrix: the nearest
+    cell id (int), the id plus ``cell_sim`` (struct) with ``with_sim``,
+    or the ``n_probe`` nearest ids (array<int>). A map pass, no
+    shuffle. This is the justified-pandas_udf case (same discipline as
+    the SimHash signature matmul): the equivalent builtin expression is
+    a higher-order transform/aggregate chain, which Catalyst evaluates
+    INTERPRETED with per-row array allocation, not codegen — measured
+    slower than the Arrow round trip."""
+    C = np.asarray(centroids, dtype=np.float64)
+    if n_probe:
+        rtype = "array<int>"
+    elif with_sim:
+        rtype = "struct<centroid_id:int,cell_sim:double>"
+    else:
+        rtype = "int"
 
-    ``with_sim`` adds the cosine of each vector to its own centroid —
-    the far_from_centroid keeper's score — computed in the same local
-    matmul instead of a second pass against a centroid literal."""
-    import pandas as pd
-
-    sim_field = ", cell_sim double" if with_sim else ""
-    schema = f"{id_col} long, centroid_id long{sim_field}"
-
-    def _assign(key, vecs: "pd.DataFrame", cents: "pd.DataFrame"):
-        if not len(vecs):
-            cols = {id_col: [], "centroid_id": []}
-            if with_sim:
-                cols["cell_sim"] = []
-            return pd.DataFrame(cols)
-        top_id = int(key[0])
-        ids = vecs[id_col].to_numpy()
-        if not len(cents):
-            out = {
-                id_col: ids,
-                "centroid_id": np.full(
-                    len(ids), -top_id - 1, dtype=np.int64
-                ),
-            }
-            if with_sim:
-                out["cell_sim"] = np.ones(len(ids))
-            return pd.DataFrame(out)
-        cents = cents.sort_values("centroid_id", kind="stable")
-        C = np.stack(
-            [np.asarray(c, dtype=np.float64) for c in cents["centroid"]]
-        )
-        cid = cents["centroid_id"].to_numpy()
-        X = np.stack(
-            [np.asarray(v, dtype=np.float64) for v in vecs["embedding"]]
-        )
-        d = (C ** 2).sum(axis=1)[None, :] - 2.0 * (X @ C.T)
-        a = d.argmin(axis=1)
-        out = {id_col: ids, "centroid_id": cid[a]}
+    @F.pandas_udf(rtype)
+    def _nearest(col: pd.Series) -> pd.Series:
+        X = _vectors(col, C.shape[1])
+        ids = _nearest_cells(X, C, n_probe)[0].astype(np.int32)
+        if n_probe:
+            return pd.Series(list(ids))
+        a = ids[:, 0]
         if with_sim:
-            own = C[a]
-            denom = np.linalg.norm(X, axis=1) * np.linalg.norm(own, axis=1)
-            num = (X * own).sum(axis=1)
-            out["cell_sim"] = np.where(denom > 0.0, num / np.maximum(denom, 1e-300), 0.0)
-        return pd.DataFrame(out)
+            return pd.DataFrame({"centroid_id": a, "cell_sim": _cell_sim(X, C[a])})
+        return pd.Series(a)
 
-    staged = embeddings.select(
-        id_col,
-        F.col("embedding").cast("array<double>").alias("embedding"),
-        nearest_centroid_col(top_centroids).alias("_top"),
-    )
-    return (
-        staged.groupBy("_top")
-        .cogroup(sub_centroids.groupBy("top_id"))
-        .applyInPandas(_assign, schema)
-    )
+    return _nearest(F.col("embedding").cast("array<double>"))
 
 
-def ivf_index(
-    embeddings: DataFrame,
-    n_centroids: int = 16,
-    seed: int = 42,
-    max_iter: int = 10,
-    train_per_centroid: int = 256,
-    n_hint: int | None = None,
-) -> tuple[DataFrame, list[list[float]]]:
-    """IVF coarse quantizer: KMeans centroids + per-vector nearest-
-    centroid assignment (Euclidean — the standard IVF cell geometry).
-    Returns (assignments(vec_id, centroid_id), centroids) — the
-    centroid list is tiny (k x dim) and travels as a plan literal,
-    never a shuffle.
+class _CoarseQuantizer:
+    """The coarse quantizer every IVF and SemDeDup operator shares:
+    train, assign, probe, save and load, with the physical layout
+    chosen once, from k, and carried by the instance — callers never
+    branch on it.
 
-    SAMPLE-trained, full-corpus-assigned (the FAISS discipline): the
-    coarse quantizer only needs enough points to place k cell centers
-    — ``train_per_centroid x n_centroids`` of them — so the fit runs
-    on a bounded sample ON THE DRIVER (``_kmeans_fit``: the sample is
-    broadcast-scalar-sized by construction) and the FULL corpus is
-    touched exactly once, by the assignment projection
-    (``nearest_centroid_col`` — one codegen map, no shuffle).
-    Training distributed on the full corpus would instead scan 100 TB
-    maxIter times for centroids statistically identical to the
-    sample's.
+    - FLAT: ``centroids`` is the whole k x dim list, closed over by the
+      kernel's pandas UDF; assigning and probing are map passes.
+    - TWO-LEVEL (``sub`` set): ``centroids`` holds only the top-level
+      cells (at most ``_TOP_CELL_CAP``) and ``sub`` is the full
+      centroid TABLE (top_id, centroid_id, centroid). A vector's top
+      cell comes from the flat map pass over ``centroids``; its
+      centroid from a cogroup of the top cell's vectors with that
+      cell's sub-centroids — the corpus shuffles ONCE on the top id,
+      and no executor ever sees more than one cell's centroids.
 
-    The sample collection (probe/hint/Bernoulli bounds) is the shared
-    ``bounded_training_sample`` discipline — see its docstring for why
-    the small-vs-large decision never pays a full corpus count."""
-    X = bounded_training_sample(
-        embeddings,
-        int(train_per_centroid) * int(n_centroids),
-        seed,
-        n_hint=n_hint,
-    )
-    C = _kmeans_fit(X, n_centroids, seed, max_iter)
-    # Guard every downstream consumer against DUPLICATE centroids
-    # (possible when the sample has fewer distinct points than k —
-    # kmeans++ re-picks and re-seeding can return identical rows):
-    # two bitwise-identical centroids make nearest-assignment ties,
-    # and GEMM's shape-dependent accumulation can resolve the tie
-    # differently across batches — splitting an exact-duplicate
-    # cluster between two cells, where single-probe matching then
-    # misses it (observed in the r12 distributed path; fixed there by
-    # unique-fitting). Order-PRESERVING dedupe: a no-op on the normal
-    # continuous case, so existing cell labelings are untouched.
-    _, _uidx = np.unique(C, axis=0, return_index=True)
-    if len(_uidx) < len(C):
-        C = C[np.sort(_uidx)]
-    centroids = C.tolist()
-    assigned = embeddings.select(
-        "vec_id", nearest_centroid_col(centroids).alias("centroid_id")
-    )
-    return assigned, centroids
+    Both layouts rank with the one ``_nearest_cells`` kernel (sub
+    frames sorted by centroid_id, so ties go to the lowest id at both),
+    which is what makes a vector's assigned cell its first probed cell:
+    an appended vector and its exact twin in a later batch always meet.
+    """
+
+    def __init__(
+        self, centroids: list[list[float]], sub: DataFrame | None = None
+    ):
+        self.centroids = centroids
+        self.sub = sub
+
+    @classmethod
+    def train(
+        cls,
+        embeddings: DataFrame,
+        k: int,
+        seed: int = 42,
+        max_iter: int = 10,
+        n_hint: int | None = None,
+    ) -> "_CoarseQuantizer":
+        """The semantic family's layout choice: the flat driver fit up
+        to the literal cap, the two-level fit above it (no k-proportional
+        driver array or plan literal anywhere past it)."""
+        if int(k) > _LITERAL_K_CAP:
+            return cls.two_level(embeddings, k, seed, max_iter, n_hint=n_hint)
+        return cls.flat(embeddings, k, seed, max_iter, n_hint=n_hint)
+
+    @classmethod
+    def flat(
+        cls,
+        embeddings: DataFrame,
+        k: int,
+        seed: int = 42,
+        max_iter: int = 10,
+        train_per_centroid: int = 256,
+        n_hint: int | None = None,
+    ) -> "_CoarseQuantizer":
+        """The flat fit, SAMPLE-trained (the FAISS discipline): the
+        coarse quantizer only needs enough points to place k cell
+        centers — ``train_per_centroid x k`` of them — so the fit runs
+        on a bounded sample ON THE DRIVER (``bounded_training_sample``,
+        then ``_kmeans_fit``) and the full corpus is touched only by
+        assignment. Training distributed on the full corpus would scan
+        100 TB maxIter times for centroids statistically identical to
+        the sample's. The IVF operators (``ivf_topk``, the IVF+SQ8
+        family) call this directly at every k: their ``meta/`` stores a
+        centroid list.
+
+        Duplicate-centroid guard (possible when the sample has fewer
+        distinct points than k — kmeans++ re-picks and re-seeding can
+        return identical rows): two bitwise-identical centroids make
+        nearest-cell ties that GEMM's column-position-dependent
+        accumulation can resolve differently, splitting an
+        exact-duplicate cluster between two cells where single-probe
+        matching then misses it. The dedupe is order-PRESERVING: a
+        no-op on continuous data, so existing cell labels hold. The
+        two-level trainer's top cells come from here too."""
+        X = bounded_training_sample(
+            embeddings, int(train_per_centroid) * int(k), seed, n_hint=n_hint
+        )
+        C = _kmeans_fit(X, k, seed, max_iter)
+        _, first = np.unique(C, axis=0, return_index=True)
+        return cls(C[np.sort(first)].tolist())
+
+    @classmethod
+    def two_level(
+        cls,
+        embeddings: DataFrame,
+        k: int,
+        seed: int = 42,
+        max_iter: int = 10,
+        train_per_centroid: int = 128,
+        n_hint: int | None = None,
+    ) -> "_CoarseQuantizer":
+        """The two-level fit, whose driver cost is CORPUS-INDEPENDENT:
+        k1 = min(ceil(sqrt(k)), ``_TOP_CELL_CAP``) top cells fit flat on
+        the driver (k1 x train_per_centroid sample rows, bounded
+        regardless of corpus size — the ONLY centroid array the driver
+        ever holds), then the full k centroids are trained DISTRIBUTED
+        into the ``sub`` table: a Bernoulli sample of the corpus
+        (k x train_per_centroid rows total, never collected) is
+        top-assigned with one Arrow map pass, and each top cell's
+        sub-centroids are fit in parallel by one ``applyInPandas`` task
+        running the shared numpy kmeans on its cell's sample. Sub-slots
+        are allocated proportional to cell mass
+        (``_proportional_alloc`` — the same largest-remainder policy as
+        the driver two-level trainer), and ``centroid_id`` is globally
+        unique and deterministic: cell j's ids occupy
+        [cumsum(k2)[j-1], cumsum(k2)[j]). The table is
+        localCheckpoint-ed: every consumer references it without
+        re-running the sample + fit.
+
+        Scale shape: driver memory O(sqrt(k) x dim + k1) — NOT
+        O(k x dim); executor work O(sample x sqrt(k)) for top
+        assignment plus independent per-cell fits. Under the k ~ n/125
+        cell policy, tpc=128 samples ~n (fine through the measured
+        rungs); corpora big enough to make that sampling pass hurt
+        should tune tpc down toward the FAISS-common 32 — per-task load
+        then bounds at 32 x k/k1 (~131k rows at the k1=4096 cap) and
+        each centroid still sees ~32 training points."""
+        k = int(k)
+        k1 = int(min(max(int(np.ceil(np.sqrt(k))), 2), _TOP_CELL_CAP))
+        top = cls.flat(embeddings, k1, seed, max_iter, train_per_centroid, n_hint)
+        n = int(n_hint) if n_hint is not None else embeddings.count()
+        frac = min(1.0, 1.05 * k * int(train_per_centroid) / max(1, n))
+        samp = top.assign(
+            embeddings.sample(fraction=frac, seed=seed).select(
+                F.col("embedding").cast("array<double>").alias("embedding")
+            )
+        ).withColumnRenamed("centroid_id", "_top")
+        # k1 rows to the driver — prices the per-cell slot allocation
+        counts = np.zeros(len(top.centroids), dtype=np.int64)
+        for r in samp.groupBy("_top").agg(F.count("*").alias("cnt")).collect():
+            counts[int(r["_top"])] = int(r["cnt"])
+        k2 = _proportional_alloc(counts, k)
+        offsets = np.concatenate([[0], np.cumsum(k2)[:-1]])
+        plan = {
+            int(j): (int(k2[j]), int(offsets[j]))
+            for j in range(len(k2))
+            if k2[j] > 0
+        }
+        fit_seed, fit_iter = int(seed), int(max_iter)
+
+        def _fit_cell(pdf: "pd.DataFrame") -> "pd.DataFrame":
+            j = int(pdf["_top"].iloc[0])
+            kj, off = plan.get(j, (0, 0))
+            if kj <= 0:
+                return pd.DataFrame(
+                    {"top_id": [], "centroid_id": [], "centroid": []}
+                ).astype({"top_id": "int32", "centroid_id": "int64"})
+            # Fit on UNIQUE rows: duplicate training points (a duplicate-
+            # heavy corpus is exactly what SemDeDup exists for) would
+            # otherwise yield bitwise-identical centroids — the tie the
+            # flat fit's guard removes. np.unique also canonicalizes row
+            # order, so the kmeans++ seeding sees a deterministic X for
+            # (sample, seed) regardless of Spark's group-row order.
+            X = np.unique(_vectors(pdf["embedding"]), axis=0)
+            kj = min(kj, len(X))
+            if kj == 1:
+                C = X.mean(axis=0)[None, :]
+            else:
+                C = _kmeans_fit(X, kj, fit_seed + j + 1, fit_iter)
+            return pd.DataFrame(
+                {
+                    "top_id": np.full(len(C), j, dtype=np.int32),
+                    "centroid_id": off + np.arange(len(C), dtype=np.int64),
+                    "centroid": list(C),
+                }
+            )
+
+        sub = (
+            samp.groupBy("_top")
+            .applyInPandas(
+                _fit_cell,
+                "top_id int, centroid_id long, centroid array<double>",
+            )
+            .localCheckpoint(eager=True)
+        )
+        return cls(top.centroids, sub)
+
+    def assign(self, df: DataFrame, with_sim: bool = False) -> DataFrame:
+        """``df`` (which carries ``embedding``) plus ``centroid_id``, its
+        nearest centroid, and with ``with_sim`` also ``cell_sim``, the
+        cosine to that centroid (the far_from_centroid keeper score,
+        computed in the same kernel call instead of a second pass).
+
+        Two-level: a vector whose top cell holds no trained
+        sub-centroid (possible when the training sample missed a sparse
+        cell) gets the SENTINEL cell ``-top_id - 1``: deterministic,
+        distinct per top cell, still a valid band key — such vectors
+        band with their top-cell peers and every emitted pair is exact-
+        verified downstream, so the fallback can only affect recall,
+        never correctness. Their ``cell_sim`` is 1.0 (the prototype
+        score: never preferred by the far-from-centroid keeper)."""
+        if self.sub is None:
+            cell = _nearest_udf(self.centroids, with_sim=with_sim)
+            if not with_sim:
+                return df.withColumn("centroid_id", cell)
+            return df.withColumn("_a", cell).select(
+                *df.columns, "_a.centroid_id", "_a.cell_sim"
+            )
+        extra = [StructField("centroid_id", LongType())]
+        if with_sim:
+            extra.append(StructField("cell_sim", DoubleType()))
+        schema = StructType(df.schema.fields + extra)
+
+        def _assign(key, vecs: "pd.DataFrame", cents: "pd.DataFrame"):
+            out = vecs.drop(columns="_top")
+            if not len(out) or not len(cents):
+                out["centroid_id"] = -int(key[0]) - 1
+                if with_sim:
+                    out["cell_sim"] = 1.0
+                return out
+            cents = cents.sort_values("centroid_id", kind="stable")
+            C = _vectors(cents["centroid"])
+            X = _vectors(vecs["embedding"], C.shape[1])
+            a = _nearest_cells(X, C)[0][:, 0]
+            out["centroid_id"] = cents["centroid_id"].to_numpy()[a]
+            if with_sim:
+                out["cell_sim"] = _cell_sim(X, C[a])
+            return out
+
+        return (
+            df.withColumn("_top", _nearest_udf(self.centroids))
+            .groupBy("_top")
+            .cogroup(self.sub.groupBy("top_id"))
+            .applyInPandas(_assign, schema)
+        )
+
+    def probe(self, queries: DataFrame, n_probe: int) -> DataFrame:
+        """(query_id, centroid_id) for each (vec_id, embedding) query's
+        ``n_probe`` nearest cells — a tiny frame, queries x n_probe rows.
+
+        Two-level: (1) each query's ``n_probe`` nearest TOP cells by the
+        map pass (the standard hierarchical-IVF heuristic: the globally
+        nearest sub-centroids concentrate in the nearest top cells —
+        a bounded recall trade for corpus-independent driver state;
+        every emitted match is still exact-cosine verified downstream);
+        (2) a cogroup pairs each probed top cell's queries with that
+        cell's sub-centroids and keeps each query's ``n_probe`` nearest
+        WITHIN the group (the frame stays |queries| x n_probe^2); (3)
+        one window takes the global ``n_probe`` nearest per query,
+        ties to the lowest centroid_id. Vectors parked in SENTINEL
+        cells are never probed: the same recall-only fallback as
+        ``assign``."""
+        kp = int(n_probe)
+        q = queries.select(F.col("vec_id").alias("query_id"), "embedding")
+        cells = F.explode(_nearest_udf(self.centroids, kp))
+        if self.sub is None:
+            return q.select("query_id", cells.alias("centroid_id"))
+
+        def _rank(key, qs: "pd.DataFrame", cents: "pd.DataFrame"):
+            if not len(qs) or not len(cents):
+                return pd.DataFrame({"query_id": [], "centroid_id": [], "_d": []})
+            cents = cents.sort_values("centroid_id", kind="stable")
+            C = _vectors(cents["centroid"])
+            ids, dist = _nearest_cells(_vectors(qs["embedding"], C.shape[1]), C, kp)
+            return pd.DataFrame(
+                {
+                    "query_id": np.repeat(qs["query_id"].to_numpy(), ids.shape[1]),
+                    "centroid_id": cents["centroid_id"].to_numpy()[ids].ravel(),
+                    "_d": dist.ravel(),
+                }
+            )
+
+        ranked = (
+            q.select("query_id", "embedding", cells.alias("_top"))
+            .groupBy("_top")
+            .cogroup(self.sub.groupBy("top_id"))
+            .applyInPandas(_rank, "query_id long, centroid_id long, _d double")
+        )
+        w = Window.partitionBy("query_id").orderBy("_d", "centroid_id")
+        return (
+            ranked.withColumn("_pr", F.row_number().over(w))
+            .filter(F.col("_pr") <= kp)
+            .select("query_id", "centroid_id")
+        )
+
+    def save(self, spark, base: str) -> None:
+        """Persist under ``base``: ``meta/`` is one row, the centroid
+        list (flat) or the top-level list plus the ``two_level`` layout
+        marker; two-level also writes the ``centroids/`` table."""
+        from ..functions.localrows import rows_frame
+
+        if self.sub is None:
+            meta = rows_frame(
+                spark, [(self.centroids,)], "centroids array<array<double>>"
+            )
+        else:
+            self.sub.write.mode("overwrite").parquet(f"{base}/centroids")
+            meta = rows_frame(
+                spark,
+                [(self.centroids, "two_level")],
+                "centroids array<array<double>>, layout string",
+            )
+        meta.write.mode("overwrite").parquet(f"{base}/meta")
+
+    @classmethod
+    def load(cls, spark, base: str) -> "_CoarseQuantizer":
+        """Read what ``save`` wrote, in either layout."""
+        meta = spark.read.parquet(f"{base}/meta").collect()[0]
+        centroids = [list(c) for c in meta["centroids"]]
+        if "layout" in meta.__fields__ and meta["layout"] == "two_level":
+            return cls(centroids, spark.read.parquet(f"{base}/centroids"))
+        return cls(centroids)
 
 
 def _topk_rescore(
@@ -1176,129 +1278,6 @@ def _topk_rescore(
     )
 
 
-def _nested_centroid_lit(centroids: list[list[float]]) -> "F.Column":
-    """k x dim centroid list as a plan-literal array<array<double>>.
-
-    Construction cost discipline (r17, VERDICT r16 #8): pyspark has no
-    single-Literal path for a list-of-lists — ``F.lit(nested_list)``
-    expands to one ``lit()`` py4j ROUND-TRIP PER ELEMENT (k*dim calls:
-    profiled at ~2.5 ms each, 2.7 s of ivf_topk's warm build for
-    16x64), and a 2D ndarray lit raises UNSUPPORTED_FEATURE. The
-    ndarray-per-ROW form below is k py4j calls total; each inner
-    Literal carries exact float64 bits (no text round-trip), and the
-    outer CreateArray of foldable children constant-folds exactly like
-    the old per-element tree, so the OPTIMIZED plan and all values are
-    identical — only driver-side construction gets ~dim-times cheaper."""
-    return F.array(
-        *[
-            F.lit(np.asarray([float(x) for x in c], dtype=np.float64))
-            for c in centroids
-        ]
-    )
-
-
-def probe_cells(
-    queries: DataFrame, centroids: list[list[float]], n_probe: int
-) -> DataFrame:
-    """(query_id, centroid_id) for each query's ``n_probe`` nearest IVF
-    cells by L2 (the quantizer's own metric). Tiny frame — queries x
-    n_centroids rows, centroid list rides as a plan literal."""
-    cent_lit = _nested_centroid_lit(centroids)
-    v = F.col("embedding").cast("array<double>")
-    qcent = queries.select(
-        F.col("vec_id").alias("query_id"), v.alias("qv")
-    ).select(
-        "query_id", "qv", F.posexplode(cent_lit).alias("centroid_id", "cvec")
-    )
-    d2 = F.aggregate(
-        F.zip_with("qv", "cvec", lambda a, b: (a - b) * (a - b)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(d2.asc(), F.col("centroid_id"))
-    return (
-        qcent.withColumn("_pr", F.row_number().over(wprobe))
-        .filter(F.col("_pr") <= n_probe)
-        .select("query_id", "centroid_id")
-    )
-
-
-def probe_cells_scalable(
-    queries: DataFrame,
-    top_centroids: list[list[float]],
-    sub_centroids: DataFrame,
-    n_probe: int,
-) -> DataFrame:
-    """(query_id, centroid_id) for each query's ``n_probe`` nearest
-    cells when the centroid set is a TABLE (two-level layout) — the
-    plan-literal-free twin of ``probe_cells``. Three stages: (1) each
-    query's ``n_probe`` nearest TOP cells via the bounded top literal
-    (the standard hierarchical-IVF heuristic: the globally nearest
-    sub-centroids concentrate in the nearest top cells, so probing
-    n_probe top cells before ranking sub-centroids trades a bounded
-    recall heuristic for corpus-independent driver state — every
-    emitted match is still exact-cosine verified downstream); (2) a
-    cogroup pairs each probed top cell's queries with that cell's
-    sub-centroids and keeps each query's ``n_probe`` nearest WITHIN
-    the group (argpartition — bounds the emitted frame at
-    |queries| x n_probe^2); (3) one window takes the global
-    ``n_probe`` smallest d2 per query (ties to lowest centroid_id,
-    matching ``probe_cells``). Corpus vectors parked in SENTINEL
-    cells (top cells the training sample missed — see
-    ``assign_cells_scalable``) are never probed: the same
-    recall-only, correctness-neutral fallback as assignment."""
-    import pandas as pd
-
-    top_probes = probe_cells(queries, top_centroids, n_probe=n_probe)
-    v = F.col("embedding").cast("array<double>")
-    staged = top_probes.join(
-        queries.select(F.col("vec_id").alias("query_id"), v.alias("qv")),
-        "query_id",
-    ).withColumnRenamed("centroid_id", "_top")
-
-    kp = int(n_probe)
-
-    def _rank(key, qs: "pd.DataFrame", cents: "pd.DataFrame"):
-        if not len(qs) or not len(cents):
-            return pd.DataFrame(
-                {"query_id": [], "centroid_id": [], "d2": []}
-            )
-        cents = cents.sort_values("centroid_id", kind="stable")
-        C = np.stack(
-            [np.asarray(c, dtype=np.float64) for c in cents["centroid"]]
-        )
-        cid = cents["centroid_id"].to_numpy()
-        X = np.stack([np.asarray(q, dtype=np.float64) for q in qs["qv"]])
-        d = (
-            (X ** 2).sum(axis=1)[:, None]
-            + (C ** 2).sum(axis=1)[None, :]
-            - 2.0 * (X @ C.T)
-        )
-        m = min(kp, d.shape[1])
-        part = np.argpartition(d, m - 1, axis=1)[:, :m]
-        rows = np.repeat(qs["query_id"].to_numpy(), m)
-        return pd.DataFrame(
-            {
-                "query_id": rows,
-                "centroid_id": cid[part].ravel(),
-                "d2": np.take_along_axis(d, part, axis=1).ravel(),
-            }
-        )
-
-    ranked = (
-        staged.groupBy("_top")
-        .cogroup(sub_centroids.groupBy("top_id"))
-        .applyInPandas(_rank, "query_id long, centroid_id long, d2 double")
-    )
-    wprobe = Window.partitionBy("query_id").orderBy(
-        F.col("d2").asc(), F.col("centroid_id")
-    )
-    return (
-        ranked.withColumn("_pr", F.row_number().over(wprobe))
-        .filter(F.col("_pr") <= kp)
-        .select("query_id", "centroid_id")
-    )
-
 
 def ivf_topk(
     embeddings: DataFrame,
@@ -1328,12 +1307,13 @@ def ivf_topk(
     with ``n_probe = n_centroids`` every cell is probed and the result
     is EXACTLY brute force (the correctness row runs that regime; the
     recall/speed trade of partial probing is pinned in pytest)."""
-    assigned, centroids = ivf_index(
+    quantizer = _CoarseQuantizer.flat(
         embeddings, n_centroids, seed, max_iter, train_per_centroid
     )
-    probes = probe_cells(queries, centroids, n_probe)
+    assigned = quantizer.assign(embeddings.select("vec_id", "embedding"))
     cands = (
-        probes.join(assigned, "centroid_id")
+        quantizer.probe(queries, n_probe)
+        .join(assigned, "centroid_id")
         .filter(F.col("query_id") != F.col("vec_id"))
         .select("query_id", F.col("vec_id").alias("neighbor_id"))
     )
@@ -1369,6 +1349,7 @@ def simhash_topk(
     return _topk_rescore(cands, queries, embeddings, k)
 
 
+
 # Per-task cell-size ceiling for the within-cell GEMM candidate scan:
 # an m-member cell's similarity block is scanned in ~128 MB row-blocks,
 # so memory is bounded, but a single task still owns the whole cell —
@@ -1385,6 +1366,38 @@ _GEMM_CELL_CAP = 8192
 _GEMM_MARGIN = 1e-9
 
 
+def _gemm_pairs(
+    threshold: float, va: "pd.Series", vb: "pd.Series | None" = None
+) -> tuple["np.ndarray", "np.ndarray"]:
+    """The one within-cell GEMM pair scan: normalize each side's
+    vectors, scan Xa @ Xb.T in ~128 MB row-blocks, and return the
+    index pairs (i, j) scoring >= threshold - ``_GEMM_MARGIN``. With
+    ``vb`` omitted the scan is one side against itself and keeps the
+    upper triangle (i < j). Zero-norm rows normalize to the zero
+    vector: every score 0, the engine-wide cosine-0 convention (the
+    exact rescore then decides them against the real threshold)."""
+
+    def unit(col):
+        X = _vectors(col)
+        n = np.linalg.norm(X, axis=1)
+        return np.where(n[:, None] > 0.0, X / np.maximum(n, 1e-300)[:, None], 0.0)
+
+    Xa = unit(va)
+    Xb = Xa if vb is None else unit(vb)
+    thr = float(threshold) - _GEMM_MARGIN
+    out_i, out_j = [], []
+    blk = max(1, (1 << 24) // len(Xb))  # ~128 MB of f64 per block
+    for s in range(0, len(Xa), blk):
+        ii, jj = np.nonzero(Xa[s : s + blk] @ Xb.T >= thr)
+        ii = ii + s
+        if vb is None:
+            keep = ii < jj
+            ii, jj = ii[keep], jj[keep]
+        out_i.append(ii)
+        out_j.append(jj)
+    return np.concatenate(out_i), np.concatenate(out_j)
+
+
 def _cell_candidates_gemm(
     cells: DataFrame,
     embeddings: DataFrame,
@@ -1399,13 +1412,11 @@ def _cell_candidates_gemm(
     cell-size^2/2 volume; yield 0.37%) through a join, a distinct,
     and a per-pair interpreted zip_with dot: 36.6 of 41.9 s. Here each
     ≤cap cell's members are gathered once (one shuffle on the cell
-    key), a single applyInPandas task normalizes the cell's vectors
-    and scans Xn @ Xn.T in ~128 MB row-blocks, and only pairs scoring
-    >= threshold - _GEMM_MARGIN leave the task — the quadratic term
-    still exists but costs a BLAS flop per pair, not a shuffled row,
-    and the surviving ~true pairs alone pay the exact rescore
-    (``_rescored``) so emitted cosines stay bit-identical to the
-    join path and the DuckDB oracle.
+    key) and a single applyInPandas task runs ``_gemm_pairs`` over
+    them — the quadratic term still exists but costs a BLAS flop per
+    pair, not a shuffled row, and the surviving ~true pairs alone pay
+    the exact rescore (``_rescored``) so emitted cosines stay
+    bit-identical to the join path and the DuckDB oracle.
 
     Cell routing (single assignment: each doc_id sits in exactly ONE
     cell, so the three branches are disjoint and pair rows are unique
@@ -1419,8 +1430,6 @@ def _cell_candidates_gemm(
       - in between (only reachable with the cap disarmed past
         _GEMM_CELL_CAP, i.e. the exact-oracle regimes at small
         scale): the original all-pairs equi-join."""
-    import pandas as pd
-
     from .dedup import _rank_gap_chain_pairs
 
     cap = int(max_cell_size)
@@ -1434,44 +1443,12 @@ def _cell_candidates_gemm(
     members = cells.join(F.broadcast(small), "band_key", "left_semi").join(
         emb64, "doc_id"
     )
-    thr = float(threshold) - _GEMM_MARGIN
 
     def _scan(pdf: "pd.DataFrame") -> "pd.DataFrame":
-        empty = pd.DataFrame(
-            {
-                "id_a": np.array([], dtype=np.int64),
-                "id_b": np.array([], dtype=np.int64),
-            }
-        )
-        m = len(pdf)
-        if m < 2:
-            return empty
         pdf = pdf.sort_values("doc_id", kind="stable")
         ids = pdf["doc_id"].to_numpy()
-        X = np.stack([np.asarray(v, dtype=np.float64) for v in pdf["_e"]])
-        nrm = np.linalg.norm(X, axis=1)
-        # zero-norm rows normalize to the zero vector: every score 0,
-        # matching the engine-wide cosine-0 convention (the exact
-        # rescore then decides them against the real threshold)
-        Xn = np.where(
-            nrm[:, None] > 0.0, X / np.maximum(nrm, 1e-300)[:, None], 0.0
-        )
-        out_a, out_b = [], []
-        blk = max(1, (1 << 24) // m)  # ~128 MB of f64 per S block
-        for s in range(0, m, blk):
-            S = Xn[s : s + blk] @ Xn.T
-            ii, jj = np.nonzero(S >= thr)
-            keep = (ii + s) < jj  # upper triangle: id_a < id_b
-            out_a.append(ids[ii[keep] + s])
-            out_b.append(ids[jj[keep]])
-        if not out_a:
-            return empty
-        return pd.DataFrame(
-            {
-                "id_a": np.concatenate(out_a),
-                "id_b": np.concatenate(out_b),
-            }
-        )
+        ii, jj = _gemm_pairs(threshold, pdf["_e"])
+        return pd.DataFrame({"id_a": ids[ii], "id_b": ids[jj]})
 
     out = members.groupBy("band_key").applyInPandas(
         _scan, "id_a long, id_b long"
@@ -1500,6 +1477,82 @@ def _cell_candidates_gemm(
     return out.unionByName(all_pairs).unionByName(chain)
 
 
+def _cross_cell_matches(
+    cells_a: DataFrame,
+    cells_b: DataFrame,
+    vecs_a: DataFrame,
+    vecs_b: DataFrame,
+    threshold: float,
+) -> DataFrame:
+    """Exact-cosine matches between two SIDES that share cells — the
+    tail of ``semantic_match_new`` (new batch vs persisted cells) and
+    ``semantic_fuzzy_join`` (left vs right). ``cells_x`` is
+    (_cell, <id_x>): the cells each id sits in; ``vecs_x`` is
+    (<id_x>, embedding), one row per id. Returns (<id_a>, <id_b>,
+    cosine) for every same-cell pair with cosine >= ``threshold``.
+
+    Cells where both sides fit ``_GEMM_CELL_CAP`` are scanned by one
+    cogroup task each (``_gemm_pairs`` over Xa_n @ Xb_n.T), so the
+    |A_cell| x |B_cell| candidate volume never materializes as rows;
+    cells where either side exceeds the cap (reachable only with a
+    hot-cell cap disarmed — the small-scale exact-oracle regimes) keep
+    the cell equi-join. Both routes' candidates pay one exact-cosine
+    verify with per-row norms hoisted, so emitted values are
+    bit-identical to the pure-join plan and the DuckDB oracle."""
+    ida, idb = vecs_a.columns[0], vecs_b.columns[0]
+    sizes = cells_a.groupBy("_cell").agg(F.count("*").alias("_ca")).join(
+        cells_b.groupBy("_cell").agg(F.count("*").alias("_cb")), "_cell"
+    )  # cells missing a side emit nothing
+    fits = (F.col("_ca") <= _GEMM_CELL_CAP) & (F.col("_cb") <= _GEMM_CELL_CAP)
+    small = F.broadcast(sizes.filter(fits).select("_cell"))
+    big = F.broadcast(sizes.filter(~fits).select("_cell"))
+    v = F.col("embedding").cast("array<double>")
+
+    def members(cells: DataFrame, vecs: DataFrame, idc: str) -> DataFrame:
+        return cells.join(small, "_cell", "left_semi").join(
+            vecs.select(idc, v.alias("_e")), idc
+        )
+
+    def _scan(key, pa: "pd.DataFrame", pb: "pd.DataFrame"):
+        if not len(pa) or not len(pb):
+            return pd.DataFrame(
+                {
+                    ida: np.array([], dtype=np.int64),
+                    idb: np.array([], dtype=np.int64),
+                }
+            )
+        ii, jj = _gemm_pairs(threshold, pa["_e"], pb["_e"])
+        return pd.DataFrame(
+            {ida: pa[ida].to_numpy()[ii], idb: pb[idb].to_numpy()[jj]}
+        )
+
+    gemm = (
+        members(cells_a, vecs_a, ida)
+        .groupBy("_cell")
+        .cogroup(members(cells_b, vecs_b, idb).groupBy("_cell"))
+        .applyInPandas(_scan, f"{ida} long, {idb} long")
+    )
+    fallback = (
+        cells_a.join(big, "_cell", "left_semi")
+        .join(cells_b.join(big, "_cell", "left_semi"), "_cell")
+        .select(ida, idb)
+    )
+    a = vecs_a.select(ida, v.alias("va"), l2_norm_col(v).alias("_na"))
+    b = vecs_b.select(idb, v.alias("vb"), l2_norm_col(v).alias("_nb"))
+    den = F.col("_na") * F.col("_nb")
+    cos = F.when(den == 0.0, F.lit(0.0)).otherwise(
+        dot_col(F.col("va"), F.col("vb")) / den
+    )
+    return (
+        gemm.unionByName(fallback)
+        .join(a, ida)
+        .join(b, idb)
+        .withColumn("cosine", cos)
+        .filter(F.col("cosine") >= float(threshold))
+        .select(ida, idb, "cosine")
+    )
+
+
 def semantic_neardup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.9,
@@ -1508,16 +1561,15 @@ def semantic_neardup_pairs(
     max_iter: int = 10,
     n_hint: int | None = None,
     max_cell_size: int = 256,
-    centroids: list[list[float]] | None = None,
     cells: DataFrame | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs via LEARNED k-means cells — the
     candidate-generation half of SemDeDup (Abbas et al., "SemDeDup:
     Data-efficient learning at web-scale through semantic
     deduplication", 2023): cluster the corpus with the sample-trained
-    IVF quantizer, enumerate pairs only WITHIN each cell, exact-cosine
-    verify. Returns (id_a, id_b, cosine), id_a < id_b, cosine >=
-    ``threshold``.
+    coarse quantizer, enumerate pairs only WITHIN each cell,
+    exact-cosine verify. Returns (id_a, id_b, cosine), id_a < id_b,
+    cosine >= ``threshold``.
 
     The third candidate-generation family next to SimHash (random
     hyperplanes) and MinHash (shingle banding): learned cells adapt to
@@ -1531,10 +1583,10 @@ def semantic_neardup_pairs(
     exact all-pairs regime — the oracle-verified correctness anchor,
     same discipline as IVF's full-probe regime.
 
-    Plan shape (the 100 TB design): centroids train driver-side on a
-    bounded sample (``ivf_index``), ride into the plan as a literal;
-    assignment is one Arrow-batched matmul map pass (no shuffle); the
-    within-cell all-pairs work is one LOCAL matmul per cell
+    Plan shape (the 100 TB design): the quantizer trains on a bounded
+    sample (``_CoarseQuantizer.train`` — flat, or two-level at
+    corpus-sized k), assignment is one pass (no shuffle when flat);
+    the within-cell all-pairs work is one LOCAL matmul per cell
     (``_cell_candidates_gemm`` — members gather with one shuffle on
     the cell key, a blocked Xn @ Xn.T scan emits only pairs above
     threshold-minus-margin, and the survivors alone pay the exact
@@ -1549,46 +1601,24 @@ def semantic_neardup_pairs(
     ``n_centroids`` with the corpus so the expected cell stays
     constant-sized: total pair work is then linear in n."""
     if cells is None:
-        if centroids is None and int(n_centroids) > _LITERAL_K_CAP:
-            # scale path (VERDICT r11 task 2): k grows with the corpus
-            # under the k ~ n/125 cell policy, so past the cap the
-            # centroid set must never be a driver array / plan
-            # literal — train distributed, assign via cogroup.
-            top, sub = distributed_coarse_quantizer(
-                embeddings,
-                int(n_centroids),
-                seed=seed,
-                max_iter=max_iter,
-                n_hint=n_hint,
-            )
-            cells = (
-                assign_cells_scalable(embeddings, top, sub)
-                .select(
-                    F.col("vec_id").alias("doc_id"),
-                    F.col("centroid_id").alias("band_key"),
-                )
-                .localCheckpoint(eager=True)
-            )
-        else:
-            if centroids is None:
-                _, centroids = ivf_index(
-                    embeddings,
-                    n_centroids=n_centroids,
-                    seed=seed,
-                    max_iter=max_iter,
-                    n_hint=n_hint,
-                )
-            # one materialization (same discipline as the MinHash
-            # signature frame and the SimHash key arrays):
-            # _cell_candidates_gemm references the cells frame from
-            # 5 plan branches (size detection, small/mid/hot semi
-            # routing, the chain expansion) — uncheckpointed, the
-            # corpus scan + Arrow assignment would re-run per branch.
-            # Two longs/row.
-            cells = embeddings.select(
+        quantizer = _CoarseQuantizer.train(
+            embeddings, n_centroids, seed, max_iter, n_hint
+        )
+        # one materialization (same discipline as the MinHash
+        # signature frame and the SimHash key arrays):
+        # _cell_candidates_gemm references the cells frame from
+        # 5 plan branches (size detection, small/mid/hot semi
+        # routing, the chain expansion) — uncheckpointed, the
+        # corpus scan + assignment would re-run per branch.
+        # Two longs/row.
+        cells = (
+            quantizer.assign(embeddings.select("vec_id", "embedding"))
+            .select(
                 F.col("vec_id").alias("doc_id"),
-                nearest_centroid_col(centroids).alias("band_key"),
-            ).localCheckpoint(eager=True)
+                F.col("centroid_id").alias("band_key"),
+            )
+            .localCheckpoint(eager=True)
+        )
     cands = _cell_candidates_gemm(
         cells, embeddings, float(threshold), max_cell_size
     )
@@ -1625,65 +1655,43 @@ def semantic_dedup(
         break on vec_id. Requires the learned centroids, so it is
         pinned by pytest rather than a SQL oracle.
 
-    Components resolve with the shared hybrid union-find /
-    pointer-jumping CC (``dedup.neardup_clusters``); the keeper window
-    partitions by cluster_id — one extra shuffle on a frame that is
-    one row per corpus vector, nothing pairwise."""
+    One assignment pass serves both the banding cells and the
+    far_from_centroid keeper score (``cell_sim``). Components resolve
+    with the shared hybrid union-find / pointer-jumping CC
+    (``dedup.neardup_clusters``); the keeper window partitions by
+    cluster_id — one extra shuffle on a frame that is one row per
+    corpus vector, nothing pairwise."""
     from .dedup import neardup_clusters
 
-    scalable = int(n_centroids) > _LITERAL_K_CAP
-    if scalable:
-        # scale path (VERDICT r11 task 2): centroids stay a DataFrame,
-        # assignment is the cogroup join — the driver never holds or
-        # plan-embeds the k-proportional centroid array. One
-        # assignment pass serves both the banding cells AND the
-        # far_from_centroid keeper score (cell_sim).
-        centroids = None
-        top, sub = distributed_coarse_quantizer(
-            embeddings,
-            int(n_centroids),
-            seed=seed,
-            max_iter=max_iter,
-            n_hint=n_hint,
-        )
-        assigned = assign_cells_scalable(
-            embeddings, top, sub, with_sim=(keep == "far_from_centroid")
-        ).localCheckpoint(eager=True)
-        cells = assigned.select(
+    if keep not in ("min_id", "far_from_centroid"):
+        raise ValueError(f"keep must be min_id|far_from_centroid: {keep!r}")
+    far = keep == "far_from_centroid"
+    assigned = (
+        _CoarseQuantizer.train(embeddings, n_centroids, seed, max_iter, n_hint)
+        .assign(embeddings.select("vec_id", "embedding"), with_sim=far)
+        .drop("embedding")
+        .localCheckpoint(eager=True)
+    )
+    pairs = semantic_neardup_pairs(
+        embeddings,
+        threshold=threshold,
+        max_cell_size=max_cell_size,
+        cells=assigned.select(
             F.col("vec_id").alias("doc_id"),
             F.col("centroid_id").alias("band_key"),
-        )
-        pairs = semantic_neardup_pairs(
-            embeddings,
-            threshold=threshold,
-            max_cell_size=max_cell_size,
-            cells=cells,
-        )
-    else:
-        _, centroids = ivf_index(
-            embeddings,
-            n_centroids=n_centroids,
-            seed=seed,
-            max_iter=max_iter,
-            n_hint=n_hint,
-        )
-        pairs = semantic_neardup_pairs(
-            embeddings,
-            threshold=threshold,
-            max_cell_size=max_cell_size,
-            centroids=centroids,
-        )
+        ),
+    )
     comp = neardup_clusters(
         pairs.select(
             F.col("id_a").alias("doc_a"), F.col("id_b").alias("doc_b")
         )
     ).select(F.col("doc_id").alias("vec_id"), "cluster_id")
     labeled = (
-        embeddings.select("vec_id", "embedding")
+        embeddings.select("vec_id")
         .join(comp, "vec_id", "left")
         .withColumn("cluster_id", F.coalesce("cluster_id", "vec_id"))
     )
-    if keep == "min_id":
+    if not far:
         return labeled.select(
             "vec_id",
             "cluster_id",
@@ -1691,29 +1699,12 @@ def semantic_dedup(
             .cast("int")
             .alias("is_kept"),
         )
-    if keep != "far_from_centroid":
-        raise ValueError(f"keep must be min_id|far_from_centroid: {keep!r}")
     w = Window.partitionBy("cluster_id").orderBy(
-        F.col("_csim").asc(), F.col("vec_id").asc()
+        F.col("cell_sim").asc(), F.col("vec_id").asc()
     )
-    if scalable:
-        # the keeper score came out of the assignment cogroup — a
-        # (vec_id, cell_sim) join, never a centroid literal
-        scored = labeled.join(
-            assigned.select("vec_id", F.col("cell_sim").alias("_csim")),
-            "vec_id",
-        )
-    else:
-        cent_lit = _nested_centroid_lit(centroids)
-        own = F.element_at(cent_lit, nearest_centroid_col(centroids) + 1)
-        sim = cosine_similarity_col(
-            F.col("embedding").cast("array<double>"), own
-        )
-        scored = labeled.withColumn("_csim", sim)
     return (
-        scored.withColumn(
-            "is_kept", (F.row_number().over(w) == 1).cast("int")
-        )
+        labeled.join(assigned.select("vec_id", "cell_sim"), "vec_id")
+        .withColumn("is_kept", (F.row_number().over(w) == 1).cast("int"))
         .select("vec_id", "cluster_id", "is_kept")
     )
 
@@ -1742,89 +1733,27 @@ def semantic_index_build(
                    per batch is a few cells, not the corpus.
       ``meta/``  — single row: the centroid list (flat layout), or the
                    TOP-level centroid list plus a layout marker
-                   (two-level layout, below).
+                   (two-level layout).
       ``centroids/`` — two-level layout only: the full sub-centroid
                    TABLE (top_id, centroid_id, centroid).
 
-    Past ``_LITERAL_K_CAP`` centroids the index is built and persisted
-    in the TWO-LEVEL layout (VERDICT r11 task 2, extended to the
-    persisted artifact): the quantizer trains distributed
-    (``distributed_coarse_quantizer``), corpus assignment runs through
-    the cogroup path, ``meta/`` holds only the bounded top-centroid
-    list, and the k-proportional centroid set is a parquet TABLE —
-    so building, matching against, and appending to the index never
-    holds or plan-embeds a k-sized array on the driver.
+    The layout is the quantizer's (``_CoarseQuantizer.train``): at
+    corpus-sized k the index is two-level, so building, matching
+    against, and appending to it never holds or plan-embeds a
+    k-sized array on the driver.
 
     ``semantic_match_new`` is the read side,
     ``semantic_index_append`` the live-corpus maintenance."""
-    spark = embeddings.sparkSession
     base = path.rstrip("/")
-    if int(n_centroids) > _LITERAL_K_CAP:
-        top, sub = distributed_coarse_quantizer(
-            embeddings,
-            int(n_centroids),
-            seed=seed,
-            max_iter=max_iter,
-            n_hint=n_hint,
-        )
-        cells = embeddings.select("vec_id", "embedding").join(
-            assign_cells_scalable(embeddings, top, sub), "vec_id"
-        )
-        cells.repartition("centroid_id").write.mode(
-            "overwrite"
-        ).partitionBy("centroid_id").parquet(f"{base}/cells")
-        sub.write.mode("overwrite").parquet(f"{base}/centroids")
-        from ..functions.localrows import rows_frame
-
-        rows_frame(
-            spark,
-            [(top, "two_level")],
-            "centroids array<array<double>>, layout string",
-        ).write.mode("overwrite").parquet(f"{base}/meta")
-        return
-    _, centroids = ivf_index(
-        embeddings,
-        n_centroids=n_centroids,
-        seed=seed,
-        max_iter=max_iter,
-        n_hint=n_hint,
+    quantizer = _CoarseQuantizer.train(
+        embeddings, n_centroids, seed, max_iter, n_hint
     )
-    cells = embeddings.select(
-        "vec_id",
-        "embedding",
-        nearest_centroid_col(centroids).alias("centroid_id"),
-    )
-    cells.repartition("centroid_id").write.mode("overwrite").partitionBy(
+    quantizer.assign(embeddings.select("vec_id", "embedding")).repartition(
         "centroid_id"
-    ).parquet(f"{base}/cells")
-    from ..functions.localrows import rows_frame
-
-    rows_frame(
-        spark, [(centroids,)], "centroids array<array<double>>"
-    ).write.mode("overwrite").parquet(f"{base}/meta")
-
-
-def _index_centroids(spark, path: str) -> list[list[float]]:
-    """Flat-layout centroid list; raises on a two-level index (whose
-    callers must use the table, never a driver list)."""
-    meta = spark.read.parquet(f"{path.rstrip('/')}/meta").collect()[0]
-    if "layout" in meta.__fields__ and meta["layout"] == "two_level":
-        raise ValueError(
-            "two-level semantic index: centroids live in the "
-            "centroids/ table, not a driver list"
-        )
-    return [list(c) for c in meta["centroids"]]
-
-
-def _index_layout(spark, path: str):
-    """(layout, top_centroids_or_flat_list) for a persisted index."""
-    meta = spark.read.parquet(f"{path.rstrip('/')}/meta").collect()[0]
-    layout = (
-        meta["layout"]
-        if "layout" in meta.__fields__ and meta["layout"]
-        else "flat"
+    ).write.mode("overwrite").partitionBy("centroid_id").parquet(
+        f"{base}/cells"
     )
-    return layout, [list(c) for c in meta["centroids"]]
+    quantizer.save(embeddings.sparkSession, base)
 
 
 def semantic_match_new(
@@ -1840,29 +1769,21 @@ def semantic_match_new(
     ``threshold`` — the embedding twin of ``dedup.minhash_match_new``:
     the corpus is never self-joined, never re-assigned, and only the
     cells the batch probes are READ at all (their ids collect to a
-    list bounded by n_centroids — driver state the plan already holds
-    as the centroid literal — and prune the hive scan statically).
+    list bounded by |batch| x n_probe and prune the hive scan
+    statically). The probe runs in whichever layout the index was
+    built in; against a two-level index the driver holds only the
+    top-centroid list and the touched-cell filter.
 
     ``n_probe`` is the recall knob for cell-boundary straddle: with 1
     (the paper's within-cluster semantics) a twin assigned to the
     adjacent cell is missed; 2-3 probes check the runner-up cells at
-    proportional extra read cost. A corpus vector lives in exactly one
-    cell, so multi-probe never duplicates a pair.
-
-    Two-level indexes (built past ``_LITERAL_K_CAP``) probe through
-    the centroid TABLE (``probe_cells_scalable``): the driver holds
-    only the top-centroid list and the touched-cell filter, which is
-    bounded by |batch| x n_probe regardless of k."""
+    proportional extra read cost. Probing and assignment share one
+    kernel, so an exact twin of an indexed vector always probes that
+    vector's cell first. A corpus vector lives in exactly one cell,
+    so multi-probe never duplicates a pair."""
     base = path.rstrip("/")
-    layout, centroids = _index_layout(spark, base)
     new_embeddings = new_embeddings.select("vec_id", "embedding")
-    if layout == "two_level":
-        sub = spark.read.parquet(f"{base}/centroids")
-        probes = probe_cells_scalable(
-            new_embeddings, centroids, sub, n_probe=n_probe
-        )
-    else:
-        probes = probe_cells(new_embeddings, centroids, n_probe=n_probe)
+    probes = _CoarseQuantizer.load(spark, base).probe(new_embeddings, n_probe)
     touched = [
         r[0] for r in probes.select("centroid_id").distinct().collect()
     ]
@@ -1875,110 +1796,18 @@ def semantic_match_new(
     corpus = spark.read.parquet(f"{base}/cells").filter(
         F.col("centroid_id").isin(touched)
     )
-    # r13: the probe-vs-cell verify runs through the same cogroup GEMM
-    # prefilter as semantic_fuzzy_join — the |batch| x cell_size
-    # candidate volume per probed cell is scanned as one local
-    # Xq @ Xc^T per cell and only pairs above threshold-minus-margin
-    # leave the task; the survivors alone pay the exact-cosine join
-    # (emitted values bit-identical to the pure-join plan). Cells
-    # bigger than the per-task cap keep the original equi-join shape.
-    # A corpus vector lives in exactly one cell, so multi-probe still
-    # never duplicates a pair.
-    import pandas as pd
-
-    v = F.col("embedding").cast("array<double>")
-    q64 = probes.join(
-        new_embeddings.select(
-            F.col("vec_id").alias("query_id"), v.alias("_e")
+    return _cross_cell_matches(
+        probes.select(
+            F.col("centroid_id").alias("_cell"),
+            F.col("query_id").alias("new_id"),
         ),
-        "query_id",
-    ).select("centroid_id", "query_id", "_e")
-    c64 = corpus.select(
-        "centroid_id", F.col("vec_id").alias("corpus_id"), v.alias("_e")
-    )
-    csz = c64.groupBy("centroid_id").agg(F.count("*").alias("_n"))
-    small = csz.filter(F.col("_n") <= _GEMM_CELL_CAP).select("centroid_id")
-    big = csz.filter(F.col("_n") > _GEMM_CELL_CAP).select("centroid_id")
-    thr = float(threshold) - _GEMM_MARGIN
-
-    def _scan(key, qp: "pd.DataFrame", cp: "pd.DataFrame"):
-        empty = pd.DataFrame(
-            {
-                "new_id": np.array([], dtype=np.int64),
-                "corpus_id": np.array([], dtype=np.int64),
-            }
-        )
-        if not len(qp) or not len(cp):
-            return empty
-        qids = qp["query_id"].to_numpy()
-        cids = cp["corpus_id"].to_numpy()
-
-        def _norm(pdf):
-            X = np.stack(
-                [np.asarray(x, dtype=np.float64) for x in pdf["_e"]]
-            )
-            n = np.linalg.norm(X, axis=1)
-            return np.where(
-                n[:, None] > 0.0, X / np.maximum(n, 1e-300)[:, None], 0.0
-            )
-
-        Xq, Xc = _norm(qp), _norm(cp)
-        out_q, out_c = [], []
-        blk = max(1, (1 << 24) // len(cids))
-        for s in range(0, len(qids), blk):
-            S = Xq[s : s + blk] @ Xc.T
-            ii, jj = np.nonzero(S >= thr)
-            out_q.append(qids[ii + s])
-            out_c.append(cids[jj])
-        if not out_q:
-            return empty
-        return pd.DataFrame(
-            {
-                "new_id": np.concatenate(out_q),
-                "corpus_id": np.concatenate(out_c),
-            }
-        )
-
-    gemm = (
-        q64.join(F.broadcast(small), "centroid_id", "left_semi")
-        .groupBy("centroid_id")
-        .cogroup(
-            c64.join(F.broadcast(small), "centroid_id", "left_semi")
-            .groupBy("centroid_id")
-        )
-        .applyInPandas(_scan, "new_id long, corpus_id long")
-    )
-    fallback = (
-        q64.join(F.broadcast(big), "centroid_id", "left_semi")
-        .select("centroid_id", F.col("query_id").alias("new_id"))
-        .join(
-            c64.join(F.broadcast(big), "centroid_id", "left_semi")
-            .select("centroid_id", "corpus_id"),
-            "centroid_id",
-        )
-        .select("new_id", "corpus_id")
-    )
-    cands = gemm.unionByName(fallback)
-    a = new_embeddings.select(
-        F.col("vec_id").alias("new_id"),
-        v.alias("va"),
-        l2_norm_col(v).alias("_na"),
-    )
-    b = corpus.select(
-        F.col("vec_id").alias("corpus_id"),
-        v.alias("vb"),
-        l2_norm_col(v).alias("_nb"),
-    )
-    den = F.col("_na") * F.col("_nb")
-    cos = F.when(den == 0.0, F.lit(0.0)).otherwise(
-        dot_col(F.col("va"), F.col("vb")) / den
-    )
-    return (
-        cands.join(a, "new_id")
-        .join(b, "corpus_id")
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= float(threshold))
-        .select("new_id", "corpus_id", "cosine")
+        corpus.select(
+            F.col("centroid_id").alias("_cell"),
+            F.col("vec_id").alias("corpus_id"),
+        ),
+        new_embeddings.withColumnRenamed("vec_id", "new_id"),
+        corpus.select(F.col("vec_id").alias("corpus_id"), "embedding"),
+        threshold,
     )
 
 
@@ -2003,23 +1832,16 @@ def semantic_index_append(
     from ..sources.sinks import idempotent_merge_parquet
 
     base = path.rstrip("/")
-    layout, centroids = _index_layout(spark, base)
-    new_embeddings = new_embeddings.select("vec_id", "embedding")
     # materialize ONCE: three consumers follow (count, the merge
     # write, the touched-cell distinct) and each would otherwise
-    # re-run the batch scan + Arrow centroid assignment — on a
-    # 1 s-trigger stream that triples the per-batch maintenance work
-    # (same discipline as stream_corpus_ingest's id frames)
-    if layout == "two_level":
-        sub = spark.read.parquet(f"{base}/centroids")
-        updates = new_embeddings.join(
-            assign_cells_scalable(new_embeddings, centroids, sub),
-            "vec_id",
-        ).localCheckpoint(eager=True)
-    else:
-        updates = new_embeddings.withColumn(
-            "centroid_id", nearest_centroid_col(centroids)
-        ).localCheckpoint(eager=True)
+    # re-run the batch scan + centroid assignment — on a 1 s-trigger
+    # stream that triples the per-batch maintenance work (same
+    # discipline as stream_corpus_ingest's id frames)
+    updates = (
+        _CoarseQuantizer.load(spark, base)
+        .assign(new_embeddings.select("vec_id", "embedding"))
+        .localCheckpoint(eager=True)
+    )
     appended = updates.count()
     idempotent_merge_parquet(
         spark,
@@ -2053,7 +1875,6 @@ def semantic_fuzzy_join(
     seed: int = 42,
     max_iter: int = 10,
     max_cell_size: int | None = 256,
-    centroids: list[list[float]] | None = None,
 ) -> DataFrame:
     """Cross-corpus EMBEDDING join: (left_id, right_id, cosine) for
     every left/right pair with cosine >= ``threshold`` — the
@@ -2063,14 +1884,14 @@ def semantic_fuzzy_join(
     ``semantic_match_new`` (which requires a PERSISTED index; this
     takes two live DataFrames).
 
-    Plan: ONE set of k-means cells trained on a bounded sample of the
-    UNION (both sides must share the partition or co-assignment is
-    meaningless), each side assigned in one Arrow matmul pass, a
-    cell-key equi-join produces candidates, exact-cosine verify with
-    hoisted per-row norms (``cosine >= threshold`` filter) — emitted
-    pairs are exact, the learned partition only bounds recall (a true
-    pair straddling a cell boundary is missed; near-identical vectors
-    almost surely co-assign — the same SemDeDup trade as
+    Plan: ONE quantizer trained on a bounded sample of the UNION (both
+    sides must share the partition or co-assignment is meaningless;
+    two-level at corpus-sized k), each side assigned in one pass, and
+    the shared cross-cell tail (``_cross_cell_matches``: within-cell
+    GEMM scan, exact-cosine verify with hoisted per-row norms) —
+    emitted pairs are exact, the learned partition only bounds recall
+    (a true pair straddling a cell boundary is missed; near-identical
+    vectors almost surely co-assign — the same SemDeDup trade as
     ``semantic_neardup_pairs``, and ``n_centroids=1`` recovers the
     exact all-cross-pairs regime, the oracle anchor).
 
@@ -2079,37 +1900,16 @@ def semantic_fuzzy_join(
     chain rescue cross-corpus, so the cap is an honest recall bound;
     ``None`` disarms it. At scale grow ``n_centroids`` with the
     corpora so expected cell size stays constant."""
-    scalable = centroids is None and int(n_centroids) > _LITERAL_K_CAP
-    if scalable:
-        # corpus-sized k: same table-trained quantizer + cogroup
-        # assignment as semantic_dedup past the cap — ONE partition
-        # shared by both sides (co-assignment stays meaningful), no
-        # k-proportional driver array or plan literal
-        union = left.select("vec_id", "embedding").unionByName(
-            right.select("vec_id", "embedding")
-        )
-        top, sub = distributed_coarse_quantizer(
-            union, int(n_centroids), seed=seed, max_iter=max_iter
-        )
-    elif centroids is None:
-        union = left.select("vec_id", "embedding").unionByName(
-            right.select("vec_id", "embedding")
-        )
-        _, centroids = ivf_index(
-            union, n_centroids=n_centroids, seed=seed, max_iter=max_iter
-        )
+    left = left.select("vec_id", "embedding")
+    right = right.select("vec_id", "embedding")
+    quantizer = _CoarseQuantizer.train(
+        left.unionByName(right), n_centroids, seed, max_iter
+    )
 
     def _cells(df: DataFrame, idc: str) -> DataFrame:
-        if scalable:
-            cells = assign_cells_scalable(df, top, sub).select(
-                F.col("vec_id").alias(idc),
-                F.col("centroid_id").alias("_cell"),
-            )
-        else:
-            cells = df.select(
-                F.col("vec_id").alias(idc),
-                nearest_centroid_col(centroids).alias("_cell"),
-            )
+        cells = quantizer.assign(df).select(
+            F.col("centroid_id").alias("_cell"), F.col("vec_id").alias(idc)
+        )
         if max_cell_size is not None:
             w = Window.partitionBy("_cell").orderBy(idc)
             cells = (
@@ -2117,114 +1917,17 @@ def semantic_fuzzy_join(
                 .filter(F.col("_rk") <= int(max_cell_size))
                 .drop("_rk")
             )
-        # two consumers downstream (the cell join reads both sides);
-        # the frame is two longs per row — same materialization
-        # discipline as semantic_neardup_pairs' cells frame
+        # two consumers downstream (the size count and the cell join
+        # read both sides); the frame is two longs per row — same
+        # materialization discipline as semantic_neardup_pairs' cells
         return cells.localCheckpoint(eager=True)
 
-    cl, cr = _cells(left, "left_id"), _cells(right, "right_id")
-    # r13: within-cell CROSS pairs via one local GEMM per cell (the
-    # cross-side analog of _cell_candidates_gemm, same margin/blocking
-    # discipline): for cells where BOTH sides fit the per-task cap,
-    # a cogroup task scans Xl_n @ Xr_n.T and emits only pairs scoring
-    # >= threshold - margin, so the |L_cell| x |R_cell| candidate
-    # volume never materializes as rows; only the survivors pay the
-    # exact-cosine join below (emitted values bit-identical to the
-    # pure-join plan and the DuckDB oracle). Cells where either side
-    # exceeds _GEMM_CELL_CAP (reachable only with the cap disarmed —
-    # the small-scale exact-oracle regimes) keep the original
-    # cell-equi-join shape.
-    import pandas as pd
-
-    sl = cl.groupBy("_cell").agg(F.count("*").alias("_nl"))
-    sr = cr.groupBy("_cell").agg(F.count("*").alias("_nr"))
-    both = sl.join(sr, "_cell")  # cells missing a side emit nothing
-    small = both.filter(
-        (F.col("_nl") <= _GEMM_CELL_CAP) & (F.col("_nr") <= _GEMM_CELL_CAP)
-    ).select("_cell")
-    big = both.filter(
-        (F.col("_nl") > _GEMM_CELL_CAP) | (F.col("_nr") > _GEMM_CELL_CAP)
-    ).select("_cell")
-    e64 = lambda df, idc: df.select(  # noqa: E731
-        F.col("vec_id").alias(idc),
-        F.col("embedding").cast("array<double>").alias("_e"),
-    )
-    ml = cl.join(F.broadcast(small), "_cell", "left_semi").join(
-        e64(left, "left_id"), "left_id"
-    )
-    mr = cr.join(F.broadcast(small), "_cell", "left_semi").join(
-        e64(right, "right_id"), "right_id"
-    )
-    thr = float(threshold) - _GEMM_MARGIN
-
-    def _scan(key, lp: "pd.DataFrame", rp: "pd.DataFrame"):
-        empty = pd.DataFrame(
-            {
-                "left_id": np.array([], dtype=np.int64),
-                "right_id": np.array([], dtype=np.int64),
-            }
-        )
-        if not len(lp) or not len(rp):
-            return empty
-        lids = lp["left_id"].to_numpy()
-        rids = rp["right_id"].to_numpy()
-
-        def _norm(pdf):
-            X = np.stack(
-                [np.asarray(v, dtype=np.float64) for v in pdf["_e"]]
-            )
-            n = np.linalg.norm(X, axis=1)
-            return np.where(
-                n[:, None] > 0.0, X / np.maximum(n, 1e-300)[:, None], 0.0
-            )
-
-        Xl, Xr = _norm(lp), _norm(rp)
-        out_l, out_r = [], []
-        blk = max(1, (1 << 24) // len(rids))
-        for s in range(0, len(lids), blk):
-            S = Xl[s : s + blk] @ Xr.T
-            ii, jj = np.nonzero(S >= thr)
-            out_l.append(lids[ii + s])
-            out_r.append(rids[jj])
-        if not out_l:
-            return empty
-        return pd.DataFrame(
-            {
-                "left_id": np.concatenate(out_l),
-                "right_id": np.concatenate(out_r),
-            }
-        )
-
-    gemm = (
-        ml.groupBy("_cell")
-        .cogroup(mr.groupBy("_cell"))
-        .applyInPandas(_scan, "left_id long, right_id long")
-    )
-    fallback = (
-        cl.join(F.broadcast(big), "_cell", "left_semi")
-        .join(cr.join(F.broadcast(big), "_cell", "left_semi"), "_cell")
-        .select("left_id", "right_id")
-    )
-    cands = gemm.unionByName(fallback)
-    v = F.col("embedding").cast("array<double>")
-    a = left.select(
-        F.col("vec_id").alias("left_id"), v.alias("va"),
-        l2_norm_col(v).alias("_na"),
-    )
-    b = right.select(
-        F.col("vec_id").alias("right_id"), v.alias("vb"),
-        l2_norm_col(v).alias("_nb"),
-    )
-    den = F.col("_na") * F.col("_nb")
-    cos = F.when(den == 0.0, F.lit(0.0)).otherwise(
-        dot_col(F.col("va"), F.col("vb")) / den
-    )
-    return (
-        cands.join(a, "left_id")
-        .join(b, "right_id")
-        .withColumn("cosine", cos)
-        .filter(F.col("cosine") >= float(threshold))
-        .select("left_id", "right_id", "cosine")
+    return _cross_cell_matches(
+        _cells(left, "left_id"),
+        _cells(right, "right_id"),
+        left.withColumnRenamed("vec_id", "left_id"),
+        right.withColumnRenamed("vec_id", "right_id"),
+        threshold,
     )
 
 

@@ -137,7 +137,7 @@ def test_ivf_sq8_partial_probe_recall_with_honest_cells(spark):
       3. true sublinearity (probed rows ~ n_probe/k of the corpus).
     """
     from bda_spark.operators.quantize import ivf_sq8_topk
-    from bda_spark.operators.similarity import ivf_index
+    from bda_spark.operators.similarity import _CoarseQuantizer
 
     emb = load_table(spark, SF_DIR, "embeddings")
     n = emb.count()
@@ -161,7 +161,7 @@ def test_ivf_sq8_partial_probe_recall_with_honest_cells(spark):
     exact_top1 = {r["query_id"]: r["neighbor_id"] for r in exact if r["rk"] == 1}
     assert sum(top1.get(q) == v for q, v in exact_top1.items()) >= 3
     # 2. balance: no cell exceeds 2x the mean occupancy
-    assigned, _ = ivf_index(emb, n_centroids=8)
+    assigned = _CoarseQuantizer.flat(emb, 8).assign(emb)
     sizes = {
         r["centroid_id"]: r["c"]
         for r in assigned.groupBy("centroid_id").agg(F.count("*").alias("c")).collect()
@@ -213,17 +213,15 @@ def test_sample_trained_quantizer_full_probe_still_exact(spark):
     path FORCED (tiny per-centroid budget << corpus), full probing must
     still return exactly the brute-force top-k — cell quality affects
     only partial-probe recall, never the exact regime."""
-    from bda_spark.operators.similarity import ivf_index, ivf_topk
+    from bda_spark.operators.similarity import _CoarseQuantizer, ivf_topk
 
     emb = load_table(spark, SF_DIR, "embeddings")
     n = emb.count()
     assert n > 8 * 4  # the sample path genuinely engages below
-    assigned, centroids = ivf_index(
-        emb, n_centroids=8, train_per_centroid=4
-    )
+    quantizer = _CoarseQuantizer.flat(emb, 8, train_per_centroid=4)
     # every corpus vector is assigned exactly once, sample or not
-    assert assigned.count() == n
-    assert len(centroids) == 8
+    assert quantizer.assign(emb).count() == n
+    assert len(quantizer.centroids) == 8
     queries = emb.filter(F.col("vec_id") < 3)
     got = sorted(
         (r.query_id, r.rk, r.neighbor_id)
@@ -322,17 +320,65 @@ def test_ivf_index_stale_small_hint_never_full_collects(spark):
     no-hint probe, and hitting the cap falsifies the hint and falls
     back to Bernoulli sampling. The index built under the lying hint
     must still be a working index over the FULL corpus."""
-    from bda_spark.operators.similarity import ivf_index
+    from bda_spark.operators.similarity import _CoarseQuantizer
 
     emb = load_table(spark, SF_DIR, "embeddings")
     n = emb.count()
     # train_per_centroid=2, k=4 -> target 8, cap 33 << corpus size;
     # the hint lies that the corpus fits under 4x target
-    assigned, centroids = ivf_index(
-        emb, n_centroids=4, train_per_centroid=2, n_hint=5
-    )
-    assert len(centroids) == 4
+    quantizer = _CoarseQuantizer.flat(emb, 4, train_per_centroid=2, n_hint=5)
+    assert len(quantizer.centroids) == 4
+    assigned = quantizer.assign(emb)
     # every corpus vector got assigned — the lying hint didn't shrink
     # the index to the capped sample
     assert assigned.count() == n
     assert assigned.select("centroid_id").distinct().count() >= 2
+
+
+def test_index_append_keeps_one_row_per_vec_id_on_the_bisector(
+    spark, tmp_path
+):
+    """Build and append assign with one kernel, so re-appending an
+    indexed vector lands it in the partition it already occupies and
+    the keyed upsert replaces it — even for vectors on the bisector of
+    the index's two cells, where the two distances tie up to rounding.
+    The corpus is two clusters of identical points plus 256 bisector
+    points; with no Lloyd step (max_iter=0) the fit keeps its two
+    kmeans++ seeds, one per cluster, so the cells are known before the
+    build. Each vector is re-appended ALONE: the upsert only rewrites
+    the partitions a batch touches, so a vector moved to the other
+    cell by a batch that never touches its old cell leaves a second
+    row behind."""
+    import numpy as np
+
+    from bda_spark.operators.quantize import (
+        ivf_sq8_index_append,
+        ivf_sq8_index_build,
+    )
+
+    rng = np.random.default_rng(3)
+    p, q = rng.normal(size=16), rng.normal(size=16)
+    u = q - p
+    t = rng.normal(scale=0.1 * np.linalg.norm(u), size=(256, 16))
+    t -= np.outer(t @ u / (u @ u), u)
+    bisector = (p + q) / 2.0 + t
+    rows = (
+        [(i, p) for i in range(800)]
+        + [(1000 + i, q) for i in range(800)]
+        + [(5000 + i, bisector[i]) for i in range(256)]
+    )
+    emb = spark.createDataFrame(
+        [(int(i), [float(x) for x in v]) for i, v in rows],
+        "vec_id long, embedding array<double>",
+    )
+    path = str(tmp_path / "ivf_idx")
+    ivf_sq8_index_build(emb, path, n_centroids=2, max_iter=0)
+    cents = spark.read.parquet(f"{path}/meta").collect()[0]["centroids"]
+    assert sorted(map(tuple, cents)) == sorted([tuple(p), tuple(q)])
+
+    for i in range(6):
+        ivf_sq8_index_append(spark, path, emb.filter(F.col("vec_id") == 5000 + i))
+    codes = spark.read.parquet(f"{path}/codes")
+    dup = codes.groupBy("vec_id").count().filter(F.col("count") > 1).count()
+    assert dup == 0, f"{dup} re-appended vec_ids now sit in two cells"
+    assert codes.count() == len(rows)

@@ -521,14 +521,12 @@ def test_hierarchical_fit_exact_k_with_concentrated_spare_capacity():
 
 
 def test_scalable_assignment_matches_literal_argmin(spark):
-    """assign_cells_scalable with ONE top cell holding the full flat
-    centroid set must reproduce nearest_centroid_col exactly (same
-    argmin geometry, same lowest-id tie-break) — the correctness pin
-    tying the cogroup path to the oracle-anchored literal path."""
-    from bda_spark.operators.similarity import (
-        assign_cells_scalable,
-        nearest_centroid_col,
-    )
+    """The quantizer's two-level assign with ONE top cell holding the
+    full flat centroid set must reproduce the flat layout's assign
+    exactly (same kernel, same lowest-id tie-break) — ids AND the
+    far_from_centroid keeper score — the correctness pin tying the
+    cogroup path to the oracle-anchored flat path."""
+    from bda_spark.operators.similarity import _CoarseQuantizer
 
     rng = np.random.default_rng(5)
     X = rng.normal(size=(300, DIM))
@@ -539,17 +537,22 @@ def test_scalable_assignment_matches_literal_argmin(spark):
         "top_id int, centroid_id long, centroid array<double>",
     )
     top = [[float(x) for x in X.mean(axis=0)]]  # single top cell
-    got = {
-        r.vec_id: r.centroid_id
-        for r in assign_cells_scalable(emb, top, sub).collect()
-    }
-    want = {
-        r.vec_id: r.cid
-        for r in emb.select(
-            "vec_id", nearest_centroid_col(cents.tolist()).alias("cid")
-        ).collect()
-    }
-    assert got == want
+    two_level = _CoarseQuantizer(top, sub)
+    flat = _CoarseQuantizer(cents.tolist())
+    for with_sim in (False, True):
+        got, want = (
+            {
+                r.vec_id: tuple(r)[2:]
+                for r in q.assign(emb, with_sim=with_sim).collect()
+            }
+            for q in (two_level, flat)
+        )
+        assert got == want
+    # and the first probed cell IS the assigned cell, at both layouts
+    for q in (two_level, flat):
+        assigned = {r.vec_id: r.centroid_id for r in q.assign(emb).collect()}
+        probed = {r.query_id: r.centroid_id for r in q.probe(emb, 1).collect()}
+        assert probed == assigned
 
 
 def test_scalable_quantizer_k4096_no_plan_literals(spark):
@@ -558,21 +561,18 @@ def test_scalable_quantizer_k4096_no_plan_literals(spark):
     stays bounded (a k x dim literal array would be megabytes of plan
     text) and goes through the cogroup, and every corpus vector gets
     exactly one cell."""
-    from bda_spark.operators.similarity import (
-        assign_cells_scalable,
-        distributed_coarse_quantizer,
-    )
+    from bda_spark.operators.similarity import _CoarseQuantizer
 
     rng = np.random.default_rng(9)
     n = 2000
     X = rng.normal(size=(n, DIM))
     emb = _embeddings(spark, [(i, X[i]) for i in range(n)])
-    top, sub = distributed_coarse_quantizer(emb, 4096, seed=1, n_hint=n)
+    quantizer = _CoarseQuantizer.train(emb, 4096, seed=1, n_hint=n)
     # shortfall case: sample < k slots -> one centroid per spare point,
     # never more than the sample held
-    n_cent = sub.count()
+    n_cent = quantizer.sub.count()
     assert 0 < n_cent <= n
-    assigned = assign_cells_scalable(emb, top, sub, with_sim=True)
+    assigned = quantizer.assign(emb, with_sim=True)
     plan = assigned._jdf.queryExecution().optimizedPlan().toString()
     assert "FlatMapCoGroupsInPandas" in plan
     assert len(plan) < 20_000, f"plan unexpectedly large: {len(plan)} chars"
@@ -626,13 +626,11 @@ def test_two_level_persisted_index_build_match_append(spark, tmp_path):
     """Persisted semantic index past _LITERAL_K_CAP: built in the
     two-level layout (meta/ holds only top centroids + marker, the
     full centroid set is the centroids/ parquet table), matching
-    probes through the table (probe_cells_scalable), appends assign
-    through the cogroup, and planted twins are found before AND after
-    an append — no k-proportional driver list anywhere (the flat
-    accessor refuses a two-level index outright)."""
+    probes through the table, appends assign through the cogroup, and
+    planted twins are found before AND after an append — no
+    k-proportional driver list anywhere."""
     from bda_spark.operators.similarity import (
         _LITERAL_K_CAP,
-        _index_centroids,
         semantic_index_append,
         semantic_index_build,
         semantic_match_new,
@@ -650,8 +648,6 @@ def test_two_level_persisted_index_build_match_append(spark, tmp_path):
     assert len(meta["centroids"]) <= 4096  # top list bounded
     n_cent = spark.read.parquet(f"{path}/centroids").count()
     assert 0 < n_cent <= n
-    with pytest.raises(ValueError, match="two-level"):
-        _index_centroids(spark, path)
 
     # twins of corpus vectors 3 and 77 + one novel vector
     batch = _embeddings(
@@ -719,7 +715,7 @@ def test_ivf_index_never_returns_duplicate_centroids(spark):
     exact-duplicate cluster between cells where single-probe matching
     misses it. Dedupe is order-preserving, so the continuous case
     (no duplicates) keeps its exact labels."""
-    from bda_spark.operators.similarity import ivf_index
+    from bda_spark.operators.similarity import _CoarseQuantizer
 
     rng = np.random.default_rng(3)
     protos = rng.normal(size=(30, DIM))
@@ -727,8 +723,9 @@ def test_ivf_index_never_returns_duplicate_centroids(spark):
         (p * 20 + r, protos[p]) for p in range(30) for r in range(20)
     ]
     emb = _embeddings(spark, rows)
-    assigned, cents = ivf_index(emb, n_centroids=64, seed=42)
-    C = np.asarray(cents)
+    quantizer = _CoarseQuantizer.flat(emb, 64, seed=42)
+    assigned = quantizer.assign(emb)
+    C = np.asarray(quantizer.centroids)
     assert len(np.unique(C, axis=0)) == len(C)
     assert len(C) <= 30
     # identical vectors co-assign — the property the dedupe protects
@@ -844,24 +841,21 @@ def test_distributed_quantizer_dedupes_duplicate_top_centroids(spark):
     tie accumulation could co-assign identical vectors to DIFFERENT
     top cells and miss exact duplicates. Corpus: 3 distinct vectors,
     hundreds of copies, k large enough that k1 = ceil(sqrt(k)) > 3."""
-    from bda_spark.operators.similarity import (
-        assign_cells_scalable,
-        distributed_coarse_quantizer,
-    )
+    from bda_spark.operators.similarity import _CoarseQuantizer
 
     rng = np.random.default_rng(21)
     distinct = rng.normal(size=(3, DIM))
     rows = [(i, distinct[i % 3]) for i in range(600)]
     emb = _embeddings(spark, rows)
-    top, sub = distributed_coarse_quantizer(
+    quantizer = _CoarseQuantizer.two_level(
         emb, k=100, seed=4, n_hint=len(rows)
     )
     # no bitwise-duplicate top centroids survive the fit
-    T = np.asarray(top)
+    T = np.asarray(quantizer.centroids)
     assert len(np.unique(T, axis=0)) == len(T)
     # identical vectors land in ONE cell each — the co-assignment
     # invariant the dedupe exists to protect
-    assigned = assign_cells_scalable(emb, top, sub).collect()
+    assigned = quantizer.assign(emb).collect()
     cells_by_variant = {}
     for r in assigned:
         cells_by_variant.setdefault(r.vec_id % 3, set()).add(r.centroid_id)
@@ -910,14 +904,11 @@ def test_gemm_cell_scan_matches_join_path_across_all_branches(
             max_cell_size=max_cell_size,
         )
         # reference: the pre-r13 join shape over the SAME cells
-        from bda_spark.operators.similarity import (
-            ivf_index, nearest_centroid_col,
-        )
+        from bda_spark.operators.similarity import _CoarseQuantizer
 
-        _, cents = ivf_index(emb, n_centroids=3, seed=11)
-        cells = emb.select(
+        cells = _CoarseQuantizer.flat(emb, 3, seed=11).assign(emb).select(
             F.col("vec_id").alias("doc_id"),
-            nearest_centroid_col(cents).alias("band_key"),
+            F.col("centroid_id").alias("band_key"),
         )
         ref_c = _banded_candidates(cells, max_cell_size).select(
             F.col("doc_a").alias("id_a"), F.col("doc_b").alias("id_b")
@@ -1011,3 +1002,128 @@ def test_match_new_gemm_matches_fallback(spark, tmp_path, monkeypatch):
     assert (1999, 11) in gemm and gemm[(1999, 11)] > 0.999
     monkeypatch.setattr(sim, "_GEMM_CELL_CAP", 2)  # cells > cap -> join
     assert match() == gemm
+
+
+def _bisector(c0, c1, n, seed):
+    """``n`` points on the bisector of c0 and c1 (equidistant from both
+    up to rounding): the midpoint plus a random offset orthogonal to
+    c1 - c0."""
+    rng = np.random.default_rng(seed)
+    u = c1 - c0
+    t = rng.normal(size=(n, len(u)))
+    t -= np.outer(t @ u / (u @ u), u)
+    return (c0 + c1) / 2.0 + t
+
+
+def test_index_append_and_match_agree_on_the_bisector(spark, tmp_path):
+    """Assignment and probing rank cells with one kernel: vectors on the
+    bisector of an index's two cells, where the two distances tie up to
+    rounding, are appended into exactly the cell an exact copy of each
+    probes first — so every copy finds its twin at n_probe=1. The copies
+    arrive in differently-sized batches than the appended vectors, which
+    the kernel's fixed GEMM height makes irrelevant."""
+    from bda_spark.operators.similarity import (
+        semantic_index_append,
+        semantic_index_build,
+        semantic_match_new,
+    )
+
+    schema = "vec_id long, embedding array<double>"
+    rng = np.random.default_rng(37)
+    corpus = spark.createDataFrame(
+        [(i, [float(x) for x in rng.normal(size=DIM)]) for i in range(200)],
+        schema,
+    )
+    path = str(tmp_path / "semidx")
+    semantic_index_build(corpus, path, n_centroids=2, seed=3)
+    c0, c1 = np.asarray(
+        spark.read.parquet(f"{path}/meta").collect()[0]["centroids"]
+    )
+    B = _bisector(c0, c1, 256, seed=5)
+    rows = lambda base: [  # noqa: E731
+        (base + i, [float(x) for x in B[i]]) for i in range(len(B))
+    ]
+    semantic_index_append(
+        spark, path, spark.createDataFrame(rows(20_000), schema).coalesce(1)
+    )
+    copies = spark.createDataFrame(rows(30_000), schema).repartition(3)
+    got = {
+        (r.new_id, r.corpus_id): r.cosine
+        for r in semantic_match_new(
+            spark, path, copies, threshold=0.999, n_probe=1
+        ).collect()
+    }
+    missed = [i for i in range(len(B)) if (30_000 + i, 20_000 + i) not in got]
+    assert not missed, f"{len(missed)} of {len(B)} copies probed another cell"
+    assert all(
+        round(got[(30_000 + i, 20_000 + i)], 9) == 1.0 for i in range(len(B))
+    )
+
+
+def test_two_level_layout_end_to_end_at_small_k(spark, tmp_path, monkeypatch):
+    """The two-level layout in the default tier: with the literal cap
+    lowered to 4, k=8 takes the two-level path through every semantic
+    operator — index build (meta/ marker + centroids/ table), match,
+    append, delete, SemDeDup under both keeper policies and the
+    cross-corpus join — and planted exact twins are found everywhere.
+    The k > 1024 runs of the same paths stay in the deep tier."""
+    import os
+
+    from bda_spark.operators import similarity as sim
+    from bda_spark.operators.deletes import delete_docs
+
+    monkeypatch.setattr(sim, "_LITERAL_K_CAP", 4)
+    rng = np.random.default_rng(47)
+    n_base = 240
+    X = rng.normal(size=(n_base, DIM))
+    rows = [(i, X[i]) for i in range(n_base)]
+    twins = [(i, 10_000 + i) for i in range(0, 40, 4)]
+    rows += [(b, X[a]) for a, b in twins]  # exact duplicates
+    emb = _embeddings(spark, rows)
+
+    path = str(tmp_path / "semidx")
+    sim.semantic_index_build(emb, path, n_centroids=8, seed=42, n_hint=len(rows))
+    assert spark.read.parquet(f"{path}/meta").collect()[0]["layout"] == "two_level"
+    assert os.path.isdir(f"{path}/centroids")
+    batch = _embeddings(
+        spark, [(9003, X[3]), (9077, X[77]), (9999, rng.normal(size=DIM))]
+    )
+
+    def matched(df):
+        return {
+            (r.new_id, r.corpus_id)
+            for r in sim.semantic_match_new(
+                spark, path, df, threshold=0.999, n_probe=1
+            ).collect()
+        }
+
+    got = matched(batch)
+    assert {(9003, 3), (9077, 77)} <= got
+    assert not any(a == 9999 for a, _ in got)
+    # append the batch and delete corpus vector 3: a later copy of X[3]
+    # finds the appended 9003 and no longer the deleted 3
+    assert sim.semantic_index_append(spark, path, batch)["appended"] == 3
+    assert delete_docs(spark, [3], semantic_index_path=path) == {
+        "semantic_index": 1
+    }
+    assert matched(_embeddings(spark, [(9998, X[3])])) == {(9998, 9003)}
+
+    for keep in ("min_id", "far_from_centroid"):
+        fates = {
+            r.vec_id: r
+            for r in sim.semantic_dedup(
+                emb, threshold=0.999, n_centroids=8, seed=42, keep=keep
+            ).collect()
+        }
+        assert len(fates) == len(rows)
+        for a, b in twins:
+            assert fates[a].cluster_id == fates[b].cluster_id, (keep, a, b)
+            assert fates[a].is_kept + fates[b].is_kept == 1, (keep, a, b)
+        assert sum(r.is_kept for r in fates.values()) == n_base
+
+    right = _embeddings(spark, [(b, X[a]) for a, b in twins])
+    pairs = sim.semantic_fuzzy_join(
+        _embeddings(spark, rows[:n_base]), right, threshold=0.999,
+        n_centroids=8, seed=42,
+    ).collect()
+    assert {(r.left_id, r.right_id) for r in pairs} == set(twins)

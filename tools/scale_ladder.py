@@ -594,7 +594,7 @@ PER_QUERY_2D_NOTE = {
         "k~n/125 keeps cell size constant (pair work linear). Past "
         "_LITERAL_K_CAP=1024 centroids (the 100x rung's k=1600) the "
         "coarse quantizer is the r12 DISTRIBUTED two-level trainer "
-        "(similarity.distributed_coarse_quantizer): the driver holds "
+        "(similarity._CoarseQuantizer.two_level): the driver holds "
         "only ~sqrt(k) top centroids, the full centroid set is a "
         "DataFrame, sub-fits run per-cell in applyInPandas, and "
         "assignment is a cogroup join — no k-proportional driver "
