@@ -8,10 +8,10 @@ The reference's only delete is a driver-side CQL loop
 (Deliverable_4/remove_pred_minus1.py:13-29 — rewritten in-engine as a
 filter by S15); its derived artifacts are append-only. Here every
 artifact is deleted through ``sources.sinks.delete_keys_parquet``:
-O(touched partitions) on hive layouts, a reader-atomic generation
-commit on versioned roots, and a strict no-op on replay (0 hits -> no
-write), so the delete composes with at-least-once delivery the same
-way the merges do.
+a reader-atomic generation commit, O(touched partitions) on hive
+layouts, and a strict no-op on replay (0 hits -> no write), so the
+delete composes with at-least-once delivery the same way the merges
+do.
 
 Tombstones close the RESURRECTION hole: the incremental ingest loops
 (streaming.incremental) merge each micro-batch into the indexes
@@ -30,7 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.localrows import rows_frame
-
+from ..sources.batch import read_parquet
 from ..sources.sinks import (
     _hadoop_path,
     delete_keys_parquet,
@@ -72,20 +72,15 @@ def read_tombstones(
     spark: SparkSession, tombstones_path: str, id_col: str = "doc_id"
 ) -> DataFrame | None:
     """The tombstones table at ``tombstones_path``, or None if no
-    delete has ever been recorded there. The table is born VERSIONED
-    (see ``delete_docs``), so this resolves the current generation —
-    a reader racing a concurrent tombstone upsert sees the previous
-    complete generation, never a half-swapped table (the plain-dir
-    rename window an ingest micro-batch could otherwise read as
-    "table absent" and skip tombstone filtering entirely)."""
-    from ..sources.versioned import is_versioned, read_versioned
-
-    if is_versioned(spark, tombstones_path):
-        return read_versioned(spark, tombstones_path).select(id_col)
+    delete has ever been recorded there. Every tombstone upsert commits
+    a versioned generation (see ``delete_docs``), so this resolves the
+    current one — a reader racing a concurrent upsert sees the previous
+    complete generation, never a missing or half-written table it could
+    read as "no tombstones" and skip filtering."""
     fs, p = _hadoop_path(spark, tombstones_path)
     if not fs.exists(p):
         return None
-    return spark.read.parquet(tombstones_path).select(id_col)
+    return read_parquet(spark, tombstones_path).select(id_col)
 
 
 def filter_tombstoned(
@@ -203,12 +198,12 @@ def delete_docs(
             )
         removed[f"flags_{i}"] = n
     if tombstones_path:
-        # versioned=True: commits are reader-atomic generation swaps,
-        # so an ingest micro-batch's read_tombstones can never race a
-        # between-renames window and silently skip filtering. The
-        # default vacuum grace (10 min) keeps the superseded
-        # generation readable for in-flight batch scans; the table is
-        # one row per ever-deleted id, so the retained copies are tiny.
+        # the merge commits a reader-atomic generation, so an ingest
+        # micro-batch's read_tombstones never sees a missing table and
+        # silently skips filtering. The default vacuum grace (10 min)
+        # keeps the superseded generation readable for in-flight batch
+        # scans; the table is one row per ever-deleted id, so the
+        # retained copies are tiny.
         # ``tombstoned_at`` funds the retention story
         # (vacuum_tombstones); a REPLAYED delete refreshes it — age
         # restarts from the latest delete, which only extends
@@ -218,7 +213,6 @@ def delete_docs(
             ids_df.withColumn("tombstoned_at", F.current_timestamp()),
             tombstones_path,
             keys=[id_col],
-            versioned=True,
         )
         removed["tombstoned"] = ids_df.count()
     return removed
@@ -243,21 +237,16 @@ def vacuum_tombstones(
 
     Removes every tombstone whose ``tombstoned_at`` is older than the
     cutoff and returns the count. The sweep IS ``delete_keys_parquet``
-    on the versioned root — reader-atomic: an ingest batch reading
+    — reader-atomic: an ingest batch reading
     concurrently sees the pre- or post-vacuum generation, never a
     half state. Rows from the pre-timestamp layout (no
     ``tombstoned_at`` column / null value) have UNKNOWN age and are
     never swept — conservative: an unswept tombstone costs bytes, a
     wrongly swept one re-admits a taken-down document."""
-    from ..sources.versioned import is_versioned, read_versioned
-
-    if is_versioned(spark, tombstones_path):
-        full = read_versioned(spark, tombstones_path)
-    else:
-        fs, p = _hadoop_path(spark, tombstones_path)
-        if not fs.exists(p):
-            return 0
-        full = spark.read.parquet(tombstones_path)
+    fs, p = _hadoop_path(spark, tombstones_path)
+    if not fs.exists(p):
+        return 0
+    full = read_parquet(spark, tombstones_path)
     if "tombstoned_at" not in full.columns:
         return 0
     cutoff = F.current_timestamp() - F.expr(

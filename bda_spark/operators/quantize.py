@@ -23,6 +23,8 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from ..sources.batch import read_parquet
+
 
 def sq8_bounds(embeddings: DataFrame, col: str = "embedding") -> tuple[list, list]:
     """Per-dimension (lo, hi) lists via one explode+aggregate pass.
@@ -366,17 +368,21 @@ def ivf_sq8_index_append(
     )
     # nearest existing centroid by the same kernel the build assigned
     # with: deterministic, so a replayed batch (or a re-appended
-    # vec_id) lands every vector in the cell it already occupies
-    updates = sq8_quantize(
-        quantizer.assign(new_embeddings), lo, hi, "embedding"
-    ).select("vec_id", "codes", "centroid_id")
+    # vec_id) lands every vector in the cell it already occupies.
+    # Materialized ONCE: three consumers follow (count, the merge
+    # write, the touched-cell distinct)
+    updates = (
+        sq8_quantize(quantizer.assign(new_embeddings), lo, hi, "embedding")
+        .select("vec_id", "codes", "centroid_id")
+        .localCheckpoint(eager=True)
+    )
     appended = updates.count()
     idempotent_merge_parquet(
         spark, updates, f"{base}/codes", keys=["vec_id"],
         partition_col="centroid_id",
     )
     sizes = (
-        spark.read.parquet(f"{base}/codes")
+        read_parquet(spark, f"{base}/codes")
         .groupBy("centroid_id")
         .agg(F.count("*").alias("n"))
         .agg(
@@ -413,7 +419,7 @@ def ivf_sq8_search(
     oversample survivors per query). Same contract and output schema
     as ``ivf_sq8_topk`` — (query_id, neighbor_id, cosine, rk)."""
     base = path.rstrip("/")
-    index = spark.read.parquet(f"{base}/codes")
+    index = read_parquet(spark, f"{base}/codes")
     quantizer, lo, hi = _read_meta(spark, base)
     probes = quantizer.probe(
         queries.select(

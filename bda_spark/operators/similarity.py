@@ -53,6 +53,7 @@ from pyspark.sql.types import (
 )
 
 from ..functions.vectors import dot_col, l2_norm_col
+from ..sources.batch import read_parquet
 
 
 def simhash_band_udf(dim: int, band_rows: int = 6, num_bands: int = 96,
@@ -1783,7 +1784,13 @@ def semantic_match_new(
     so multi-probe never duplicates a pair."""
     base = path.rstrip("/")
     new_embeddings = new_embeddings.select("vec_id", "embedding")
-    probes = _CoarseQuantizer.load(spark, base).probe(new_embeddings, n_probe)
+    # two consumers (the touched-cell collect and the cross-cell tail):
+    # checkpoint the probe once; lazily, so the collect's job fills it
+    probes = (
+        _CoarseQuantizer.load(spark, base)
+        .probe(new_embeddings, n_probe)
+        .localCheckpoint(eager=False)
+    )
     touched = [
         r[0] for r in probes.select("centroid_id").distinct().collect()
     ]
@@ -1793,7 +1800,7 @@ def semantic_match_new(
         return rows_frame(
             spark, [], "new_id long, corpus_id long, cosine double"
         )
-    corpus = spark.read.parquet(f"{base}/cells").filter(
+    corpus = read_parquet(spark, f"{base}/cells").filter(
         F.col("centroid_id").isin(touched)
     )
     return _cross_cell_matches(
@@ -1851,7 +1858,7 @@ def semantic_index_append(
         partition_col="centroid_id",
     )
     sizes = (
-        spark.read.parquet(f"{base}/cells")
+        read_parquet(spark, f"{base}/cells")
         .groupBy("centroid_id")
         .agg(F.count("*").alias("n"))
         .agg(F.max("n").alias("mx"), F.avg("n").alias("mean"))

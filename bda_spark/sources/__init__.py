@@ -1,5 +1,5 @@
 from .batch import load_table, load_tables, read_json_articles, read_parquet
-from .sinks import overwrite_parquet, append_parquet, idempotent_merge_parquet
+from .sinks import overwrite_parquet, idempotent_merge_parquet
 
 __all__ = [
     "load_table",
@@ -7,6 +7,5 @@ __all__ = [
     "read_json_articles",
     "read_parquet",
     "overwrite_parquet",
-    "append_parquet",
     "idempotent_merge_parquet",
 ]

@@ -20,8 +20,8 @@ from ..schemas import NEWS_SCHEMA, TESTDATA_TABLES
 
 def read_parquet(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
     """Parquet scan. Explicit schema skips footer-inference on huge dirs.
-    Versioned roots (sources.versioned — tables maintained by
-    optimize_table/compact_parquet with reader-atomic generations)
+    Versioned roots (sources.versioned — every keyed merge, key delete,
+    compaction and optimize commits a reader-atomic generation)
     resolve transparently to their current committed generation —
     through the MANIFEST-AWARE reader, so generations whose partitions
     are carried by reference (incremental compaction) read complete;

@@ -1,5 +1,7 @@
 """Data layout for scan-time pruning (the read-path half of the 100 TB
-story; the write-path half is sources/sinks.py + sources/bucketed.py).
+story; the write-path half is sources/sinks.py + sources/bucketed.py),
+plus the OPTIMIZE / compaction job that re-lays an existing table as a
+new versioned generation (sources/versioned.py).
 
 Hive partitioning (partitionBy) prunes at DIRECTORY granularity and is
 right for low-cardinality keys (date, source). For the high-resolution
@@ -46,7 +48,23 @@ def write_range_sorted(
     ``bloom_filter_options``): min/max stats prune the RANGE axis;
     blooms prune POINT lookups on high-cardinality keys the sort
     doesn't cover (user_id in a ts-sorted table)."""
-    clustered = df.repartitionByRange(num_files, col).sortWithinPartitions(col)
+    _write_clustered(
+        df.repartitionByRange(num_files, col).sortWithinPartitions(col),
+        path,
+        partition_by,
+        bloom_filter_cols,
+    )
+
+
+def _write_clustered(
+    clustered: DataFrame,
+    path: str,
+    partition_by: list[str] | None,
+    bloom_filter_cols: dict[str, int] | None,
+) -> None:
+    """Overwrite ``path`` with ``clustered`` as parquet, with the
+    ``bloom_filter_options`` blooms, hive-partitioned on
+    ``partition_by`` when given."""
     writer = clustered.write.mode("overwrite")
     for k, v in bloom_filter_options(bloom_filter_cols).items():
         writer = writer.option(k, v)
@@ -198,20 +216,33 @@ def write_zorder(
     ~num_files^(1/d) of the files for a point predicate instead of 1/d
     of nothing — the classic z-order trade: each axis gives up a
     little locality so every axis keeps some."""
+    _write_clustered(
+        _zorder_clustered(df, cols, num_files, bits, quantile_error),
+        path,
+        None,
+        bloom_filter_cols,
+    )
+
+
+def _zorder_clustered(
+    df: DataFrame,
+    cols: list[str],
+    num_files: int,
+    bits: int = 6,
+    quantile_error: float = 0.001,
+) -> DataFrame:
+    """``df`` range-distributed into ``num_files`` slices of its
+    z-value over ``cols``, each sorted (``write_zorder``)."""
     probs = [i / float(1 << bits) for i in range(1, 1 << bits)]
     qs = df.stat.approxQuantile(list(cols), probs, quantile_error)
     boundaries = {c: qs[i] for i, c in enumerate(cols)}
     z = zorder_key(df, list(cols), boundaries, bits)
-    clustered = (
+    return (
         df.withColumn("_z", z)
         .repartitionByRange(num_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z")
     )
-    writer = clustered.write.mode("overwrite")
-    for k, v in bloom_filter_options(bloom_filter_cols).items():
-        writer = writer.option(k, v)
-    writer.parquet(path)
 
 
 def optimize_table(
@@ -232,138 +263,55 @@ def optimize_table(
     optionally with bloom filters on point-lookup keys. Returns the new
     file count.
 
-    Atomicity: for a VERSIONED root (see ``sources.versioned`` /
-    ``to_versioned``) the rewrite commits as a new generation — readers
-    resolving through ``resolve_table``/``read_versioned`` never
-    observe a missing or partial table, with no crash-heal step at all.
-    For a legacy plain dir the crash-safe tmp/aside swap is kept: a
-    crashed run self-heals on the next call, but a reader listing the
-    path in the instant between the two renames can see no table —
-    migrate hot tables with ``to_versioned`` to close that window.
+    The rewrite commits as a new generation through
+    ``sources.versioned.rewrite_generation``: readers resolving through
+    ``sources.batch.read_parquet`` never observe a missing or partial
+    table. It reads the whole logical table (partitions a generation
+    carries by reference included) and writes one self-contained
+    generation, so it doubles as the major compaction that collapses a
+    reference chain; a hive-partitioned table keeps its partition
+    columns (the clustering applies inside them, so partition-scoped
+    merges and deletes keep working), and a batch-dir table's
+    ``_watermark`` rides along. A plain dir is adopted as generation 1
+    on its first optimize.
+    ``vacuum_keep >= 2`` leaves the previous generation for in-flight
+    readers; raise it (or pass a min age) when readers may straddle
+    more than one maintenance cycle.
 
     Exactly one of ``zorder_cols`` / ``range_col`` may be given;
     neither means plain compaction (coalesce, no re-sort)."""
     if zorder_cols and range_col:
         raise ValueError("give zorder_cols OR range_col, not both")
-    from .sinks import _hadoop_path
-    from .versioned import (
-        _gen_dir,
-        commit_generation,
-        current_generation,
-        generation_manifest,
-        is_versioned,
-        read_versioned,
-        resolve_table,
-        vacuum_versions,
-    )
+    from .versioned import Rewrite, rewrite_generation
 
-    if is_versioned(spark, path):
-        # manifest-aware: a generation produced by incremental
-        # compaction may carry partitions by reference — a bare read of
-        # the generation dir would rewrite the table WITHOUT them
-        # (silent data loss). read_versioned resolves the refs, and the
-        # self-contained rewrite below collapses the reference chain
-        # (optimize doubles as a major compaction).
-        gen = current_generation(spark, path)
-        manifest, _plain = generation_manifest(spark, path, gen)
-        src = resolve_table(spark, path)
-        fs, src_p = _hadoop_path(spark, src)
-        total = fs.getContentSummary(src_p).getLength()
-        for name, holder in manifest.items():
-            if holder != gen:
-                _, ref_p = _hadoop_path(
-                    spark, f"{_gen_dir(path, holder)}/{name}"
-                )
-                total += fs.getContentSummary(ref_p).getLength()
-        n_files = max(1, -(-total // target_file_bytes))
-        df = read_versioned(spark, path)
+    def plan(base):
+        if base.gen is None:
+            raise FileNotFoundError(f"optimize_table: no table at {path}")
+        n_files = int(max(1, -(-base.size_bytes() // target_file_bytes)))
+        levels = base.hive_levels()
 
-        from .versioned import _read_small_file, _write_small_file
-
-        def _write(data_path: str) -> None:
+        def write(df, data_path: str) -> None:
             if zorder_cols:
-                write_zorder(
-                    df, data_path, list(zorder_cols), int(n_files),
-                    bits=bits, bloom_filter_cols=bloom_filter_cols,
+                clustered = _zorder_clustered(
+                    df, list(zorder_cols), n_files, bits
                 )
             elif range_col:
-                write_range_sorted(
-                    df, data_path, range_col, int(n_files),
-                    bloom_filter_cols=bloom_filter_cols,
-                )
+                clustered = df.repartitionByRange(
+                    n_files, range_col
+                ).sortWithinPartitions(range_col)
             else:
-                writer = df.coalesce(int(n_files)).write.mode("overwrite")
-                for k, v in bloom_filter_options(bloom_filter_cols).items():
-                    writer = writer.option(k, v)
-                writer.parquet(data_path)
-            # carry protocol sidecars forward: a batch-dir table's
-            # _watermark records which batch ids are absorbed — losing
-            # it would reset the watermark to -1, resurrect grace dirs
-            # (double counts) and un-skip checkpoint replays. _refs is
-            # deliberately NOT carried: this rewrite is self-contained.
-            wm = _read_small_file(spark, f"{src}/_watermark")
-            if wm is not None:
-                _write_small_file(spark, f"{data_path}/_watermark", wm)
+                clustered = df.coalesce(n_files)
+            _write_clustered(clustered, data_path, levels, bloom_filter_cols)
 
-        commit_generation(spark, path, _write)
-        # keep >= 2 leaves the previous committed generation for
-        # in-flight readers; raise it (or pass a min age) when readers
-        # may straddle more than one maintenance cycle
-        vacuum_versions(
-            spark,
-            path,
-            keep=vacuum_keep,
-            min_age_seconds=vacuum_min_age_seconds,
-        )
-        return int(n_files)
+        return Rewrite(base.read(), result=n_files, write=write)
 
-    fs, target = _hadoop_path(spark, path)
-    base = path.rstrip("/")
-    tmp, old = base + "__compact_tmp", base + "__compact_old"
-    _, tmp_p = _hadoop_path(spark, tmp)
-    _, old_p = _hadoop_path(spark, old)
-
-    if fs.exists(old_p) and not fs.exists(target):
-        fs.rename(old_p, target)
-    fs.delete(tmp_p, True)
-    fs.delete(old_p, True)
-    if not fs.exists(target):
-        raise FileNotFoundError(f"optimize_table: no table at {path}")
-
-    total = fs.getContentSummary(target).getLength()
-    n_files = max(1, -(-total // target_file_bytes))
-    if zorder_cols:
-        write_zorder(
-            spark.read.parquet(path),
-            tmp,
-            list(zorder_cols),
-            int(n_files),
-            bits=bits,
-            bloom_filter_cols=bloom_filter_cols,
-        )
-    elif range_col:
-        write_range_sorted(
-            spark.read.parquet(path),
-            tmp,
-            range_col,
-            int(n_files),
-            bloom_filter_cols=bloom_filter_cols,
-        )
-    else:
-        writer = spark.read.parquet(path).coalesce(int(n_files)).write.mode(
-            "overwrite"
-        )
-        for k, v in bloom_filter_options(bloom_filter_cols).items():
-            writer = writer.option(k, v)
-        writer.parquet(tmp)
-
-    if not fs.rename(target, old_p):
-        raise IOError(f"optimize swap failed: could not move {path} aside")
-    if not fs.rename(tmp_p, target):
-        fs.rename(old_p, target)
-        raise IOError(f"optimize swap failed: could not move {tmp} in")
-    fs.delete(old_p, True)
-    return int(n_files)
+    return rewrite_generation(
+        spark,
+        path,
+        plan,
+        vacuum_keep=vacuum_keep,
+        vacuum_min_age_seconds=vacuum_min_age_seconds,
+    )
 
 
 def compact_parquet(
@@ -382,17 +330,6 @@ def compact_parquet(
     shuffle-free union of input splits — compaction moves bytes once,
     from source files to compacted files, never through an exchange.
 
-    Atomicity: a VERSIONED root (``sources.versioned.to_versioned``)
-    compacts as a new committed generation — fully reader-atomic, no
-    heal path needed. A legacy plain dir keeps the swap discipline of
-    the idempotent merge sink: the compacted table is FULLY written to
-    a sibling temp dir, the live dir is moved aside, the temp moved in,
-    and the aside copy deleted only last; a crash between the renames
-    is healed by the recovery scan at the next call. Readers of a plain
-    dir never observe a PARTIAL table, but can observe a briefly ABSENT
-    one between the renames — versioned layout closes that window.
-
-    Implementation-wise this IS ``optimize_table`` with no clustering
-    and no blooms — one body, so the swap/heal protocol can't drift
-    between the two maintenance entry points."""
+    This IS ``optimize_table`` with no clustering and no blooms, so it
+    commits the same way: a new reader-atomic generation."""
     return optimize_table(spark, path, target_file_bytes=target_file_bytes)

@@ -4,13 +4,28 @@ Replaces the reference's driver-side ``collect()`` + per-row CQL INSERT
 loop (reference: Deliverable_4/load_to_gold_layer.py:76-97) with
 distributed ``df.write``; adds an idempotent key-based merge used by the
 label-backfill stream in place of Cassandra read-modify-write
-(reference: NEW_train_offset_3_10min.py:301-325).
+(reference: NEW_train_offset_3_10min.py:301-325), and its removal twin,
+the key delete.
+
+The merge and the delete rewrite an existing table through the one
+protocol in ``sources.versioned.rewrite_generation``: each commits a
+new reader-atomic generation, pinned to the generation it read and
+guarded by a compare-and-swap, so a concurrent reader never sees a
+missing or partial table and a racing writer makes this one rerun
+instead of silently losing either commit. Read the tables they write
+with ``sources.batch.read_parquet``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+from .versioned import (  # noqa: F401  (_hadoop_path: shared import point)
+    Base,
+    Rewrite,
+    _hadoop_path,
+    rewrite_generation,
+)
 
 
 def overwrite_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
@@ -22,20 +37,6 @@ def overwrite_parquet(df: DataFrame, path: str, partition_by: list[str] | None =
     writer.parquet(path)
 
 
-def append_parquet(df: DataFrame, path: str, partition_by: list[str] | None = None) -> None:
-    writer = df.write.mode("append")
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
-
-
-def _hadoop_path(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    hpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return fs, hpath
-
-
 def idempotent_merge_parquet(
     spark: SparkSession,
     updates: DataFrame,
@@ -44,61 +45,33 @@ def idempotent_merge_parquet(
     partition_col: str | None = None,
     vacuum_keep: int = 2,
     vacuum_min_age_seconds: float | None = None,
-    versioned: bool = False,
 ) -> None:
     """Upsert-by-primary-key semantics over a parquet table.
 
     Equivalent of Cassandra's PK overwrite the reference relies on for
     label backfill: rows in ``updates`` replace existing rows with the
     same key; others are kept (a Delta/Iceberg MERGE on a real
-    deployment).
+    deployment). Replaying the same updates changes nothing.
 
     With ``partition_col`` set (a column of ``updates`` whose value
     must be a stable function of the key — a key never moves between
     partitions, which holds for time-bucketed layouts like
     window/date), the table is laid out hive-partitioned on that
     column and the merge is PARTITION-SCOPED: only the partitions
-    present in ``updates`` are read (partition-pruned scan), merged,
-    and swapped — untouched partitions are never rewritten, so write
-    amplification is bounded by the touched-partition volume, not the
-    table size. This is the 100 TB shape; the unpartitioned branch
-    below rewrites the whole table and is only for small tables.
+    present in ``updates`` are read (partition-pruned scan), merged
+    and written into the new generation; every untouched partition
+    carries forward by reference, so write amplification is bounded by
+    the touched-partition volume, not the table size. Without it the
+    merge rewrites the whole table — the small-table shape.
 
-    Crash tolerance: merged output is FULLY written to a sibling temp
-    directory before the live path is touched, then swapped in with
-    per-partition (or whole-table) filesystem renames. The live table
-    is never the input of an in-flight job that overwrites it. A crash
-    BETWEEN the two renames of a swap leaves the only copy of the
-    moved-aside data under ``__merge_old``; every invocation therefore
-    starts by RECOVERING anything found there (renaming it back into
-    the live table where the live side is missing) before clearing the
-    staging directories — a crashed merge is healed, never deleted, on
-    the next run. The swap itself is not atomic across partitions
-    (plain filesystem renames, not a transaction log); a crash mid-loop
-    can leave some partitions merged and others not until the rerun,
-    which the idempotent key-merge semantics make safe to replay.
-    Table existence is checked via the filesystem — a transient read
-    error on an existing table propagates instead of being misread as
-    "table absent" and destroying it.
+    Schema evolution: ``allowMissingColumns`` — an upgraded writer
+    adding a column (e.g. ``delete_docs`` growing tombstones a
+    ``tombstoned_at``) merges into the legacy table it inherits instead
+    of raising NUM_COLUMNS_MISMATCH after the caller's physical deletes
+    already ran; legacy rows get NULL in the new column, which
+    downstream readers treat conservatively (``vacuum_tombstones``
+    never sweeps unknown-age rows).
 
-    VERSIONED targets (sources.versioned): the unpartitioned merge
-    commits as a new reader-atomic generation instead of the rename
-    swap — no reader can observe the between-renames window, and no
-    heal path is needed. (The partitioned branch keeps per-partition
-    swaps; hive layout and generation dirs don't compose — pick one.)
-
-    WRITER concurrency contract: versioned targets are guarded — the
-    read is pinned to one generation and the commit carries that base
-    as a CAS, so a merge racing another merge/delete on the same root
-    fails loudly instead of silently discarding the competitor's
-    commit. PLAIN layouts (flat and hive-partitioned) are STRICTLY
-    single-writer per table: two concurrent writers share the
-    ``__merge_tmp``/``__merge_old`` staging dirs and each one's
-    recovery preamble would treat the other's in-flight staging as
-    crash debris. That is the deliberate trade for the plain layouts'
-    zero-metadata reads — serialize writers externally (one owner per
-    table is the normal streaming-sink shape here) or use a versioned
-    root, which detects the race instead of assuming it away.
     ``vacuum_keep`` / ``vacuum_min_age_seconds`` tune the retention of
     superseded generations: commit-count retention alone gives rapidly
     merged tables (per-micro-batch upserts) a reader grace window of
@@ -106,176 +79,37 @@ def idempotent_merge_parquet(
     ``versioned.DEFAULT_MAINTENANCE_MIN_AGE_SECONDS`` (10 min) — a
     reader that resolved a generation always gets at least that long
     to finish its scan no matter how fast merges land. Batch callers
-    that want immediate reclamation pass 0.0 explicitly. The flip
-    side is STORAGE: the grace retains one superseded full-table copy
-    PER MERGE inside the window (grace / merge-period generations), so
-    a fast trigger merging a large versioned table should opt DOWN to
-    roughly its slowest expected scan — or use the partition-scoped /
-    batch-dir sinks, which are the right shape for that rate anyway.
-    """
-    from .versioned import (
-        DEFAULT_MAINTENANCE_MIN_AGE_SECONDS,
-        commit_generation,
-        current_generation,
-        is_versioned,
-        read_versioned,
-        vacuum_versions,
-    )
+    that want immediate reclamation pass 0.0 explicitly. The flip side
+    is STORAGE: a whole-table merge retains one superseded copy per
+    merge inside the window, so a fast trigger merging a large
+    unpartitioned table should opt DOWN to roughly its slowest expected
+    scan, or merge partition-scoped."""
+    keyset = updates.select(*keys).distinct()
 
-    if vacuum_min_age_seconds is None:
-        vacuum_min_age_seconds = DEFAULT_MAINTENANCE_MIN_AGE_SECONDS
-    if versioned and partition_col is not None:
-        raise ValueError(
-            "idempotent_merge_parquet: versioned=True and partition_col "
-            "don't compose (hive partition swaps vs generation commits); "
-            "partition-scoped merges use the plain layout"
-        )
-    if is_versioned(spark, path):
+    def plan(base: Base) -> Rewrite:
+        existing = base.read()
+        if existing is None:
+            return Rewrite(updates, partition_col=partition_col)
+        touched = None
         if partition_col is not None:
-            raise ValueError(
-                "idempotent_merge_parquet: partition-scoped merge is not "
-                "supported on a versioned root (hive partition swaps and "
-                "generation commits don't compose); use a plain dir for "
-                "partitioned tables or merge whole-table"
-            )
-        # manifest-aware: a generation carrying partitions by reference
-        # reads complete, and the merged rewrite below collapses the
-        # reference chain into a self-contained generation.
-        # Read-modify-write is PINNED to one generation and committed
-        # with that base as a CAS guard: a concurrent delete/merge
-        # landing between this read and the commit makes this writer
-        # fail loudly instead of silently discarding the competitor's
-        # generation (single-writer-per-table remains the recommended
-        # deployment; the guard turns a violated assumption into an
-        # IOError, not data loss).
-        base_gen = current_generation(spark, path)
-        existing = read_versioned(spark, path, generation=base_gen)
-        kept = existing.join(
-            updates.select(*keys).distinct(), on=keys, how="left_anti"
+            touched = [
+                r[0] for r in updates.select(partition_col).distinct().collect()
+            ]
+            existing = base.scope(existing, partition_col, touched)
+        kept = existing.join(keyset, on=keys, how="left_anti")
+        return Rewrite(
+            kept.unionByName(updates, allowMissingColumns=True),
+            touched,
+            partition_col,
         )
-        # allowMissingColumns: schema EVOLUTION, not drift tolerance —
-        # an upgraded writer adding a column (e.g. delete_docs growing
-        # tombstones a ``tombstoned_at``) must merge into the legacy
-        # table it inherits, not raise NUM_COLUMNS_MISMATCH *after* the
-        # caller's physical deletes already ran (the id would then be
-        # deleted but never tombstoned — an at-least-once replay could
-        # resurrect a taken-down document). Legacy rows get NULL in the
-        # new column, which downstream readers treat conservatively
-        # (vacuum_tombstones never sweeps unknown-age rows).
-        merged = kept.unionByName(updates, allowMissingColumns=True)
-        commit_generation(
-            spark,
-            path,
-            lambda p: merged.write.mode("overwrite").parquet(p),
-            expected_base=base_gen,
-        )
-        vacuum_versions(
-            spark,
-            path,
-            keep=vacuum_keep,
-            min_age_seconds=vacuum_min_age_seconds,
-        )
-        return
 
-    fs, target = _hadoop_path(spark, path)
-    base = path.rstrip("/")
-    tmp, old = base + "__merge_tmp", base + "__merge_old"
-    _, tmp_p = _hadoop_path(spark, tmp)
-    _, old_p = _hadoop_path(spark, old)
-    jvm = spark._jvm
-
-    # Crash recovery: restore any data a previous merge moved aside but
-    # never replaced. Whole-table case: the table dir itself is missing
-    # and __merge_old IS the table. Partitioned case: individual
-    # partition dirs under __merge_old whose live twin is absent.
-    if fs.exists(old_p):
-        if not fs.exists(target):
-            fs.rename(old_p, target)
-        else:
-            for st in fs.listStatus(old_p):
-                dest = jvm.org.apache.hadoop.fs.Path(target, st.getPath().getName())
-                if not fs.exists(dest):
-                    fs.rename(st.getPath(), dest)
-    fs.delete(tmp_p, True)
-    fs.delete(old_p, True)
-
-    if not fs.exists(target):
-        if versioned and partition_col is None:
-            # birth the table AS a versioned root: every later merge
-            # takes the reader-atomic generation-commit branch above,
-            # so a reader polling between per-micro-batch merges can
-            # never observe the plain branch's between-renames window
-            # (observed in the wild: a live dashboard's parquet footer
-            # read raced the whole-table swap and hit
-            # FileNotFoundException on the moved-aside part file)
-            commit_generation(
-                spark,
-                path,
-                lambda p: updates.write.mode("overwrite").parquet(p),
-            )
-            return
-        writer = updates.write.mode("overwrite")
-        if partition_col:
-            writer = writer.partitionBy(partition_col)
-        writer.parquet(path)
-        return
-
-    if partition_col is None:
-        existing = spark.read.parquet(path)
-        kept = existing.join(
-            updates.select(*keys).distinct(), on=keys, how="left_anti"
-        )
-        # same schema-evolution contract as the versioned branch above
-        kept.unionByName(updates, allowMissingColumns=True).write.mode(
-            "overwrite"
-        ).parquet(tmp)
-        if not fs.rename(target, old_p):
-            raise IOError(f"merge swap failed: could not move {path} aside")
-        if not fs.rename(tmp_p, target):
-            # roll back so the table is never left missing
-            fs.rename(old_p, target)
-            raise IOError(f"merge swap failed: could not move {tmp} into place")
-        fs.delete(old_p, True)
-        return
-
-    # Partition-scoped branch: prune the existing scan to touched
-    # partitions only (a small driver-side list — one value per touched
-    # partition, NOT per row), merge, write the touched partitions to
-    # the temp dir, then swap each partition directory individually.
-    touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
-    # isin() is three-valued: a None in `touched` matches NOTHING, so a
-    # null-partition update would exclude the existing null-partition
-    # rows from `kept` while the swap loop still replaced that whole
-    # directory — silent data loss. Match nulls explicitly.
-    non_null = [t for t in touched if t is not None]
-    pred = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    if any(t is None for t in touched):
-        pred = pred | F.col(partition_col).isNull()
-    existing = spark.read.option("basePath", path).parquet(path).filter(pred)
-    kept = existing.join(updates.select(*keys).distinct(), on=keys, how="left_anti")
-    # same schema-evolution contract as the whole-table branches: a new
-    # column on either side unions as NULL on the other instead of
-    # raising mid-merge (only the touched partitions gain the column —
-    # hive layouts schema-merge across partition files on read)
-    merged = kept.unionByName(updates, allowMissingColumns=True)
-    merged.write.partitionBy(partition_col).mode("overwrite").parquet(tmp)
-
-    for st in fs.listStatus(tmp_p):
-        name = st.getPath().getName()
-        if not name.startswith(f"{partition_col}="):
-            continue  # _SUCCESS and friends
-        dest = jvm.org.apache.hadoop.fs.Path(target, name)
-        aside = jvm.org.apache.hadoop.fs.Path(old_p, name)
-        if fs.exists(dest):
-            fs.mkdirs(old_p)
-            if not fs.rename(dest, aside):
-                raise IOError(f"merge swap failed: could not move {dest} aside")
-        if not fs.rename(st.getPath(), dest):
-            if fs.exists(aside):
-                fs.rename(aside, dest)  # roll this partition back
-            raise IOError(f"merge swap failed: could not move {st.getPath()}")
-    fs.delete(tmp_p, True)
-    fs.delete(old_p, True)
+    rewrite_generation(
+        spark,
+        path,
+        plan,
+        vacuum_keep=vacuum_keep,
+        vacuum_min_age_seconds=vacuum_min_age_seconds,
+    )
 
 
 # ---------------------------------------------------------------------------
@@ -284,29 +118,8 @@ def idempotent_merge_parquet(
 # (remove_pred_minus1.py:13-29, rewritten as a filter by S15); derived
 # artifacts (signature/cell/code indexes) need a real propagating
 # delete for takedown / opt-out / re-licensing events, and it must be
-# O(touched partitions), reader-atomic where the layout supports it,
-# and a strict no-op on replay (at-least-once delivery replays
-# deletes like everything else).
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-# the character set Spark/Hive escape in partition directory names
-_HIVE_ESCAPE = set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(32)} | {
-    chr(127)
-}
-
-
-def _hive_part_dirname(col: str, value) -> str:
-    """Directory name hive layout gives a partition value. Covers the
-    layouts this repo writes (int and string partition columns; null ->
-    the hive default partition). Bool/float partition columns would
-    need hive's exact literal formatting — not used here."""
-    if value is None:
-        return f"{col}={_HIVE_NULL}"
-    s = str(value)
-    esc = "".join(
-        f"%{ord(ch):02X}" if ch in _HIVE_ESCAPE else ch for ch in s
-    )
-    return f"{col}={esc}"
+# O(touched partitions), reader-atomic, and a strict no-op on replay
+# (at-least-once delivery replays deletes like everything else).
 
 
 def delete_keys_parquet(
@@ -321,173 +134,44 @@ def delete_keys_parquet(
     """Remove every row of the parquet table at ``path`` whose ``keys``
     tuple appears in ``ids`` (a DataFrame carrying exactly the key
     columns). Returns the number of rows removed; 0 means the table
-    was NOT rewritten at all — a replayed delete is a pure read.
+    was NOT rewritten at all — a replayed delete is a pure read (and a
+    missing table reads as 0).
 
-    Layout-aware, mirroring idempotent_merge_parquet:
-
-    - VERSIONED root (sources.versioned): anti-join into a NEW
-      generation — reader-atomic, concurrent readers see the old
-      generation until the commit marker lands, never a partial table.
-    - HIVE-partitioned (``partition_col``): partitions holding doomed
-      rows are discovered with one column-pruned semi-join scan
-      (reads only the key column; partition values come from dir
-      names), then ONLY those partitions are rewritten and swapped —
-      O(touched partitions), the 100 TB shape. A partition whose rows
-      are ALL doomed is removed outright (hive readers treat a
-      missing partition dir as zero rows).
-    - flat dir: whole-table anti-join + the same crash-recoverable
-      rename swap as the merge (small-table shape).
-
-    Crash contract: same as the merge — staged writes to a sibling
-    temp dir, per-partition/whole-table renames, and the shared
-    ``__merge_old`` recovery preamble heals a crash between renames on
-    the next invocation. A crash mid-delete is healed by REPLAYING the
-    delete (idempotent), not by the merge recovery resurrecting rows:
-    emptied partitions are deleted directly (their kept row set is
-    empty — there is nothing to move aside).
-
-    Writer concurrency: same contract as the merge — versioned roots
-    carry the pinned-read + CAS-commit guard (a delete racing a merge
-    fails loudly, never loses the competitor's commit); plain layouts
-    are strictly single-writer per table (shared staging dirs — see
-    ``idempotent_merge_parquet``)."""
-    from .versioned import (
-        DEFAULT_MAINTENANCE_MIN_AGE_SECONDS,
-        commit_generation,
-        current_generation,
-        is_versioned,
-        read_versioned,
-        vacuum_versions,
-    )
-
+    Whole-table by default: an anti-join into a new generation. With
+    ``partition_col`` (a hive-partitioned table): one semi-join finds
+    the partitions holding doomed rows and counts them, then ONLY those
+    partitions are rewritten into the new generation — O(touched
+    partitions); a partition whose rows are all doomed is gone, and
+    every other partition carries by reference. Commits, retention and
+    the race guard are the merge's (``idempotent_merge_parquet``)."""
     ids = ids.select(*keys).distinct()
 
-    if is_versioned(spark, path):
-        # same pinned-read + CAS-commit discipline as the merge above:
-        # the hit count, the kept set, and the commit base all derive
-        # from ONE generation, and a competitor landing in between
-        # fails this writer loudly instead of losing its commit
-        base_gen = current_generation(spark, path)
-        existing = read_versioned(spark, path, generation=base_gen)
-        removed = existing.join(ids, on=keys, how="left_semi").count()
-        if removed == 0:
-            return 0
-        kept = existing.join(ids, on=keys, how="left_anti")
-        commit_generation(
-            spark,
-            path,
-            lambda p: kept.write.mode("overwrite").parquet(p),
-            expected_base=base_gen,
+    def plan(base: Base) -> Rewrite:
+        existing = base.read()
+        if existing is None:
+            return Rewrite(result=0, commit=False)
+        doomed = existing.join(ids, on=keys, how="left_semi")
+        if partition_col is None:
+            removed = doomed.count()
+            if removed == 0:
+                return Rewrite(result=0, commit=False)
+            kept = existing.join(ids, on=keys, how="left_anti")
+            return Rewrite(kept, result=int(removed))
+        counts = doomed.groupBy(partition_col).count().collect()
+        if not counts:
+            return Rewrite(result=0, commit=False)
+        touched = [r[0] for r in counts]
+        kept = base.scope(existing, partition_col, touched).join(
+            ids, on=keys, how="left_anti"
         )
-        vacuum_versions(
-            spark,
-            path,
-            keep=vacuum_keep,
-            min_age_seconds=(
-                DEFAULT_MAINTENANCE_MIN_AGE_SECONDS
-                if vacuum_min_age_seconds is None
-                else vacuum_min_age_seconds
-            ),
+        return Rewrite(
+            kept, touched, partition_col, result=int(sum(r[1] for r in counts))
         )
-        return int(removed)
 
-    fs, target = _hadoop_path(spark, path)
-    base = path.rstrip("/")
-    tmp, old = base + "__merge_tmp", base + "__merge_old"
-    _, tmp_p = _hadoop_path(spark, tmp)
-    _, old_p = _hadoop_path(spark, old)
-    jvm = spark._jvm
-
-    # shared crash-recovery preamble (see idempotent_merge_parquet).
-    # MUST run before the missing-table early return: a crash in the
-    # flat branch between rename(target, old) and rename(tmp, target)
-    # leaves the only copy under __merge_old with target absent, and
-    # the replayed delete has to heal that, not skip it.
-    if fs.exists(old_p):
-        if not fs.exists(target):
-            fs.rename(old_p, target)
-        else:
-            for st in fs.listStatus(old_p):
-                dest = jvm.org.apache.hadoop.fs.Path(
-                    target, st.getPath().getName()
-                )
-                if not fs.exists(dest):
-                    fs.rename(st.getPath(), dest)
-    fs.delete(tmp_p, True)
-    fs.delete(old_p, True)
-    if not fs.exists(target):
-        return 0
-
-    if partition_col is None:
-        existing = spark.read.parquet(path)
-        removed = existing.join(ids, on=keys, how="left_semi").count()
-        if removed == 0:
-            return 0
-        kept = existing.join(ids, on=keys, how="left_anti")
-        kept.write.mode("overwrite").parquet(tmp)
-        if not fs.rename(target, old_p):
-            raise IOError(f"delete swap failed: could not move {path} aside")
-        if not fs.rename(tmp_p, target):
-            fs.rename(old_p, target)
-            raise IOError(
-                f"delete swap failed: could not move {tmp} into place"
-            )
-        fs.delete(old_p, True)
-        return int(removed)
-
-    # Partitioned: one column-pruned scan finds the touched partitions
-    # (and the removed-row count) — the rewrite then reads ONLY them.
-    table = spark.read.option("basePath", path).parquet(path)
-    doomed = table.join(ids, on=keys, how="left_semi")
-    touched = [
-        (r[0], r[1])
-        for r in doomed.groupBy(partition_col)
-        .agg(F.count("*").alias("_n"))
-        .collect()
-    ]
-    if not touched:
-        return 0
-    removed = int(sum(n for _, n in touched))
-    vals = [v for v, _ in touched]
-    non_null = [v for v in vals if v is not None]
-    pred = F.col(partition_col).isin(non_null) if non_null else F.lit(False)
-    if any(v is None for v in vals):
-        pred = pred | F.col(partition_col).isNull()
-    kept = table.filter(pred).join(ids, on=keys, how="left_anti")
-    kept.write.partitionBy(partition_col).mode("overwrite").parquet(tmp)
-
-    written = set()
-    if fs.exists(tmp_p):
-        for st in fs.listStatus(tmp_p):
-            name = st.getPath().getName()
-            if not name.startswith(f"{partition_col}="):
-                continue
-            written.add(name)
-            dest = jvm.org.apache.hadoop.fs.Path(target, name)
-            aside = jvm.org.apache.hadoop.fs.Path(old_p, name)
-            if fs.exists(dest):
-                fs.mkdirs(old_p)
-                if not fs.rename(dest, aside):
-                    raise IOError(
-                        f"delete swap failed: could not move {dest} aside"
-                    )
-            if not fs.rename(st.getPath(), dest):
-                if fs.exists(aside):
-                    fs.rename(aside, dest)
-                raise IOError(
-                    f"delete swap failed: could not move {st.getPath()}"
-                )
-    # partitions whose every row was doomed produce no tmp dir: remove
-    # the live dir outright (nothing kept to move aside; a crash here
-    # is healed by replaying the delete, which re-lists them as
-    # touched until the dir is gone)
-    for v in vals:
-        name = _hive_part_dirname(partition_col, v)
-        if name in written:
-            continue
-        gone = jvm.org.apache.hadoop.fs.Path(target, name)
-        if fs.exists(gone):
-            fs.delete(gone, True)
-    fs.delete(tmp_p, True)
-    fs.delete(old_p, True)
-    return removed
+    return rewrite_generation(
+        spark,
+        path,
+        plan,
+        vacuum_keep=vacuum_keep,
+        vacuum_min_age_seconds=vacuum_min_age_seconds,
+    )

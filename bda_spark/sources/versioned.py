@@ -1,13 +1,12 @@
-"""Reader-atomic table generations: the pointer-indirection layout that
-lets maintenance (compaction, re-clustering) rewrite a table while
-concurrent readers never observe a missing or partial table.
-
-The plain-dir swap in ``layout.optimize_table`` (move live aside, move
-new in) has an unavoidable window between the two renames where a
-reader listing the path sees NO table. Versioned layout removes the
-window entirely with the log-commit trick Delta/Iceberg use, built from
-two filesystem primitives that ARE atomic everywhere (HDFS, S3A with
-consistent listing, local):
+"""Versioned parquet tables: the one protocol this engine uses to
+rewrite an existing table. Every keyed merge, key delete, compaction
+and OPTIMIZE (``rewrite_generation`` below) commits a new immutable
+generation, so a concurrent reader sees the old table or the new one —
+never a missing or partial one — and two writers racing on one root
+cannot silently discard each other's commit. It is the log-commit
+trick of Delta Lake (VLDB 2020) and Iceberg, built from two filesystem
+primitives that ARE atomic everywhere (HDFS, S3A with consistent
+listing, local):
 
     root/_versions/gen-00000007/     <- immutable parquet data dirs
     root/_commits/00000007.00000006  <- empty marker; CREATE is atomic
@@ -58,23 +57,43 @@ recently than the given age — so rapid commit sequences (per-micro-
 batch merges) cannot sweep a generation out from under a reader that
 resolved it seconds ago.
 
-At 100 TB this also makes the swap O(1): committing is one empty-file
-create regardless of table size, where the rename swap was already
-O(1) per dir but with the non-atomic two-step.
+Rewrites — ``rewrite_generation``
+---------------------------------
+One helper runs every read-modify-write. It pins the current
+generation, hands the caller's ``plan`` that generation's manifest-
+aware read, and commits what the plan returns with the pinned
+generation as the compare-and-swap base. A plan replaces either the
+whole table or only the hive partitions it names; every other
+partition carries forward BY REFERENCE in the new generation's
+``_refs`` manifest (entry name -> generation physically holding it,
+the Iceberg-manifest idea), so a partition-scoped merge or delete
+costs O(touched partitions), not O(table). The ``_watermark`` sidecar
+(``streaming.batchdir``) rides along. An attempt that loses a commit
+race (``CommitRace``) published nothing and reruns the plan against
+the new generation. A plain parquet dir that an older writer left
+behind is adopted once, by ``to_versioned``, on its first rewrite.
+
+Committing is one empty-file create, whatever the table's size.
 """
 
 from __future__ import annotations
 
+import re
 import time
 from collections.abc import Callable
+from typing import Any, NamedTuple
 
 from pyspark.sql import DataFrame, SparkSession
-
-from .sinks import _hadoop_path
+from pyspark.sql import functions as F
+from pyspark.sql.types import NullType
 
 VERSIONS_DIR = "_versions"
 COMMITS_DIR = "_commits"
 REFS_FILE = "_refs"
+# a batch-dir table's absorbed batch-id high-watermark (streaming.batchdir)
+WATERMARK_FILE = "_watermark"
+# a rewrite that keeps losing commit races this many times raises
+REWRITE_ATTEMPTS = 3
 
 # Default reader grace for HIGH-FREQUENCY maintenance callers (per-
 # micro-batch merges, streaming compaction): with min_age 0, commit-
@@ -84,6 +103,31 @@ REFS_FILE = "_refs"
 # table maintained at micro-batch cadence; batch/offline callers that
 # want immediate reclamation pass 0.0 explicitly.
 DEFAULT_MAINTENANCE_MIN_AGE_SECONDS = 600.0
+
+
+class CommitRace(IOError):
+    """``commit_generation`` lost to a concurrent writer: its data
+    derives from a superseded generation, or a competitor's marker won
+    the chain. Nothing was published; rerunning against the new current
+    generation is safe."""
+
+
+def _hadoop_path(spark: SparkSession, path: str):
+    jvm = spark._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    return fs, hpath
+
+
+def glob_escape(path: str) -> str:
+    """Backslash-escape Hadoop glob metacharacters in a DATA path
+    handed to ``spark.read`` (whose path resolution always globs):
+    without this, a root like ``/data/runs[2024]/preds`` reads as a
+    character class and matches nothing. Escape ONLY the globbed data
+    paths — the ``basePath`` option is a plain prefix compared against
+    RESOLVED file paths and must stay raw (an escaped basePath fails
+    the prefix match)."""
+    return re.sub(r"([\[\]{}*?\\])", r"\\\1", path)
 
 
 def _gen_dir(root: str, gen: int) -> str:
@@ -248,6 +292,13 @@ def generation_manifest(
     return manifest, plain
 
 
+def _cast(df: DataFrame, schema) -> DataFrame:
+    """Align ``df`` to ``schema``'s column order and types."""
+    return df.select(
+        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
+    )
+
+
 def read_versioned(
     spark: SparkSession,
     root: str,
@@ -255,51 +306,49 @@ def read_versioned(
     schema=None,
 ) -> DataFrame:
     """Read a versioned table (or a specific committed generation) —
-    MANIFEST-AWARE: a generation produced by incremental maintenance
-    (streaming.batchdir partition-scoped compaction) may hold some
-    partitions only BY REFERENCE in its ``_refs`` sidecar; this reader
-    resolves the manifest and unions one partition-discovering read
-    per holder generation (basePath = that holder's dir, so hive
-    columns keep their types and partition-filter pruning power). A
-    bare ``spark.read.parquet(resolve_table(...))`` would silently
-    drop every referenced partition — use this reader (or
-    ``sources.batch.read_parquet``) for versioned roots.
+    MANIFEST-AWARE: a generation may hold some partitions only BY
+    REFERENCE in its ``_refs`` sidecar; this reader resolves the
+    manifest and unions one partition-discovering read per holder
+    generation (basePath = that holder's dir, so hive columns keep
+    their types and partition-filter pruning power). A bare
+    ``spark.read.parquet(resolve_table(...))`` would silently drop
+    every referenced partition — use this reader (or
+    ``sources.batch.read_parquet``) for versioned roots. A plain,
+    non-versioned dir passes through as one read.
 
-    ``schema`` (optional StructType) aligns every holder's part to the
-    declared columns/types before the union — partition-type inference
-    is per-read, so two holders could otherwise infer differently
-    (e.g. a null-only partition) and fail the union; without it the
-    FIRST holder's inferred schema is the alignment target. A
+    ``schema`` (optional StructType) aligns the result to the declared
+    columns/types; without it the FIRST holder's inferred schema is the
+    target (the lowest-numbered holder with a non-null partition).
+    Either way the schema is inferred once per read — the other holders
+    are scanned with the first holder's schema — so a read pays one
+    inference job however many generations hold its partitions. A
     committed generation holding NO data at all (an empty-stream
-    absorb) returns an empty frame of ``schema`` when given, instead
-    of failing schema inference."""
-    from pyspark.sql import functions as _F
-
-    def _cast(df: DataFrame, target) -> DataFrame:
-        return df.select(
-            *[
-                _F.col(f.name).cast(f.dataType).alias(f.name)
-                for f in target.fields
-            ]
-        )
-
+    absorb) returns an empty frame of ``schema`` when given, instead of
+    failing schema inference."""
     # resolve the generation ONCE and derive the path from it — calling
     # resolve_table and current_generation separately leaves a window
     # where a commit lands between the two and path/manifest describe
-    # DIFFERENT generations (a stale mix, or a self-contained check
-    # against the wrong dir)
+    # DIFFERENT generations
     if generation is not None:
-        path = resolve_table(spark, root, generation)
+        resolve_table(spark, root, generation)  # raises when unavailable
         gen: int | None = int(generation)
     else:
         gen = current_generation(spark, root)
-        path = root if gen is None else _gen_dir(root, gen)
-    from ..streaming.batchdir import glob_escape
-
     if gen is None:  # plain, non-versioned dir passthrough
-        df = spark.read.parquet(glob_escape(path))
+        df = spark.read.parquet(glob_escape(root))
         return _cast(df, schema) if schema is not None else df
     manifest, plain = generation_manifest(spark, root, gen)
+    return _read_generation(spark, root, gen, manifest, plain, schema)
+
+
+def _read_generation(
+    spark: SparkSession,
+    root: str,
+    gen: int,
+    manifest: dict[str, int],
+    plain: bool,
+    schema=None,
+) -> DataFrame:
     if not manifest and not plain and schema is not None:
         # committed but data-less (empty-stream absorb): typed empty
         from ..functions.localrows import rows_frame
@@ -308,8 +357,13 @@ def read_versioned(
     if all(holder == gen for holder in manifest.values()):
         # self-contained (unpartitioned, hive-with-no-refs): one read
         # of the generation dir is complete and keeps the single scan
-        df = spark.read.parquet(glob_escape(path))
-        return _cast(df, schema) if schema is not None else df
+        df = spark.read.parquet(glob_escape(_gen_dir(root, gen)))
+        if schema is not None:
+            return _cast(df, schema)
+        # a partition column holding only nulls infers as VOID, which
+        # no writer accepts as a partition column: read it as string
+        void = [f.name for f in df.schema.fields if f.dataType == NullType()]
+        return df.withColumns({c: F.col(c).cast("string") for c in void})
     if plain:
         raise IOError(
             f"generation {gen} of {root} mixes root-level data files "
@@ -318,19 +372,27 @@ def read_versioned(
     by_holder: dict[int, list[str]] = {}
     for name, holder in manifest.items():
         by_holder.setdefault(holder, []).append(name)
+    # the schema is inferred from the first holder, so a holder whose
+    # only partition is the null one goes last: alone it would type an
+    # int partition column as string
     parts: list[DataFrame] = []
-    for holder, names in sorted(by_holder.items()):
+    inferred = None
+    for holder, names in sorted(
+        by_holder.items(),
+        key=lambda hn: (all(n.endswith(f"={_HIVE_NULL}") for n in hn[1]), hn[0]),
+    ):
         base = _gen_dir(root, holder)
+        reader = spark.read.option("basePath", base)
+        if inferred is not None:
+            reader = reader.schema(inferred)
         parts.append(
-            spark.read.option("basePath", base).parquet(
-                *[glob_escape(f"{base}/{n}") for n in sorted(names)]
-            )
+            reader.parquet(*[glob_escape(f"{base}/{n}") for n in sorted(names)])
         )
-    target = schema if schema is not None else parts[0].schema
-    parts = [_cast(p, target) for p in parts]
-    df = parts[0]
+        inferred = parts[0].schema
+    target = schema if schema is not None else inferred
+    df = _cast(parts[0], target)
     for p in parts[1:]:
-        df = df.unionByName(p)
+        df = df.unionByName(_cast(p, target))
     return df
 
 
@@ -356,8 +418,9 @@ def commit_generation(
     winner. After creating its marker, the attempt re-resolves the
     chain and — if its own commit is not a link — removes its marker
     and data and raises IOError instead of reporting a success no
-    reader will ever see (callers retry against the new current
-    generation — the optimistic-commit discipline).
+    reader will ever see. Every lost race raises ``CommitRace``, which
+    ``rewrite_generation`` retries against the new current generation
+    (the optimistic-commit discipline).
 
     Crash-safe with no recovery step: an attempt that dies before its
     marker leaves only a claimed-but-uncommitted slot (lock + debris
@@ -366,7 +429,7 @@ def commit_generation(
     leaves an orphaned marker that readers skip and vacuum sweeps.
 
     ``expected_base`` is the COMPARE-AND-SWAP guard for read-modify-
-    write callers (idempotent_merge_parquet / delete_keys_parquet):
+    write callers (``rewrite_generation``):
     the generation the caller's ``write_fn`` data DERIVES from
     (0 / None for a fresh table). Without it, a writer whose read
     resolved generation N while a competitor committed N+1 before
@@ -379,7 +442,7 @@ def commit_generation(
     base = root.rstrip("/")
     cur = current_generation(spark, root)
     if expected_base is not None and (cur or 0) != int(expected_base):
-        raise IOError(
+        raise CommitRace(
             f"commit_generation: stale writer under {root} — caller's "
             f"data derives from generation {int(expected_base)} but the "
             f"table is at {cur or 0}; a commit would silently discard "
@@ -416,7 +479,7 @@ def commit_generation(
     latest = current_generation(spark, root)
     if latest is not None and (cur is None or latest > cur):
         _abort()
-        raise IOError(
+        raise CommitRace(
             f"commit_generation: generation {latest} committed under "
             f"{root} while this attempt (base {cur}) was writing — "
             f"aborted to avoid publishing a lost update; rerun against "
@@ -441,7 +504,7 @@ def commit_generation(
     chain = _read_chain(spark, root)
     if nxt not in {g for g, _ in chain}:
         _abort(marker)
-        raise IOError(
+        raise CommitRace(
             f"commit_generation: generation {nxt} (base {cur}) lost a "
             f"same-base commit race under {root} — its marker was "
             f"orphaned by the chain rule; aborted to avoid reporting a "
@@ -597,3 +660,240 @@ def to_versioned(spark: SparkSession, path: str) -> int:
     if not fs.createNewFile(marker):
         raise IOError(f"to_versioned: commit marker creation failed at {path}")
     return 1
+
+
+# ---------------------------------------------------------------------------
+# The one rewrite protocol: every keyed merge, key delete, compaction and
+# OPTIMIZE of an existing table runs through ``rewrite_generation``.
+
+_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
+# the character set Spark/Hive escape in partition directory names
+_HIVE_ESCAPE = set('"#%\'*/:=?\\{[]^') | {chr(c) for c in range(32)} | {
+    chr(127)
+}
+
+
+def _hive_part_dirname(col: str, value) -> str:
+    """Directory name hive layout gives a partition value. Covers the
+    layouts this repo writes (int and string partition columns; null ->
+    the hive default partition). Bool/float partition columns would
+    need hive's exact literal formatting — not used here."""
+    if value is None:
+        return f"{col}={_HIVE_NULL}"
+    esc = "".join(
+        f"%{ord(ch):02X}" if ch in _HIVE_ESCAPE else ch for ch in str(value)
+    )
+    return f"{col}={esc}"
+
+
+class Base(NamedTuple):
+    """The generation one rewrite attempt derives from, pinned."""
+
+    spark: SparkSession
+    root: str
+    gen: int | None  # None: no table yet
+    manifest: dict[str, int]  # hive entry -> generation holding it
+    plain: bool  # the generation holds unpartitioned data files
+
+    def read(self, schema=None) -> DataFrame | None:
+        """Manifest-aware read of the pinned generation; None when it
+        holds no rows on disk (no table, or a data-less generation)."""
+        if self.gen is None or not (self.manifest or self.plain):
+            return None
+        return _read_generation(
+            self.spark, self.root, self.gen, self.manifest, self.plain, schema
+        )
+
+    def scope(self, df: DataFrame, col: str, values: list) -> DataFrame:
+        """``df`` — this generation's read — cut to the ``col``
+        partitions holding ``values``, pruned per holder. Null-safe:
+        ``isin`` is three-valued, so a None among the values would
+        match nothing, and a rewrite replacing the null partition would
+        drop the rows it never read. Refuses a generation that is not
+        partitioned on ``col``: a partition-scoped rewrite cannot
+        change the layout."""
+        foreign = [n for n in self.manifest if not n.startswith(f"{col}=")]
+        if self.plain or foreign:
+            layout = (
+                "unpartitioned" if self.plain else f"partitioned as {foreign[:3]}"
+            )
+            raise ValueError(
+                f"partition-scoped rewrite of {self.root} on {col!r}, but "
+                f"its generation {self.gen} is {layout} — rewrite the "
+                f"whole table to change its layout"
+            )
+        non_null = [v for v in values if v is not None]
+        pred = F.col(col).isin(non_null) if non_null else F.lit(False)
+        if len(non_null) < len(values):
+            pred = pred | F.col(col).isNull()
+        return df.filter(pred)
+
+    def hive_levels(self) -> list[str]:
+        """Partition columns of the pinned generation, outermost first
+        (``day=3/sym=BP/part-...`` -> ["day", "sym"]), read off one
+        holder dir; [] when unpartitioned."""
+        if not self.manifest:
+            return []
+        first = next(iter(self.manifest))
+        fs, path = _hadoop_path(
+            self.spark, f"{_gen_dir(self.root, self.manifest[first])}/{first}"
+        )
+        levels = [first.partition("=")[0]]
+        while True:
+            nxt = next(
+                (st.getPath() for st in fs.listStatus(path)
+                 if st.isDirectory() and "=" in st.getPath().getName()),
+                None,
+            )
+            if nxt is None:
+                return levels
+            levels.append(nxt.getName().partition("=")[0])
+            path = nxt
+
+    def size_bytes(self) -> int:
+        """Bytes on disk of the pinned generation, referenced partitions
+        included."""
+        fs, gen_p = _hadoop_path(self.spark, _gen_dir(self.root, self.gen))
+        total = fs.getContentSummary(gen_p).getLength()
+        for name, holder in self.manifest.items():
+            if holder != self.gen:
+                _, p = _hadoop_path(
+                    self.spark, f"{_gen_dir(self.root, holder)}/{name}"
+                )
+                total += fs.getContentSummary(p).getLength()
+        return int(total)
+
+
+class Rewrite(NamedTuple):
+    """What one rewrite attempt commits. ``rows`` replace the whole
+    table, or — with ``touched`` — only the ``partition_col``
+    partitions holding those values: every other partition carries by
+    reference, and a touched partition ``rows`` leaves empty is gone.
+    Without ``write`` the rows land as parquet, hive-partitioned on
+    ``partition_col`` when given; ``write(rows, data_dir)`` replaces
+    that writer. ``watermark`` replaces the carried ``_watermark``.
+    ``commit=False`` ends the rewrite without a commit. The rewrite
+    returns ``result`` either way."""
+
+    rows: DataFrame | None = None
+    touched: list | None = None
+    partition_col: str | None = None
+    result: Any = None
+    write: Callable[[DataFrame, str], None] | None = None
+    watermark: int | None = None
+    commit: bool = True
+
+
+def pin_generation(spark: SparkSession, root: str) -> Base:
+    """The current generation of ``root`` with its manifest."""
+    gen = current_generation(spark, root)
+    if gen is None:
+        return Base(spark, root, None, {}, False)
+    manifest, plain = generation_manifest(spark, root, gen)
+    return Base(spark, root, gen, manifest, plain)
+
+
+def rewrite_generation(
+    spark: SparkSession,
+    root: str,
+    plan: Callable[[Base], Rewrite],
+    vacuum_keep: int = 2,
+    vacuum_min_age_seconds: float | None = None,
+    adopt: bool = True,
+) -> Any:
+    """Rewrite the table at ``root`` as a new committed generation and
+    return the plan's ``result``. Each attempt pins the current
+    generation, calls ``plan(base)`` (``base.read()`` is its manifest-
+    aware read) and commits the returned ``Rewrite`` with the pinned
+    generation as ``expected_base``. A lost race (``CommitRace``)
+    reruns the plan against the new generation, up to
+    ``REWRITE_ATTEMPTS`` times in all. After a commit, ``vacuum_versions`` runs with ``vacuum_keep``
+    and ``vacuum_min_age_seconds`` (default
+    ``DEFAULT_MAINTENANCE_MIN_AGE_SECONDS``).
+
+    ``adopt``: a plain parquet dir at ``root`` becomes generation 1 via
+    ``to_versioned`` first (``_adopt_plain``). Batch-dir roots pass
+    False — their plain ``batch=<id>`` dirs are the hot path, not a
+    table to adopt."""
+    if adopt and current_generation(spark, root) is None:
+        _adopt_plain(spark, root)
+    if vacuum_min_age_seconds is None:
+        vacuum_min_age_seconds = DEFAULT_MAINTENANCE_MIN_AGE_SECONDS
+    for attempt in range(REWRITE_ATTEMPTS):
+        base = pin_generation(spark, root)
+        rw = plan(base)
+        if not rw.commit:
+            return rw.result
+        try:
+            commit_generation(
+                spark,
+                root,
+                lambda data_dir: _write_rewrite(spark, base, rw, data_dir),
+                expected_base=base.gen or 0,
+            )
+        except CommitRace:
+            if attempt == REWRITE_ATTEMPTS - 1:
+                raise
+            continue
+        vacuum_versions(
+            spark, root, keep=vacuum_keep, min_age_seconds=vacuum_min_age_seconds
+        )
+        return rw.result
+
+
+def _write_rewrite(
+    spark: SparkSession, base: Base, rw: Rewrite, data_dir: str
+) -> None:
+    fs, data_p = _hadoop_path(spark, data_dir)
+    if rw.rows is None:
+        fs.mkdirs(data_p)
+    elif rw.write is not None:
+        rw.write(rw.rows, data_dir)
+    else:
+        writer = rw.rows.write.mode("overwrite")
+        if rw.partition_col is not None:
+            writer = writer.partitionBy(rw.partition_col)
+        writer.parquet(data_dir)
+    if rw.touched is not None:
+        replaced = {_hive_part_dirname(rw.partition_col, v) for v in rw.touched}
+        replaced.update(
+            st.getPath().getName()
+            for st in fs.listStatus(data_p)
+            if st.isDirectory()
+        )
+        refs = {n: g for n, g in base.manifest.items() if n not in replaced}
+        if refs:
+            write_generation_refs(spark, data_dir, refs)
+    if rw.watermark is not None:
+        watermark = str(int(rw.watermark))
+    elif base.gen is not None:
+        watermark = _read_small_file(
+            spark, f"{_gen_dir(base.root, base.gen)}/{WATERMARK_FILE}"
+        )
+    else:
+        watermark = None
+    if watermark is not None:
+        _write_small_file(spark, f"{data_dir}/{WATERMARK_FILE}", watermark)
+
+
+def _adopt_plain(spark: SparkSession, root: str) -> None:
+    """Adopt a plain parquet dir as generation 1 before its first
+    rewrite. Refuses when an older writer's crashed rename swap left
+    the table's only copy in a sibling dir: that data is not in the
+    table, and adopting without it would drop it silently. Probes the
+    plain table's schema first, so an unreadable dir raises before a
+    file moves. Adoption renames the plain dir's entries, so it is not
+    safe against a concurrent reader or writer of that dir; it happens
+    once per table."""
+    fs, root_p = _hadoop_path(spark, root)
+    for suffix in ("__merge_old", "__compact_old"):
+        stranded = root.rstrip("/") + suffix
+        if fs.exists(_hadoop_path(spark, stranded)[1]):
+            raise IOError(
+                f"{stranded} holds data that a crashed rename swap moved "
+                f"out of {root}; move its contents back into {root} (or "
+                f"delete it, if the rows are not wanted) and rerun"
+            )
+    if fs.exists(root_p):
+        spark.read.parquet(glob_escape(root))
+        to_versioned(spark, root)

@@ -28,9 +28,11 @@ NEW_train_offset_3_10min.py:259-270) rebuilt on parquet:
   ``_SUCCESS`` marker is in flight (or a crashed write the stream will
   replay) and is skipped: its rows surface the moment the writer's
   job commits, never partially.
-- COMPACT: PARTITION-SCOPED and incremental. Only the hive partitions
-  the fresh batch dirs actually touch are merged and rewritten into
-  the new generation; every untouched partition is carried forward BY
+- COMPACT: PARTITION-SCOPED and incremental, committed through the
+  one rewrite protocol (``sources.versioned.rewrite_generation``, as
+  every merge, delete and OPTIMIZE is). Only the hive partitions the
+  fresh batch dirs actually touch are merged and rewritten into the
+  new generation; every untouched partition is carried forward BY
   REFERENCE in a ``_refs`` manifest (name -> holding generation, the
   Iceberg-manifest idea), so maintenance cost is O(new data +
   touched partitions), never O(accumulated table). The new watermark
@@ -69,19 +71,23 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..sources.sinks import _hadoop_path
 from ..sources.versioned import (
+    WATERMARK_FILE,
+    Base,
+    Rewrite,
+    _cast,
     _gen_dir,
+    _hadoop_path,
     _read_small_file,
     _write_small_file,
     commit_generation,
     current_generation,
-    vacuum_versions,
-    write_generation_refs,
+    glob_escape,
+    pin_generation,
+    rewrite_generation,
 )
 
 BATCH_PREFIX = "batch="
-WATERMARK_FILE = "_watermark"
 
 
 def _batch_dirs(spark: SparkSession, root: str) -> dict[int, str]:
@@ -95,19 +101,6 @@ def _batch_dirs(spark: SparkSession, root: str) -> dict[int, str]:
         if name.startswith(BATCH_PREFIX) and name[len(BATCH_PREFIX):].isdigit():
             out[int(name[len(BATCH_PREFIX):])] = f"{root.rstrip('/')}/{name}"
     return out
-
-
-def glob_escape(path: str) -> str:
-    """Backslash-escape Hadoop glob metacharacters in a DATA path
-    handed to ``spark.read`` (whose path resolution always globs):
-    without this, a root like ``/data/runs[2024]/preds`` reads as a
-    character class and matches nothing. Escape ONLY the globbed data
-    paths — the ``basePath`` option is a plain prefix compared against
-    RESOLVED file paths and must stay raw (an escaped basePath fails
-    the prefix match)."""
-    import re
-
-    return re.sub(r"([\[\]{}*?\\])", r"\\\1", path)
 
 
 def _inspect_batch_dir(
@@ -313,59 +306,6 @@ def write_batch_dir(df: DataFrame, root: str, batch_id: int) -> bool:
     return True
 
 
-def _gen_manifest(
-    spark: SparkSession, root: str, generation: int | None = None
-) -> tuple[int | None, dict[str, int], bool]:
-    """(gen, manifest, plain) for the compacted half of the table.
-    ``manifest`` maps hive entry name -> generation that PHYSICALLY
-    holds it (own entries + ``_refs`` carries — a manifest entry
-    always points at the holder directly, never through a chain,
-    because compaction resolves references fully when it writes them).
-    ``plain`` = the generation is unpartitioned parquet (no hive
-    entries), read as one dir. ``generation`` pins the read (see
-    ``compacted_watermark``)."""
-    from ..sources.versioned import generation_manifest
-
-    gen = (
-        int(generation)
-        if generation is not None
-        else current_generation(spark, root)
-    )
-    if gen is None:
-        return None, {}, False
-    manifest, plain = generation_manifest(spark, root, gen)
-    return gen, manifest, plain
-
-
-def _read_compacted(
-    spark: SparkSession,
-    root: str,
-    schema: StructType | None = None,
-    generation: int | None = None,
-) -> DataFrame | None:
-    """The compacted half of the table — ``versioned.read_versioned``
-    (the shared manifest-resolving reader) behind batchdir's
-    conventions: None when nothing is compacted yet or the generation
-    holds no data at all (an empty-stream absorb). ``generation`` pins
-    the read so a read-modify-write cycle's data derives from the same
-    generation as its watermark/manifest and CAS base."""
-    from ..sources.versioned import read_versioned
-
-    gen, manifest, plain = _gen_manifest(spark, root, generation)
-    if gen is None or (not manifest and not plain):
-        return None
-    return read_versioned(spark, root, generation=gen, schema=schema)
-
-
-def _cast_to(df: DataFrame, schema: StructType) -> DataFrame:
-    """Align a part to the declared schema (column order + types) so
-    hive-inferred partition columns from different holder generations
-    union cleanly with data-file columns from fresh batch dirs."""
-    return df.select(
-        *[F.col(f.name).cast(f.dataType).alias(f.name) for f in schema.fields]
-    )
-
-
 def read_batch_table(
     spark: SparkSession, root: str, schema: StructType
 ) -> DataFrame:
@@ -379,9 +319,10 @@ def read_batch_table(
     cast/ordered to it, and the inferred ``batch`` partition column is
     dropped."""
     _require_batch_layout(spark, root)
-    wm = compacted_watermark(spark, root)
+    base = pin_generation(spark, root)
+    wm = compacted_watermark(spark, root, generation=base.gen)
     parts: list[DataFrame] = []
-    compacted = _read_compacted(spark, root, schema)
+    compacted = base.read(schema)
     if compacted is not None:
         parts.append(compacted)
     _, with_data, _ = _classify_fresh(
@@ -390,7 +331,7 @@ def read_batch_table(
     if with_data:
         fresh = [with_data[bid] for bid in sorted(with_data)]
         parts.append(
-            _cast_to(
+            _cast(
                 spark.read.option("basePath", root)
                 .parquet(*[glob_escape(f) for f in fresh])
                 .drop("batch"),
@@ -429,6 +370,22 @@ def _spread_within_partitions(
     if not others:
         return df.repartition(F.col(pcol))
     return df.repartitionByRange(F.col(pcol), F.xxhash64(*others))
+
+
+def _spread_writer(levels: list[str] | None):
+    """Writer for a batch-dir generation: hive-partitioned on
+    ``levels`` (spread across tasks, see ``_spread_within_partitions``),
+    or plain parquet without them."""
+
+    def write(rows: DataFrame, data_dir: str) -> None:
+        if not levels:
+            rows.write.mode("overwrite").parquet(data_dir)
+            return
+        _spread_within_partitions(rows, levels).write.partitionBy(
+            *levels
+        ).mode("overwrite").parquet(data_dir)
+
+    return write
 
 
 def compact_batch_dirs(
@@ -474,232 +431,103 @@ def compact_batch_dirs(
     already ignore them, and the next run sweeps them before absorbing
     anything new.
 
-    Cross-WRITER safe (r12 VERDICT task 5): the whole cycle — watermark,
-    manifest, compacted-data read — derives from ONE pinned generation
-    and the commit carries that base as a CAS (``expected_base``), so a
-    merge/delete/competing-compaction landing between this cycle's read
-    and its commit makes THIS writer fail its commit instead of
-    publishing a generation that silently discards the competitor's —
-    the same lost-update guard idempotent_merge_parquet and
-    delete_keys_parquet carry. A detected race re-runs the cycle
-    against the new current generation (bounded retries)."""
-    last_race: IOError | None = None
-    for _attempt in range(3):
-        try:
-            return _compact_cycle(
-                spark,
-                root,
-                partition_by,
-                vacuum_keep,
-                vacuum_min_age_seconds,
-                full,
-            )
-        except IOError as e:
-            if not _is_commit_race(e):
-                raise
-            last_race = e
-    raise last_race
-
-
-def _is_commit_race(e: IOError) -> bool:
-    """commit_generation's three detected-race shapes (stale base at
-    entry, competitor landed while writing, same-base marker race) —
-    all safely retryable: the loser published nothing."""
-    msg = str(e)
-    return (
-        "stale writer" in msg
-        or "committed under" in msg
-        or "lost a same-base commit race" in msg
-    )
-
-
-def _compact_cycle(
-    spark: SparkSession,
-    root: str,
-    partition_by: list[str] | None,
-    vacuum_keep: int,
-    vacuum_min_age_seconds: float | None,
-    full: bool,
-) -> int:
-    _require_batch_layout(spark, root)
-    base_gen = current_generation(spark, root)
-    wm = compacted_watermark(spark, root, generation=base_gen)
-    dirs = _batch_dirs(spark, root)
-    fs, _ = _hadoop_path(spark, root)
-    # grace-period sweep: dirs the PREVIOUS compaction absorbed (and
-    # any replay debris) are <= watermark, invisible since that commit
-    for bid, path in sorted(dirs.items()):
-        if bid <= wm:
-            _, p = _hadoop_path(spark, path)
-            fs.delete(p, True)
-    committed, with_data, blocked = _classify_fresh(spark, root, dirs, wm)
-    if blocked is not None:
-        # never absorb past an uncommitted dir: ids >= blocked wait for
-        # their writer (live stream or crash-replay) to commit
-        committed = {b: p for b, p in committed.items() if b < blocked}
-        with_data = {b: p for b, p in with_data.items() if b < blocked}
-    cur_gen, manifest, plain_gen = _gen_manifest(spark, root, base_gen)
-    has_refs = any(g != cur_gen for g in manifest.values())
-    if not committed:
-        if not (full and has_refs):
-            return wm
-        # MAJOR compaction with nothing fresh still has work: collapse
-        # the reference chain (an idle stream must not leave holder
-        # generations pinned forever — that IS the unbounded growth
-        # full=True exists to stop)
-        new_wm = wm
-    else:
-        new_wm = max(committed)
-
-    fresh_df: DataFrame | None = None
-    if with_data:
-        fresh_df = (
-            spark.read.option("basePath", root)
-            .parquet(*[glob_escape(with_data[b]) for b in sorted(with_data)])
-            .drop("batch")
-        )
-
-    if fresh_df is None and plain_gen:
-        # only empty-committed dirs atop an UNPARTITIONED generation:
-        # nothing can carry by reference (no hive entries) and a full
-        # copy for an empty absorb is waste — leave them; they absorb
-        # (and then sweep) with the next data-bearing compaction
-        return wm
+    Cross-WRITER safe: the cycle is one ``rewrite_generation`` plan —
+    watermark, manifest and compacted-data read derive from ONE pinned
+    generation and the commit carries it as a CAS, so a merge, delete
+    or competing compaction landing in between makes this cycle rerun
+    against the new generation instead of publishing one that silently
+    discards the competitor's."""
     pcol = (
         partition_by[0]
         if partition_by is not None and len(partition_by) == 1
         else None
     )
-    # an unpartitioned current generation has no hive entries to carry
-    # by reference — the first partitioned compaction over it must be a
-    # full rewrite (it converts the layout; later runs are incremental)
-    incremental = (
-        not full and pcol is not None and fresh_df is not None and not plain_gen
-    )
-    if incremental and any(
-        not name.startswith(f"{pcol}=") for name in manifest
-    ):
-        # a changed partition column would rewrite touched rows under
-        # the new layout while the refs still carry the OLD layout's
-        # entries holding the same rows — silent double counting; the
-        # layout change must be an explicit full rewrite
-        raise IOError(
-            f"compact_batch_dirs: existing generation of {root} is "
-            f"partitioned by {sorted(manifest)[:3]}..., not "
-            f"{pcol!r} — pass the original partition_by, or "
-            f"full=True to re-layout the whole table"
-        )
 
-    def _write(data_dir: str) -> None:
-        _, data_p = _hadoop_path(spark, data_dir)
-        if incremental:
+    def plan(base: Base) -> Rewrite:
+        _require_batch_layout(spark, root)
+        wm = compacted_watermark(spark, root, generation=base.gen)
+        dirs = _batch_dirs(spark, root)
+        fs, _ = _hadoop_path(spark, root)
+        # grace-period sweep: dirs the PREVIOUS compaction absorbed (and
+        # any replay debris) are <= watermark, invisible since that commit
+        for bid, path in sorted(dirs.items()):
+            if bid <= wm:
+                _, p = _hadoop_path(spark, path)
+                fs.delete(p, True)
+        committed, with_data, blocked = _classify_fresh(spark, root, dirs, wm)
+        if blocked is not None:
+            # never absorb past an uncommitted dir: ids >= blocked wait
+            # for their writer (live stream or crash-replay) to commit
+            committed = {b: p for b, p in committed.items() if b < blocked}
+            with_data = {b: p for b, p in with_data.items() if b < blocked}
+        has_refs = any(g != base.gen for g in base.manifest.values())
+        # MAJOR compaction with nothing fresh still has work when refs
+        # exist: collapse the chain (an idle stream must not leave
+        # holder generations pinned forever — that IS the unbounded
+        # growth full=True exists to stop)
+        if not committed and not (full and has_refs):
+            return Rewrite(result=wm, commit=False)
+        new_wm = max(committed, default=wm)
+        fresh: DataFrame | None = None
+        if with_data:
+            fresh = (
+                spark.read.option("basePath", root)
+                .parquet(*[glob_escape(with_data[b]) for b in sorted(with_data)])
+                .drop("batch")
+            )
+        if fresh is None and base.plain:
+            # only empty-committed dirs atop an UNPARTITIONED generation:
+            # nothing can carry by reference and a full copy for an
+            # empty absorb is waste — leave them; they absorb (and then
+            # sweep) with the next data-bearing compaction
+            return Rewrite(result=wm, commit=False)
+        if fresh is None and not full:
+            # only empty-but-committed batches: nothing to rewrite —
+            # carry every entry forward and advance the mark
+            return Rewrite(
+                touched=[], partition_col=pcol, result=new_wm, watermark=new_wm
+            )
+        old = base.read(fresh.schema if fresh is not None else None)
+        # an unpartitioned current generation has no hive entries to
+        # carry by reference — the first partitioned compaction over it
+        # is a full rewrite (it converts the layout; later runs are
+        # incremental)
+        if not full and pcol is not None and not base.plain:
             # merge ONLY the partitions the fresh batches touch; the
             # touched-value list is tiny (one per partition value, not
             # per row) and prunes the compacted scan per holder
-            touched = [
-                r[0] for r in fresh_df.select(pcol).distinct().collect()
-            ]
-            non_null = [t for t in touched if t is not None]
-            pred = (
-                F.col(pcol).isin(non_null) if non_null else F.lit(False)
-            )
-            if any(t is None for t in touched):
-                pred = pred | F.col(pcol).isNull()
-            merged = fresh_df
-            old = _read_compacted(
-                spark, root, fresh_df.schema, generation=base_gen
-            )
+            touched = [r[0] for r in fresh.select(pcol).distinct().collect()]
+            rows = fresh
             if old is not None:
-                merged = old.filter(pred).unionByName(fresh_df)
-            _spread_within_partitions(merged, [pcol]).write.partitionBy(
-                pcol
-            ).mode("overwrite").parquet(data_dir)
-            # entries this generation now holds physically supersede
-            # their carried references; everything untouched carries
-            # forward, fully resolved (holder, never a chain)
-            new_names = {
-                st.getPath().getName()
-                for st in fs.listStatus(data_p)
-                if st.isDirectory() and "=" in st.getPath().getName()
-            }
-            refs = {
-                n: g for n, g in manifest.items() if n not in new_names
-            }
-            if refs:
-                write_generation_refs(spark, data_dir, refs)
-        elif fresh_df is None and not full:
-            # only empty-but-committed batches: nothing to rewrite —
-            # carry the whole manifest forward and advance the mark
-            fs.mkdirs(data_p)
-            if manifest:
-                write_generation_refs(spark, data_dir, manifest)
-        else:
-            # MAJOR compaction: one self-contained generation (refs
-            # collapse; with no fresh data the old table rewrites
-            # alone)
-            old = _read_compacted(
-                spark,
-                root,
-                fresh_df.schema if fresh_df is not None else None,
-                generation=base_gen,
+                rows = base.scope(old, pcol, touched).unionByName(fresh)
+            return Rewrite(
+                rows, touched, pcol, result=new_wm,
+                write=_spread_writer([pcol]), watermark=new_wm,
             )
-            if fresh_df is None:
-                merged = old
-            elif old is not None:
-                merged = old.unionByName(fresh_df)
-            else:
-                merged = fresh_df
-            if merged is None:
-                # nothing to merge anywhere (only empty-committed
-                # batch dirs atop no generation / a data-less carry):
-                # a scheduled full=True must still commit — an empty
-                # carry generation, not an AttributeError that fails
-                # every cycle until data arrives
-                fs.mkdirs(data_p)
-                if manifest:
-                    write_generation_refs(spark, data_dir, manifest)
-                _write_watermark(spark, data_dir, new_wm)
-                return
-            if partition_by:
-                _spread_within_partitions(
-                    merged, partition_by
-                ).write.partitionBy(*partition_by).mode("overwrite").parquet(
-                    data_dir
-                )
-            else:
-                merged.write.mode("overwrite").parquet(data_dir)
-        _write_watermark(spark, data_dir, new_wm)
+        # MAJOR compaction: one self-contained generation (refs
+        # collapse; with no fresh data the old table rewrites alone; with
+        # no rows anywhere an empty generation still advances the mark)
+        if old is None:
+            rows = fresh
+        elif fresh is None:
+            rows = old
+        else:
+            rows = old.unionByName(fresh)
+        return Rewrite(
+            rows, result=new_wm, write=_spread_writer(partition_by),
+            watermark=new_wm,
+        )
 
-    commit_generation(spark, root, _write, expected_base=base_gen or 0)
-    if vacuum_min_age_seconds is None:
-        from ..sources.versioned import DEFAULT_MAINTENANCE_MIN_AGE_SECONDS
-
-        vacuum_min_age_seconds = DEFAULT_MAINTENANCE_MIN_AGE_SECONDS
-    vacuum_versions(
-        spark, root, keep=vacuum_keep, min_age_seconds=vacuum_min_age_seconds
-    )
     # absorbed dirs are left in place (<= watermark: invisible); the
     # NEXT compaction's sweep deletes them after the grace period
-    return new_wm
-
-
-def _hive_levels(fs, jvm, holder_dir: str) -> list[str]:
-    """Partition column names of a hive layout, by walking the first
-    entry chain down (``day=3/sym=BP/part-...`` -> ["day", "sym"]).
-    Empty list = unpartitioned."""
-    levels: list[str] = []
-    path = jvm.org.apache.hadoop.fs.Path(holder_dir)
-    while True:
-        nxt = None
-        for st in fs.listStatus(path):
-            name = st.getPath().getName()
-            if st.isDirectory() and "=" in name:
-                nxt = st
-                break
-        if nxt is None:
-            return levels
-        levels.append(nxt.getPath().getName().partition("=")[0])
-        path = nxt.getPath()
+    return rewrite_generation(
+        spark,
+        root,
+        plan,
+        vacuum_keep=vacuum_keep,
+        vacuum_min_age_seconds=vacuum_min_age_seconds,
+        adopt=False,
+    )
 
 
 def delete_keys_batch_table(
@@ -712,51 +540,67 @@ def delete_keys_batch_table(
 ) -> int:
     """Key-based DELETE over a batch-dir table — the takedown path for
     streaming-compacted artifact stores (predictions, correlations,
-    incremental indexes held in this layout). A GENERIC versioned
-    delete (``sources.sinks.delete_keys_parquet``) must NOT be pointed
-    at a batch-dir root: it would commit a generation without the
-    ``_watermark`` sidecar (regressing the watermark to -1, so
-    already-absorbed-but-unswept batch dirs double-count on the next
-    read) and without the ``_refs`` manifest (silently dropping every
-    partition the current generation carries by reference). This
-    operator deletes with the layout's own invariants:
+    incremental indexes held in this layout). It covers both halves of
+    the table; ``sources.sinks.delete_keys_parquet`` on the same root
+    would commit the compacted half the same way (the rewrite protocol
+    carries ``_watermark`` and ``_refs``) but never look at the fresh
+    batch dirs, and would adopt them into its generation first.
 
-    - COMPACTED half: partition-scoped, manifest-aware — one semi-join
-      finds the touched top-level partitions, only those rewrite into
-      the new generation, every untouched entry carries forward by
+    - COMPACTED half: one ``rewrite_generation`` plan, partition-scoped
+      and manifest-aware — one semi-join finds the touched top-level
+      partitions, only those rewrite into the new generation (deeper
+      partition levels kept), every untouched entry carries forward by
       reference, and the watermark rides along. O(touched partitions),
-      the same cost shape as incremental compaction.
+      the same cost shape as incremental compaction; a racing
+      compaction or merge makes it rerun against the new generation.
     - FRESH ``batch=<id>`` dirs (committed, above the watermark):
       each dir holding doomed rows is rewritten in place — the same
       single-writer-per-dir contract the stream's own replay overwrite
       relies on (run takedowns from the maintenance owner, not
       concurrently with that exact batch's replay).
-    - CAS + retry: the compacted rewrite derives every read from one
-      pinned generation and commits with ``expected_base`` — a racing
-      compaction/merge makes this delete retry against the new
-      generation instead of silently discarding the competitor's
-      commit (and vice versa: ``compact_batch_dirs`` carries the same
-      guard, so whichever writer loses the race re-runs).
 
     Returns total rows removed; 0 = nothing rewritten anywhere (a
     replayed delete is a pure read). Physical removal only — pair with
     ``operators.deletes`` tombstones when the upstream source can
     replay batches that still carry the id."""
     ids = ids.select(*keys).distinct()
-    last_race: IOError | None = None
-    removed_compacted = None
-    for _attempt in range(3):
-        try:
-            removed_compacted = _delete_compacted_cycle(
-                spark, root, ids, keys, vacuum_keep, vacuum_min_age_seconds
-            )
-            break
-        except IOError as e:
-            if not _is_commit_race(e):
-                raise
-            last_race = e
-    if removed_compacted is None:
-        raise last_race
+
+    def plan(base: Base) -> Rewrite:
+        _require_batch_layout(spark, root)
+        compacted = base.read()
+        if compacted is None:
+            return Rewrite(result=0, commit=False)
+        doomed = compacted.join(ids, on=keys, how="left_semi")
+        if base.plain:
+            removed = doomed.count()
+            if removed == 0:
+                return Rewrite(result=0, commit=False)
+            kept = compacted.join(ids, on=keys, how="left_anti")
+            return Rewrite(kept, result=int(removed))
+        # deeper partition levels (if any) stay: the rewrite keeps the
+        # layout
+        levels = base.hive_levels()
+        pcol = levels[0]
+        counts = doomed.groupBy(pcol).count().collect()
+        if not counts:
+            return Rewrite(result=0, commit=False)
+        touched = [r[0] for r in counts]
+        kept = base.scope(compacted, pcol, touched).join(
+            ids, on=keys, how="left_anti"
+        )
+        return Rewrite(
+            kept, touched, pcol, result=int(sum(r[1] for r in counts)),
+            write=_spread_writer(levels),
+        )
+
+    removed_compacted = rewrite_generation(
+        spark,
+        root,
+        plan,
+        vacuum_keep=vacuum_keep,
+        vacuum_min_age_seconds=vacuum_min_age_seconds,
+        adopt=False,
+    )
 
     # fresh committed dirs above the (possibly just-advanced) watermark
     removed_fresh = 0
@@ -775,98 +619,6 @@ def delete_keys_batch_table(
         kept.write.mode("overwrite").parquet(path)
         removed_fresh += int(hits)
     return int(removed_compacted) + removed_fresh
-
-
-def _delete_compacted_cycle(
-    spark: SparkSession,
-    root: str,
-    ids: DataFrame,
-    keys: list[str],
-    vacuum_keep: int,
-    vacuum_min_age_seconds: float | None,
-) -> int:
-    """One pinned-read -> CAS-commit attempt over the compacted half;
-    raises the commit-race IOErrors for the caller's retry loop."""
-    _require_batch_layout(spark, root)
-    base_gen = current_generation(spark, root)
-    if base_gen is None:
-        return 0
-    wm = compacted_watermark(spark, root, generation=base_gen)
-    _, manifest, plain = _gen_manifest(spark, root, base_gen)
-    compacted = _read_compacted(spark, root, generation=base_gen)
-    if compacted is None:
-        return 0
-    fs, _ = _hadoop_path(spark, root)
-    jvm = spark._jvm
-
-    if plain:
-        removed = compacted.join(ids, on=keys, how="left_semi").count()
-        if removed == 0:
-            return 0
-        kept = compacted.join(ids, on=keys, how="left_anti")
-
-        def _write_plain(data_dir: str) -> None:
-            kept.write.mode("overwrite").parquet(data_dir)
-            _write_watermark(spark, data_dir, wm)
-
-        commit_generation(
-            spark, root, _write_plain, expected_base=base_gen
-        )
-    else:
-        from ..sources.sinks import _hive_part_dirname
-
-        pcol = next(iter(manifest)).partition("=")[0]
-        doomed = compacted.join(ids, on=keys, how="left_semi")
-        touched = [
-            (r[0], r[1])
-            for r in doomed.groupBy(pcol)
-            .agg(F.count("*").alias("_n"))
-            .collect()
-        ]
-        if not touched:
-            return 0
-        removed = int(sum(n for _, n in touched))
-        vals = [v for v, _ in touched]
-        non_null = [v for v in vals if v is not None]
-        pred = F.col(pcol).isin(non_null) if non_null else F.lit(False)
-        if any(v is None for v in vals):
-            pred = pred | F.col(pcol).isNull()
-        touched_names = {_hive_part_dirname(pcol, v) for v in vals}
-        # deeper partition levels (if any) come from the holder dir of
-        # the first touched entry, so the rewrite preserves the layout
-        first_touched = next(
-            n for n in manifest if n in touched_names
-        )
-        holder_dir = _gen_dir(root, manifest[first_touched])
-        levels = [pcol] + _hive_levels(
-            fs, jvm, f"{holder_dir}/{first_touched}"
-        )
-        kept = compacted.filter(pred).join(ids, on=keys, how="left_anti")
-
-        def _write_hive(data_dir: str) -> None:
-            _, data_p = _hadoop_path(spark, data_dir)
-            _spread_within_partitions(kept, levels).write.partitionBy(
-                *levels
-            ).mode("overwrite").parquet(data_dir)
-            # carry every untouched entry by reference; a touched entry
-            # whose rows were all doomed appears nowhere — gone
-            refs = {
-                n: g for n, g in manifest.items() if n not in touched_names
-            }
-            if refs:
-                write_generation_refs(spark, data_dir, refs)
-            _write_watermark(spark, data_dir, wm)
-
-        commit_generation(spark, root, _write_hive, expected_base=base_gen)
-
-    if vacuum_min_age_seconds is None:
-        from ..sources.versioned import DEFAULT_MAINTENANCE_MIN_AGE_SECONDS
-
-        vacuum_min_age_seconds = DEFAULT_MAINTENANCE_MIN_AGE_SECONDS
-    vacuum_versions(
-        spark, root, keep=vacuum_keep, min_age_seconds=vacuum_min_age_seconds
-    )
-    return int(removed)
 
 
 def migrate_batch_layout(

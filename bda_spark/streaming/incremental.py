@@ -30,7 +30,6 @@ from pyspark.sql import functions as F
 from ..operators.dedup import minhash_index, minhash_match_new
 from ..sources.batch import read_parquet
 from ..sources.sinks import _hadoop_path, idempotent_merge_parquet
-from ..sources.versioned import is_versioned
 
 
 def stream_dedup_against_index(
@@ -80,9 +79,9 @@ def stream_dedup_against_index(
             batch, id_col, text_col, ngram, num_hashes, seed
         ).localCheckpoint(eager=True)
         fs, index_p = _hadoop_path(spark, index_path)
-        if is_versioned(spark, index_path) or fs.exists(index_p):
-            # read_parquet resolves versioned roots (a migrated index
-            # keeps working); a raw spark.read.parquet would see only
+        if fs.exists(index_p):
+            # read_parquet resolves versioned roots (every merge
+            # commits one); a raw spark.read.parquet would see only
             # the underscore-prefixed generation dirs and fail
             index = read_parquet(spark, index_path)
             # redelivery guard: a doc whose id is ALREADY indexed was
@@ -297,7 +296,7 @@ def stream_corpus_ingest(
             batch, "doc_id", "text", ngram, num_hashes, seed
         ).localCheckpoint(eager=True)
         fs, index_p = _hadoop_path(spark, index_path)
-        have_index = is_versioned(spark, index_path) or fs.exists(index_p)
+        have_index = fs.exists(index_p)
         if have_index:
             index = read_parquet(spark, index_path)
             fresh_sigs = sigs.join(

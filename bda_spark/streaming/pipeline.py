@@ -322,7 +322,6 @@ class TickPipeline:
             idempotent_merge_parquet(
                 self.spark, labels, self.labels_path,
                 keys=["symbol", "window_start"],
-                versioned=True,
             )
         finally:
             windowed.unpersist()
@@ -447,11 +446,10 @@ class TickPipeline:
             return preds.withColumn("label", F.lit(None).cast("double"))
         from ..sources.batch import read_parquet
 
-        # versioned-aware: the labels table is a reader-atomic
-        # generation root (versioned=True merges), so a read never
-        # races a concurrent merge's commit — a PLAIN labels dir from a
-        # pre-versioned checkpoint still resolves through the same
-        # reader (passthrough branch)
+        # versioned-aware: every labels merge commits a reader-atomic
+        # generation, so a read never races a concurrent merge's commit
+        # — a PLAIN labels dir from an older writer still resolves
+        # through the same reader (passthrough branch)
         labels = read_parquet(self.spark, self.labels_path)
         bucketed = preds.withColumn(
             "window_start", F.window("event_time", self.window)["start"]

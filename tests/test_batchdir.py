@@ -676,7 +676,7 @@ def test_compaction_cas_retries_and_preserves_racing_delete(
     race, retry against the new generation, and the final table must
     NOT resurrect the deleted row (the lost update an unguarded
     compactor would publish)."""
-    import bda_spark.streaming.batchdir as bd
+    import bda_spark.sources.versioned as versioned
     from bda_spark.sources.versioned import (
         commit_generation as real_commit,
     )
@@ -702,7 +702,7 @@ def test_compaction_cas_retries_and_preserves_racing_delete(
             spark_, root_, write_fn, expected_base=expected_base
         )
 
-    monkeypatch.setattr(bd, "commit_generation", racing_commit)
+    monkeypatch.setattr(versioned, "commit_generation", racing_commit)
     wm = compact_batch_dirs(spark, root, partition_by=["day"])
     monkeypatch.undo()
     assert wm == 1

@@ -17,7 +17,9 @@ from pyspark.sql import Row
 from pyspark.sql import functions as F
 
 from bda_spark.operators.deletes import delete_docs, filter_tombstoned
+from bda_spark.sources.batch import read_parquet
 from bda_spark.sources.sinks import delete_keys_parquet
+from bda_spark.sources.versioned import _gen_dir, generation_manifest
 
 BASE = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
 
@@ -36,7 +38,7 @@ def _tree(path: str) -> dict[str, float]:
     return out
 
 
-# --- delete_keys_parquet: the three layouts --------------------------
+# --- delete_keys_parquet: flat, partitioned, versioned ----------------
 
 
 def test_flat_delete_and_replay_noop(spark, tmp_path):
@@ -48,7 +50,7 @@ def test_flat_delete_and_replay_noop(spark, tmp_path):
         spark, _ids(spark, [3, 7, 999]), path, keys=["doc_id"]
     )
     assert removed == 2
-    assert {r.doc_id for r in spark.read.parquet(path).collect()} == (
+    assert {r.doc_id for r in read_parquet(spark, path).collect()} == (
         set(range(10)) - {3, 7}
     )
     before = _tree(path)
@@ -76,15 +78,18 @@ def test_partitioned_delete_touches_only_doomed_partitions(spark, tmp_path):
         partition_col="cell",
     )
     assert removed == 3
-    got = spark.read.parquet(path)
+    got = read_parquet(spark, path)
     assert got.count() == 37
     assert {r.doc_id for r in got.filter("cell in (0, 2)").collect()} == (
         {i for i in range(40) if i % 4 in (0, 2)} - {0, 2, 4}
     )
-    # cells 1 and 3 were never rewritten
+    # cells 1 and 3 were never rewritten: the plain dir became
+    # generation 1 and the delete's generation 2 references them there
+    manifest, _plain = generation_manifest(spark, path, 2)
+    assert manifest == {"cell=0": 2, "cell=1": 1, "cell=2": 2, "cell=3": 1}
     untouched_after = {
-        k: v for k, v in _tree(path).items() if k.startswith("cell=1/")
-        or k.startswith("cell=3/")
+        k: v for k, v in _tree(_gen_dir(path, 1)).items()
+        if k.startswith("cell=1/") or k.startswith("cell=3/")
     }
     assert untouched_after == untouched_before
     # replay: no hits, no writes anywhere
@@ -110,8 +115,9 @@ def test_partitioned_delete_removes_emptied_partition(spark, tmp_path):
         partition_col="cell",
     )
     assert removed == 2
-    assert not os.path.exists(os.path.join(path, "cell=1"))
-    got = spark.read.parquet(path)
+    manifest, _plain = generation_manifest(spark, path, 2)
+    assert sorted(manifest) == ["cell=0", "cell=2"]
+    got = read_parquet(spark, path)
     assert {(r.doc_id, r.cell) for r in got.collect()} == {
         (1, 0), (2, 0), (5, 2),
     }
@@ -183,7 +189,7 @@ def test_deleted_doc_stops_matching_minhash(spark, tmp_path):
         return {
             (r.new_id, r.corpus_id)
             for r in minhash_match_new(
-                probe, spark.read.parquet(idx), threshold=0.5
+                probe, read_parquet(spark, idx), threshold=0.5
             ).collect()
         }
 
@@ -243,9 +249,11 @@ def test_deleted_vec_stops_matching_semantic_and_cells_prune(
     removed = delete_docs(spark, [0], semantic_index_path=path)
     assert removed == {"semantic_index": 1}
     assert matches() == set()
+    # the plain cells dir became generation 1; every other cell is
+    # still there, untouched, referenced by the delete's generation
     others_after = {
         k: v
-        for k, v in _tree(cells).items()
+        for k, v in _tree(_gen_dir(cells, 1)).items()
         if not k.startswith(f"centroid_id={doomed_cell}/")
     }
     assert others_after == others_before  # O(touched cells), measured
@@ -304,7 +312,7 @@ def test_delete_docs_scrubs_flags_both_sides(spark, tmp_path):
     assert removed == {"flags_0": 2}  # corpus side of one, new side of other
     assert {
         (r.new_id, r.corpus_id)
-        for r in spark.read.parquet(flags).collect()
+        for r in read_parquet(spark, flags).collect()
     } == {(102, 2)}
 
 
@@ -348,7 +356,7 @@ def test_tombstones_block_replayed_batch_resurrection(spark, tmp_path):
 
     run("ckpt1")
     assert {
-        r.doc_id for r in spark.read.parquet(index_path).collect()
+        r.doc_id for r in read_parquet(spark, index_path).collect()
     } == {1, 2}
     removed = delete_docs(
         spark, [1], minhash_index_path=index_path, tombstones_path=ts_path
@@ -357,7 +365,7 @@ def test_tombstones_block_replayed_batch_resurrection(spark, tmp_path):
     # redelivery: fresh checkpoint replays the SAME source files
     run("ckpt2")
     assert {
-        r.doc_id for r in spark.read.parquet(index_path).collect()
+        r.doc_id for r in read_parquet(spark, index_path).collect()
     } == {2}
     # replayed delete after the replayed batch: still a no-op
     assert delete_docs(
@@ -374,14 +382,13 @@ def test_filter_tombstoned_noop_without_table(spark, tmp_path):
 # --- r12 ADVICE fixes --------------------------------------------------
 
 
-def test_replayed_delete_heals_crash_between_flat_swap_renames(
-    spark, tmp_path
-):
-    """ADVICE r11 #1: a crash in the flat branch BETWEEN
-    rename(target, __merge_old) and rename(tmp, target) leaves the only
+def test_replayed_delete_refuses_stranded_flat_swap(spark, tmp_path):
+    """An older writer's crash in its flat swap BETWEEN
+    rename(target, __merge_old) and rename(tmp, target) left the only
     copy of the table under __merge_old with target absent. Replaying
-    the delete must run the recovery preamble BEFORE the missing-table
-    early return — heal the table, then apply the delete."""
+    the delete must refuse, naming that dir — never report 0 rows
+    removed from a table that merely looks absent — and move
+    nothing."""
     import shutil
 
     path = str(tmp_path / "t")
@@ -393,13 +400,12 @@ def test_replayed_delete_heals_crash_between_flat_swap_renames(
     # completed-but-unrenamed write — worst case: only __merge_old)
     shutil.move(path, path + "__merge_old")
     assert not os.path.exists(path)
-    removed = delete_keys_parquet(
-        spark, _ids(spark, [3, 7]), path, keys=["doc_id"]
-    )
-    assert removed == 2
-    assert {r.doc_id for r in spark.read.parquet(path).collect()} == (
-        set(range(10)) - {3, 7}
-    )
+    with pytest.raises(IOError, match="__merge_old"):
+        delete_keys_parquet(spark, _ids(spark, [3, 7]), path, keys=["doc_id"])
+    assert os.listdir(tmp_path) == ["t__merge_old"]
+    assert {
+        r.doc_id for r in spark.read.parquet(path + "__merge_old").collect()
+    } == set(range(10))
 
 
 def test_delete_docs_string_keys_roundtrip(spark, tmp_path):
@@ -412,7 +418,7 @@ def test_delete_docs_string_keys_roundtrip(spark, tmp_path):
     ).write.parquet(path)
     removed = delete_docs(spark, ["doc-2", "doc-4"], corpus_path=path)
     assert removed == {"corpus": 2}
-    assert {r.doc_id for r in spark.read.parquet(path).collect()} == {
+    assert {r.doc_id for r in read_parquet(spark, path).collect()} == {
         "doc-0", "doc-1", "doc-3", "doc-5"
     }
     with pytest.raises(TypeError):
@@ -448,16 +454,17 @@ def test_tombstones_table_is_versioned_reader_atomic(spark, tmp_path):
 def test_interleaved_merge_and_delete_generation_commits(
     spark, tmp_path, monkeypatch
 ):
-    """A delete racing a merge on the same versioned root: the writer
-    whose read-modify-write derives from a generation that a
-    competitor superseded mid-flight must FAIL LOUDLY (IOError), its
-    commit must not land, and readers must observe either the pre- or
-    the post-winner table — never a half state and never a lost
-    update. The interleave is made deterministic by injecting the
-    competing merge exactly between the delete's pinned read and its
-    commit_generation call."""
+    """A delete racing a merge on the same versioned root: the attempt
+    whose read-modify-write derives from a generation that a competitor
+    superseded mid-flight must be REJECTED (CommitRace "stale writer")
+    with nothing committed, and the delete then reruns against the
+    winner's generation — so both writes land, and readers observe the
+    pre-, mid- or post-table, never a half state or a lost update. The
+    interleave is made deterministic by injecting the competing merge
+    exactly between the delete's pinned read and its commit."""
     from bda_spark.sources import sinks, versioned
     from bda_spark.sources.versioned import (
+        CommitRace,
         current_generation,
         read_versioned,
     )
@@ -467,13 +474,13 @@ def test_interleaved_merge_and_delete_generation_commits(
         [(i, f"v{i}") for i in range(10)], "doc_id long, v string"
     )
     sinks.idempotent_merge_parquet(
-        spark, rows, path, keys=["doc_id"], versioned=True,
-        vacuum_min_age_seconds=0.0,
+        spark, rows, path, keys=["doc_id"], vacuum_min_age_seconds=0.0,
     )
     base = current_generation(spark, path)
 
     real_commit = versioned.commit_generation
     injected = {"done": False}
+    rejected: list[str] = []
 
     def racing_commit(spark_, root, write_fn, expected_base=None):
         if not injected["done"]:
@@ -488,34 +495,42 @@ def test_interleaved_merge_and_delete_generation_commits(
                 keys=["doc_id"],
                 vacuum_min_age_seconds=0.0,
             )
-        return real_commit(
-            spark_, root, write_fn, expected_base=expected_base
-        )
+            assert current_generation(spark_, root) == base + 1
+        try:
+            return real_commit(
+                spark_, root, write_fn, expected_base=expected_base
+            )
+        except CommitRace as e:
+            rejected.append(str(e))
+            # the loser left nothing behind: the winner's merge is
+            # intact and the chain advanced exactly once
+            got = {
+                r.doc_id: r.v for r in read_versioned(spark_, root).collect()
+            }
+            assert got[5] == "MERGED" and 3 in got and 7 in got
+            assert len(got) == 10
+            assert current_generation(spark_, root) == base + 1
+            raise
 
     monkeypatch.setattr(versioned, "commit_generation", racing_commit)
-    monkeypatch.setattr(sinks, "commit_generation", racing_commit, raising=False)
-    with pytest.raises(IOError, match="stale writer"):
-        sinks.delete_keys_parquet(
-            spark, _ids(spark, [3, 7]), path, keys=["doc_id"]
-        )
+    removed = sinks.delete_keys_parquet(
+        spark, _ids(spark, [3, 7]), path, keys=["doc_id"]
+    )
     monkeypatch.undo()
-    # the loser left nothing behind: the winner's merge is intact,
-    # the delete did NOT apply, and the chain advanced exactly once
-    got = {
-        r.doc_id: r.v for r in read_versioned(spark, path).collect()
-    }
-    assert got[5] == "MERGED" and 3 in got and 7 in got
-    assert len(got) == 10
-    assert current_generation(spark, path) == base + 1
-    # replaying the failed delete against the new generation succeeds
+    assert len(rejected) == 1 and "stale writer" in rejected[0]
+    # the rerun derived from the winner's generation: both writes kept
+    assert removed == 2
+    assert current_generation(spark, path) == base + 2
+    got = {r.doc_id: r.v for r in read_versioned(spark, path).collect()}
+    assert set(got) == set(range(10)) - {3, 7}
+    assert got[5] == "MERGED"
+    # replaying the delete is a no-op
     assert (
         sinks.delete_keys_parquet(
             spark, _ids(spark, [3, 7]), path, keys=["doc_id"]
         )
-        == 2
+        == 0
     )
-    left = {r.doc_id for r in read_versioned(spark, path).collect()}
-    assert left == set(range(10)) - {3, 7}
 
 
 def test_stale_expected_base_rejected_loudly(spark, tmp_path):
@@ -601,9 +616,7 @@ def test_delete_into_legacy_doc_id_only_tombstones_table(spark, tmp_path):
     legacy.write.parquet(plain)
     # layout B: versioned root, doc_id-only generation
     versioned = str(tmp_path / "versioned_ts")
-    idempotent_merge_parquet(
-        spark, legacy, versioned, keys=["doc_id"], versioned=True
-    )
+    idempotent_merge_parquet(spark, legacy, versioned, keys=["doc_id"])
     assert is_versioned(spark, versioned)
 
     for path in (plain, versioned):
@@ -662,9 +675,7 @@ def test_vacuum_spares_tombstone_refreshed_mid_vacuum(
     stale = spark.createDataFrame([(7,)], "doc_id long").withColumn(
         "tombstoned_at", F.lit("2020-01-01 00:00:00").cast("timestamp")
     )
-    idempotent_merge_parquet(
-        spark, stale, ts_path, keys=["doc_id"], versioned=True
-    )
+    idempotent_merge_parquet(spark, stale, ts_path, keys=["doc_id"])
 
     fired = {"n": 0}
 

@@ -10,6 +10,8 @@ import os
 
 import pytest
 
+from bda_spark.sources.batch import read_parquet
+
 
 BASE = "alpha beta gamma delta epsilon zeta eta theta iota kappa " * 4
 
@@ -64,11 +66,11 @@ def test_stream_dedup_flags_cross_batch_near_dup(spark, doc_stream_dir, tmp_path
     assert q.awaitTermination(300), "incremental dedup stream wedged"
     assert q.exception() is None, q.exception()
 
-    index = spark.read.parquet(index_path)
+    index = read_parquet(spark, index_path)
     assert {r["doc_id"] for r in index.select("doc_id").collect()} == {
         1, 2, 101, 102,
     }
-    flags = spark.read.parquet(flags_path).collect()
+    flags = read_parquet(spark, flags_path).collect()
     assert {(r["new_id"], r["corpus_id"]) for r in flags} == {(101, 1)}
     assert all(r["est_jaccard"] > 0.5 for r in flags)
 
@@ -87,8 +89,8 @@ def test_stream_dedup_flags_cross_batch_near_dup(spark, doc_stream_dir, tmp_path
     )
     assert q2.awaitTermination(300)
     assert q2.exception() is None, q2.exception()
-    assert spark.read.parquet(index_path).count() == 4
-    again = spark.read.parquet(flags_path).collect()
+    assert read_parquet(spark, index_path).count() == 4
+    again = read_parquet(spark, flags_path).collect()
     assert {(r["new_id"], r["corpus_id"]) for r in again} == {(101, 1)}
     assert len(again) == 1
 
@@ -162,19 +164,19 @@ def test_stream_corpus_ingest_fates_and_growth(spark, tmp_path):
     run("ckpt1")
     fates = {
         r.doc_id: r.fate
-        for r in spark.read.parquet(paths["fates_path"]).collect()
+        for r in read_parquet(spark, paths["fates_path"]).collect()
     }
     assert fates == {
         1: "kept", 2: "quality", 3: "contaminated",
         101: "neardup", 102: "kept", 103: "contaminated",
     }
     corpus_ids = {
-        r.doc_id for r in spark.read.parquet(paths["corpus_path"]).collect()
+        r.doc_id for r in read_parquet(spark, paths["corpus_path"]).collect()
     }
     assert corpus_ids == {1, 102}
     index_ids = {
         r.doc_id
-        for r in spark.read.parquet(paths["index_path"])
+        for r in read_parquet(spark, paths["index_path"])
         .select("doc_id").collect()
     }
     assert index_ids == {1, 102}
@@ -182,7 +184,7 @@ def test_stream_corpus_ingest_fates_and_growth(spark, tmp_path):
     run("ckpt2")  # fresh checkpoint, same sinks
     assert {
         r.doc_id: r.fate
-        for r in spark.read.parquet(paths["fates_path"]).collect()
+        for r in read_parquet(spark, paths["fates_path"]).collect()
     } == fates
-    assert spark.read.parquet(paths["corpus_path"]).count() == 2
-    assert spark.read.parquet(paths["index_path"]).count() == 2
+    assert read_parquet(spark, paths["corpus_path"]).count() == 2
+    assert read_parquet(spark, paths["index_path"]).count() == 2

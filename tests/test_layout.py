@@ -10,8 +10,9 @@ import os
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
-from bda_spark.sources.batch import load_table
+from bda_spark.sources.batch import load_table, read_parquet
 from bda_spark.sources.layout import write_range_sorted
+from bda_spark.sources.versioned import resolve_table
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -97,19 +98,23 @@ def test_compaction_shrinks_files_and_preserves_rows(spark, tmp_path):
     before = {tuple(r) for r in spark.read.parquet(dest).collect()}
 
     n = compact_parquet(spark, dest, target_file_bytes=1024 * 1024)
-    after_files = len(glob.glob(os.path.join(dest, "*.parquet")))
+    current = resolve_table(spark, dest)
+    after_files = len(glob.glob(os.path.join(current, "*.parquet")))
     assert after_files == n < before_files
-    after = {tuple(r) for r in spark.read.parquet(dest).collect()}
+    after = {tuple(r) for r in read_parquet(spark, dest).collect()}
     assert after == before
     # no staging dirs left behind
     assert not os.path.exists(dest + "__compact_tmp")
     assert not os.path.exists(dest + "__compact_old")
 
 
-def test_compaction_heals_a_crashed_swap(spark, tmp_path):
-    """If a crash left the table moved aside (live dir missing), the
-    next compaction restores it before doing anything else."""
+def test_compaction_refuses_a_crashed_swap_sibling(spark, tmp_path):
+    """If an older writer's crashed swap left the table moved aside
+    (live dir missing, its only copy in __compact_old), compaction
+    refuses, naming that dir, and moves nothing."""
     import shutil
+
+    import pytest as _pytest
 
     from bda_spark.sources.layout import compact_parquet
 
@@ -121,9 +126,11 @@ def test_compaction_heals_a_crashed_swap(spark, tmp_path):
     shutil.move(dest, dest + "__compact_old")
     assert not os.path.exists(dest)
 
-    compact_parquet(spark, dest, target_file_bytes=64 * 1024 * 1024)
-    healed = {tuple(r) for r in spark.read.parquet(dest).collect()}
-    assert healed == expected
+    with _pytest.raises(IOError, match="__compact_old"):
+        compact_parquet(spark, dest, target_file_bytes=64 * 1024 * 1024)
+    assert os.listdir(tmp_path) == ["crashed__compact_old"]
+    aside = {tuple(r) for r in spark.read.parquet(dest + "__compact_old").collect()}
+    assert aside == expected
 
 
 def test_bloom_filters_land_in_footers_only_where_asked(spark, tmp_path):
@@ -194,8 +201,8 @@ def test_zorder_prunes_on_every_participating_dimension(spark, tmp_path):
 
 def test_optimize_table_reclusters_in_place_crash_safely(spark, tmp_path):
     """One maintenance call: micro-batch sprawl -> few z-ordered files
-    with blooms, same rows, no staging dirs left, and the swap heals a
-    simulated crash like compact_parquet's."""
+    with blooms, same rows, no staging dirs left, committed as a new
+    generation, and a second optimize re-clusters it as the next."""
     from bda_spark.sources.layout import bloom_filter_columns, optimize_table
 
     ev = load_table(spark, SF_DIR, "events")
@@ -210,19 +217,17 @@ def test_optimize_table_reclusters_in_place_crash_safely(spark, tmp_path):
         target_file_bytes=1024 * 1024,
         bloom_filter_cols={"user_id": 100},
     )
-    files = glob.glob(os.path.join(dest, "*.parquet"))
+    current = resolve_table(spark, dest)
+    files = glob.glob(os.path.join(current, "*.parquet"))
     assert len(files) == n < 32
-    assert {tuple(r) for r in spark.read.parquet(dest).collect()} == before
-    assert bloom_filter_columns(spark, dest)["user_id"]
+    assert {tuple(r) for r in read_parquet(spark, dest).collect()} == before
+    assert bloom_filter_columns(spark, current)["user_id"]
     assert not os.path.exists(dest + "__compact_tmp")
     assert not os.path.exists(dest + "__compact_old")
-
-    # crash healing: table moved aside, next optimize restores + runs
-    import shutil
-
-    shutil.move(dest, dest + "__compact_old")
+    # a second optimize re-clusters the versioned table in place
     optimize_table(spark, dest, range_col="event_id", target_file_bytes=1024 * 1024)
-    assert {tuple(r) for r in spark.read.parquet(dest).collect()} == before
+    assert resolve_table(spark, dest) != current
+    assert {tuple(r) for r in read_parquet(spark, dest).collect()} == before
 
 
 def test_footer_stats_aggregate_is_pushed_and_exact(spark):

@@ -11,7 +11,7 @@ from bda_spark.operators.quantize import (
     sq8_quantize,
     sq8_topk,
 )
-from bda_spark.sources.batch import load_table
+from bda_spark.sources.batch import load_table, read_parquet
 
 SF_DIR = "/root/testdata/sf0.001"
 
@@ -378,7 +378,7 @@ def test_index_append_keeps_one_row_per_vec_id_on_the_bisector(
 
     for i in range(6):
         ivf_sq8_index_append(spark, path, emb.filter(F.col("vec_id") == 5000 + i))
-    codes = spark.read.parquet(f"{path}/codes")
+    codes = read_parquet(spark, f"{path}/codes")
     dup = codes.groupBy("vec_id").count().filter(F.col("count") > 1).count()
     assert dup == 0, f"{dup} re-appended vec_ids now sit in two cells"
     assert codes.count() == len(rows)

@@ -16,6 +16,7 @@ from bda_spark.operators.similarity import (
     semantic_dedup,
     semantic_neardup_pairs,
 )
+from bda_spark.sources.batch import read_parquet
 
 DIM = 16
 
@@ -270,15 +271,15 @@ def test_index_append_idempotent_and_drift(spark, built_index):
     )
 
     emb, path = built_index
-    n0 = spark.read.parquet(f"{path}/cells").count()
+    n0 = read_parquet(spark, f"{path}/cells").count()
     rng = np.random.default_rng(29)
     novel = _embeddings(spark, [(6000, rng.normal(size=DIM))])
     r1 = semantic_index_append(spark, path, novel)
     assert r1["appended"] == 1 and r1["cells_touched"] == 1
-    assert spark.read.parquet(f"{path}/cells").count() == n0 + 1
+    assert read_parquet(spark, f"{path}/cells").count() == n0 + 1
     # replay: same batch upserts, no growth
     semantic_index_append(spark, path, novel)
-    assert spark.read.parquet(f"{path}/cells").count() == n0 + 1
+    assert read_parquet(spark, f"{path}/cells").count() == n0 + 1
     # later batches match against the appended vector
     twin = _embeddings(
         spark, [(6001, novel.collect()[0].embedding)]
@@ -349,15 +350,15 @@ def test_stream_semantic_dedup_cross_batch(spark, tmp_path):
         assert q.exception() is None, q.exception()
 
     run("ckpt1")
-    cells = spark.read.parquet(str(tmp_path / "semidx" / "cells"))
+    cells = read_parquet(spark, str(tmp_path / "semidx" / "cells"))
     assert {r.vec_id for r in cells.select("vec_id").collect()} == {
         1, 2, 101, 102,
     }
-    flags = spark.read.parquet(str(tmp_path / "flags")).collect()
+    flags = read_parquet(spark, str(tmp_path / "flags")).collect()
     assert {(r.new_id, r.corpus_id) for r in flags} == {(101, 1)}
     run("ckpt2")  # fresh checkpoint, same sinks: nothing duplicates
-    assert spark.read.parquet(str(tmp_path / "semidx" / "cells")).count() == 4
-    again = spark.read.parquet(str(tmp_path / "flags")).collect()
+    assert read_parquet(spark, str(tmp_path / "semidx" / "cells")).count() == 4
+    again = read_parquet(spark, str(tmp_path / "flags")).collect()
     assert {(r.new_id, r.corpus_id) for r in again} == {(101, 1)}
     assert len(again) == 1
 
@@ -792,13 +793,13 @@ def test_stream_semantic_dedup_against_two_level_index(spark, tmp_path):
         assert q.exception() is None, q.exception()
 
     run("ckpt1")
-    flags = spark.read.parquet(str(tmp_path / "flags")).collect()
+    flags = read_parquet(spark, str(tmp_path / "flags")).collect()
     assert {(r.new_id, r.corpus_id) for r in flags} == {(9007, 7)}
-    cells = spark.read.parquet(f"{idx}/cells")
+    cells = read_parquet(spark, f"{idx}/cells")
     assert cells.count() == n + 2
     run("ckpt2")  # replay: keyed merges, nothing duplicates
-    assert spark.read.parquet(f"{idx}/cells").count() == n + 2
-    assert spark.read.parquet(str(tmp_path / "flags")).count() == 1
+    assert read_parquet(spark, f"{idx}/cells").count() == n + 2
+    assert read_parquet(spark, str(tmp_path / "flags")).count() == 1
 
 
 @pytest.mark.deep  # r17 tier split (VERDICT r16 #1): minute-class evidence run;

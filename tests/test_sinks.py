@@ -1,5 +1,6 @@
-"""Sink tests (SURVEY §2.1 S4/S6/S7): parquet overwrite/append and the
-idempotent key-merge used by the label-backfill stream."""
+"""Sink tests (SURVEY §2.1 S4/S6/S7): parquet overwrite and the
+idempotent key-merge used by the label-backfill stream, which commits
+every rewrite as a versioned generation."""
 
 from __future__ import annotations
 
@@ -8,10 +9,16 @@ import os
 import pytest
 from pyspark.sql import Row
 
+from bda_spark.sources.batch import read_parquet
 from bda_spark.sources.sinks import (
-    append_parquet,
     idempotent_merge_parquet,
     overwrite_parquet,
+)
+from bda_spark.sources.versioned import (
+    _gen_dir,
+    current_generation,
+    is_versioned,
+    read_generation_refs,
 )
 
 
@@ -19,10 +26,9 @@ def _rows(spark, data):
     return spark.createDataFrame([Row(k=k, v=v) for k, v in data], "k int, v string")
 
 
-def test_overwrite_and_append(spark, tmp_path):
+def test_overwrite_replaces_whole_table(spark, tmp_path):
     p = str(tmp_path / "t")
-    overwrite_parquet(_rows(spark, [(1, "a")]), p)
-    append_parquet(_rows(spark, [(2, "b")]), p)
+    overwrite_parquet(_rows(spark, [(1, "a"), (2, "b")]), p)
     got = {(r.k, r.v) for r in spark.read.parquet(p).collect()}
     assert got == {(1, "a"), (2, "b")}
     overwrite_parquet(_rows(spark, [(3, "c")]), p, partition_by=["k"])
@@ -32,7 +38,7 @@ def test_overwrite_and_append(spark, tmp_path):
 def test_merge_creates_when_missing(spark, tmp_path):
     p = str(tmp_path / "t")
     idempotent_merge_parquet(spark, _rows(spark, [(1, "a")]), p, ["k"])
-    assert {(r.k, r.v) for r in spark.read.parquet(p).collect()} == {(1, "a")}
+    assert {(r.k, r.v) for r in read_parquet(spark, p).collect()} == {(1, "a")}
 
 
 def test_merge_upserts_by_key(spark, tmp_path):
@@ -40,11 +46,11 @@ def test_merge_upserts_by_key(spark, tmp_path):
     idempotent_merge_parquet(spark, _rows(spark, [(1, "a"), (2, "b")]), p, ["k"])
     # update key 2, insert key 3; key 1 untouched
     idempotent_merge_parquet(spark, _rows(spark, [(2, "B"), (3, "c")]), p, ["k"])
-    got = {(r.k, r.v) for r in spark.read.parquet(p).collect()}
+    got = {(r.k, r.v) for r in read_parquet(spark, p).collect()}
     assert got == {(1, "a"), (2, "B"), (3, "c")}
     # idempotent: replaying the same updates changes nothing
     idempotent_merge_parquet(spark, _rows(spark, [(2, "B"), (3, "c")]), p, ["k"])
-    assert {(r.k, r.v) for r in spark.read.parquet(p).collect()} == got
+    assert {(r.k, r.v) for r in read_parquet(spark, p).collect()} == got
 
 
 def test_merge_leaves_no_temp_dirs(spark, tmp_path):
@@ -86,21 +92,29 @@ def _partition_bytes(path: str, part: str) -> list[tuple[str, bytes]]:
 def test_partitioned_merge_touches_only_updated_partitions(spark, tmp_path):
     """The partition-scoped merge must leave untouched partitions
     byte-identical (no whole-table write amplification) while upserting
-    into touched ones and creating new ones."""
+    into touched ones and creating new ones: the new generation holds
+    the touched partitions and carries the others by reference to the
+    generation that wrote them."""
     p = str(tmp_path / "t")
     idempotent_merge_parquet(
         spark, _prows(spark, [(1, "a", 1), (2, "b", 2), (3, "c", 3)]),
         p, ["k"], partition_col="d",
     )
-    before_d1 = _partition_bytes(p, "d=1")
+    gen1 = _gen_dir(p, 1)
+    before_d1 = _partition_bytes(gen1, "d=1")
     assert before_d1  # the layout really is hive-partitioned
     # update k=2 (in d=2), insert k=4 into brand-new d=4; d=1/d=3 untouched
     idempotent_merge_parquet(
         spark, _prows(spark, [(2, "B", 2), (4, "x", 4)]),
         p, ["k"], partition_col="d",
     )
-    assert _partition_bytes(p, "d=1") == before_d1
-    got = {(r.k, r.v, r.d) for r in spark.read.parquet(p).collect()}
+    assert current_generation(spark, p) == 2
+    assert read_generation_refs(spark, p, 2) == {"d=1": 1, "d=3": 1}
+    assert sorted(
+        n for n in os.listdir(_gen_dir(p, 2)) if n.startswith("d=")
+    ) == ["d=2", "d=4"]
+    assert _partition_bytes(gen1, "d=1") == before_d1
+    got = {(r.k, r.v, r.d) for r in read_parquet(spark, p).collect()}
     assert got == {(1, "a", 1), (2, "B", 2), (3, "c", 3), (4, "x", 4)}
     # idempotent: replaying the same updates changes nothing, and the
     # untouched partition is STILL byte-identical
@@ -108,51 +122,49 @@ def test_partitioned_merge_touches_only_updated_partitions(spark, tmp_path):
         spark, _prows(spark, [(2, "B", 2), (4, "x", 4)]),
         p, ["k"], partition_col="d",
     )
-    assert _partition_bytes(p, "d=1") == before_d1
-    assert {(r.k, r.v, r.d) for r in spark.read.parquet(p).collect()} == got
+    assert read_generation_refs(spark, p, 3) == {"d=1": 1, "d=3": 1}
+    assert _partition_bytes(gen1, "d=1") == before_d1
+    assert {(r.k, r.v, r.d) for r in read_parquet(spark, p).collect()} == got
     # no merge temp/aside dirs left behind
     assert os.listdir(tmp_path) == ["t"]
 
 
-def test_merge_recovers_partition_stranded_in_merge_old(spark, tmp_path):
-    """Crash window: the process died between rename(dest->aside) and
-    rename(tmp->dest) for one partition — its only copy sits under
-    __merge_old. The NEXT merge must restore it, not delete it."""
+def test_merge_refuses_partition_stranded_in_merge_old(spark, tmp_path):
+    """An older writer's rename swap that crashed between
+    rename(dest->aside) and rename(tmp->dest) left one partition's only
+    copy under __merge_old. The merge must refuse, naming that dir,
+    and change nothing — adopting the table without the partition
+    would drop its rows silently."""
     import shutil
 
     p = str(tmp_path / "t")
-    idempotent_merge_parquet(
-        spark, _prows(spark, [(1, "a", 1), (2, "b", 2)]),
-        p, ["k"], partition_col="d",
-    )
+    _prows(spark, [(1, "a", 1), (2, "b", 2)]).write.partitionBy("d").parquet(p)
     # simulate the mid-swap crash: d=1 moved aside, never replaced
     os.makedirs(p + "__merge_old")
     shutil.move(os.path.join(p, "d=1"), os.path.join(p + "__merge_old", "d=1"))
-    assert not os.path.exists(os.path.join(p, "d=1"))
-    # a merge touching only d=2 must first heal d=1 from the aside dir
-    idempotent_merge_parquet(
-        spark, _prows(spark, [(2, "B", 2)]), p, ["k"], partition_col="d",
-    )
+    with pytest.raises(IOError, match="__merge_old"):
+        idempotent_merge_parquet(
+            spark, _prows(spark, [(2, "B", 2)]), p, ["k"], partition_col="d",
+        )
+    assert not is_versioned(spark, p)
+    assert sorted(os.listdir(tmp_path)) == ["t", "t__merge_old"]
     got = {(r.k, r.v, r.d) for r in spark.read.parquet(p).collect()}
-    assert got == {(1, "a", 1), (2, "B", 2)}
-    assert os.listdir(tmp_path) == ["t"]
+    assert got == {(2, "b", 2)}
 
 
-def test_merge_recovers_whole_table_stranded_in_merge_old(spark, tmp_path):
-    """Unpartitioned crash window: the live dir was moved aside and the
-    replacement rename never happened — the table LOOKS absent. The next
-    merge must restore the aside copy and merge into it, not treat the
-    table as new (which would silently drop every non-updated key)."""
+def test_merge_refuses_whole_table_stranded_in_merge_old(spark, tmp_path):
+    """Unpartitioned crash window of an older writer: the live dir was
+    moved aside and the replacement rename never happened — the table
+    LOOKS absent. The merge must refuse instead of treating the table
+    as new (which would silently drop every non-updated key)."""
     import shutil
 
     p = str(tmp_path / "t")
-    idempotent_merge_parquet(spark, _rows(spark, [(1, "a"), (2, "b")]), p, ["k"])
+    _rows(spark, [(1, "a"), (2, "b")]).write.parquet(p)
     shutil.move(p, p + "__merge_old")
-    assert not os.path.exists(p)
-    idempotent_merge_parquet(spark, _rows(spark, [(2, "B")]), p, ["k"])
-    got = {(r.k, r.v) for r in spark.read.parquet(p).collect()}
-    assert got == {(1, "a"), (2, "B")}
-    assert os.listdir(tmp_path) == ["t"]
+    with pytest.raises(IOError, match="__merge_old"):
+        idempotent_merge_parquet(spark, _rows(spark, [(2, "B")]), p, ["k"])
+    assert os.listdir(tmp_path) == ["t__merge_old"]
 
 
 def test_json_land_and_read_roundtrip(spark, tmp_path):
@@ -192,36 +204,41 @@ def test_partitioned_merge_preserves_null_partition_rows(spark, tmp_path):
     idempotent_merge_parquet(spark, base, path, keys=["k"], partition_col="p")
     upd = spark.createDataFrame([(2, "B2", None)], "k long, v string, p string")
     idempotent_merge_parquet(spark, upd, path, keys=["k"], partition_col="p")
-    got = {r["k"]: (r["v"], r["p"]) for r in spark.read.parquet(path).collect()}
+    got = {r["k"]: (r["v"], r["p"]) for r in read_parquet(spark, path).collect()}
     assert got == {1: ("a", "d1"), 2: ("B2", None), 3: ("c", None)}
 
 
-def test_merge_versioned_true_births_reader_atomic_table(spark, tmp_path):
-    """versioned=True on a FRESH table creates it as a generation root
-    (every later merge commits reader-atomically instead of the plain
-    branch's rename swap — the window a live dashboard's footer read
-    raced in the soak test, hitting FileNotFoundException on a
-    moved-aside part file). Later merges keep upserting by key, and
-    the versioned-aware reader sees exactly the merged table."""
-    from bda_spark.sources.batch import read_parquet
-    from bda_spark.sources.sinks import idempotent_merge_parquet
-    from bda_spark.sources.versioned import is_versioned
-
+def test_every_merge_births_a_versioned_root(spark, tmp_path):
+    """Every merge commits a reader-atomic generation — flat or
+    partition-scoped, into a fresh root or a plain dir an older writer
+    left (adopted once as generation 1) — so a reader polling between
+    per-micro-batch merges never observes a missing table (the window a
+    live dashboard's footer read raced in the soak test, hitting
+    FileNotFoundException on a moved-aside part file). Later merges
+    keep upserting by key, and the versioned-aware reader sees exactly
+    the merged table."""
     path = str(tmp_path / "labels")
     a = spark.createDataFrame([(1, 10.0), (2, 20.0)], "k long, v double")
-    idempotent_merge_parquet(spark, a, path, keys=["k"], versioned=True)
-    assert is_versioned(spark, path)
+    idempotent_merge_parquet(spark, a, path, keys=["k"])
+    assert current_generation(spark, path) == 1
     b = spark.createDataFrame([(2, 99.0), (3, 30.0)], "k long, v double")
     idempotent_merge_parquet(
-        spark, b, path, keys=["k"], versioned=True,
-        vacuum_min_age_seconds=0.0,
+        spark, b, path, keys=["k"], vacuum_min_age_seconds=0.0,
     )
+    assert current_generation(spark, path) == 2
     got = {r.k: r.v for r in read_parquet(spark, path).collect()}
     assert got == {1: 10.0, 2: 99.0, 3: 30.0}
-    import pytest as _pytest
+    assert sorted(os.listdir(path)) == ["_commits", "_versions"]
 
-    with _pytest.raises(ValueError, match="versioned=True and partition_col"):
-        idempotent_merge_parquet(
-            spark, b, str(tmp_path / "other"), keys=["k"],
-            partition_col="k", versioned=True,
-        )
+    parted = str(tmp_path / "parted")
+    idempotent_merge_parquet(
+        spark, a.withColumn("d", a.k % 2), parted, keys=["k"], partition_col="d",
+    )
+    assert current_generation(spark, parted) == 1
+
+    plain = str(tmp_path / "plain")
+    a.write.parquet(plain)
+    idempotent_merge_parquet(spark, b, plain, keys=["k"])
+    assert current_generation(spark, plain) == 2  # adopted as 1, merged as 2
+    assert sorted(os.listdir(plain)) == ["_commits", "_versions"]
+    assert {r.k: r.v for r in read_parquet(spark, plain).collect()} == got

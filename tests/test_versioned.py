@@ -186,8 +186,9 @@ def test_idempotent_merge_on_versioned_root(spark, tmp_path):
     # replay: idempotent, one more generation, same content
     idempotent_merge_parquet(spark, upd, root, keys=["k"])
     assert {r["k"]: r["v"] for r in read_versioned(spark, root).collect()} == got
-    # partitioned merge on a versioned root is an explicit error
-    with pytest.raises(ValueError, match="versioned"):
+    # a partition-scoped merge cannot re-lay an unpartitioned
+    # generation: an explicit error, not a mixed layout
+    with pytest.raises(ValueError, match="unpartitioned"):
         idempotent_merge_parquet(
             spark, upd.withColumn("p", upd["k"] % 2), root,
             keys=["k"], partition_col="p",
