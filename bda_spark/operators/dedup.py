@@ -580,7 +580,6 @@ def minhash_neardup_pairs(
 def dedup_corpus(
     docs: DataFrame,
     threshold: float = 0.5,
-    canonicalize: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
     **minhash_kwargs,
@@ -608,11 +607,7 @@ def dedup_corpus(
     density. Deterministic: min-id keep rule everywhere, no rand()."""
     from ..functions.text import canonicalize_text_col
 
-    canon = (
-        canonicalize_text_col(text_col)
-        if canonicalize
-        else F.col(text_col)
-    )
+    canon = canonicalize_text_col(text_col)
     keyed = docs.withColumn("_dc_fp", F.md5(canon))
     # r13 shape: survivors via min_by over the fingerprint group —
     # full rows ride ONE hash aggregation whose map-side combine
@@ -643,13 +638,7 @@ def dedup_corpus(
     )
 
     # near-dup over canonical text so 'Hello, World' ~ 'hello world!'
-    near_input = (
-        survivors.withColumn("_dc_canon", canon).select(
-            F.col(id_col), F.col("_dc_canon").alias("_dc_text")
-        )
-        if canonicalize
-        else survivors.select(id_col, F.col(text_col).alias("_dc_text"))
-    )
+    near_input = survivors.select(F.col(id_col), canon.alias("_dc_text"))
     pairs = minhash_neardup_pairs(
         near_input,
         threshold=threshold,

@@ -1959,8 +1959,6 @@ def embedding_neardup_auto(
     method: str = "auto",
     seed: int = 42,
     n_vecs: int | None = None,
-    simhash_kwargs: dict | None = None,
-    semantic_kwargs: dict | None = None,
 ) -> DataFrame:
     """Embedding near-dup pairs with the family choice made by the
     repo's own scale measurements — the front door the operators
@@ -1983,8 +1981,7 @@ def embedding_neardup_auto(
       exponent 0.406), ``n_centroids`` derived here so callers get
       the linear configuration without knowing the policy.
 
-    ``method="simhash"`` / ``method="semantic"`` pin a family (the
-    per-family kwargs dicts pass knobs through untouched). Both
+    ``method="simhash"`` / ``method="semantic"`` pin a family. Both
     families return the same contract: (id_a, id_b, cosine), id_a <
     id_b, every emitted pair EXACT-cosine verified at or above
     ``threshold`` — the approximation is candidate recall only
@@ -1998,28 +1995,22 @@ def embedding_neardup_auto(
             else "semantic"
         )
     if method == "simhash":
-        kwargs = dict(simhash_kwargs or {})
-        if n_vecs is not None:
-            # one corpus scan per call, not two (r15 ADVICE): the
-            # router's own count rides into the operator, whose
-            # prefilter-arming / broadcast-cap / quadratic-gate
-            # decisions then read it instead of re-counting the
-            # checkpointed signature frame
-            kwargs.setdefault("n_hint", n_vecs)
+        # one corpus scan per call, not two (r15 ADVICE): the router's
+        # own count rides into the operator, whose prefilter-arming /
+        # broadcast-cap / quadratic-gate decisions then read it instead
+        # of re-counting the checkpointed signature frame
         return simhash_neardup_pairs(
-            embeddings, threshold=threshold, seed=seed, **kwargs
+            embeddings, threshold=threshold, seed=seed, n_hint=n_vecs
         )
     if method == "semantic":
-        kwargs = dict(semantic_kwargs or {})
-        if "n_centroids" not in kwargs:
-            if n_vecs is None:
-                n_vecs = embeddings.count()
-            kwargs["n_centroids"] = max(
-                1, round(n_vecs / _AUTO_NEARDUP_CELL_TARGET)
-            )
-            kwargs.setdefault("n_hint", n_vecs)
+        if n_vecs is None:
+            n_vecs = embeddings.count()
         return semantic_neardup_pairs(
-            embeddings, threshold=threshold, seed=seed, **kwargs
+            embeddings,
+            threshold=threshold,
+            seed=seed,
+            n_centroids=max(1, round(n_vecs / _AUTO_NEARDUP_CELL_TARGET)),
+            n_hint=n_vecs,
         )
     raise ValueError(
         f"embedding_neardup_auto: unknown method {method!r} "

@@ -13,27 +13,37 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
 
 from ..schemas import NEWS_SCHEMA, TESTDATA_TABLES
 
 
-def read_parquet(spark: SparkSession, path: str, schema: StructType | None = None) -> DataFrame:
-    """Parquet scan. Explicit schema skips footer-inference on huge dirs.
-    Versioned roots (sources.versioned — every keyed merge, key delete,
-    compaction and optimize commits a reader-atomic generation)
-    resolve transparently to their current committed generation —
-    through the MANIFEST-AWARE reader, so generations whose partitions
-    are carried by reference (incremental compaction) read complete;
-    plain dirs and files pass through untouched."""
-    from .versioned import is_versioned, read_versioned
+def read_parquet(
+    spark: SparkSession, path: str, generation: int | None = None
+) -> DataFrame:
+    """The reader for every parquet table this engine writes. A
+    versioned root (sources.versioned — every keyed merge, key delete,
+    compaction and optimize commits a reader-atomic generation) reads
+    as its current committed generation, or as ``generation`` (time
+    travel, see ``versioned.resolve_table``), in one scan that includes
+    the partitions the generation carries by reference. A plain dir is
+    one glob-escaped scan of ``path``. Lists the commit chain once."""
+    from .versioned import (
+        _read_generation,
+        current_generation,
+        generation_manifest,
+        glob_escape,
+        resolve_table,
+    )
 
-    if is_versioned(spark, path):
-        return read_versioned(spark, path, schema=schema)
-    reader = spark.read
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.parquet(path)
+    if generation is None:
+        gen = current_generation(spark, path)
+    else:
+        resolve_table(spark, path, generation)  # raises when unavailable
+        gen = int(generation)
+    if gen is None:
+        return spark.read.parquet(glob_escape(path))
+    manifest, plain = generation_manifest(spark, path, gen)
+    return _read_generation(spark, path, gen, manifest, plain)
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:

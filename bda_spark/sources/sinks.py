@@ -70,7 +70,9 @@ def idempotent_merge_parquet(
     of raising NUM_COLUMNS_MISMATCH after the caller's physical deletes
     already ran; legacy rows get NULL in the new column, which
     downstream readers treat conservatively (``vacuum_tombstones``
-    never sweeps unknown-age rows).
+    never sweeps unknown-age rows). A partition-scoped merge whose
+    rows change the table's columns or types rewrites the whole table,
+    because every file of a generation is read with one schema.
 
     ``vacuum_keep`` / ``vacuum_min_age_seconds`` tune the retention of
     superseded generations: commit-count retention alone gives rapidly
@@ -86,22 +88,28 @@ def idempotent_merge_parquet(
     scan, or merge partition-scoped."""
     keyset = updates.select(*keys).distinct()
 
+    def merge(rows: DataFrame) -> DataFrame:
+        return rows.join(keyset, on=keys, how="left_anti").unionByName(
+            updates, allowMissingColumns=True
+        )
+
     def plan(base: Base) -> Rewrite:
         existing = base.read()
         if existing is None:
             return Rewrite(updates, partition_col=partition_col)
-        touched = None
-        if partition_col is not None:
-            touched = [
-                r[0] for r in updates.select(partition_col).distinct().collect()
-            ]
-            existing = base.scope(existing, partition_col, touched)
-        kept = existing.join(keyset, on=keys, how="left_anti")
-        return Rewrite(
-            kept.unionByName(updates, allowMissingColumns=True),
-            touched,
-            partition_col,
-        )
+        if partition_col is None:
+            return Rewrite(merge(existing))
+        touched = [
+            r[0] for r in updates.select(partition_col).distinct().collect()
+        ]
+        merged = merge(base.scope(existing, partition_col, touched))
+        if _file_columns(merged, partition_col) != _file_columns(
+            existing, partition_col
+        ):
+            # a new column or type: every file the table's one scan
+            # reads must share one schema, so rewrite them all
+            return Rewrite(merge(existing), partition_col=partition_col)
+        return Rewrite(merged, touched, partition_col)
 
     rewrite_generation(
         spark,
@@ -110,6 +118,17 @@ def idempotent_merge_parquet(
         vacuum_keep=vacuum_keep,
         vacuum_min_age_seconds=vacuum_min_age_seconds,
     )
+
+
+def _file_columns(df: DataFrame, partition_col: str) -> dict[str, str]:
+    """Name -> type of the columns ``df``'s rows store in a data file
+    (parquet matches them by name, so order is free); the partition
+    column lives in the directory name instead."""
+    return {
+        f.name: f.dataType.simpleString()
+        for f in df.schema.fields
+        if f.name != partition_col
+    }
 
 
 # ---------------------------------------------------------------------------

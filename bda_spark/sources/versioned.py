@@ -14,8 +14,8 @@ listing, local):
 A writer prepares generation N+1 fully under ``_versions`` (invisible:
 readers never list that dir speculatively), then atomically creates the
 commit marker. Readers resolve the marker CHAIN (below) to one
-generation dir and scan only it; they see generation N until the
-instant the marker appears, N+1 after — never a mix, never nothing. A
+generation and scan only what it names; they see generation N until
+the instant the marker appears, N+1 after — never a mix, never nothing. A
 crash before the marker leaves unreferenced debris that the next writer
 deletes; no heal rename is ever needed because the live table was never
 touched.
@@ -74,6 +74,14 @@ the new generation. A plain parquet dir that an older writer left
 behind is adopted once, by ``to_versioned``, on its first rewrite.
 
 Committing is one empty-file create, whatever the table's size.
+
+Reads — ``sources.batch.read_parquet``
+--------------------------------------
+A generation is read by one scan (``_read_generation``): its own dir
+plus the dir of each partition it carries by reference, under one
+``basePath`` (``_versions``), so partition pruning and partition type
+inference cover every holder at once. The reader lists the commit
+chain once per read.
 """
 
 from __future__ import annotations
@@ -247,9 +255,11 @@ def is_versioned(spark: SparkSession, root: str) -> bool:
 def resolve_table(
     spark: SparkSession, root: str, generation: int | None = None
 ) -> str:
-    """The path a reader should scan: the current generation dir for a
-    versioned root, the root itself for a plain parquet dir (so callers
-    can resolve unconditionally). Pass ``generation`` for TIME TRAVEL —
+    """The current generation dir for a versioned root, the root itself
+    for a plain parquet dir (so callers can resolve unconditionally). A
+    generation that carries partitions by ``_refs`` holds only part of
+    its table in this dir: read tables with
+    ``sources.batch.read_parquet``. Pass ``generation`` for TIME TRAVEL —
     reading a specific committed generation that vacuum hasn't swept
     yet (the same as-of contract as Delta's VERSION AS OF, bounded by
     the vacuum retention). Only CHAIN generations resolve: an orphaned
@@ -299,48 +309,6 @@ def _cast(df: DataFrame, schema) -> DataFrame:
     )
 
 
-def read_versioned(
-    spark: SparkSession,
-    root: str,
-    generation: int | None = None,
-    schema=None,
-) -> DataFrame:
-    """Read a versioned table (or a specific committed generation) —
-    MANIFEST-AWARE: a generation may hold some partitions only BY
-    REFERENCE in its ``_refs`` sidecar; this reader resolves the
-    manifest and unions one partition-discovering read per holder
-    generation (basePath = that holder's dir, so hive columns keep
-    their types and partition-filter pruning power). A bare
-    ``spark.read.parquet(resolve_table(...))`` would silently drop
-    every referenced partition — use this reader (or
-    ``sources.batch.read_parquet``) for versioned roots. A plain,
-    non-versioned dir passes through as one read.
-
-    ``schema`` (optional StructType) aligns the result to the declared
-    columns/types; without it the FIRST holder's inferred schema is the
-    target (the lowest-numbered holder with a non-null partition).
-    Either way the schema is inferred once per read — the other holders
-    are scanned with the first holder's schema — so a read pays one
-    inference job however many generations hold its partitions. A
-    committed generation holding NO data at all (an empty-stream
-    absorb) returns an empty frame of ``schema`` when given, instead of
-    failing schema inference."""
-    # resolve the generation ONCE and derive the path from it — calling
-    # resolve_table and current_generation separately leaves a window
-    # where a commit lands between the two and path/manifest describe
-    # DIFFERENT generations
-    if generation is not None:
-        resolve_table(spark, root, generation)  # raises when unavailable
-        gen: int | None = int(generation)
-    else:
-        gen = current_generation(spark, root)
-    if gen is None:  # plain, non-versioned dir passthrough
-        df = spark.read.parquet(glob_escape(root))
-        return _cast(df, schema) if schema is not None else df
-    manifest, plain = generation_manifest(spark, root, gen)
-    return _read_generation(spark, root, gen, manifest, plain, schema)
-
-
 def _read_generation(
     spark: SparkSession,
     root: str,
@@ -349,51 +317,48 @@ def _read_generation(
     plain: bool,
     schema=None,
 ) -> DataFrame:
+    """One scan of committed generation ``gen``: its own dir plus, for
+    every partition its ``_refs`` carries, that partition's dir in the
+    holder generation, read by ONE partition-discovering ``spark.read``
+    based at ``_versions``. A partition filter prunes every holder's
+    files inside that scan, and partition types are inferred over all
+    values at once. The data columns come from one footer, so every
+    file a generation reaches shares one schema (writers keep it so:
+    a merge that changes it rewrites the whole table).
+
+    ``schema`` aligns the result to the declared columns and types, and
+    a generation holding no data (an empty-stream absorb) then reads as
+    an empty frame of it."""
+    if plain and manifest:
+        # the scan skips files outside a partition dir, which would
+        # drop these rows silently
+        raise IOError(
+            f"generation {gen} of {root} mixes root-level data files "
+            f"with hive partitions — unreadable layout"
+        )
     if not manifest and not plain and schema is not None:
-        # committed but data-less (empty-stream absorb): typed empty
         from ..functions.localrows import rows_frame
 
         return rows_frame(spark, [], schema)
-    if all(holder == gen for holder in manifest.values()):
-        # self-contained (unpartitioned, hive-with-no-refs): one read
-        # of the generation dir is complete and keeps the single scan
-        df = spark.read.parquet(glob_escape(_gen_dir(root, gen)))
-        if schema is not None:
-            return _cast(df, schema)
-        # a partition column holding only nulls infers as VOID, which
-        # no writer accepts as a partition column: read it as string
-        void = [f.name for f in df.schema.fields if f.dataType == NullType()]
-        return df.withColumns({c: F.col(c).cast("string") for c in void})
-    if plain:
-        raise IOError(
-            f"generation {gen} of {root} mixes root-level data files "
-            f"with referenced hive partitions — unreadable layout"
-        )
-    by_holder: dict[int, list[str]] = {}
-    for name, holder in manifest.items():
-        by_holder.setdefault(holder, []).append(name)
-    # the schema is inferred from the first holder, so a holder whose
-    # only partition is the null one goes last: alone it would type an
-    # int partition column as string
-    parts: list[DataFrame] = []
-    inferred = None
-    for holder, names in sorted(
-        by_holder.items(),
-        key=lambda hn: (all(n.endswith(f"={_HIVE_NULL}") for n in hn[1]), hn[0]),
-    ):
-        base = _gen_dir(root, holder)
-        reader = spark.read.option("basePath", base)
-        if inferred is not None:
-            reader = reader.schema(inferred)
-        parts.append(
-            reader.parquet(*[glob_escape(f"{base}/{n}") for n in sorted(names)])
-        )
-        inferred = parts[0].schema
-    target = schema if schema is not None else inferred
-    df = _cast(parts[0], target)
-    for p in parts[1:]:
-        df = df.unionByName(_cast(p, target))
-    return df
+    # its dir covers the generation's own files, partitioned or not;
+    # each carried partition adds its dir in the holder generation
+    paths = [_gen_dir(root, gen)] + [
+        f"{_gen_dir(root, holder)}/{name}"
+        for name, holder in sorted(manifest.items())
+        if holder != gen
+    ]
+    df = (
+        spark.read.option("basePath", f"{root.rstrip('/')}/{VERSIONS_DIR}")
+        # the gen-N level above each partition dir names no column
+        .option("ignoreInvalidPartitionPaths", "true")
+        .parquet(*[glob_escape(p) for p in paths])
+    )
+    if schema is not None:
+        return _cast(df, schema)
+    # a partition column holding only nulls infers as VOID, which no
+    # writer accepts as a partition column: read it as string
+    void = [f.name for f in df.schema.fields if f.dataType == NullType()]
+    return df.withColumns({c: F.col(c).cast("string") for c in void})
 
 
 def commit_generation(
@@ -633,8 +598,8 @@ def vacuum_versions(
 def to_versioned(spark: SparkSession, path: str) -> int:
     """One-time, OFFLINE migration of a plain parquet dir into the
     versioned layout: its files move into generation 1 and the marker
-    commits. After this, ``read_versioned``/``resolve_table`` readers
-    get atomic maintenance forever. The migration itself is the last
+    commits. After this, ``sources.batch.read_parquet`` readers get
+    atomic maintenance forever. The migration itself is the last
     non-atomic moment in the table's life — run it without concurrent
     readers (a rename-per-file window exists only here)."""
     base = path.rstrip("/")
@@ -696,8 +661,9 @@ class Base(NamedTuple):
     plain: bool  # the generation holds unpartitioned data files
 
     def read(self, schema=None) -> DataFrame | None:
-        """Manifest-aware read of the pinned generation; None when it
-        holds no rows on disk (no table, or a data-less generation)."""
+        """The one scan of the pinned generation (``_read_generation``);
+        None when it holds no rows on disk (no table, or a data-less
+        generation)."""
         if self.gen is None or not (self.manifest or self.plain):
             return None
         return _read_generation(
@@ -706,7 +672,9 @@ class Base(NamedTuple):
 
     def scope(self, df: DataFrame, col: str, values: list) -> DataFrame:
         """``df`` — this generation's read — cut to the ``col``
-        partitions holding ``values``, pruned per holder. Null-safe:
+        partitions holding ``values``: a partition filter, so the scan
+        reads only those partitions' files, whichever generations hold
+        them. Null-safe:
         ``isin`` is three-valued, so a None among the values would
         match nothing, and a rewrite replacing the null partition would
         drop the rows it never read. Refuses a generation that is not

@@ -24,10 +24,12 @@ NEW_train_offset_3_10min.py:259-270) rebuilt on parquet:
   compacted watermark, so a crash-replay of an already-absorbed batch
   is a no-op instead of resurrecting a stale dir.
 - READ: compacted generation ∪ COMMITTED batch dirs above the
-  watermark — exact at every instant. A batch dir without its
-  ``_SUCCESS`` marker is in flight (or a crashed write the stream will
-  replay) and is skipped: its rows surface the moment the writer's
-  job commits, never partially.
+  watermark — exact at every instant. The compacted generation is one
+  scan, its carried partitions included (``sources.versioned``); the
+  batch dirs are classified by one ``globStatus`` and read by a second
+  scan. A batch dir without its ``_SUCCESS`` marker is in flight (or a
+  crashed write the stream will replay) and is skipped: its rows
+  surface the moment the writer's job commits, never partially.
 - COMPACT: PARTITION-SCOPED and incremental, committed through the
   one rewrite protocol (``sources.versioned.rewrite_generation``, as
   every merge, delete and OPTIMIZE is). Only the hive partitions the
@@ -42,7 +44,7 @@ NEW_train_offset_3_10min.py:259-270) rebuilt on parquet:
   partitions pruned) until the last referencing generation leaves
   retention. A periodic ``full=True`` run is the major compaction
   that collapses the reference chain back to one self-contained
-  generation.
+  generation, which releases the pinned holder generations.
 - CLEANUP: absorbed batch dirs are NOT deleted by the compaction that
   absorbed them — they sit <= watermark where every reader and the
   writer already ignore them, and the NEXT compaction run sweeps
@@ -103,56 +105,26 @@ def _batch_dirs(spark: SparkSession, root: str) -> dict[int, str]:
     return out
 
 
-def _inspect_batch_dir(
-    spark: SparkSession, path: str
-) -> tuple[bool, bool, bool]:
-    """One listStatus over a batch dir: (committed, has_data, hive) —
-    committed = the writer's ``_SUCCESS`` marker landed; has_data = at
-    least one data file exists (an empty-but-committed batch has only
-    the marker); hive = the dir contains ``key=value`` subdirs, i.e.
-    the PRE-batchdir layout (batch=<id>/pred_date=<d>/) that partition
-    discovery cannot mix with flat batch dirs."""
-    fs, p = _hadoop_path(spark, path)
-    committed = has_data = hive = False
-    for st in fs.listStatus(p):
-        name = st.getPath().getName()
-        if name == "_SUCCESS":
-            committed = True
-        elif st.isDirectory() and "=" in name:
-            hive = True
-        elif not name.startswith(("_", ".")):
-            has_data = True
-    return committed, has_data, hive
-
-
 def _probe_batch_dirs(
     spark: SparkSession, root: str, dirs: dict[int, str]
 ) -> dict[int, tuple[bool, bool, bool]]:
     """(committed, has_data, hive) for EVERY batch dir in ONE metadata
-    round-trip: a single ``globStatus(batch=*/*)`` instead of one
-    listStatus per dir — a dashboard polling a 1 s-trigger table
-    between compactions would otherwise pay O(batches-since-compaction)
-    object-store RPCs per query. A dir with no children yet (writer
-    mid-create) simply contributes no entries and reads as
-    uncommitted, exactly as the per-dir probe classified it.
-
-    Roots containing Hadoop glob metacharacters fall back to the
-    per-dir listStatus probe: globStatus would interpret e.g.
-    ``/data/runs[2024]/preds`` as a character class, match nothing,
-    and silently classify every committed batch as uncommitted —
-    the watermark would never advance and batch dirs would accrete
-    unboundedly with no error."""
+    round-trip, a single ``globStatus(batch=*/*)``: committed = the
+    writer's ``_SUCCESS`` marker landed; has_data = at least one data
+    file exists (an empty-but-committed batch has only the marker);
+    hive = the dir contains ``key=value`` subdirs, i.e. the
+    PRE-batchdir layout (batch=<id>/pred_date=<d>/) that partition
+    discovery cannot mix with flat batch dirs. A dashboard polling a
+    1 s-trigger table between compactions pays one RPC, not one per
+    batch. A dir with no children yet (writer mid-create) contributes
+    no entries and reads as uncommitted. The root is glob-escaped, so
+    a root like ``/data/runs[2024]/preds`` matches itself, not a
+    character class."""
     if not dirs:
         return {}
-    if any(c in root for c in "*?[]{}\\"):
-        return {
-            bid: _inspect_batch_dir(spark, path)
-            for bid, path in dirs.items()
-        }
     fs, _ = _hadoop_path(spark, root)
-    jvm = spark.sparkContext._jvm
-    glob = jvm.org.apache.hadoop.fs.Path(
-        f"{root.rstrip('/')}/{BATCH_PREFIX}*/*"
+    glob = spark._jvm.org.apache.hadoop.fs.Path(
+        f"{glob_escape(root.rstrip('/'))}/{BATCH_PREFIX}*/*"
     )
     out = {bid: [False, False, False] for bid in dirs}
     for st in fs.globStatus(glob) or []:
@@ -495,7 +467,7 @@ def compact_batch_dirs(
         if not full and pcol is not None and not base.plain:
             # merge ONLY the partitions the fresh batches touch; the
             # touched-value list is tiny (one per partition value, not
-            # per row) and prunes the compacted scan per holder
+            # per row) and prunes the compacted scan
             touched = [r[0] for r in fresh.select(pcol).distinct().collect()]
             rows = fresh
             if old is not None:
@@ -651,8 +623,8 @@ def migrate_batch_layout(
     dirs = _batch_dirs(spark, root)
     hive_bids = sorted(
         bid
-        for bid, path in dirs.items()
-        if _inspect_batch_dir(spark, path)[2]
+        for bid, (_, _, hive) in _probe_batch_dirs(spark, root, dirs).items()
+        if hive
     )
     if entries and hive_bids:
         raise ValueError(

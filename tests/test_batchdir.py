@@ -430,12 +430,36 @@ def test_legacy_hive_batch_dirs_detected_and_migrated(spark, tmp_path):
     assert len(_rows(spark, root)) == 40
 
 
+def _file_scans(df):
+    """The file-scan nodes of ``df``'s executed plan, after it ran."""
+
+    def walk(node):
+        yield node
+        for i in range(node.children().size()):
+            yield from walk(node.children().apply(i))
+
+    plan = df._jdf.queryExecution().executedPlan()
+    return [
+        n for n in walk(plan)
+        if n.getClass().getSimpleName() == "FileSourceScanExec"
+    ]
+
+
+def _files_size(scan) -> int:
+    it = scan.metrics().iterator()
+    while it.hasNext():
+        kv = it.next()
+        if kv._1() == "filesSize":
+            return kv._2().value()
+    raise AssertionError("scan has no filesSize metric")
+
+
 def test_manifest_read_partition_prunes(spark, tmp_path):
     """The read side of the 100 TB story: a day-scoped scan over the
     manifest-resolved compacted table must touch ONLY that day's
-    files — partition pruning works through reference carries (each
-    holder generation is read with its own basePath, so the hive
-    column keeps its partition-filter power)."""
+    files — partition pruning works through reference carries (the
+    generation and its holders are one scan based at ``_versions``, so
+    the hive column keeps its partition-filter power)."""
     root = str(tmp_path / "prune")
     write_batch_dir(_day_batch(spark, 0, "d0"), root, 0)
     write_batch_dir(_day_batch(spark, 1, "d1"), root, 1)
@@ -444,37 +468,47 @@ def test_manifest_read_partition_prunes(spark, tmp_path):
     compact_batch_dirs(spark, root, partition_by=["day"])  # d0 by ref
 
     table = read_batch_table(spark, root, SCHEMA)
-    d0_scan = table.filter(F.col("day") == "d0")
-    # the pruned result is exact...
-    assert sorted(r.k for r in d0_scan.collect()) == list(range(6))
-    # ...and the EXECUTED scan metrics show the day filter reached
-    # every holder generation as a partition filter: the d0 holder's
-    # scan read bytes, the d1 holder's scan read NOTHING
-    plan = d0_scan._jdf.queryExecution().executedPlan()
+    want = {"d0": list(range(6)), "d1": [*range(100, 106), *range(200, 206)]}
+    for day, holder in (("d0", 1), ("d1", 2)):
+        scan = table.filter(F.col("day") == day)
+        # the pruned result is exact...
+        assert sorted(r.k for r in scan.collect()) == want[day]
+        # ...and the EXECUTED plan is one file scan whose bytes are
+        # exactly the data files of that day's holder generation
+        part = os.path.join(root, "_versions", f"gen-{holder:08d}", f"day={day}")
+        held = sum(os.path.getsize(f) for f in glob.glob(f"{part}/*.parquet"))
+        scans = _file_scans(scan)
+        assert len(scans) == 1, scans
+        assert held > 0 and _files_size(scans[0]) == held, day
 
-    def walk(node):
-        yield node
-        for i in range(node.children().size()):
-            yield from walk(node.children().apply(i))
 
-    sizes = []
-    for n in walk(plan):
-        if "Scan" not in n.nodeName():
-            continue
-        it = n.metrics().iterator()
-        while it.hasNext():
-            kv = it.next()
-            if kv._1() == "filesSize":
-                sizes.append(kv._2().value())
-    assert len(sizes) == 2, sizes  # one scan per holder generation
-    assert sorted(x > 0 for x in sizes) == [False, True], sizes
+def test_generation_with_three_holders_plans_one_file_scan(spark, tmp_path):
+    """A generation whose partitions sit in three holder generations
+    (its own, and two it carries by reference) is read by one scan."""
+    from bda_spark.sources.batch import read_parquet
+    from bda_spark.sources.versioned import generation_manifest
+
+    root = str(tmp_path / "three")
+    for bid, day in enumerate(("d0", "d1", "d2")):
+        write_batch_dir(_day_batch(spark, bid, day), root, bid)
+        compact_batch_dirs(spark, root, partition_by=["day"])
+    manifest, _plain = generation_manifest(spark, root, 3)
+    assert manifest == {"day=d0": 1, "day=d1": 2, "day=d2": 3}
+
+    df = read_parquet(spark, root)
+    assert sorted(r.k for r in df.collect()) == [
+        *range(6), *range(100, 106), *range(200, 206)
+    ]
+    assert len(_file_scans(df)) == 1
+    # the option that lets one scan span holders is set per read
+    assert spark.conf.get("spark.sql.files.ignoreInvalidPartitionPaths") == "false"
 
 
 def test_full_compaction_collapses_refs_even_when_idle(spark, tmp_path):
     """Code-review r9: an idle stream (everything already absorbed)
     must still be able to collapse the reference chain with a
     full=True major compaction — otherwise holder generations stay
-    pinned forever and reads keep paying one scan per holder."""
+    pinned forever."""
     from bda_spark.sources.versioned import read_generation_refs
 
     root = str(tmp_path / "idlefull")
@@ -504,12 +538,11 @@ def test_full_compaction_collapses_refs_even_when_idle(spark, tmp_path):
 
 
 def test_versioned_readers_resolve_refs(spark, tmp_path):
-    """Code-review r9: the versioned module's OWN readers
-    (read_versioned / sources.batch.read_parquet) must resolve the
-    _refs manifest — a reader that scans only the generation dir would
-    silently drop every referenced partition."""
+    """Code-review r9: the versioned tables' reader
+    (sources.batch.read_parquet) must resolve the _refs manifest — a
+    reader that scans only the generation dir would silently drop
+    every referenced partition."""
     from bda_spark.sources.batch import read_parquet
-    from bda_spark.sources.versioned import read_versioned
 
     root = str(tmp_path / "refread")
     write_batch_dir(_day_batch(spark, 0, "d0"), root, 0)
@@ -520,11 +553,9 @@ def test_versioned_readers_resolve_refs(spark, tmp_path):
     # sweep grace dirs so only the compacted table remains
     compact_batch_dirs(spark, root, partition_by=["day"])
     expect = {(r.k, r.v, r.day) for r in read_batch_table(spark, root, SCHEMA).collect()}
-    assert {r["day"] for r in read_versioned(spark, root).collect()} == {"d0", "d1"}
-    got = {(r["k"], r["v"], r["day"]) for r in read_versioned(spark, root).collect()}
+    got = {(r["k"], r["v"], r["day"]) for r in read_parquet(spark, root).collect()}
+    assert {day for _, _, day in got} == {"d0", "d1"}
     assert got == expect
-    got2 = {(r["k"], r["v"], r["day"]) for r in read_parquet(spark, root).collect()}
-    assert got2 == expect
 
 
 def test_optimize_table_preserves_referenced_partitions(spark, tmp_path):
@@ -601,28 +632,19 @@ def test_full_compaction_with_nothing_to_merge_commits_empty_carry(
 
 def test_batch_table_roundtrip_with_glob_metachar_root(spark, tmp_path):
     """A root containing Hadoop glob metacharacters must classify its
-    committed batch dirs correctly (the batched globStatus probe would
+    committed batch dirs correctly (an unescaped globStatus probe would
     read them all as uncommitted — watermark frozen, dirs accreting)."""
-    from pyspark.sql import functions as F
-    from pyspark.sql.types import StructType
-
-    from bda_spark.streaming.batchdir import (
-        compact_batch_dirs,
-        compacted_watermark,
-        read_batch_table,
-    )
-
-    root = str(tmp_path / "runs[2024]" / "preds")
     df = spark.range(0, 10).select(
         F.col("id").alias("k"), (F.col("id") * 2).alias("v")
     )
-    schema: StructType = df.schema
-    df.write.mode("overwrite").parquet(f"{root}/batch=0")
-    assert read_batch_table(spark, root, schema).count() == 10
-    wm = compact_batch_dirs(spark, root, vacuum_min_age_seconds=0.0)
-    assert wm == 0
-    assert compacted_watermark(spark, root) == 0
-    assert read_batch_table(spark, root, schema).count() == 10
+    for parent in ("runs[2024]", "pre{a,b}ds"):
+        root = str(tmp_path / parent / "preds")
+        df.write.mode("overwrite").parquet(f"{root}/batch=0")
+        assert read_batch_table(spark, root, df.schema).count() == 10
+        wm = compact_batch_dirs(spark, root, vacuum_min_age_seconds=0.0)
+        assert wm == 0, parent
+        assert compacted_watermark(spark, root) == 0
+        assert read_batch_table(spark, root, df.schema).count() == 10
 
 
 # --- r12 VERDICT task 5: compaction CAS + batch-table takedown --------

@@ -126,7 +126,6 @@ def test_partitioned_delete_removes_emptied_partition(spark, tmp_path):
 def test_versioned_delete_is_reader_atomic_and_replay_safe(spark, tmp_path):
     from bda_spark.sources.versioned import (
         current_generation,
-        read_versioned,
         to_versioned,
     )
 
@@ -144,7 +143,7 @@ def test_versioned_delete_is_reader_atomic_and_replay_safe(spark, tmp_path):
     # the delete committed a NEW generation (readers resolving mid-
     # delete saw gen0 whole; no in-place rewrite ever happened)
     assert current_generation(spark, path) == gen0 + 1
-    assert {r.doc_id for r in read_versioned(spark, path).collect()} == (
+    assert {r.doc_id for r in read_parquet(spark, path).collect()} == (
         set(range(8)) - {1, 5}
     )
     # replay: zero hits -> NO new generation committed
@@ -466,7 +465,6 @@ def test_interleaved_merge_and_delete_generation_commits(
     from bda_spark.sources.versioned import (
         CommitRace,
         current_generation,
-        read_versioned,
     )
 
     path = str(tmp_path / "t")
@@ -505,7 +503,7 @@ def test_interleaved_merge_and_delete_generation_commits(
             # the loser left nothing behind: the winner's merge is
             # intact and the chain advanced exactly once
             got = {
-                r.doc_id: r.v for r in read_versioned(spark_, root).collect()
+                r.doc_id: r.v for r in read_parquet(spark_, root).collect()
             }
             assert got[5] == "MERGED" and 3 in got and 7 in got
             assert len(got) == 10
@@ -521,7 +519,7 @@ def test_interleaved_merge_and_delete_generation_commits(
     # the rerun derived from the winner's generation: both writes kept
     assert removed == 2
     assert current_generation(spark, path) == base + 2
-    got = {r.doc_id: r.v for r in read_versioned(spark, path).collect()}
+    got = {r.doc_id: r.v for r in read_parquet(spark, path).collect()}
     assert set(got) == set(range(10)) - {3, 7}
     assert got[5] == "MERGED"
     # replaying the delete is a no-op
@@ -540,7 +538,6 @@ def test_stale_expected_base_rejected_loudly(spark, tmp_path):
     from bda_spark.sources.versioned import (
         commit_generation,
         current_generation,
-        read_versioned,
     )
 
     path = str(tmp_path / "t")
@@ -556,7 +553,7 @@ def test_stale_expected_base_rejected_loudly(spark, tmp_path):
     with pytest.raises(IOError, match="stale writer"):
         commit_generation(spark, path, w([(99,)]), expected_base=g1)
     assert current_generation(spark, path) == g2
-    assert {r.doc_id for r in read_versioned(spark, path).collect()} == {1, 2}
+    assert {r.doc_id for r in read_parquet(spark, path).collect()} == {1, 2}
 
 
 # --- r12: tombstone lifecycle (VERDICT r11 task 6) --------------------

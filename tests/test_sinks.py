@@ -208,6 +208,29 @@ def test_partitioned_merge_preserves_null_partition_rows(spark, tmp_path):
     assert got == {1: ("a", "d1"), 2: ("B2", None), 3: ("c", None)}
 
 
+def test_partition_scoped_merge_adding_a_column_keeps_it(spark, tmp_path):
+    """A partition-scoped merge whose rows carry a new column keeps it
+    on read: the merge rewrites the whole table, so the carried
+    partitions' files gain the column (NULL) instead of being read
+    with a schema that lacks it."""
+    path = str(tmp_path / "evolve")
+    idempotent_merge_parquet(
+        spark,
+        spark.createDataFrame([(1, "a", 0), (2, "b", 1)], "k long, v string, p int"),
+        path, ["k"], partition_col="p",
+    )
+    idempotent_merge_parquet(
+        spark,
+        spark.createDataFrame([(3, "c", 1, 7)], "k long, v string, p int, extra int"),
+        path, ["k"], partition_col="p",
+    )
+    got = read_parquet(spark, path)
+    assert "extra" in got.columns
+    assert sorted((r.k, r.p, r.extra) for r in got.collect()) == [
+        (1, 0, None), (2, 1, None), (3, 1, 7)
+    ]
+
+
 def test_every_merge_births_a_versioned_root(spark, tmp_path):
     """Every merge commits a reader-atomic generation — flat or
     partition-scoped, into a fresh root or a plain dir an older writer

@@ -11,12 +11,12 @@ import threading
 import pytest
 from pyspark.sql import Row
 
+from bda_spark.sources.batch import read_parquet
 from bda_spark.sources.layout import optimize_table
 from bda_spark.sources.versioned import (
     commit_generation,
     current_generation,
     is_versioned,
-    read_versioned,
     resolve_table,
     to_versioned,
     vacuum_versions,
@@ -35,13 +35,13 @@ def test_commit_resolve_round_trip(spark, tmp_path):
     gen = commit_generation(spark, root, lambda p: df.write.parquet(p))
     assert gen == 1 and is_versioned(spark, root)
     assert resolve_table(spark, root).endswith("gen-00000001")
-    assert read_versioned(spark, root).count() == 400
+    assert read_parquet(spark, root).count() == 400
     # second commit becomes current atomically
     gen2 = commit_generation(
         spark, root, lambda p: df.limit(100).write.parquet(p)
     )
     assert gen2 == 2
-    assert read_versioned(spark, root).count() == 100
+    assert read_parquet(spark, root).count() == 100
 
 
 def test_resolve_passthrough_on_plain_dir(spark, tmp_path):
@@ -49,7 +49,7 @@ def test_resolve_passthrough_on_plain_dir(spark, tmp_path):
     _rows(spark).write.parquet(plain)
     assert not is_versioned(spark, plain)
     assert resolve_table(spark, plain) == plain
-    assert read_versioned(spark, plain).count() == 400
+    assert read_parquet(spark, plain).count() == 400
 
 
 def test_to_versioned_migrates_in_place(spark, tmp_path):
@@ -58,7 +58,7 @@ def test_to_versioned_migrates_in_place(spark, tmp_path):
     df.write.parquet(root)
     want = sorted(r.event_id for r in df.collect())
     assert to_versioned(spark, root) == 1
-    got = sorted(r.event_id for r in read_versioned(spark, root).collect())
+    got = sorted(r.event_id for r in read_parquet(spark, root).collect())
     assert got == want
     # nothing but the versioned layout remains at top level
     assert sorted(os.listdir(root)) == ["_commits", "_versions"]
@@ -85,7 +85,7 @@ def test_vacuum_keeps_reader_grace_generation(spark, tmp_path):
         if n.endswith(".lock") and not n.startswith(".")
     )
     assert locks == ["gen-00000003.lock", "gen-00000004.lock"]
-    assert read_versioned(spark, root).count() == 50
+    assert read_parquet(spark, root).count() == 50
 
 
 def test_commit_cleans_crashed_uncommitted_debris(spark, tmp_path):
@@ -98,11 +98,11 @@ def test_commit_cleans_crashed_uncommitted_debris(spark, tmp_path):
     with open(os.path.join(debris, "garbage.parquet"), "w") as f:
         f.write("not parquet at all")
     # readers are unaffected: the debris is unreferenced
-    assert read_versioned(spark, root).count() == 30
+    assert read_parquet(spark, root).count() == 30
     # the next committer deletes the debris and writes gen-2 cleanly
     gen = commit_generation(spark, root, lambda p: df.write.parquet(p))
     assert gen == 2
-    assert read_versioned(spark, root).count() == 30
+    assert read_parquet(spark, root).count() == 30
 
 
 def test_optimize_table_versioned_is_reader_atomic(spark, tmp_path):
@@ -122,7 +122,7 @@ def test_optimize_table_versioned_is_reader_atomic(spark, tmp_path):
     def reader():
         while not stop.is_set():
             try:
-                got = read_versioned(spark, root).count()
+                got = read_parquet(spark, root).count()
                 if got != n:
                     errors.append(f"partial table: {got} rows")
                 reads[0] += 1
@@ -147,14 +147,12 @@ def test_optimize_table_versioned_is_reader_atomic(spark, tmp_path):
     assert errors == []
     assert reads[0] >= 3  # the reader genuinely overlapped the rewrites
     assert current_generation(spark, root) == 4
-    assert read_versioned(spark, root).count() == n
+    assert read_parquet(spark, root).count() == n
 
 
 def test_read_parquet_resolves_versioned_roots(spark, tmp_path):
     """The standard batch entry point reads a versioned table through
     its current generation transparently; plain paths pass through."""
-    from bda_spark.sources.batch import read_parquet
-
     root = str(tmp_path / "through_batch")
     df = _rows(spark, 120)
     commit_generation(spark, root, lambda p: df.write.parquet(p))
@@ -163,6 +161,23 @@ def test_read_parquet_resolves_versioned_roots(spark, tmp_path):
     plain = str(tmp_path / "plain_batch")
     df.write.parquet(plain)
     assert read_parquet(spark, plain).count() == 120
+
+
+def test_generation_mixing_root_files_and_partitions_is_refused(spark, tmp_path):
+    """A generation holding data files both at its root and in a hive
+    partition dir cannot be read by one partition-discovering scan
+    without dropping the root files, so the reader refuses it, with or
+    without partitions carried by reference."""
+    root = str(tmp_path / "mixed")
+    df = _rows(spark, 10)
+
+    def write(p):
+        df.write.parquet(p)
+        df.write.parquet(f"{p}/part=1")
+
+    commit_generation(spark, root, write)
+    with pytest.raises(IOError, match="mixes root-level data files"):
+        read_parquet(spark, root)
 
 
 def test_idempotent_merge_on_versioned_root(spark, tmp_path):
@@ -180,12 +195,12 @@ def test_idempotent_merge_on_versioned_root(spark, tmp_path):
     commit_generation(spark, root, lambda p: base.write.parquet(p))
     upd = spark.createDataFrame([Row(k=2, v="B2"), Row(k=4, v="d")])
     idempotent_merge_parquet(spark, upd, root, keys=["k"])
-    got = {r["k"]: r["v"] for r in read_versioned(spark, root).collect()}
+    got = {r["k"]: r["v"] for r in read_parquet(spark, root).collect()}
     assert got == {1: "a", 2: "B2", 3: "c", 4: "d"}
     assert current_generation(spark, root) == 2
     # replay: idempotent, one more generation, same content
     idempotent_merge_parquet(spark, upd, root, keys=["k"])
-    assert {r["k"]: r["v"] for r in read_versioned(spark, root).collect()} == got
+    assert {r["k"]: r["v"] for r in read_parquet(spark, root).collect()} == got
     # a partition-scoped merge cannot re-lay an unpartitioned
     # generation: an explicit error, not a mixed layout
     with pytest.raises(ValueError, match="unpartitioned"):
@@ -204,15 +219,15 @@ def test_time_travel_reads_within_vacuum_retention(spark, tmp_path):
     commit_generation(spark, root, lambda p: df.write.parquet(p))
     commit_generation(spark, root, lambda p: df.limit(60).write.parquet(p))
     commit_generation(spark, root, lambda p: df.limit(30).write.parquet(p))
-    assert read_versioned(spark, root).count() == 30
-    assert read_versioned(spark, root, generation=1).count() == 90
-    assert read_versioned(spark, root, generation=2).count() == 60
+    assert read_parquet(spark, root).count() == 30
+    assert read_parquet(spark, root, generation=1).count() == 90
+    assert read_parquet(spark, root, generation=2).count() == 60
     with pytest.raises(FileNotFoundError, match="not available"):
-        read_versioned(spark, root, generation=7)
+        read_parquet(spark, root, generation=7)
     vacuum_versions(spark, root, keep=2)
     with pytest.raises(FileNotFoundError, match="not available"):
-        read_versioned(spark, root, generation=1)
-    assert read_versioned(spark, root, generation=2).count() == 60
+        read_parquet(spark, root, generation=1)
+    assert read_parquet(spark, root, generation=2).count() == 60
 
 
 def test_crashed_writer_slot_is_skipped_not_clobbered(spark, tmp_path):
@@ -231,7 +246,7 @@ def test_crashed_writer_slot_is_skipped_not_clobbered(spark, tmp_path):
     gen = commit_generation(spark, root, lambda p: df.limit(10).write.parquet(p))
     assert gen == 3  # slot 2 skipped, never touched
     assert os.path.exists(os.path.join(debris, "partial.parquet"))
-    assert read_versioned(spark, root).count() == 10
+    assert read_parquet(spark, root).count() == 10
 
 
 def test_concurrent_commit_conflict_aborts_cleanly(spark, tmp_path):
@@ -255,7 +270,7 @@ def test_concurrent_commit_conflict_aborts_cleanly(spark, tmp_path):
     # 3, since the loser held slot 2's lock); the loser published
     # nothing and cleaned its slot
     assert current_generation(spark, root) == 3
-    assert read_versioned(spark, root).count() == 5
+    assert read_parquet(spark, root).count() == 5
     assert not os.path.exists(os.path.join(root, "_versions", "gen-00000002"))
 
 
@@ -274,8 +289,8 @@ def test_vacuum_counts_committed_generations_not_numbers(spark, tmp_path):
     ) == 3
     removed = vacuum_versions(spark, root, keep=2)
     assert removed == 0  # committed gens are {1, 3}: BOTH retained
-    assert read_versioned(spark, root, generation=1).count() == 30
-    assert read_versioned(spark, root).count() == 9
+    assert read_parquet(spark, root, generation=1).count() == 30
+    assert read_parquet(spark, root).count() == 9
 
 
 def test_commit_chain_rule_unit():
@@ -334,13 +349,13 @@ def test_same_base_race_has_one_visible_winner(spark, tmp_path):
     os.utime(b_marker, (1_700_000_100, 1_700_000_100))
 
     assert current_generation(spark, root) == 2
-    assert read_versioned(spark, root).count() == 20
+    assert read_parquet(spark, root).count() == 20
     # the orphaned commit is not readable history, even via time travel
     with pytest.raises(FileNotFoundError, match="not available"):
-        read_versioned(spark, root, generation=3)
+        read_parquet(spark, root, generation=3)
     # the next commit chains from the WINNER, not the orphan
     gen = commit_generation(spark, root, lambda p: df.limit(7).write.parquet(p))
-    assert read_versioned(spark, root).count() == 7
+    assert read_parquet(spark, root).count() == 7
     assert current_generation(spark, root) == gen
 
 
@@ -354,14 +369,14 @@ def test_vacuum_min_age_guards_young_generations(spark, tmp_path):
         commit_generation(spark, root, lambda p, n=n: df.limit(n).write.parquet(p))
     # all three commits are seconds old: nothing may be swept
     assert vacuum_versions(spark, root, keep=1, min_age_seconds=3600) == 0
-    assert read_versioned(spark, root, generation=1).count() == 30
+    assert read_parquet(spark, root, generation=1).count() == 30
     # age the markers past the guard: retention applies again
     commits = os.path.join(root, "_commits")
     for name in os.listdir(commits):
         os.utime(os.path.join(commits, name), (1_700_000_000, 1_700_000_000))
     assert vacuum_versions(spark, root, keep=2, min_age_seconds=3600) == 1
-    assert read_versioned(spark, root).count() == 10
-    assert read_versioned(spark, root, generation=2).count() == 20
+    assert read_parquet(spark, root).count() == 10
+    assert read_parquet(spark, root, generation=2).count() == 20
 
 
 def test_merge_vacuum_retention_is_tunable(spark, tmp_path):
@@ -379,8 +394,8 @@ def test_merge_vacuum_retention_is_tunable(spark, tmp_path):
         idempotent_merge_parquet(spark, upd, root, keys=["k"], vacuum_keep=10)
     # every generation is still readable (keep=10 swept nothing)
     assert current_generation(spark, root) == 4
-    assert read_versioned(spark, root, generation=1).count() == 2
-    assert {r["v"] for r in read_versioned(spark, root).collect()} == {"v2", "b"}
+    assert read_parquet(spark, root, generation=1).count() == 2
+    assert {r["v"] for r in read_parquet(spark, root).collect()} == {"v2", "b"}
 
 
 def test_reader_survives_rapid_merges_with_default_grace(spark, tmp_path):
@@ -448,11 +463,11 @@ def test_clock_skew_same_base_markers_on_disk(spark, tmp_path):
     os.utime(os.path.join(commits, f"{3:08d}.{1:08d}"), (1_900_000_000, 1_900_000_000))
 
     assert current_generation(spark, root) == 3
-    assert read_versioned(spark, root).count() == 20
+    assert read_parquet(spark, root).count() == 20
     with pytest.raises(FileNotFoundError, match="not available"):
-        read_versioned(spark, root, generation=2)  # orphaned, not history
+        read_parquet(spark, root, generation=2)  # orphaned, not history
     # vacuum: orphan swept, winner intact, chain unchanged
     vacuum_versions(spark, root, keep=1, min_age_seconds=0.0)
     assert not os.path.exists(os.path.join(root, "_versions", f"gen-{2:08d}"))
-    assert read_versioned(spark, root).count() == 20
+    assert read_parquet(spark, root).count() == 20
     assert current_generation(spark, root) == 3
